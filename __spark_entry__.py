@@ -54,6 +54,10 @@ from btc_usdt_etl_pipeline_spark.operators.relational import (
     top_k_per_group,
 )
 from btc_usdt_etl_pipeline_spark.schema import normalize_event_time
+from btc_usdt_etl_pipeline_spark.session import (
+    RUNTIME_CONF,
+    put_package_on_worker_path,
+)
 from btc_usdt_etl_pipeline_spark.operators.resample import (
     resample_by_count,
     resample_by_time,
@@ -99,40 +103,16 @@ def _q(name: str, sql: str | None = None):
 #: hardcoded unit.
 
 
-#: Runtime-settable confs the engine depends on; applied per table load
-#: because the DRIVER runs these queries in its own plain SparkSession
-#: where none of build_session's tuning exists.  UTC keeps timestamp
-#: collection oracle-comparable; maxFields
-#: keeps whole-stage codegen alive on the 128-column sketch plans.
-_RUNTIME_CONF = {
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.codegen.maxFields": "1024",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
-    # The driver runs a bare session (shuffle.partitions=200).  AQE
-    # coalesces batch exchanges either way, but STREAMING state stores
-    # are fixed at the shuffle partition count (no AQE in streaming):
-    # 200 state-store instances per stateful operator per micro-batch
-    # put q65's availableNow drain at ~30 s on 10k rows.  32 matches
-    # local[32]; on a real cluster set ≈ 2-3× total cores.
-    "spark.sql.shuffle.partitions": "32",
-    # r14 §E join preference (see session.py for the measured A/B and
-    # the size bounds): applied here too so the driver's plain session
-    # plans match build_session's.
-    "spark.sql.join.preferSortMergeJoin": "false",
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": str(
-        64 * 1024 * 1024
-    ),
-}
-
-
 def _tune(spark: SparkSession) -> None:
-    for k, v in _RUNTIME_CONF.items():
+    """Apply the engine's runtime confs on every table load: the driver
+    runs these queries in its own plain SparkSession, where none of
+    ``build_session``'s tuning exists."""
+    for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # noqa: BLE001 — a locked conf is non-fatal
             pass
+    put_package_on_worker_path(spark.sparkContext)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -18679,267 +18659,13 @@ def entry(spark: SparkSession) -> DataFrame:
     return q01(spark, "/root/testdata/sf0.001")
 
 
-#: The driver's correctness gate records only the FIRST 50 entries of
-#: ``queries()``, so registration order decides which components get a
-#: driver-visible correctness row.  This window is chosen so all SURVEY §2
-#: component rows (and every LLM-data-pipeline operator family) have at
-#: least one representative inside the first 50; remaining queries are
-#: redundant family members (second cube variant, third text metric, …)
-#: and still run under the judge's full 124-query gate.  Round 5 rotated
-#: q109/q110/q111/q114/q119/q124 (the round-4 LLM-pipeline operators) in
-#: and demoted q13/q20/q29/q35/q55/q56, whose families keep another
-#: representative (q01 exact aggs, q17-q19 windows, q27 text, q33/q34
-#: ML, q92 semi-structured JSON).  Round 5 rotated in the new LLM ops
-#: q131 (PII redact), q132 (SemDeDup), q133 (bigram-LM quality), q134
-#: (count-min heavy hitters), demoting q05/q11/q14/q17 — joins keep
-#: q24/q60/q83, aggregations keep q01/q54/q107, scalar fns keep q92,
-#: ranking windows keep q19/q22/q84.  Late round 5 also promoted q136
-#: (Z-order layout) and q137 (data-quality expectations), demoting
-#: q46/q91 — the streaming family keeps four driver rows (q36 tumbling,
-#: q50 sessions, q58 stateful, q65 interval join); streaming dedup and
-#: the batch session_window fall to the judge's full gate.  Round 6
-#: promoted the remaining un-windowed round-5 operators — q128 (shuffle-
-#: shard export), q135 (stream-static enrichment), q138 (SRP dim
-#: reduction), q139 (token-window chunking), q140 (cohort retention),
-#: q141 (ordered funnel) — demoting q23/q37/q39/q50/q111/q119, each of
-#: whose families keeps at least one driver row: OHLCV resample keeps
-#: q22 + q114 (keyed), dedup keeps q26/q30/q38/q109/q132, similarity
-#: keeps q40 (IVF) + q132, streaming keeps q36/q58/q65 + the new q135,
-#: connected components keeps q62.  The round-6 additions q142
-#: (multi-probe LSH), q143 (BM25), q144 (PMI collocations), q145
-#: (vocab drift) stay OUTSIDE the window deliberately: each already
-#: has an in-window family representative (similarity: q40/q132;
-#: text: q27/q131/q139), so promoting them would displace UNIQUE
-#: component reps (W4/A5/mapInPandas/VARIANT) for redundant family
-#: coverage — the judge's full gate covers them either way.  Round 7
-#: promoted the five round-6 operator families that had NO driver row
-#: at all — q146 (PageRank), q147 (SCD2 build), q149 (M4 downsample),
-#: q150 (point-in-time join), q151 (HyperLogLog sketch) — demoting
-#: q38/q65/q128/q133/q138, each of whose families keeps driver rows:
-#: dedup keeps q26/q30/q109/q132, streaming keeps q36/q58/q135,
-#: training export keeps q127 (mix) + q129 (pack), text quality keeps
-#: q27/q131/q139, ML feature transforms keep q34/q110 (and SRP
-#: hashing stays judge-covered via q138/q142).  q148 (weighted
-#: PageRank) stays judge-side: q146 is its in-window family rep.
-#: Late round 7 promoted q152 (CDC changelog merge — a NEW family with
-#: no in-window cousin; SCD2 builds history, cdc_merge compacts to a
-#: snapshot with deletes) and demoted q107 (custom aggregations keep
-#: q01 exact sums + q54 salted in-window; Gini/HHI stay judge-side).
-#: The other round-7 additions stay judge-side by the family rule:
-#: q153 triangles (graph: q146), q154 grouped HLL (sketch: q151,
-#: q134), q155/q156 winnowing + match pairs (text fingerprints:
-#: q27/q131/q139), q157 quantile binning (ML features: q34/q110),
-#: q158 snapshot diff (relational: q152/q147), q159 unicode normalize
-#: (text: q27/q131/q139), q160 length-bucketed shards (export:
-#: q127/q129).  q161 (BPE tokenizer training — a NEW family: real
-#: subword merge-table learning, nothing in-window touches it) was
-#: promoted over q114, the resample family's second representative
-#: (q22 stays in-window; per-key resample remains judge-covered);
-#: q162 (BPE token counts) stays judge-side as q161's family member.
-#: q163 (bloom pre-join) stays judge-side by the family rule: sketches
-#: keep q134/q151 in-window and joins keep q24/q60/q83.  q164
-#: (incremental rollup merge) stays judge-side too: resampling keeps
-#: q22 in-window and the merge law is pinned by its own property test.
-#: q165 (leakage-safe split) stays judge-side: it composes two
-#: in-window operators (q62 clusters, q63-family hash sampling).
-#: q166 (streaming rollup) stays judge-side: streaming keeps
-#: q36/q58/q135 in-window and q166 shares q164's oracle/merge law.
-#: q167 (entity resolution) stays judge-side: it composes two
-#: in-window operators (q124 fuzzy blocking, q62 components).
-#: Late round 7 promoted q168 (interval algebra) and q171 (2-D
-#: skyline) — both NEW families with no in-window cousin — demoting
-#: q109 (dedup keeps q26/q30/q132/q62/q66 in-window; segment dedup
-#: stays judge-covered) and q140 (product composites keep q100
-#: dashboard + q141 funnel; cohort retention stays judge-covered).
-#: The other late-round-7 additions stay judge-side by the family
-#: rule: q169/q170 layout ops (q136 Z-order is the in-window layout
-#: rep), q172 temperature mix (export: q127/q129), q173 HLL
-#: intersection (sketch: q134/q151), q174 incremental dedup (dedup:
-#: q26/q30/q132), q175 attribution / q177 session paths (product
-#: composites: q100/q141), q176 target encoding (ML features:
-#: q34/q110).
-#: Final round-7 rotation promoted the three NEW families of the
-#: q180-q194 batch — q180 (CUSUM changepoint / monitoring), q183
-#: (distribution drift: PSI; KS q184 is its family member), q188
-#: (SAX symbolic time-series representation) — demoting q83 (joins
-#: keep q24/q60/q124 in-window), q132 (dedup keeps q26/q30/q62/q66
-#: and similarity keeps q40), q134 (sketches keep q151; CMS heavy
-#: hitters stays judge-covered).  The rest of the batch stays
-#: judge-side by the family rule: q181 MACD / q182 Theil-Sen
-#: (financial composites: q51/q100), q185 ACF / q186 seasonal
-#: decompose (window analytics: q19/q84), q187 RFM (product:
-#: q100/q141), q189 keyness (text: q27/q131/q139), q190 k-core
-#: (graph: q146), q191 feature hash / q192 robust scale (ML
-#: features: q34/q110), q193 RRF fusion (similarity: q40), q194
-#: MAD outliers (drift/monitoring: q180/q183).
-#: Round-8 rotation (VERDICT r7 ask #3): promoted ten never-windowed
-#: family representatives — q163 bloom pre-join, q165 leakage-safe
-#: split, q167 entity resolution, q174 incremental dedup, q178 grid
-#: clustering, q197 DDSketch, q200 product quantization, q201
-#: bootstrap CI, q207 readability, q213 calibration/ECE — demoting ten
-#: family-redundant rows whose surfaces stay covered in-window:
-#: q19 rolling / q22 resample (q100 dashboard + q84 frame + q149 M4
-#: keep the window/resample machinery), q26 exact dedup (q30/q62/q66
-#: remain), q27 text stats (q131/q139/q161 remain), q33 sliding
-#: sequences (q57 grouped-map + q34 remain), q51 crossover (q100
-#: composes the same rolling+signal stack), q53 mapInPandas (q57
-#: applyInPandas + q58 withState remain), q124 fuzzy join (q167
-#: composes fuzzy blocking), q135 stream enrich (q36/q58 remain),
-#: q147 SCD2 (q150 PIT composes scd2∘asof; q152 CDC remains).  All
-#: demoted rows stay under the judge's full oracle gate.
-#: Late round 8 added q217 (grid radius join — geo is a brand-NEW
-#: family with no in-window cousin; q219 nearest-facility composes the
-#: same grid machinery) demoting q180 (drift/monitoring keeps q183 PSI
-#: in-window; CUSUM stays judge-covered).
-#: Round-9 rotation (VERDICT r8 ask #3): promoted twelve never-windowed
-#: queries — the whole r8 batch minus q217 (q216 CCF, q218 IPS, q219
-#: nearest facility, q220 interpolation, q221 weighted P90, q222
-#: Spearman, q223 closed-form OLS, q224 segment overlap) plus q181
-#: MACD / q185 ACF (their green rows now also witness the keyed
-#: chunked-halo plans), q195 association rules, and q199 weighted
-#: median (witnesses the bucketed scale path).  Demoted twelve
-#: family-redundant rows whose surfaces stay under the judge's full
-#: gate: q25 correlation (q216/q222 are the correlation family now),
-#: q30 minhash (q174 incremental + q62 CC remain), q34 minmax (ML
-#: scalers: q200 PQ + q223 OLS remain; q192 judge-side), q84 RANGE
-#: frame (window family: q181/q185/q100 remain), q110 int8 quantize
-#: (q200 PQ remains), q127 mix plan (q129 packing remains), q149 M4
-#: (resample: q36 + q100 remain), q163 bloom pre-join (sketch: q151
-#: HLL + q197 DDSketch remain), q178 grid clusters (q76 k-means
-#: remains), q188 SAX, q201 bootstrap CI (eval: q213 + q218 remain),
-#: q207 readability (text: q131/q139/q161 remain).
-#: Late round 9 added q229 Mann-Whitney (the nonparametric rank-test
-#: family is NEW — q230 Kruskal-Wallis composes the same machinery),
-#: demoting q141 funnel (product family keeps q100 dashboard in-window;
-#: q141/q230 stay under the judge's full gate).
-#: Round-10 rotation (VERDICT r9 ask #1): promoted fourteen
-#: never-driver-green queries — q45 session windows + q49 sliding
-#: (their only driver rows are stale round-3 FAILs; one green row each
-#: cleans the permanent record), the whole r9 batch minus q229
-#: (q225/q226 geo metric+rings, q227 multi-regressor OLS, q228
-#: group_ranks, q230 Kruskal-Wallis, q231 Brown-Forsythe, q232 Welch),
-#: and the never-windowed LLM-ops representatives q142 multi-probe
-#: LSH, q143 BM25, q144 PMI, q145 vocab drift, q153 triangle count.
-#: Demoted fourteen long-green family-redundant rows (all stay under
-#: the judge's full oracle gate): q01/q02/q07 (9 green rows each; the
-#: flagship is still smoke-run via entry(), pushdown is plan-audited,
-#: q143 composes per-group top-k), q24 as-of (q150 PIT composes
-#: scd2∘asof), q36 streaming tumbling (q45/q49/q58/q152 keep
-#: streaming 4-deep), q40 IVF (q142 is the ANN rep now), q54 salted
-#: agg (q199/q221 keep the agg scale paths), q57 grouped-map OLS
-#: (q58 keeps the pandas-UDF surface; q227 keeps OLS), q60 range join
-#: (q150 + q217/q219 keep the non-equi join family), q76 k-means
-#: (q200 PQ trains codebooks with the same machinery), q92 VARIANT
-#: (q137 keeps the scalar battery), q146 PageRank (q153 is the graph
-#: rep; q62 CC stays), q151 HLL (q197 keeps sketches), q213
-#: calibration (eval keeps q218/q229 + the promoted q230-q232).
-#: Late round 10 added the two r10-new operators — q233 image dHash
-#: near-dup (real decode → band-bucket Hamming join) and q234
-#: one-call Welch+Brown-Forsythe ANOVA table — demoting q44 (the
-#: multimodal family keeps a driver row via q233's real-decode
-#: kernel path; q44's stub mode stays judge-covered) and q174
-#: (dedup keeps q62/q66 + the new q233 in-window).
-#: End of round 10 promoted the remaining five r10-new operators
-#: (q235 CUPED, q237 SRM, q238 delta-method ratio, q240 containment,
-#: q241 Cohen's κ — every one oracle-green this session; q242
-#: Bradley–Terry joined late, a brand-NEW preference-data family with
-#: no in-window cousin, demoting q218 IPS whose eval family holds ten
-#: in-window reps), demoting
-#: five long-green family-redundant rows: q66 (dedup composites keep
-#: q62 + q233/q239-family; q240 adds containment in-window), q100
-#: (financial keeps q181/q216), q139 (text keeps q131/q143-q145/
-#: q161), q152 (streaming keeps q45/q49/q58), q183 (drift keeps the
-#: newly-windowed q145 vocab-KL).  All demoted rows stay under the
-#: judge's full oracle gate.
-#: The second r10 batch (eval-metrics family) promoted its seven new
-#: operators — q244 retrieval NDCG/RR/AP, q245 ROC AUC, q248
-#: Krippendorff α, q249 mutual information, q250 BH FDR, q251
-#: Mantel–Haenszel, q252 Nelson–Aalen — demoting seven rows whose
-#: families keep stronger or more general in-window reps: q231/q232
-#: (q234 compare_groups EMITS both statistics; q229/q230 keep ranks),
-#: q237 (experiment family keeps q235/q238/q251), q241 (q248 is the
-#: strict generalization; q243 stays judge-covered), q225 (geo keeps
-#: q226/q217/q219), q223 (q227 is the generalized OLS), q220
-#: (windows keep q181/q185/q216/q222/q228).
-#: The third r10 batch promoted q254 isotonic, q257 Markov, q258 LPA,
-#: q259 Brier, q260 conformal — all brand-new families/ops with no
-#: driver row — demoting the five longest-green remaining rows (green
-#: count in parens): q48 (9; rollup family stays judge-covered), q62
-#: (6; CC machinery stays in-window via q165/q167/q258), q131 (5;
-#: text keeps q143-q145/q161), q137 (5; scalar battery judge-covered),
-#: q136 (5; layout family judge-covered).  q253/q255/q256/q261 wait
-#: for the next rotation — their families hold in-window reps
-#: (q222 ranks, q145 drift-adjacent, q229-family rates).
-#: The final r10 batch promoted q266 permutation, q270 Dunn post-hoc,
-#: q271 log-rank, q272 link prediction (all new families/ops,
-#: oracle-green this session), demoting the four longest-green
-#: remaining rows: q58 (6 greens; the pandas-UDF/stateful surface
-#: stays judge-covered and streaming keeps q45/q49), q129 (5; export
-#: family judge-covered), q168 (3) and q171 (3) (interval/skyline
-#: stay under the full gate; both rest one round after three straight
-#: greens).
-#: ROUND 12 ROTATION (VERDICT r11 ask #2 — keep retiring the
-#: driver-window evidence debt, 85 never-checked at r11 close): 46 of
-#: the 50 slots go to never-driver-checked queries, oldest first —
-#: the FULL q59-q99 round-4/5 financial/relational block (32 queries:
-#: pivot, centroids, stratified/quota/weighted sampling, rolling
-#: median, unpivot, gap fill, VWAP/TWAP/drawdown/ATR/EWMA/DCA,
-#: sessionize, histograms, beta, funnel, cohort, correlated subquery,
-#: string-agg, interval union, mode, equi-depth, MAD, recency,
-#: repetition, z-score, calendar densify, profile, distribution
-#: ranks, rolling actives) plus the oldest q172-q194 leftovers
-#: (temperature mix, HLL intersection, attribution, target encoding,
-#: session paths, streaming HLL, Theil-Sen, KS drift, seasonal
-#: decompose, RFM, keyness, k-core, feature hash, robust scale —
-#: 14 of the 16; q193 RRF and q194 MAD outliers wait one round for
-#: the r12-new slots).  The other 4: the r12-new operators
-#: q292 (enforced knn cell fence), q293 (streaming near-dup index),
-#: q294 (streaming DDSketch quantiles) and q295 (Durbin–Watson; its
-#: q296 Cook's-distance twin stays judge-gate covered this round).
-#: EVERY demoted row (the 17 r11-new q275-q291, q272, and the 31
-#: r11-window backlog rows) is driver-green in CORRECTNESS_r11.json
-#: AND stays under the judge's full oracle gate.  Backlog after this
-#: window: 85 - 46 = 39 of the old never-checked remain
-#: (q193/q194 + q196-q274 leftovers).
-#: ROUND 13 ROTATION (VERDICT r12 ask #1 — finish the evidence debt
-#: in ONE rotation): the 44 remaining never-driver-checked queries
-#: take 44 slots — the q193-q215 statistics block (RRF fusion, MAD
-#: outliers, WoE/IV, Cramér's V, trimmed mean, Benford, decayed
-#: top-k, assortativity, Kaplan–Meier, ABC, diff-in-diff, MASE,
-#: negative sampling, k-anon rollup, gains curve, quantile
-#: normalize), the q225-q274 leftovers (equirectangular geo,
-#: Brown–Forsythe, Welch t, audio fingerprint near-dup, SRM, image
-#: dedup clusters, Cohen's/Fleiss' kappa, JS divergence, chi-square,
-#: Kendall tau, Wasserstein, Zipf, Poisson rate ratio, McNemar,
-#: n-gram diversity, Cochran Q, Good–Turing, Friedman, Mann–Kendall,
-#: changepoint, CvM, drift report) and the four r12-late diagnostics
-#: (q296 Cook's distance, q297 Ljung–Box, q298 Breusch–Pagan,
-#: q299 PACF, q300 KPSS) — plus the six r13-new operators (q301
-#: fenced SemDeDup, q302 streaming as-of, q303 mid-stream-compacted
-#: near-dup, q304 ARCH LM, q305 Granger F, q306 Hurst) = 50 exactly.
-#: EVERY demoted row is driver-green in CORRECTNESS_r12.json and
-#: stays under the judge's full oracle gate.  Backlog after this
-#: window: ZERO never-driver-checked queries remain EXCEPT the four
-#: r13-late finance diagnostics (q307 variance ratio, q308 bar
-#: volatility, q309 Amihud, q310 Engle–Granger) that landed after
-#: this window was frozen at 50 — the q296-q300 precedent; they are
-#: judge-gate covered this round and take the first four r14 slots.
-#: ROUND 14 ROTATION (optimization round; VERDICT r13 ask #3 — retire
-#: the last 4 never-driver-checked queries and put this round's
-#: rerouted operators in front of the driver): slots 1-4 are the
-#: r13-late finance diagnostics (q307-q310, the only remaining
-#: never-checked backlog — backlog reaches ZERO with this window);
-#: slots 5-16 are the queries whose operators' scale paths changed
-#: this round (arch_lm, hurst, durbin_watson shared keyed_lags plumbing,
-#: cusum, kpss, interpolate, page_hinkley tie-break plumbing, the
-#: streaming near-dup _kb marker protocol via q293/q303, crossover
-#: backtest, acf, macd — fresh driver evidence that the reroutes hold
-#: under the driver's own oracle); the other 34 slots rotate in the
-#: STALEST driver evidence, oldest `CORRECTNESS_r*` appearance first
-#: (the r3 block q03-q31, then the r4 block q05-q55, q91, q106, q23,
-#: q37 — none checked since r3-r5).  EVERY demoted row is
-#: driver-green in CORRECTNESS_r13.json and stays under the judge's
-#: full 310-query oracle gate.
+#: The driver's correctness gate checks only the FIRST 50 entries of
+#: ``queries()``, so this window is moved to the front of the registry.
+#: Rotate it each round so it holds the queries with the stalest driver
+#: evidence (oldest ``CORRECTNESS_r*`` appearance first), after any
+#: queries whose operators changed that round.  Queries outside the
+#: window still run under the full oracle gate.  Past rotations are in
+#: git history.
 _PRIORITY_WINDOW = [
     # r15 rotation (VERDICT r14 ask #1): slots 1-11 are the r14 rewrites
     # that landed after the r14 window froze and therefore have no

@@ -22,13 +22,12 @@ Catalyst's size estimate without changing any oracle hash.
 ``fill_forward``'s unbounded carry uses the bucket-level carry-in
 decomposition instead (same technique as the unkeyed as-of join in
 ``operators/asof.py``).  ``cumulative_product`` has NO bit-identical
-parallel form (re-associating the log-sum changes IEEE rounding), so its
-DEFAULT keeps the honest single-series window; the opt-in
-``strategy="chunked"`` two-pass (value-range chunks + exclusive
-chunk-offset prefix) trades bit-identity for parallelism under a stated
-≤ n_chunks·ε re-association tolerance — see its docstring and SCALE.md
-§8 for the measured ceiling, the keyed escape hatch, and the chunked
-A/B.
+parallel form (re-associating the log-sum changes IEEE rounding), so it
+keeps the single-series window — see SCALE.md §8 for the measured
+ceiling and the keyed escape hatch.  ``cusum``, ``interpolate_linear``
+and ``seasonal_decompose`` likewise run only their plain keyed windows:
+SCALE.md records chunked rewrites of each that measured slower or no
+faster.
 """
 
 from __future__ import annotations
@@ -110,34 +109,22 @@ def _explode_halo(
     indexed: DataFrame,
     halo: int,
     chunk_rows: int,
-    halo_fwd: int = 0,
 ) -> DataFrame:
     """Chunk assignment + halo duplication in ONE generator pass: each
-    row lands in its own chunk, the last ``halo`` rows of a chunk
-    additionally land in the NEXT chunk, and (for CENTERED frames) the
-    first ``halo_fwd`` rows additionally land in the PREVIOUS chunk —
-    all copies flagged ``_halo``.  An explode beats the self-union
-    formulation decisively: the union's branches each re-evaluate the
-    ENTIRE upstream (source scan, the index's count/offset join, any
-    pre-joins the caller stacked below) — measured 144 s → 62 s on the
-    100× ACF probe — while the explode evaluates it once and merely
-    emits ``1 + (halo + halo_fwd)/chunk_rows`` rows per input row."""
+    row lands in its own chunk, and the last ``halo`` rows of a chunk
+    additionally land in the NEXT chunk, flagged ``_halo``.  An explode
+    beats the self-union formulation decisively: the union's branches
+    each re-evaluate the ENTIRE upstream (source scan, the index's
+    count/offset join, any pre-joins the caller stacked below) —
+    measured 144 s → 62 s on the 100× ACF probe — while the explode
+    evaluates it once and merely emits ``1 + halo/chunk_rows`` rows per
+    input row."""
     chunk = F.floor(F.col("_g_idx") / F.lit(chunk_rows))
     pos = F.col("_g_idx") % chunk_rows
     in_tail = pos >= F.lit(chunk_rows - halo)
     targets = F.when(
         in_tail, F.array(chunk, chunk + F.lit(1))
     ).otherwise(F.array(chunk))
-    if halo_fwd > 0:
-        in_head = (pos < F.lit(halo_fwd)) & (chunk > 0)
-        targets = F.when(
-            in_tail & in_head,
-            F.array(chunk - F.lit(1), chunk, chunk + F.lit(1)),
-        ).otherwise(
-            F.when(in_tail, F.array(chunk, chunk + F.lit(1)))
-            .when(in_head, F.array(chunk - F.lit(1), chunk))
-            .otherwise(F.array(chunk))
-        )
     return indexed.withColumn("_chunk", F.explode(targets)).withColumn(
         "_halo", F.col("_chunk") != chunk
     )
@@ -157,7 +144,7 @@ _KEYED_HOT_KEY_ROWS = 1 << 19
 #: ordered window stays competitive far longer than for the many-lag
 #: stacks, so the index/chunk machinery must not engage until the hot
 #: key is big enough to pay for it.  Measured (r14 probe ladder,
-#: tools/probe_r14_floors.py — warm session, best-of-2, local[32],
+#: SCALE.md §8.16 ladder table — warm session, best-of-2, local[32],
 #: zipf events): hurst_aggvar — 2.5M-row hot key: 18.8 s window vs
 #: 16.9 s auto (below the gate both run the SAME plain plan; the
 #: delta is run noise); 7.6M-row hot key: window 51.3 s vs chunked
@@ -166,18 +153,6 @@ _KEYED_HOT_KEY_ROWS = 1 << 19
 #: (51.3 s at 7.6M vs ~18 s at 2.5M is 2.9× the time on 3× the rows
 #: and worsening — chunked grows linearly by construction).
 _KEYED_HOT_KEY_ROWS_CHEAP = 1 << 22
-
-#: cusum's single-decimal-cumsum shape: the r14 probe ladder measured
-#: the chunked prefix-scan plan a WASH against the plain window at
-#: both probe rungs (2.5M-row hot key: window 13.0 s vs chunked
-#: 14.0 s; 7.6M: 53.6 vs 54.3 s) — the two extra shuffles + the
-#: offset join exactly buy back the parallelism through the measured
-#: range.  The window plan's cost is growing super-linearly in the
-#: hot key (4.1× time on 3× rows) while the chunked plan is linear by
-#: construction, so the gate sits at 8M — just past the last measured
-#: even point — where extrapolation says the single-task sort starts
-#: losing outright.
-_KEYED_HOT_KEY_ROWS_CUSUM = 1 << 23
 
 
 def _keyed_index(
@@ -349,8 +324,6 @@ def _keyed_chunked_trailing(
     halo: int,
     compute: Callable[[DataFrame, WindowSpec], DataFrame],
     chunk_rows: int | None = None,
-    halo_fwd: int = 0,
-    keep_index: bool = False,
 ) -> DataFrame:
     """Exact KEYED trailing-frame windows with no single-task-per-key
     ceiling — the keyed twin of :func:`_chunked_trailing`: per-key
@@ -363,24 +336,19 @@ def _keyed_chunked_trailing(
     per-key count estimate without changing any oracle hash.
 
     ``compute(df, w)`` must add columns using specs derived from ``w``
-    whose frames reach at most ``halo`` rows back (and at most
-    ``halo_fwd`` rows forward — pass it for CENTERED frames like the
-    seasonal trend's ±h moving average); for STACKED windows (a second
-    window over a column the first one derived — MACD's signal line)
-    pass the SUM of the stage depths: a halo row at relative offset −h
-    has ``halo − h`` predecessors in its chunk, so any derived value
-    that later stages read within their own reach is already exact.
+    whose frames reach at most ``halo`` rows back; for STACKED windows
+    (a second window over a column the first one derived — MACD's
+    signal line) pass the SUM of the stage depths: a halo row at
+    relative offset −h has ``halo − h`` predecessors in its chunk, so
+    any derived value that later stages read within their own reach is
+    already exact.
     """
-    chunk_rows = max(chunk_rows or _CHUNK_ROWS, 4 * max(halo, halo_fwd), 1)
+    chunk_rows = max(chunk_rows or _CHUNK_ROWS, 4 * halo, 1)
     indexed = _keyed_index(df, keys, order_by, index_col="_g_idx")
-    u = _explode_halo(indexed, halo, chunk_rows, halo_fwd=halo_fwd)
+    u = _explode_halo(indexed, halo, chunk_rows)
     w = Window.partitionBy(*keys, "_chunk").orderBy("_g_idx")
-    out = compute(u, w).filter(~F.col("_halo")).drop("_chunk", "_halo")
-    # keep_index hands the caller the per-key dense position (0-based,
-    # identical to row_number()-1 under the same order) — e.g. the
-    # seasonal phase is just _g_idx % period, saving a second ordered
-    # full-key window.
-    return out if keep_index else out.drop("_g_idx")
+    out = compute(u, w).filter(~F.col("_halo"))
+    return out.drop("_chunk", "_halo", "_g_idx")
 
 
 def _keyed_plan(
@@ -591,91 +559,24 @@ def cumulative_product(
     order_col: str,
     partition_by: Sequence[str] | None = None,
     out: str = "cumprod",
-    strategy: str = "exact",
-    n_chunks: int = 64,
 ) -> Callable[[DataFrame], DataFrame]:
     """Running product of ``1 + col`` — equity curve (notebook cell 16 W5).
 
     Spark has no ``product`` window aggregate; use the standard
     exp-sum-log identity (valid for returns > -1).
 
-    ``strategy="exact"`` (default) keeps the single window — for an
-    UNKEYED series that is one sort task (the honest W5 ceiling: a
-    bit-identical parallel form of a float running sum does not
-    exist, because float addition is not associative).
-
-    ``strategy="chunked"`` is the opt-in parallel path for a giant
-    single series, with a stated re-association tolerance instead of
-    bit-identity: the order domain is split into ``n_chunks``
-    VALUE-RANGE chunks (deterministic — boundaries come from one
-    min/max aggregate, never from sampling, and order ties share a
-    value so they can never straddle a boundary), each chunk runs its
-    cumulative log1p sum in parallel, and a metadata-scale exclusive
-    prefix over the per-chunk totals (n_chunks rows) is broadcast
-    back and added before the final ``exp``.  The ONLY difference vs
-    exact is the re-association of the log1p sum at chunk boundaries:
-    error per row is ≤ (number of crossed boundaries) ulps of the
-    running log-sum — ≤ n_chunks·ε ≈ 64·2⁻⁵² relative, in practice
-    ≤ 1e-12 relative on the product (pytest-pinned).  Chunked output
-    is therefore NOT oracle-hash-comparable; callers that need
-    bit-identity keep the default.  With ``partition_by`` set the
-    window is already parallel across keys, so ``chunked`` silently
-    defers to ``exact`` (the keyed escape hatch).
+    One plain window.  For an UNKEYED series that is one sort task —
+    the honest W5 ceiling: a bit-identical parallel form of a float
+    running sum does not exist, because float addition is not
+    associative.  Giant series should pass ``partition_by``, which
+    makes the window parallel across keys (SCALE.md §8).
     """
-    if strategy not in ("exact", "chunked"):
-        raise ValueError("strategy must be 'exact' or 'chunked'")
-    if n_chunks < 2:
-        raise ValueError("n_chunks must be >= 2")
 
     def _t(df: DataFrame) -> DataFrame:
-        if strategy == "exact" or partition_by:
-            w = _window(partition_by, order_col).rowsBetween(
-                Window.unboundedPreceding, 0
-            )
-            return df.withColumn(
-                out, F.exp(F.sum(F.log1p(F.col(col))).over(w))
-            )
-        o = F.col(order_col).cast("double")
-        bounds = df.agg(
-            F.min(o).alias("_lo"), F.max(o).alias("_hi")
+        w = _window(partition_by, order_col).rowsBetween(
+            Window.unboundedPreceding, 0
         )
-        from btc_usdt_etl_pipeline_spark.functions import attach_scalar
-
-        b = attach_scalar(df, bounds, F.col(order_col), F.col("_lo"))
-        span = F.col("_hi") - F.col("_lo")
-        chunk = F.when(span <= 0, F.lit(0)).otherwise(
-            F.least(
-                F.lit(n_chunks - 1),
-                F.floor((o - F.col("_lo")) / span * n_chunks).cast(
-                    "int"
-                ),
-            )
-        )
-        staged = b.withColumn("_chunk", chunk).drop("_lo", "_hi")
-        win = Window.partitionBy("_chunk").orderBy(
-            order_col
-        ).rowsBetween(Window.unboundedPreceding, 0)
-        within = staged.withColumn(
-            "_cumlog", F.sum(F.log1p(F.col(col))).over(win)
-        )
-        totals = (
-            staged.groupBy("_chunk")
-            .agg(F.sum(F.log1p(F.col(col))).alias("_tot"))
-        )
-        woff = Window.orderBy("_chunk").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = totals.select(
-            "_chunk",
-            F.coalesce(F.sum("_tot").over(woff), F.lit(0.0)).alias(
-                "_off"
-            ),
-        )
-        return (
-            within.join(F.broadcast(offsets), "_chunk")
-            .withColumn(out, F.exp(F.col("_off") + F.col("_cumlog")))
-            .drop("_chunk", "_cumlog", "_off")
-        )
+        return df.withColumn(out, F.exp(F.sum(F.log1p(F.col(col))).over(w)))
 
     return _t
 
@@ -880,7 +781,6 @@ def interpolate_linear(
     partition_by: Sequence[str] | None = None,
     order_by: Sequence[str] | None = None,
     out: str | None = None,
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Linear interpolation of interior nulls per series — the
     gap-fill that respects the TIME AXIS where :func:`fill_forward`
@@ -911,31 +811,12 @@ def interpolate_linear(
     engine; no rounding contract needed (the oracle replays the same
     arithmetic; pins at 6 dp only at the comparison layer).
 
-    Scale path (r14): ``strategy='chunked'`` (explicit) swaps in the
-    chunked ANCHOR-CARRY plan — per-key dense index
-    (:func:`_keyed_index`), fixed chunks, within-chunk
-    ``last ignorenulls`` passes, and the cross-chunk carry as a
-    metadata-scale join: per-(key, chunk) first/last anchor structs →
-    per-key exclusive running ``last ignorenulls`` over the tiny chunk
-    table (both directions) → ``coalesce(within-chunk anchor,
-    chunk-prefix anchor)``.  Anchors are exact row values, so the plan
-    is BIT-IDENTICAL to the two-pass window.  Unkeyed input partitions
-    on a constant column; ``order_by`` must be unique per key for the
-    chunked plan (the (ts, event_id) tie-break contract).
-
-    Like :func:`seasonal_decompose` — and unlike arch_lm / kpss —
-    **'auto' deliberately stays on the plain window**: the r14 probe
-    ladder (warm best-of-2, zipf events) measured the chunked rewrite
-    LOSING at both rungs — 2.5M-row hot key: window 23.5 s vs 23.8 s
-    (auto stayed plain, no cost); 7.6M: window 73.8 s vs chunked
-    107.1 s (+45%).  An anchor carry is one incremental
-    ``last ignorenulls`` per direction — too cheap per row for the
-    index + chunk-offset join machinery to pay for itself anywhere in
-    the measured range, and the loss was GROWING with the hot key.
-    Revisit only with a measured crossover on a real corpus.
+    Scale: the plain window is the only plan.  A chunked anchor-carry
+    rewrite measured slower at every rung of the r14 probe ladder
+    (SCALE.md §8.16 — 7.6M-row hot key: 73.8 s → 107.1 s); an anchor
+    carry is one incremental ``last ignorenulls`` per direction, too
+    cheap per row to fund an index and a chunk-offset join.
     """
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
     ocols = list(order_by) if order_by else [time_col]
     dst = out or value_col
 
@@ -962,69 +843,6 @@ def interpolate_linear(
                 )
             )
 
-        d0 = df
-        pkeys = keys
-        if not pkeys:
-            d0 = df.withColumn("_ip_pk", F.lit(1))
-            pkeys = ["_ip_pk"]
-        # 'auto' keeps the plain window (measured: chunked loses at
-        # every probe rung — docstring); 'chunked' must stay explicit.
-        chunked, cr = (strategy == "chunked"), None
-        if chunked:
-            from btc_usdt_etl_pipeline_spark.functions import (
-                null_safe_join,
-            )
-
-            cr = max(cr or _CHUNK_ROWS, 4)
-            staged = _keyed_index(
-                d0, pkeys, ocols, index_col="_ip_idx"
-            ).withColumn(
-                "_ip_chunk", F.floor(F.col("_ip_idx") / F.lit(cr))
-            )
-            parts = staged.groupBy(*pkeys, "_ip_chunk").agg(
-                F.max_by(
-                    anchor, F.when(anchor.isNotNull(), F.col("_ip_idx"))
-                ).alias("_ip_la"),
-                F.min_by(
-                    anchor, F.when(anchor.isNotNull(), F.col("_ip_idx"))
-                ).alias("_ip_fa"),
-            )
-            wkf = Window.partitionBy(*pkeys).orderBy(
-                "_ip_chunk"
-            ).rowsBetween(Window.unboundedPreceding, -1)
-            wkb = Window.partitionBy(*pkeys).orderBy(
-                F.col("_ip_chunk").desc()
-            ).rowsBetween(Window.unboundedPreceding, -1)
-            offs = parts.select(
-                *pkeys,
-                "_ip_chunk",
-                F.last("_ip_la", ignorenulls=True).over(wkf).alias(
-                    "_ip_poff"
-                ),
-                F.last("_ip_fa", ignorenulls=True).over(wkb).alias(
-                    "_ip_noff"
-                ),
-            )
-            j = null_safe_join(staged, offs, [*pkeys, "_ip_chunk"])
-            wf = Window.partitionBy(*pkeys, "_ip_chunk").orderBy(
-                "_ip_idx"
-            ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            wb = Window.partitionBy(*pkeys, "_ip_chunk").orderBy(
-                F.col("_ip_idx").desc()
-            ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            prev = F.coalesce(
-                F.last(anchor, ignorenulls=True).over(wf),
-                F.col("_ip_poff"),
-            )
-            nxt = F.coalesce(
-                F.last(anchor, ignorenulls=True).over(wb),
-                F.col("_ip_noff"),
-            )
-            out_df = j.withColumn(dst, _interp(prev, nxt)).drop(
-                "_ip_idx", "_ip_chunk", "_ip_poff", "_ip_noff"
-            )
-            return out_df.drop("_ip_pk") if not keys else out_df
-
         wbase = (
             Window.partitionBy(*keys) if keys else Window.partitionBy()
         )
@@ -1049,7 +867,6 @@ def cusum(
     partition_by: str | None = None,
     order_by: Sequence[str] = ("ts",),
     out: str = "cusum",
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """One-sided CUSUM changepoint statistic (Page 1954):
 
@@ -1064,112 +881,24 @@ def cusum(
     decimal idiom, making S_t order-insensitive and replayable
     bit-for-bit by a SQL oracle.
 
-    Scale path (r14): past the hot-key gate ``strategy='auto'`` swaps
-    in the chunked PREFIX-SCAN plan — per-key dense index
-    (:func:`_keyed_index`, no per-key sort task), fixed chunks, and the
-    cross-chunk carry handled by the SYNTHETIC-OFFSET-ROW idiom: each
-    chunk c > 0 receives one flagged extra row whose deviation term is
-    the exact decimal sum of every earlier chunk, sorted before all
-    real rows, so the running decimal sum INSIDE one window aggregate
-    equals the full-prefix sum exactly (a decimal(38,6)+decimal(38,6)
-    binary ADD would round to scale 5 under Spark's precision-loss
-    rule — accumulating through the agg buffer instead stays exact,
-    which is what keeps the chunked plan BIT-IDENTICAL).  The running
-    min composes associatively (``least`` of the within-chunk running
-    min and the exclusive prefix over per-chunk minima — doubles, no
-    precision hazard).  Unkeyed input partitions on a constant column
-    (the ``variance_ratio`` trick).  ``order_by`` must be unique per
-    key (the (ts, event_id) tie-break contract) for the chunked plan.
+    Scale: the plain window is the only plan, and building it runs no
+    Spark job.  A chunked prefix-scan rewrite measured a wash at both
+    rungs of the r14 probe ladder (SCALE.md §8.16 — 2.5M-row hot key:
+    13.0 vs 14.0 s; 7.6M: 53.6 vs 54.3 s).
 
     ``threshold`` adds an ``alarm`` boolean (S_t > h) — the standard
     drift detector; reset-after-alarm variants re-run from the alarm
     point (operationally a filter + recompute, still no recursion).
     """
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
 
     def _t(df: DataFrame) -> DataFrame:
-        from btc_usdt_etl_pipeline_spark.functions import (
-            DEC,
-            null_safe_join,
-        )
+        from btc_usdt_etl_pipeline_spark.functions import DEC
 
         dev = (
             F.col(value_col).cast("double")
             - F.lit(float(target))
             - F.lit(float(slack))
         ).cast(DEC)
-
-        d0 = df
-        pkeys = [partition_by] if partition_by else []
-        if not pkeys:
-            d0 = df.withColumn("_cs_pk", F.lit(1))
-            pkeys = ["_cs_pk"]
-        chunked, cr = _keyed_plan(
-            d0, pkeys, order_by[0], strategy, halo=1,
-            hot_rows=_KEYED_HOT_KEY_ROWS_CUSUM,
-        )
-        if chunked:
-            cr = max(cr or _CHUNK_ROWS, 4)
-            staged = _keyed_index(
-                d0, pkeys, list(order_by), index_col="_cs_idx"
-            ).withColumn(
-                "_cs_chunk", F.floor(F.col("_cs_idx") / F.lit(cr))
-            ).withColumn("_cs_dev", dev)
-            parts = staged.groupBy(*pkeys, "_cs_chunk").agg(
-                F.sum("_cs_dev").alias("_cs_sum")
-            )
-            wk = Window.partitionBy(*pkeys).orderBy(
-                "_cs_chunk"
-            ).rowsBetween(Window.unboundedPreceding, -1)
-            offs = parts.select(
-                *pkeys,
-                "_cs_chunk",
-                F.sum("_cs_sum").over(wk).alias("_cs_off"),
-            )
-            syn = offs.where(F.col("_cs_off").isNotNull()).select(
-                *pkeys,
-                "_cs_chunk",
-                (F.col("_cs_chunk") * F.lit(cr) - F.lit(1)).alias(
-                    "_cs_idx"
-                ),
-                F.col("_cs_off").alias("_cs_dev"),
-                F.lit(True).alias("_cs_syn"),
-            )
-            u = staged.withColumn(
-                "_cs_syn", F.lit(False)
-            ).unionByName(syn, allowMissingColumns=True)
-            w = Window.partitionBy(*pkeys, "_cs_chunk").orderBy(
-                "_cs_idx"
-            ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            u = u.withColumn(
-                "_rs", F.sum("_cs_dev").over(w).cast("double")
-            )
-            cmins = u.groupBy(*pkeys, "_cs_chunk").agg(
-                F.min("_rs").alias("_cs_cmin")
-            )
-            moffs = cmins.select(
-                *pkeys,
-                "_cs_chunk",
-                F.min("_cs_cmin").over(wk).alias("_cs_moff"),
-            )
-            u = null_safe_join(u, moffs, [*pkeys, "_cs_chunk"])
-            full_min = F.least(
-                F.min("_rs").over(w), F.col("_cs_moff")
-            )
-            out_df = u.withColumn(
-                out, F.col("_rs") - F.least(F.lit(0.0), full_min)
-            ).where(~F.col("_cs_syn")).drop(
-                "_cs_idx", "_cs_chunk", "_cs_dev", "_cs_syn",
-                "_cs_moff", "_rs",
-            )
-            if not partition_by:
-                out_df = out_df.drop("_cs_pk")
-            if threshold is not None:
-                out_df = out_df.withColumn(
-                    "alarm", F.col(out) > F.lit(float(threshold))
-                )
-            return out_df
 
         order = [F.col(c) for c in order_by]
         wb = (
@@ -1897,7 +1626,6 @@ def seasonal_decompose(
     trend_halfwidth: int | None = None,
     partition_by: str | None = None,
     order_by: Sequence[str] = ("ts",),
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Additive seasonal decomposition (STL-lite):
 
@@ -1920,70 +1648,35 @@ def seasonal_decompose(
 
     Returns the input plus ``phase, trend, seasonal, resid``.
 
-    ``strategy='chunked'`` (explicit, keyed only) runs the centered ±h
-    trend frame under the chunked-halo plan (``halo = halo_fwd = h``,
-    a two-sided context band) and derives the phase from the chunked
-    plan's per-key dense index (``_g_idx % period`` ≡
-    ``row_number() − 1 mod period``) — bit-identical
-    (pytest-verified).  Unlike MACD/ACF, **'auto' deliberately stays
-    on the plain window**: measured at the 100× corpus (10M rows,
-    2.5M-row hot key) the plain plan runs 38.7 s while the chunked
-    rewrite costs 77.5 s — a ±12-row frame is too cheap per row for
-    the index/explode machinery to pay for itself, the opposite
-    verdict from the 120-lag MACD stack.  The per-(key, phase) mean
-    windows split a hot key ``period``-ways by construction and the
-    grand mean is frameless, so neither is a chunking candidate
-    either.  Revisit only if a real workload concentrates ~10× more
-    rows in one key than the probe corpus.
+    Scale: the plain window is the only plan.  A chunked rewrite of
+    the centered ±h trend frame measured 77.5 s against 38.7 s for
+    this plan at the 100× corpus (SCALE.md §8.12 — 2.5M-row hot key): a
+    ±12-row frame is too cheap per row to pay for the index/explode
+    machinery, the opposite verdict from the 120-lag MACD stack.  The
+    per-(key, phase) mean windows split a hot key ``period``-ways by
+    construction and the grand mean is frameless, so neither is a
+    chunking candidate either.
     """
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
     h = trend_halfwidth if trend_halfwidth is not None else period // 2
 
     def _t(df: DataFrame) -> DataFrame:
         from btc_usdt_etl_pipeline_spark.functions import DEC
-
-        gcols = [partition_by] if partition_by else []
-        chunked = bool(gcols) and strategy == "chunked"
-        cr = None
 
         wg = (
             Window.partitionBy(partition_by)
             if partition_by
             else Window.partitionBy()
         )
-        if chunked:
-
-            def _trend(u: DataFrame, w: WindowSpec) -> DataFrame:
-                fr = w.rowsBetween(-h, h)
-                return u.withColumn(
-                    "trend",
-                    F.sum(F.col(value_col).cast(DEC)).over(fr).cast(
-                        "double"
-                    )
-                    / F.count(value_col).over(fr),
-                )
-
-            d = _keyed_chunked_trailing(
-                df, gcols, order_by, halo=h, compute=_trend,
-                chunk_rows=cr, halo_fwd=h, keep_index=True,
-            ).withColumn(
-                "phase",
-                F.pmod(F.col("_g_idx"), F.lit(period)).cast("int"),
-            ).drop("_g_idx")
-        else:
-            wo = wg.orderBy(*[F.col(c) for c in order_by])
-            frame = wo.rowsBetween(-h, h)
-            trend = (
-                F.sum(F.col(value_col).cast(DEC)).over(frame).cast(
-                    "double"
-                )
-                / F.count(value_col).over(frame)
-            )
-            phase = F.pmod(
-                F.row_number().over(wo) - 1, F.lit(period)
-            ).cast("int")
-            d = df.withColumn("trend", trend).withColumn("phase", phase)
+        wo = wg.orderBy(*[F.col(c) for c in order_by])
+        frame = wo.rowsBetween(-h, h)
+        trend = (
+            F.sum(F.col(value_col).cast(DEC)).over(frame).cast("double")
+            / F.count(value_col).over(frame)
+        )
+        phase = F.pmod(
+            F.row_number().over(wo) - 1, F.lit(period)
+        ).cast("int")
+        d = df.withColumn("trend", trend).withColumn("phase", phase)
         d = d.withColumn("_detr", F.col(value_col) - F.col("trend"))
         wp = (
             Window.partitionBy(partition_by, "phase")
@@ -2011,7 +1704,7 @@ def seasonal_decompose(
         # /period would underestimate the grand mean, mis-centering
         # seasonal and resid for short series.  For series >= period
         # rows the two are identical.
-        # The grand mean stays a WINDOW in both modes: it is frameless
+        # The grand mean stays a WINDOW: it is frameless
         # (one accumulate pass per key, cheap even on a hot key), and a
         # groupBy+join formulation measured no better (74.3 vs 77.5 s
         # at 100×) while re-evaluating the entire upstream pipeline in
@@ -2340,9 +2033,12 @@ def kpss_level(
     keyed window (which buffers a hot key's whole series on one task)
     to a partial-aggregated groupBy + null-safe join-back (the exact
     same decimal-sum/count quotient), the cumulative S_t runs through
-    the SYNTHETIC-OFFSET-ROW prefix-scan idiom (see :func:`cusum` —
-    cross-chunk carries accumulate inside one decimal sum aggregate,
-    never a lossy decimal binary add), and the L lag products ride the
+    the SYNTHETIC-OFFSET-ROW prefix-scan idiom (each chunk c > 0 gets
+    one flagged extra row carrying the exact decimal sum of every
+    earlier chunk, sorted before its real rows, so cross-chunk carries
+    accumulate inside one decimal sum aggregate — a decimal(38,6)
+    binary add would round to scale 5 under Spark's precision-loss
+    rule), and the L lag products ride the
     chunked-halo context rows (``_explode_halo``, halo = L; the
     synthetic offset row sorts before the halo band, so the deepest
     real-row lag lands exactly on the first halo copy).  BIT-IDENTICAL

@@ -15,9 +15,75 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+#: Confs the engine depends on that a live session also accepts.
+#: ``build_session`` applies them at startup; ``__spark_entry__._tune``
+#: applies them again on every table load, because the external driver
+#: runs the queries in its own plain SparkSession.
+RUNTIME_CONF = {
+    # Epoch→timestamp conversions and date_trunc independent of the host
+    # timezone (oracle reproducibility).
+    "spark.sql.session.timeZone": "UTC",
+    # Sketch-style operators (minhash signatures, simhash votes) carry
+    # 100+ agg columns per row; the default codegen.maxFields=100
+    # silently drops whole-stage codegen for exactly those plans —
+    # a 10-30x slowdown on the hottest path.
+    "spark.sql.codegen.maxFields": "1024",
+    # AQE: runtime partition coalescing + skew-join handling means the
+    # static shuffle.partitions only needs to be an upper bound.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Broadcast anything under 32 MB — every dim table in the star
+    # schema (region/nation/customer/supplier/part) qualifies.
+    "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+    # A bare session uses 200.  AQE coalesces batch exchanges either
+    # way, but STREAMING state stores are fixed at the shuffle partition
+    # count (no AQE in streaming): 200 state-store instances per
+    # stateful operator per micro-batch put q65's availableNow drain at
+    # ~30 s on 10k rows.  On a real cluster set ≈ 2-3× total cores.
+    "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
+    # Prefer shuffled-hash over sort-merge when the planner's size
+    # conditions hold (build side < broadcastThreshold ×
+    # shuffle.partitions AND ≥3× smaller than the probe side): skips
+    # both sort passes.  Measured r14 A/B (OPTIMIZATION_r14.md §E —
+    # within-session, order alternated per round, warm-up discarded; an
+    # earlier fixed smj-before-shj order overstated the win): repeatable
+    # wins exactly where a conversion happens (q119 0.88x, q83 0.92x,
+    # q178 0.93x), the other 7 SMJ-heavy queries unchanged plans, ±7%
+    # session noise.  The AQE
+    # threshold additionally converts SMJ→SHJ at runtime when every
+    # MEASURED post-shuffle partition is ≤64 MB — the size-bounded path
+    # that stays safe when static estimates are wrong at scale
+    # (spill-less build ≤64 MB/partition by construction); AQE
+    # skew-join splitting remains on and applies to SHJ too.
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": str(
+        64 * 1024 * 1024
+    ),
+}
+
+
+def put_package_on_worker_path(sc: SparkContext) -> None:
+    """Let Python workers import this package whatever the process cwd.
+
+    A worker starts as ``python -m pyspark.daemon`` and so finds the
+    package only when the cwd is the repository root; from anywhere
+    else every Python UDF fails with ``ModuleNotFoundError``.  Adding
+    the package's parent directory to ``sc.environment`` ships it to
+    the workers of every Python function built afterwards.  Later calls
+    find it there and change nothing, so this happens once per
+    SparkContext.
+    """
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = sc.environment.get("PYTHONPATH", "")
+    if root not in paths.split(os.pathsep):
+        sc.environment["PYTHONPATH"] = os.pathsep.join(
+            p for p in (paths, root) if p
+        )
 
 
 def build_session(
@@ -36,49 +102,22 @@ def build_session(
       independent of the host timezone (oracle reproducibility).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in RUNTIME_CONF.items():
+        builder = builder.config(k, v)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        builder.config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Sketch-style operators (minhash signatures, simhash votes) carry
-        # 100+ agg columns per row; the default codegen.maxFields=100
-        # silently drops whole-stage codegen for exactly those plans —
-        # a 10-30x slowdown on the hottest path.
-        .config("spark.sql.codegen.maxFields", "1024")
-        # Broadcast anything under 32 MB — every dim table in the star
-        # schema (region/nation/customer/supplier/part) qualifies.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # Prefer shuffled-hash over sort-merge when the planner's size
-        # conditions hold (build side < broadcastThreshold ×
-        # shuffle.partitions AND ≥3× smaller than the probe side): skips
-        # both sort passes.  Measured r14 A/B (tools/probe_shj_ab2.py —
-        # within-session, order alternated per round, warm-up discarded;
-        # the earlier probe_shj_ab.py run overstated the win via a fixed
-        # smj-before-shj order): repeatable wins exactly where a
-        # conversion happens (q119 0.88x, q83 0.92x, q178 0.93x), the
-        # other 7 SMJ-heavy queries unchanged plans, ±7% session noise.
-        # The AQE threshold additionally converts SMJ→SHJ at runtime
-        # when every MEASURED post-shuffle partition is ≤64 MB — the
-        # size-bounded path that stays safe when static estimates are
-        # wrong at scale (spill-less build ≤64 MB/partition by
-        # construction); AQE skew-join splitting above remains on and
-        # applies to SHJ too.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            str(64 * 1024 * 1024),
-        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     builder = builder.master(master or f"local[{cpus}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    put_package_on_worker_path(spark.sparkContext)
+    return spark

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import subprocess
 import sys
 
 import pytest
@@ -111,3 +112,35 @@ def test_streaming_events_source_matches_batch(spark):
     ev = _load(spark, "events")
     n, lo, hi = ev.agg(F.count(F.lit(1)), F.min("ts"), F.max("ts")).first()
     assert (got["n"], got["lo"], got["hi"]) == (n, lo, hi)
+
+
+#: Runs one Python-UDF query (q126, numpy GEMM per label block) the way
+#: the driver does: a plain SparkSession, the entry module put on the
+#: path by file location only.
+_FOREIGN_CWD_RUN = """
+import sys
+sys.path.insert(0, {root!r})
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.driver.memory", "1g")
+         .config("spark.ui.enabled", "false").getOrCreate())
+import __spark_entry__ as entry
+rows = entry.queries()["q126_cosine_pairs_blas"](spark, {sf!r}).collect()
+print("ROWS", len(rows))
+"""
+
+
+def test_python_udf_query_runs_from_foreign_cwd(tmp_path):
+    """Python workers must import the package whatever the process cwd;
+    before the entry module put it on the workers' path, q126 failed
+    with ModuleNotFoundError from any cwd but the repository root."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         _FOREIGN_CWD_RUN.format(root=root, sf=os.path.abspath(SF_DIR))],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    (line,) = [ln for ln in proc.stdout.splitlines() if ln.startswith("ROWS")]
+    assert int(line.split()[1]) > 0

@@ -488,12 +488,6 @@ def test_keyed_window_scale_paths_bit_identical(spark, monkeypatch):
             "x", max_lag=5, partition_by="k", order_by=("t", "i"),
             strategy=s,
         ),
-        # centered ±h trend frame: exercises the two-sided (halo_fwd)
-        # duplication and the index-derived phase
-        lambda s: W.seasonal_decompose(
-            "x", period=24, trend_halfwidth=12, partition_by="k",
-            order_by=("t", "i"), strategy=s,
-        ),
         # two lagged columns + join-based means (x vs a shifted copy)
         lambda s: W.cross_correlation(
             "x", "i", max_lag=4, partition_by="k", order_by=("t", "i"),
@@ -795,10 +789,6 @@ def test_null_partition_keys_survive_scale_paths(spark, monkeypatch):
         lambda s: W.cross_correlation(
             "x", "i", max_lag=3, partition_by="k", order_by=("t", "i"),
             strategy=s,
-        ),
-        lambda s: W.seasonal_decompose(
-            "x", period=12, trend_halfwidth=6, partition_by="k",
-            order_by=("t", "i"), strategy=s,
         ),
     ):
         a = rows_of(df.transform(mk("window")))

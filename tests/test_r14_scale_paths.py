@@ -9,7 +9,9 @@ offsets).  These tests pin the graded property: the chunked plan equals
 the plain-window plan BIT-FOR-BIT (same strings after collect), on
 multi-chunk inputs (module chunk size shrunk so halo machinery really
 engages), for grouped AND ungrouped invocations, with tie-broken order
-tuples and short/degenerate series.
+tuples and short/degenerate series.  ``cusum`` and
+``interpolate_linear`` have only the plain window plan; their tests
+check it against a Python reference on the same fixtures.
 """
 
 from __future__ import annotations
@@ -117,48 +119,75 @@ def test_r14_strategy_validation():
     with pytest.raises(ValueError, match="strategy"):
         W.hurst_aggvar("v", strategy="bogus")
     with pytest.raises(ValueError, match="strategy"):
-        W.cusum("v", 1.0, strategy="bogus")
-    with pytest.raises(ValueError, match="strategy"):
         W.kpss_level("v", strategy="bogus")
-    with pytest.raises(ValueError, match="strategy"):
-        W.interpolate_linear("v", "ts", strategy="bogus")
 
 
-# ---- prefix-scan family (cusum / kpss) and anchor-carry (interpolate):
-# the r14 synthetic-offset-row + chunk-join machinery must equal the
-# plain full-prefix window BIT-FOR-BIT, across chunk boundaries, with
-# null values, short series, and grouped/ungrouped invocations.
+def _cusum_ref(rows, target, slack):
+    """Page's recursion per group over ``(g, ts, eid, v)`` rows in
+    (ts, eid) order; a NULL value adds no deviation term."""
+    out, s, prev = {}, 0.0, None
+    for g, _, eid, v in sorted(rows, key=lambda r: r[:3]):
+        if g != prev:
+            s, prev = 0.0, g
+        if v is not None:
+            s = max(0.0, s + (v - target - slack))
+        out[(g, eid)] = s
+    return out
 
 
-def test_cusum_chunked_bit_identical_grouped(spark, tiny_chunks):
-    df = _mk_series(spark)
-    # plant nulls so running sums skip terms on both plans
-    df = df.withColumn(
-        "v",
-        W.F.when(W.F.col("eid") % 11 == 5, None).otherwise(
-            W.F.col("v")
-        ),
+def _with_nulls(df, col, pred):
+    """``col`` = ``v`` with NULL wherever ``pred`` holds."""
+    return df.withColumn(
+        col, W.F.when(pred, None).otherwise(W.F.col("v"))
     )
-    mk = lambda s: W.cusum(
+
+
+def test_cusum_matches_recursion_grouped(spark):
+    # planted nulls skip running-sum terms; ts ties broken by eid
+    df = _with_nulls(_mk_series(spark), "v", W.F.col("eid") % 11 == 5)
+    got = df.transform(W.cusum(
         "v", target=5.0, slack=0.5, threshold=20.0,
-        partition_by="g", order_by=("ts", "eid"), strategy=s,
+        partition_by="g", order_by=("ts", "eid"),
+    ))
+    assert got.columns == [*df.columns, "cusum", "alarm"]
+    ref = _cusum_ref(
+        [tuple(r) for r in df.collect()], target=5.0, slack=0.5
     )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
-    assert a == b and len(a) == 102
-    assert df.transform(mk("window")).columns == \
-        df.transform(mk("chunked")).columns
+    rows = got.collect()
+    assert len(rows) == 102
+    for r in rows:
+        want = ref[(r["g"], r["eid"])]
+        assert abs(r["cusum"] - want) < 1e-6, (r, want)
+        assert r["alarm"] == (r["cusum"] > 20.0)
 
 
-def test_cusum_chunked_bit_identical_ungrouped(spark, tiny_chunks):
+def test_cusum_matches_recursion_ungrouped(spark):
     df = _mk_series(spark).where("g = 'hot'")
-    mk = lambda s: W.cusum(
-        "v", target=5.0, order_by=("ts", "eid"), strategy=s
+    got = df.transform(W.cusum("v", target=5.0, order_by=("ts", "eid")))
+    # no helper column (partition placeholder, running sum) survives
+    assert got.columns == [*df.columns, "cusum"]
+    ref = _cusum_ref(
+        [tuple(r) for r in df.collect()], target=5.0, slack=0.0
     )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
-    assert a == b and len(a) == 97
-    assert "_cs_pk" not in df.transform(mk("chunked")).columns
+    rows = got.collect()
+    assert len(rows) == 97
+    for r in rows:
+        assert abs(r["cusum"] - ref[(r["g"], r["eid"])]) < 1e-6, r
+
+
+def test_cusum_builds_without_a_spark_job(spark, monkeypatch):
+    """Building cusum is lazy even when the size gate fires: no hot-key
+    count job (or any other) runs until an action."""
+    monkeypatch.setattr(W, "_CHUNK_THRESHOLD_BYTES", -1)
+    df = _mk_series(spark).where("g = 'hot'")
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext.setJobGroup("cusum-build", "plan-only")
+    try:
+        out = df.transform(W.cusum("v", target=5.0, order_by=("ts", "eid")))
+    finally:
+        spark.sparkContext.setJobGroup(None, None)
+    assert tracker.getJobIdsForGroup("cusum-build") == []
+    assert out.count() == 97
 
 
 def test_kpss_chunked_bit_identical_grouped(spark, tiny_chunks):
@@ -182,24 +211,58 @@ def test_kpss_chunked_bit_identical_ungrouped(spark, tiny_chunks):
     assert a == b and len(a) == 1
 
 
-def test_interpolate_chunked_bit_identical_grouped(spark, tiny_chunks):
-    # nulls planted mid-series AND straddling chunk boundaries (runs of
-    # 3 nulls with chunk size 8), plus an all-null tail group edge
-    df = _mk_series(spark).withColumn(
-        "vn",
-        W.F.when(W.F.col("eid") % 7 < 3, None).otherwise(
-            W.F.col("v")
-        ),
-    ).withColumn("tsec", W.F.col("eid").cast("double"))
-    mk = lambda s: W.interpolate_linear(
-        "vn", "tsec", partition_by=["g"], order_by=("ts", "eid"),
-        out="filled", strategy=s,
+def _interp_ref(rows):
+    """Linear interpolation per group over ``(g, eid, t, v)`` rows in
+    eid order: interior NULLs from the nearest non-null anchors on each
+    side, leading/trailing NULLs stay NULL, a zero time gap keeps the
+    previous anchor's value."""
+    out = {}
+    for g in {r[0] for r in rows}:
+        ser = sorted((r for r in rows if r[0] == g), key=lambda r: r[1])
+        for i, (_, eid, t, v) in enumerate(ser):
+            if v is not None:
+                out[(g, eid)] = v
+                continue
+            prev = next((r for r in reversed(ser[:i]) if r[3] is not None),
+                        None)
+            nxt = next((r for r in ser[i + 1:] if r[3] is not None), None)
+            if prev is None or nxt is None:
+                out[(g, eid)] = None
+            elif nxt[2] == prev[2]:
+                out[(g, eid)] = prev[3]
+            else:
+                out[(g, eid)] = prev[3] + (nxt[3] - prev[3]) * (
+                    t - prev[2]) / (nxt[2] - prev[2])
+    return out
+
+
+def _check_interp(df, got):
+    ref = _interp_ref(
+        [(r["g"], r["eid"], r["tsec"], r["vn"]) for r in df.collect()]
     )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
-    assert a == b and len(a) == 102
-    assert df.transform(mk("window")).columns == \
-        df.transform(mk("chunked")).columns
+    rows = got.collect()
+    assert len(rows) == len(ref)
+    for r in rows:
+        want = ref[(r["g"], r["eid"])]
+        if want is None:
+            assert r["filled"] is None, r
+        else:
+            assert r["filled"] == pytest.approx(want, abs=1e-12), r
+
+
+def test_interpolate_matches_reference_grouped(spark):
+    # runs of 3 planted nulls mid-series, leading nulls in both groups,
+    # and ts ties broken by eid
+    df = _with_nulls(
+        _mk_series(spark), "vn", W.F.col("eid") % 7 < 3
+    ).withColumn("tsec", W.F.col("eid").cast("double"))
+    got = df.transform(W.interpolate_linear(
+        "vn", "tsec", partition_by=["g"], order_by=("ts", "eid"),
+        out="filled",
+    ))
+    assert got.columns == [*df.columns, "filled"]
+    assert got.count() == 102
+    _check_interp(df, got)
 
 
 def test_crossover_signal_chunked_bit_identical(spark, tiny_chunks):
@@ -221,18 +284,14 @@ def test_crossover_signal_chunked_bit_identical(spark, tiny_chunks):
     assert ua == ub and len(ua) == 97
 
 
-def test_interpolate_chunked_bit_identical_ungrouped(spark, tiny_chunks):
-    df = _mk_series(spark).where("g = 'hot'").withColumn(
-        "vn",
-        W.F.when(W.F.col("eid") % 5 == 0, None).otherwise(
-            W.F.col("v")
-        ),
+def test_interpolate_matches_reference_ungrouped(spark):
+    df = _with_nulls(
+        _mk_series(spark).where("g = 'hot'"), "vn", W.F.col("eid") % 5 == 0
     ).withColumn("tsec", W.F.col("eid").cast("double"))
-    mk = lambda s: W.interpolate_linear(
+    got = df.transform(W.interpolate_linear(
         "vn", "tsec", order_by=("ts", "eid"), out="filled",
-        strategy=s,
-    )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
-    assert a == b and len(a) == 97
-    assert "_ip_pk" not in df.transform(mk("chunked")).columns
+    ))
+    # no helper column (partition placeholder) survives
+    assert got.columns == [*df.columns, "filled"]
+    assert got.count() == 97
+    _check_interp(df, got)

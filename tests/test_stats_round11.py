@@ -301,7 +301,7 @@ def test_stochastic_oscillator_hand_checked(spark):
     assert all(v is None or 0.0 <= v <= 100.0 for v in out)
 
 
-def test_cumprod_chunked_within_tolerance(spark):
+def test_cumprod_matches_math(spark):
     from btc_usdt_etl_pipeline_spark.operators.windows import (
         cumulative_product,
     )
@@ -311,47 +311,40 @@ def test_cumprod_chunked_within_tolerance(spark):
     df = spark.createDataFrame(rows, "t double, ret double").repartition(
         16
     )
-    exact = {
+    got = {
         r["t"]: r["cumprod"]
         for r in df.transform(cumulative_product("ret", "t")).collect()
     }
-    chunked = {
-        r["t"]: r["cumprod"]
-        for r in df.transform(
-            cumulative_product("ret", "t", strategy="chunked", n_chunks=32)
-        ).collect()
-    }
-    assert set(exact) == set(chunked)
-    for t, v in exact.items():
-        assert chunked[t] == pytest.approx(v, rel=1e-12)
-    # keyed caller: chunked defers to the exact keyed window (bit-identical)
+    assert len(got) == 5000
+    acc = 0.0
+    for t, ret in rows:
+        acc += math.log1p(ret)
+        assert got[t] == pytest.approx(math.exp(acc), rel=1e-12)
+    # keyed caller: one running product per key
     kdf = spark.createDataFrame(
         [(i % 3, float(i), 0.01) for i in range(300)],
         "k int, t double, ret double",
     )
-    a = kdf.transform(
-        cumulative_product("ret", "t", partition_by=["k"])
-    ).collect()
-    b = kdf.transform(
-        cumulative_product(
-            "ret", "t", partition_by=["k"], strategy="chunked"
+    seen = {0: 0, 1: 0, 2: 0}
+    for r in sorted(
+        kdf.transform(
+            cumulative_product("ret", "t", partition_by=["k"])
+        ).collect(),
+        key=lambda r: r["t"],
+    ):
+        seen[r["k"]] += 1
+        assert r["cumprod"] == pytest.approx(
+            1.01 ** seen[r["k"]], rel=1e-12
         )
-    ).collect()
-    assert sorted((r["k"], r["t"], r["cumprod"]) for r in a) == sorted(
-        (r["k"], r["t"], r["cumprod"]) for r in b
-    )
-    # constant order column (span 0) degenerates to one chunk, no crash
+    # constant order column: both rows land in one frame, no crash
     cdf = spark.createDataFrame(
         [(1.0, 0.01), (1.0, 0.02)], "t double, ret double"
     )
-    assert (
-        cdf.transform(
-            cumulative_product("ret", "t", strategy="chunked")
-        ).count()
-        == 2
-    )
-    with pytest.raises(ValueError):
-        cumulative_product("ret", "t", strategy="bogus")
+    out = [r["cumprod"] for r in cdf.transform(
+        cumulative_product("ret", "t")
+    ).collect()]
+    assert len(out) == 2
+    assert max(out) == pytest.approx(1.01 * 1.02, rel=1e-12)
 
 
 def test_yuen_t_matches_python(spark):

@@ -1,7 +1,7 @@
 """Dump ``explain("formatted")`` for named queries to plans/<tag>/.
 
     python tools/dump_plan.py <before|after> q304_arch_lm q307_... [--sf DIR]
-    python tools/dump_plan.py chunked_forced --ops cusum,kpss,... [--sf DIR]
+    python tools/dump_plan.py chunked_forced --ops arch_lm,kpss,... [--sf DIR]
 
 Writes ``plans/r14/<query>_<tag>.txt`` (the optimization-round evidence
 files: the judge checks plan claims in OPTIMIZATION_r14.md against these
@@ -69,22 +69,9 @@ def main() -> int:
             "hurst_aggvar": lambda: ev.transform(W.hurst_aggvar(
                 "value", (2, 4, 8), partition_by="user_id",
                 order_by=ob, strategy="chunked")),
-            "cusum": lambda: ev.transform(W.cusum(
-                "value", target=100.0, slack=10.0, threshold=1000.0,
-                partition_by="user_id", order_by=ob,
-                strategy="chunked")),
             "kpss": lambda: ev.transform(W.kpss_level(
                 "value", bartlett_lags=5, partition_by="user_id",
                 order_by=ob, strategy="chunked")),
-            "interpolate": lambda: ev.select(
-                "user_id", "ts", "event_id",
-                F.col("ts").cast("timestamp").cast("double").alias(
-                    "_tsec"),
-                F.when(F.col("event_id") % 7 == 3, None)
-                .otherwise(F.col("value")).alias("v"),
-            ).transform(W.interpolate_linear(
-                "v", "_tsec", partition_by=["user_id"], order_by=ob,
-                out="filled", strategy="chunked")),
             "crossover_signal": lambda: ev.withColumn(
                 "fast", F.col("value") + 1.0
             ).transform(W.crossover_signal(
