@@ -111,9 +111,11 @@ def zorder_key(
 
 
 def ensure_parallelism(df: DataFrame, *keys: str) -> DataFrame:
-    """Repartition by ``keys`` iff the plan has fewer partitions than the
-    cluster's default parallelism.  Keyed repartition (not round-robin) so
-    downstream groupBys on the same keys can reuse the exchange.
+    """Repartition iff the plan has fewer partitions than the cluster's
+    default parallelism: hash-partitioned by ``keys`` when given, so
+    downstream groupBys on the same keys can reuse the exchange, and
+    round-robin when called without keys.  Probes the plan's partition
+    count on every call (``df.rdd``).
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:

@@ -15,7 +15,10 @@ by magnitude at ingest: see :func:`normalize_epoch`.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import os
+import stat
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ByteType,
@@ -135,3 +138,67 @@ def canonicalize_klines(df: DataFrame) -> DataFrame:
     if "event_time" not in df.columns:
         df = df.withColumn("event_time", normalize_epoch(F.col("open_time")))
     return df
+
+
+#: (applicationId, real path) -> (file stamp, schema, scan partitions).
+#: One entry per table per SparkContext; a new stamp replaces the old
+#: entry.  Two threads that miss together both infer and store the same
+#: value, so no lock is needed.
+_TABLE_METADATA: dict[tuple[str, str], tuple[tuple, StructType, int]] = {}
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """``(st_ino, st_size, st_mtime_ns)`` of ``path``, or of every file
+    under it (with its relative name) for a directory table; ``None``
+    when the local filesystem cannot stat it."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_ino, st.st_size, st.st_mtime_ns)
+        stamps = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for name in sorted(files):
+                full = os.path.join(root, name)
+                f = os.stat(full)
+                stamps.append((os.path.relpath(full, path), f.st_ino,
+                               f.st_size, f.st_mtime_ns))
+        return tuple(stamps)
+    except OSError:
+        return None
+
+
+def table_metadata(spark: SparkSession, path: str) -> tuple[StructType, int]:
+    """A parquet table's own schema and its scan's partition count,
+    resolved once per session and file version.
+
+    A miss runs the plain ``spark.read.parquet(path)`` schema inference
+    (one footer job, described by the path it reads) and plans the scan
+    for its partition count.  A hit, same SparkContext, real path and
+    file stamp, launches no Spark job.  Only metadata is kept: every
+    query that reads the table still scans it.  A path the local
+    filesystem cannot stat is never cached, so Spark reports a missing
+    or remote table exactly as a plain read would.
+
+    The metadata is resolved under the session conf of the first load;
+    a later change to the parquet read confs in the same SparkContext is
+    not tracked.
+    """
+    real = os.path.realpath(path)
+    stamp = _file_stamp(real)
+    sc = spark.sparkContext
+    key = (sc.applicationId, real)
+    hit = _TABLE_METADATA.get(key)
+    if hit is not None and hit[0] == stamp:  # stored stamps are never None
+        return hit[1], hit[2]
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description",
+                        f"table_metadata: infer schema of {path}")
+    try:
+        df = spark.read.parquet(path)
+        meta = (df.schema, df.rdd.getNumPartitions())
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    if stamp is not None:
+        _TABLE_METADATA[key] = (stamp, *meta)
+    return meta
