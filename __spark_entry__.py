@@ -15907,9 +15907,11 @@ def q277(spark: SparkSession, sf_dir: str) -> DataFrame:
     50) for every node within 6 rounds: the reachability /
     blast-radius primitive.  Pregel-style bounded frontier expansion
     (per round: one frontier⋈edges equi-join + one anti-join, edges
-    touched once per round — O(rounds·m), hub-proof), lineage
-    checkpointed per round; the oracle replays it as a recursive CTE
-    with set semantics (operators/graph.py:bfs_distances)."""
+    touched once per round — O(rounds·m), hub-proof); the visited set
+    is checkpointed per round and each round reads its frontier back
+    from it (the nodes at distance r − 1), so lineage stays flat; the
+    oracle replays it as a recursive CTE with set semantics
+    (operators/graph.py:bfs_distances)."""
     from btc_usdt_etl_pipeline_spark.operators.graph import bfs_distances
 
     li = (

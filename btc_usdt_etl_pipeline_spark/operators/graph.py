@@ -1,9 +1,7 @@
-"""Connected components over an edge list — near-dup CLUSTER assignment.
-
-The dedup family (minhash_near_dedup, ngram_jaccard_pairs,
-cosine_pairs_within) emits PAIRS; a real dedup pipeline needs clusters:
-transitively-linked groups with one elected representative.  That is
-connected components, computed here by min-label propagation:
+"""Graph operators over edge lists.  Connected components is the
+near-dup CLUSTER assignment: the dedup family (minhash_near_dedup,
+ngram_jaccard_pairs, cosine_pairs_within) emits PAIRS; a real dedup
+pipeline needs clusters, computed by default with min-label propagation:
 
 1. every node starts labeled with its own id;
 2. each round, every node takes the min label over itself and its
@@ -20,18 +18,101 @@ same shuffle shape (a per-node min aggregation + an equi-join) but the
 component minimum hops exponentially, so a D-diameter chain closes in
 O(log² D) rounds instead of D.
 
-Each round issues one metadata-sized driver action (the converged?
-count); lineage is truncated per round with ``localCheckpoint`` so the
-iterated plan doesn't grow (Catalyst would otherwise re-analyze a
-J^rounds-deep tree).
+Every iterative operator runs its rounds on :func:`_iterate`, which
+decides lineage truncation (``localCheckpoint``) and convergence for
+all of them, and describes each Spark job ``"<op>: round r/R"`` (setup
+jobs: ``"<op>: initial state"``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+from typing import Any, Callable
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from btc_usdt_etl_pipeline_spark.session import job_description
 
+
+def _described(name: str):
+    """Describe the operator's jobs ``"<name>: initial state"``."""
+
+    def wrap(op):
+        @functools.wraps(op)
+        def run(*args, **kwargs):
+            sc = SparkSession.active().sparkContext
+            with job_description(sc, f"{name}: initial state"):
+                return op(*args, **kwargs)
+
+        return run
+
+    return wrap
+
+
+def _iterate(
+    name: str,
+    state: Any,
+    step: Callable[[Any, int], Any],
+    rounds: int,
+    *,
+    every: int = 1,
+    until_stable: bool = False,
+) -> Any:
+    """Run ``state = step(state, r)`` for r = 1..``rounds``, each
+    round's jobs described ``"<name>: round r/R"``; return the state,
+    ``localCheckpoint``-ed every ``every`` rounds but never after the
+    last.  ``until_stable`` checkpoints the initial state and every
+    round, and returns the first state whose fingerprint equals its
+    predecessor's (``RuntimeError`` if none does)."""
+    sc = SparkSession.active().sparkContext
+
+    def checkpoint(df: DataFrame):
+        # Row count + two independent 64-bit digests (columns in order
+        # and reversed): an early stop on unequal states has odds of
+        # ~2^-128.  bit_xor, not sum: a long sum of xxhash64 trips ANSI
+        # ARITHMETIC_OVERFLOW (SCALE.md lesson 18).  observe() gathers
+        # it in the checkpoint's own job.
+        obs = Observation()
+        cols = [F.col(c) for c in df.columns]
+        df = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64(*cols)).alias("h1"),
+            F.bit_xor(F.xxhash64(*cols[::-1])).alias("h2"),
+        ).localCheckpoint()
+        return df, obs.get
+
+    if until_stable:
+        state, fp = checkpoint(state)
+    for r in range(1, rounds + 1):
+        with job_description(sc, f"{name}: round {r}/{rounds}"):
+            state = step(state, r)
+            if until_stable:
+                prev = fp
+                state, fp = checkpoint(state)
+                if fp == prev:
+                    return state
+            elif r % every == 0 and r < rounds:
+                state = state.localCheckpoint()
+    if until_stable:
+        raise RuntimeError(f"{name} did not converge in {rounds} rounds")
+    return state
+
+
+def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Deduplicated, checkpointed both-directions ``(_s, _d)`` edges."""
+    return (
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+        .union(
+            edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d"))
+        )
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+@_described("connected_components")
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -68,42 +149,20 @@ def connected_components(
         bi.select(F.col("u").alias(node_col))
         .distinct()
         .withColumn(comp_col, F.col(node_col))
-        .localCheckpoint()
     )
-    def fingerprint(lbl: DataFrame):
-        # One metadata-sized agg replaces the old join-against-previous
-        # changed-count (which shuffled the label table twice per round).
-        # bit_xor, not sum — a long sum of xxhash64 values trips ANSI
-        # ARITHMETIC_OVERFLOW (SCALE.md lesson 18).  Two independent
-        # 64-bit digests (field order swapped → different hash stream)
-        # plus the row count: a single-hash collision between successive
-        # non-identical label tables would end propagation early with
-        # wrong components, so shrink that surface to ~2^-128.
-        row = lbl.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr(f"bit_xor(xxhash64({node_col}, {comp_col}))").alias("h1"),
-            F.expr(f"bit_xor(xxhash64({comp_col}, {node_col}))").alias("h2"),
-        ).first()
-        return (row["n"], row["h1"], row["h2"])
 
-    fp = fingerprint(labels)
-    for _ in range(max_iter):
+    def propagate(labels: DataFrame, r: int) -> DataFrame:
         msgs = bi.join(
             labels, bi["u"] == labels[node_col]
         ).select(F.col("v").alias(node_col), F.col(comp_col))
-        labels = (
+        return (
             msgs.unionByName(labels)
             .groupBy(node_col)
             .agg(F.min(comp_col).alias(comp_col))
-            .localCheckpoint()
         )
-        new_fp = fingerprint(labels)
-        if new_fp == fp:
-            return labels
-        fp = new_fp
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds"
-    )
+
+    return _iterate("connected_components", labels, propagate,
+                    max_iter, until_stable=True)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -154,54 +213,34 @@ def _star_components(
 ) -> DataFrame:
     """Alternating large-star/small-star until the edge set is stable —
     at fixpoint the edges ARE the component map (every node points at
-    its component's min id).  Each round: two min-aggs, two joins, one
-    metadata-sized fingerprint action; lineage truncated per round."""
+    its component's min id).  Each round: two min-aggs, two joins."""
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
     )
-    # All nodes, kept aside so label-less roots/isolates-in-pairs still
-    # appear in the output after contraction collapses their edges.
+    # All nodes, kept aside so label-less roots/isolates-in-pairs
+    # still appear in the output after contraction collapses their
+    # edges.
     nodes = (
         e.select(F.col("u").alias(node_col))
         .unionByName(e.select(F.col("v").alias(node_col)))
         .distinct()
         .localCheckpoint()
     )
-
-    def fingerprint(df: DataFrame):
-        # (count, xor-of-hashes): order-insensitive, overflow-free (a sum
-        # of xxhash64 longs trips ANSI ARITHMETIC_OVERFLOW), collision-
-        # safe enough for a convergence check over a distinct edge set.
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    fp = fingerprint(e)
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint()
-        new_fp = fingerprint(e)
-        if new_fp == fp:
-            # Fixpoint: e is (node → component-min) for every non-root.
-            labels = e.select(
-                F.col("u").alias(node_col), F.col("v").alias(comp_col)
-            )
-            return nodes.join(labels, node_col, "left").select(
-                F.col(node_col),
-                F.coalesce(F.col(comp_col), F.col(node_col)).alias(
-                    comp_col
-                ),
-            )
-        fp = new_fp
-    raise RuntimeError(
-        f"star contraction did not converge in {max_iter} rounds"
+    e = _iterate("connected_components", e,
+                 lambda e, r: _small_star(_large_star(e)), max_iter,
+                 until_stable=True)
+    # Fixpoint: e is (node → component-min) for every non-root.
+    labels = e.select(F.col("u").alias(node_col), F.col("v").alias(comp_col))
+    return nodes.join(labels, node_col, "left").select(
+        F.col(node_col),
+        F.coalesce(F.col(comp_col), F.col(node_col)).alias(comp_col),
     )
 
 
+@_described("pagerank")
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -250,11 +289,13 @@ def pagerank(
     float-parity idiom) AND of the join strategy; everything else is
     scalar double arithmetic on deterministic inputs, and the implicit
     default ``teleport + d·0.0 == teleport`` is an IEEE identity
-    (differential-tested in ``tests/test_graph.py``).  The deduped
-    edge list and the per-round ranks are ``localCheckpoint``-truncated
-    like :func:`connected_components` — the iterated plan stays flat,
-    the loop never rescans the raw input, and no ``persist`` outlives
-    the call (checkpoint block lifetime is managed by Spark's RDD GC).
+    (differential-tested in ``tests/test_graph_sampling_range.py::
+    test_pagerank_broadcast_and_shuffle_paths_identical``).  The
+    deduped edge list is ``localCheckpoint``-ed once and the rounds
+    run on :func:`_iterate`, checkpointing every 8 rounds — the
+    iterated plan stays flat, the loop never rescans the raw input,
+    and no ``persist`` outlives the call (checkpoint block lifetime is
+    managed by Spark's RDD GC).
     Dangling nodes are the CALLER's concern: pass a graph where every
     node has at least one out-edge (e.g. symmetrize a bipartite
     interaction graph) or accept rank mass leaking to the teleport
@@ -331,89 +372,81 @@ def pagerank(
             F.col("_n").alias(node_col),
             F.lit(0.0).alias(rank_col),
         )
+    broadcast = n <= broadcast_nodes_max
+    # Broadcast path: deg is node-sized too, so attaching it is a
+    # broadcast hash join — the edge list is checkpointed already
+    # partitioned however it arrived and never shuffles again.
+    ed = e.join(
+        F.broadcast(deg) if broadcast else deg, "_src"
+    ).localCheckpoint()
     teleport = (1.0 - damping) / n
-    if n <= broadcast_nodes_max:
-        # Broadcast path: deg is node-sized too, so attaching it is a
-        # broadcast hash join — the edge list is checkpointed already
-        # partitioned however it arrived and never shuffles again.
-        ed = e.join(F.broadcast(deg), "_src").localCheckpoint()
-        present: DataFrame | None = None  # nodes with explicit rank
-        default = 1.0 / n  # rank of every node absent from `present`
-        for i in range(iterations):
+
+    def contributions(j: DataFrame, src_r) -> DataFrame:
+        return (
+            j.select(
+                F.col("_dst").alias("_n"),
+                (
+                    src_r * F.col("_w") / F.col("_deg")
+                ).cast("decimal(38,12)").alias("_c"),
+            )
+            .groupBy("_n")
+            .agg(F.sum("_c").alias("_sc"))
+        )
+
+    def rank(total):
+        return (F.lit(teleport) + F.lit(damping) * total).alias("_r")
+
+    # Both paths truncate lineage only every 8 rounds: a handful of
+    # chained join+agg plans analyzes fine, and each checkpoint is a
+    # full eager materialization — the loop therefore runs as ONE job
+    # from the checkpointed edge list (measured ~1.5 s faster at sf0.1
+    # than per-3-rounds); a 10-iteration call pays exactly one
+    # mid-loop checkpoint.
+    if broadcast:
+
+        def step(present: DataFrame | None, r: int) -> DataFrame:
+            # `present` holds the nodes with an explicit rank; every
+            # other node is at 1/n before round 1 and at the teleport
+            # constant after it
             if present is None:
-                j, src_r = ed, F.lit(default)
+                j, src_r = ed, F.lit(1.0 / n)
             else:
                 j = ed.join(
                     F.broadcast(present),
                     ed["_src"] == present["_n"],
                     "left",
                 )
-                src_r = F.coalesce(F.col("_r"), F.lit(default))
-            contrib = (
-                j.select(
-                    F.col("_dst").alias("_cn"),
-                    (
-                        src_r * F.col("_w") / F.col("_deg")
-                    ).cast("decimal(38,12)").alias("_c"),
-                )
-                .groupBy("_cn")
-                .agg(F.sum("_c").alias("_sc"))
+                src_r = F.coalesce(F.col("_r"), F.lit(teleport))
+            # nodes with no in-edges stay implicit at the teleport
+            # constant — teleport + d·0.0 == teleport exactly, so
+            # dropping them from the explicit vector changes no value
+            return contributions(j, src_r).select(
+                "_n", rank(F.col("_sc").cast("double"))
             )
-            # nodes with no in-edges stay implicit at `default` —
-            # teleport + d·0.0 == teleport exactly, so dropping them
-            # from the explicit vector changes no value
-            present = contrib.select(
-                F.col("_cn").alias("_n"),
-                (
-                    F.lit(teleport)
-                    + F.lit(damping) * F.col("_sc").cast("double")
-                ).alias("_r"),
-            )
-            default = teleport
-            if (i + 1) % 8 == 0 and i + 1 < iterations:
-                present = present.localCheckpoint()
+
+        present = _iterate("pagerank", None, step, iterations, every=8)
         # densify ONCE: in-degree-0 nodes take the implicit default
         ranks = nodes.join(F.broadcast(present), "_n", "left").select(
             "_n",
-            F.coalesce(F.col("_r"), F.lit(default)).alias("_r"),
+            F.coalesce(F.col("_r"), F.lit(teleport)).alias("_r"),
         )
-        return ranks.select(
-            F.col("_n").alias(node_col),
-            F.round(F.col("_r"), 10).alias(rank_col),
-        )
-    ranks = nodes.select(
-        "_n", (F.lit(1.0) / F.lit(float(n))).alias("_r")
-    )
-    ed = e.join(deg, "_src").localCheckpoint()
-    for i in range(iterations):
-        contrib = (
-            ed.join(ranks, ed["_src"] == ranks["_n"])
-            .select(
-                F.col("_dst").alias("_n"),
-                (
-                    F.col("_r") * F.col("_w") / F.col("_deg")
-                ).cast("decimal(38,12)").alias("_c"),
+    else:
+
+        def step(ranks: DataFrame, r: int) -> DataFrame:
+            c = contributions(
+                ed.join(ranks, ed["_src"] == ranks["_n"]), F.col("_r")
             )
-            .groupBy("_n")
-            .agg(F.sum("_c").alias("_sc"))
+            # left join keeps in-degree-0 nodes at the teleport floor
+            return nodes.join(c, "_n", "left").select(
+                "_n",
+                rank(F.coalesce(F.col("_sc").cast("double"), F.lit(0.0))),
+            )
+
+        ranks = _iterate(
+            "pagerank",
+            nodes.select("_n", (F.lit(1.0) / F.lit(float(n))).alias("_r")),
+            step, iterations, every=8,
         )
-        # left join keeps in-degree-0 nodes at the teleport floor
-        ranks = nodes.join(contrib, "_n", "left").select(
-            "_n",
-            (
-                F.lit(teleport)
-                + F.lit(damping)
-                * F.coalesce(F.col("_sc").cast("double"), F.lit(0.0))
-            ).alias("_r"),
-        )
-        # Truncate lineage only every 8 rounds: a handful of chained
-        # join+agg plans analyzes fine, and each checkpoint is a full
-        # eager materialization — the loop therefore runs as ONE job
-        # from the checkpointed edge list (measured ~1.5 s faster at
-        # sf0.1 than per-3-rounds); a 10-iteration call pays exactly
-        # one mid-loop checkpoint.
-        if (i + 1) % 8 == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint()
     return ranks.select(
         F.col("_n").alias(node_col),
         F.round(F.col("_r"), 10).alias(rank_col),
@@ -517,6 +550,7 @@ def triangle_count(
     return out.select("n_nodes", "n_edges", "n_wedges", "n_triangles")
 
 
+@_described("kcore_peel")
 def kcore_peel(
     edges: DataFrame,
     k: int,
@@ -540,41 +574,39 @@ def kcore_peel(
     ``edges`` must already be SYMMETRIC (both directions present) —
     degree is computed as a src-keyed count.
 
-    r9 plan: materialize the edge relation ONCE, then peel on the NODE
-    table.  The r8 version ``localCheckpoint``ed the surviving EDGE set
-    EVERY round (each round reads it twice), paying ``iterations``
-    edge-scale materializations — the q199-class cost.  Now round ``i``
-    re-filters the one checkpointed edge table with two semi-joins
-    against the ALIVE NODE set and re-counts degrees; only the
-    node-scale survivor set is checkpointed per round (lineage stays
-    flat, AQE broadcast-converts the semi-joins off the node side's
-    actual size).  The up-front edge checkpoint also shields the rounds
-    from an EXPENSIVE edge derivation (q190's edges are a
-    lineitem⋈orders co-occurrence aggregate — without materialization
-    each round would re-run that join).  Semantics are identical by
-    definition: an edge survives iff both endpoints survive.
-    Oracle hash unchanged; 100× measurement in SCALE.md §8.
+    Plan: materialize the edge relation ONCE, then peel on the NODE
+    table.  Round 1 counts degrees on the raw (checkpointed) edges;
+    round ``r`` re-filters that one edge table with two semi-joins
+    against the ALIVE NODE set and re-counts degrees.  Only the
+    node-scale survivor set is round state, checkpointed by
+    :func:`_iterate` (AQE broadcast-converts the semi-joins off the
+    node side's actual size); checkpointing the surviving EDGE set
+    instead paid ``iterations`` edge-scale materializations, the
+    q199-class cost (100× measurement in SCALE.md §8).  The up-front
+    edge checkpoint also shields the rounds from an EXPENSIVE edge
+    derivation (q190's edges are a lineitem⋈orders co-occurrence
+    aggregate — without materialization each round would re-run that
+    join).  An edge survives iff both endpoints survive.
 
     Returns the surviving subgraph's degree table: ``(node, degree)``.
     """
     edges = edges.localCheckpoint()
-    alive = None  # None = every node alive (round 1 reads raw edges)
 
-    def surviving(e: DataFrame) -> DataFrame:
-        if alive is None:
-            return e
-        return e.join(alive, src, "left_semi").join(
+    def surviving(alive: DataFrame | None) -> DataFrame:
+        if alive is None:  # every node alive: round 1 reads raw edges
+            return edges
+        return edges.join(alive, src, "left_semi").join(
             alive.withColumnRenamed(src, dst), dst, "left_semi"
         )
 
-    for _ in range(iterations):
-        deg = surviving(edges).groupBy(F.col(src)).agg(
+    def peel(alive: DataFrame | None, r: int) -> DataFrame:
+        deg = surviving(alive).groupBy(F.col(src)).agg(
             F.count(F.lit(1)).alias("_deg")
         )
-        alive = (
-            deg.where(F.col("_deg") >= k).select(src).localCheckpoint()
-        )
-    return surviving(edges).groupBy(F.col(src).alias("node")).agg(
+        return deg.where(F.col("_deg") >= k).select(src)
+
+    alive = _iterate("kcore_peel", None, peel, iterations)
+    return surviving(alive).groupBy(F.col(src).alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
 
@@ -626,6 +658,7 @@ def degree_assortativity(
     )
 
 
+@_described("label_propagation")
 def label_propagation(
     edges: DataFrame,
     src: str = "src",
@@ -646,8 +679,8 @@ def label_propagation(
 
     Per round: one edge-scale join (previous labels onto the
     symmetrized edges) + one (node, label) count + one per-node argmax
-    — all hash aggregations, no ordered windows; the per-round label
-    table is ``localCheckpoint``-truncated so round r's plan does not
+    — all hash aggregations, no ordered windows; :func:`_iterate`
+    checkpoints the label table per round so round r's plan does not
     re-evaluate rounds 1..r−1 (the expanding-ring lesson,
     operators/geo.py:nearest_join).  The argmax is
     ``min(struct(−count, label))`` — pure integer lexicographic
@@ -657,21 +690,15 @@ def label_propagation(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    sym = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .union(
-            edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _symmetric(edges, src, dst)
     labels = (
         sym.select(F.col("_s").alias("node"))
         .distinct()
         .withColumn("_lbl", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(rounds):
+
+    def relabel(labels: DataFrame, r: int) -> DataFrame:
         cnt = (
             sym.join(labels, sym["_s"] == labels["node"])
             .groupBy(F.col("_d").alias("n2"), "_lbl")
@@ -684,14 +711,11 @@ def label_propagation(
                 )
             )["l"].alias("_new")
         )
-        labels = (
-            labels.join(pick, labels["node"] == pick["n2"], "left")
-            .select(
-                "node",
-                F.coalesce("_new", "_lbl").alias("_lbl"),
-            )
-            .localCheckpoint()
-        )
+        return labels.join(
+            pick, labels["node"] == pick["n2"], "left"
+        ).select("node", F.coalesce("_new", "_lbl").alias("_lbl"))
+
+    labels = _iterate("label_propagation", labels, relabel, rounds)
     return labels.select("node", F.col("_lbl").alias("community"))
 
 
@@ -767,14 +791,7 @@ def link_prediction(
     the global ``top_k`` candidate pairs by (AA desc, u, v) — a
     deterministic total order both engines replay.
     """
-    sym = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .union(
-            edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _symmetric(edges, src, dst)
     deg = sym.groupBy(F.col("_s").alias("_n")).agg(
         F.count(F.lit(1)).alias("_deg")
     )
@@ -881,6 +898,7 @@ def link_prediction(
     return out
 
 
+@_described("bfs_distances")
 def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
@@ -901,45 +919,40 @@ def bfs_distances(
     frontier node — frontier-sized, never all-pairs) plus one
     anti-join against the visited set; a node is labeled the FIRST
     round it appears, which IS its minimum distance, so no per-node
-    min aggregation is ever needed.  ``visited`` is
-    ``localCheckpoint``-ed per round (the PageRank lineage
-    discipline — each round's plan reads a materialized table, not a
-    growing join tree).  Rounds are FIXED at ``max_rounds``: the
-    loop does no driver-side convergence count, so the job is a
-    deterministic DAG replayable by a recursive-CTE oracle; an empty
-    frontier makes the remaining rounds no-op joins on empty
-    (seconds, not stages that matter).
+    min aggregation is ever needed.  ``visited`` is the round state:
+    :func:`_iterate` checkpoints it every round, and round ``r``
+    reads its frontier back from it as the nodes at distance
+    ``r − 1``, so each round's plan reads one materialized table, not
+    a join tree that grows with the rounds.  Rounds are FIXED at
+    ``max_rounds``: the loop does no driver-side convergence count,
+    so the job is a deterministic DAG replayable by a recursive-CTE
+    oracle; an empty frontier makes the remaining rounds no-op joins
+    on empty (seconds, not stages that matter).
 
     Wedge/hub hazards don't apply — per round each EDGE is touched at
     most once (frontier semi-side), so total work is O(rounds · m)
     worst case, the BFS lower bound.
     """
-    a, b = F.col(src), F.col(dst)
-    sym = (
-        edges.filter(a != b)
-        .select(a.alias("_s"), b.alias("_d"))
-        .union(edges.filter(a != b).select(b.alias("_s"), a.alias("_d")))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _symmetric(edges.filter(F.col(src) != F.col(dst)), src, dst)
     visited = (
         sources.select(F.col(node_col).alias("_n"))
         .distinct()
         .withColumn("_dist", F.lit(0))
         .localCheckpoint()
     )
-    frontier = visited.select("_n")
-    for r in range(1, max_rounds + 1):
-        nxt = (
+
+    def expand(visited: DataFrame, r: int) -> DataFrame:
+        frontier = visited.where(F.col("_dist") == r - 1).select("_n")
+        new = (
             frontier.join(sym, frontier["_n"] == sym["_s"])
             .select(F.col("_d").alias("_n"))
             .distinct()
+            .join(visited.select("_n"), "_n", "left_anti")
+            .withColumn("_dist", F.lit(r))
         )
-        new = nxt.join(
-            visited.select("_n"), "_n", "left_anti"
-        ).withColumn("_dist", F.lit(r))
-        visited = visited.unionByName(new).localCheckpoint()
-        frontier = new.select("_n")
+        return visited.unionByName(new)
+
+    visited = _iterate("bfs_distances", visited, expand, max_rounds)
     return visited.select(
         F.col("_n").alias("node"), F.col("_dist").alias("dist")
     )

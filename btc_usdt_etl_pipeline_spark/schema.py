@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from btc_usdt_etl_pipeline_spark.session import job_description
+
 #: Canonical 1-second kline table (reference schema, snake_case dialect).
 KLINE_SCHEMA = StructType(
     [
@@ -191,14 +193,9 @@ def table_metadata(spark: SparkSession, path: str) -> tuple[StructType, int]:
     hit = _TABLE_METADATA.get(key)
     if hit is not None and hit[0] == stamp:  # stored stamps are never None
         return hit[1], hit[2]
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setLocalProperty("spark.job.description",
-                        f"table_metadata: infer schema of {path}")
-    try:
+    with job_description(sc, f"table_metadata: infer schema of {path}"):
         df = spark.read.parquet(path)
         meta = (df.schema, df.rdd.getNumPartitions())
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
     if stamp is not None:
         _TABLE_METADATA[key] = (stamp, *meta)
     return meta

@@ -14,6 +14,8 @@ default master.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
@@ -84,6 +86,20 @@ def put_package_on_worker_path(sc: SparkContext) -> None:
         sc.environment["PYTHONPATH"] = os.pathsep.join(
             p for p in (paths, root) if p
         )
+
+
+@contextmanager
+def job_description(sc: SparkContext, text: str) -> Iterator[None]:
+    """Run the block's Spark jobs under ``spark.job.description`` =
+    ``text``, then restore the caller's description (or its absence).
+    The job group, if any, is left alone, so a caller that counts jobs
+    per group still sees them."""
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def build_session(

@@ -29,6 +29,23 @@ def spark():
     s.stop()
 
 
+def jobs_under_group(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and the job ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "caller")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def job_description(spark, job_id):
+    """The ``spark.job.description`` a finished job ran under."""
+    job = spark.sparkContext._jsc.sc().statusStore().job(job_id)
+    return job.description().get()
+
+
 def kline_rows(n: int, start_ms: int = 1_700_000_000_000, step_ms: int = 1000):
     """Gap-free 1s kline fixture rows in canonical column order."""
     rows = []

@@ -16,7 +16,12 @@ from btc_usdt_etl_pipeline_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash,
 )
-from btc_usdt_etl_pipeline_spark.operators.graph import connected_components
+from btc_usdt_etl_pipeline_spark.operators.graph import (
+    bfs_distances,
+    connected_components,
+    kcore_peel,
+    label_propagation,
+)
 from btc_usdt_etl_pipeline_spark.operators.relational import range_join
 from btc_usdt_etl_pipeline_spark.operators.resample import (
     resample_by_count,
@@ -76,6 +81,13 @@ def test_resample_empty(spark):
 def test_graph_sampling_range_empty(spark):
     edges = spark.createDataFrame([], "id_a long, id_b long")
     assert connected_components(edges).count() == 0
+    # the convergence fingerprint of an empty checkpoint must return
+    assert connected_components(edges, algorithm="star").count() == 0
+    sd = spark.createDataFrame([], "src long, dst long")
+    assert label_propagation(sd).count() == 0
+    assert kcore_peel(sd, k=2).count() == 0
+    no_seeds = spark.createDataFrame([], "node long")
+    assert bfs_distances(sd, no_seeds).count() == 0
     docs = _empty_docs(spark)
     assert docs.transform(hash_sample("doc_id", rate_bp=5000)).count() == 0
     points = spark.createDataFrame([], "pt long")

@@ -17,23 +17,13 @@ from pyspark.errors import AnalysisException
 
 import __spark_entry__ as entry
 from btc_usdt_etl_pipeline_spark.schema import normalize_event_time
+from tests.conftest import jobs_under_group
 from tests.test_driver_testdata import SF_DIR, TABLES
 
 needs_testdata = pytest.mark.skipif(
     not os.path.isdir(SF_DIR),
     reason=f"reference testdata not present: {SF_DIR}",
 )
-
-
-def _jobs_under_group(spark, group, fn):
-    """Run ``fn`` under a job group; return its result and the job ids."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "caller")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
 def _rows(df):
@@ -45,9 +35,9 @@ def test_warm_load_launches_no_job(spark, tmp_path):
     # A private copy, so the first load below is cold whatever ran before.
     shutil.copy(os.path.join(SF_DIR, "orders.parquet"), tmp_path)
     sf = str(tmp_path)
-    _, cold = _jobs_under_group(
+    _, cold = jobs_under_group(
         spark, "tm-cold", lambda: entry._t(spark, sf, "orders"))
-    warm_df, warm = _jobs_under_group(
+    warm_df, warm = jobs_under_group(
         spark, "tm-warm", lambda: entry._t(spark, sf, "orders"))
     assert len(cold) == 1
     assert warm == []
