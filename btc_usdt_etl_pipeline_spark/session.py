@@ -42,11 +42,12 @@ RUNTIME_CONF = {
     # Broadcast anything under 32 MB — every dim table in the star
     # schema (region/nation/customer/supplier/part) qualifies.
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
-    # A bare session uses 200.  AQE coalesces batch exchanges either
-    # way, but STREAMING state stores are fixed at the shuffle partition
-    # count (no AQE in streaming): 200 state-store instances per
-    # stateful operator per micro-batch put q65's availableNow drain at
-    # ~30 s on 10k rows.  On a real cluster set ≈ 2-3× total cores.
+    # A bare session uses 200.  This is the BATCH upper bound only:
+    # AQE coalesces batch exchanges below it.  Streaming cannot coalesce
+    # state stores, so the drains (streaming/ohlcv.py:run_available_now,
+    # run_processing_time) start each query at one state partition per
+    # core instead; a checkpoint keeps the count it was created with.
+    # On a real cluster set ≈ 2-3× total cores.
     "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
     # Prefer shuffled-hash over sort-merge when the planner's size
     # conditions hold (build side < broadcastThreshold ×

@@ -17,10 +17,12 @@ from __future__ import annotations
 
 import os
 import time
-from typing import Callable
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 
 def streaming_ohlcv(
@@ -192,18 +194,50 @@ def streaming_enrich(
     return stream.join(F.broadcast(dim), on, how)
 
 
+@contextmanager
+def _state_partitions(spark: SparkSession) -> Iterator[None]:
+    """Start the block's streaming queries with one state partition per
+    core, then restore the caller's ``spark.sql.shuffle.partitions``.
+
+    ``start()`` clones the session conf into the stream, and the first
+    micro-batch records the partition count in the checkpoint's offset
+    log; a resumed checkpoint keeps the count it was created with.  So
+    the value only matters while ``start()`` runs.  The session keeps
+    its batch width (``session.DEFAULT_SHUFFLE_PARTITIONS``, an upper
+    bound that AQE coalesces), which streaming cannot coalesce: every
+    state partition pays a fixed state-store load and commit per
+    micro-batch, whatever the few rows it holds.
+    """
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def run_available_now(
     result: DataFrame,
     table_name: str,
     checkpoint_dir: str,
     upsert: Callable[[DataFrame, int], None] | None = None,
     output_mode: str = "complete",
-) -> None:
+) -> StreamingQuery:
     """Drain all available input (backfill semantics) into an in-memory
     table, or through a ``foreachBatch`` upsert, then stop.
 
     ``availableNow`` processes the full backlog in bounded batches and
-    terminates — the streaming/batch equivalence harness.
+    terminates — the streaming/batch equivalence harness.  The query is
+    named ``table_name``, so its micro-batch jobs carry the name in
+    their job description; the terminated query is returned, and its
+    ``recentProgress`` holds every micro-batch's progress.
+
+    A new checkpoint gets one state partition per core
+    (``defaultParallelism``), not the session's batch shuffle width; a
+    resumed checkpoint keeps the count it was created with.  An
+    ``upsert``'s batch DataFrames run on the stream's conf, so the same
+    count also bounds their shuffles.
 
     Sink choice is a SCALE decision: the memory sink collects every
     output row onto the driver, which is fine for complete/update-mode
@@ -221,20 +255,25 @@ def run_available_now(
         result.writeStream.trigger(availableNow=True)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode(output_mode)
+        .queryName(table_name)
     )
+    out_dir = None
     if upsert is not None:
-        q = writer.foreachBatch(upsert).start()
+        writer = writer.foreachBatch(upsert)
     elif output_mode == "append":
         out_dir = os.path.join(checkpoint_dir, "_append_out")
-        q = writer.format("parquet").option("path", out_dir).start()
-        q.awaitTermination()
-        result.sparkSession.read.schema(result.schema).parquet(
+        writer = writer.format("parquet").option("path", out_dir)
+    else:
+        writer = writer.format("memory")
+    spark = result.sparkSession
+    with _state_partitions(spark):
+        q = writer.start()
+    q.awaitTermination()
+    if out_dir is not None:
+        spark.read.schema(result.schema).parquet(
             out_dir
         ).createOrReplaceTempView(table_name)
-        return
-    else:
-        q = writer.format("memory").queryName(table_name).start()
-    q.awaitTermination()
+    return q
 
 
 def run_processing_time(
@@ -255,17 +294,19 @@ def run_processing_time(
     (:func:`run_available_now` covers backfill): pair it with a
     rate-limited source (e.g. ``maxFilesPerTrigger=1`` over several
     files) so consuming everything REQUIRES the trigger to keep firing.
+    As there, a new checkpoint gets one state partition per core.
     Returns the number of data-carrying micro-batches observed; raises
     ``TimeoutError`` if they don't arrive within ``timeout_sec``.
     """
-    q = (
-        result.writeStream.trigger(processingTime=interval)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .format("memory")
-        .queryName(table_name)
-        .start()
-    )
+    with _state_partitions(result.sparkSession):
+        q = (
+            result.writeStream.trigger(processingTime=interval)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode(output_mode)
+            .format("memory")
+            .queryName(table_name)
+            .start()
+        )
     try:
         deadline = time.time() + timeout_sec
         while True:

@@ -78,10 +78,7 @@ def test_nan_divergence_is_real_and_filtered_parity_holds(spark):
 
 
 def test_q55_oracle_green_on_gate_data(spark):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entry
+    import __spark_entry__ as entry  # on sys.path via conftest.py
 
     sf_dir = "/root/testdata/sf0.001"
     got = entry.queries()["q55_percentiles"](spark, sf_dir).collect()

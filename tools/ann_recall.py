@@ -15,9 +15,10 @@ lives in tests/test_similarity.py::test_ivf_lsh_recall_floor_testdata.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_QUERIES = 50
 K = 10

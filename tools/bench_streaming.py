@@ -1,8 +1,8 @@
 """Streaming-drain benchmark: time each availableNow streaming query at
 a chosen SF (default sf0.1) and write a check_bench-comparable JSON.
 
-The 12 streaming queries (q36/q46/q49/q50/q65/q135/q166/q179/q293/
-q294/q302/q303) are excluded from bench.py's headline BY DESIGN — they drain availableNow
+The 13 streaming queries (q36/q46/q49/q50/q58/q65/q135/q166/q179/
+q293/q294/q302/q303) are excluded from bench.py's headline BY DESIGN — they drain availableNow
 streams through stateful operators, not batch plans, so interleaved
 batch rounds would mis-attribute their fixed drain latency.  That
 exclusion also made a streaming-drain regression invisible
@@ -39,13 +39,14 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 STREAMING = [
     "q36_streaming_ohlcv",
     "q46_streaming_dedup",
     "q49_streaming_sliding",
     "q50_streaming_sessions",
+    "q58_stateful_extrema",
     "q65_stream_interval_join",
     "q135_stream_enrich",
     "q166_streaming_rollup",

@@ -11,9 +11,11 @@ API (``btc_usdt_etl_pipeline_spark.plans``).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from btc_usdt_etl_pipeline_spark.plans import (  # noqa: E402
     join_kinds,
@@ -576,7 +578,7 @@ def main() -> int:
               "counts path: rank offsets join broadcasts")
         check(label, "CartesianProduct" not in p,
               "counts path: no cartesian")
-    _scale_dir = "/root/repo/.scale100x"
+    _scale_dir = _os.path.join(ROOT, ".scale100x")
     if _os.path.isdir(_scale_dir):
         ev_big = spark.read.parquet(
             f"{_scale_dir}/events.parquet"

@@ -26,7 +26,7 @@ no driver materialization.  Usage:
 
     python tools/gen_scale.py [mult] [out_dir] [tables] [--vocab-growth]
 
-defaults: mult=10, out_dir=/root/repo/.scale{mult}x, tables=all
+defaults: mult=10, out_dir=<repo root>/.scale{mult}x, tables=all
 (``tables`` is a comma list, e.g. ``documents,embeddings,supplier``).
 
 ``--vocab-growth`` switches ``documents`` to an OPEN vocabulary:
@@ -43,9 +43,11 @@ near-duplicate / boilerplate planting is unchanged.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 VOCAB = (
     "batch part spark line column order small sort fast value scan hash "
@@ -381,7 +383,9 @@ def main() -> int:
     argv = [a for a in sys.argv[1:] if a != "--vocab-growth"]
     open_vocab = "--vocab-growth" in sys.argv[1:]
     mult = int(argv[0]) if len(argv) > 0 else 10
-    out = argv[1] if len(argv) > 1 else f"/root/repo/.scale{mult}x"
+    out = (
+        argv[1] if len(argv) > 1 else os.path.join(ROOT, f".scale{mult}x")
+    )
     only = set(argv[2].split(",")) if len(argv) > 2 else None
     spark = (
         SparkSession.builder.master("local[32]")
