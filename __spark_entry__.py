@@ -1137,7 +1137,6 @@ def q36(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch resample over the same files (M5 equivalence contract)."""
     # File-source streams need a directory base path; a glob that matches
     # exactly the events file keeps the other tables out of the stream.
-    _tune(spark)
     stream = _events_stream(spark, sf_dir).withColumnRenamed(
         "value", "close"
     )
@@ -1611,8 +1610,6 @@ def q46(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark bounds how long a key lingers once event time advances.
     Must equal batch DISTINCT over the single copy."""
 
-    _tune(spark)
-
     def stream() -> DataFrame:
         return _events_stream(spark, sf_dir)
 
@@ -1670,7 +1667,6 @@ def q49(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow.  Each event feeds two overlapping windows; the oracle
     rebuilds that as two epoch-aligned tumbling grids (Spark windows are
     1970-epoch-aligned, matching the floor arithmetic)."""
-    _tune(spark)
     stream = _events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "100 days")
@@ -1711,7 +1707,6 @@ def q50(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming session windows (6 h gap, per user) via the stateful
     session_window aggregation, drained with availableNow — must equal
     the batch lag/cumsum sessionization (q45's oracle family)."""
-    _tune(spark)
     stream = _events_stream(spark, sf_dir)
     sess = streaming_sessionize(
         stream, gap="6 hours", time_col="ts", key_col="user_id",
@@ -2022,7 +2017,6 @@ def q58(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateful_running_extrema,
     )
 
-    _tune(spark)
     stream = _events_stream(spark, sf_dir).select("user_id", "value")
     result = stateful_running_extrema(stream)
     name = "q58_stateful_extrema_result"
@@ -2335,8 +2329,6 @@ def q65(spark: SparkSession, sf_dir: str) -> DataFrame:
     from btc_usdt_etl_pipeline_spark.streaming.ohlcv import (
         streaming_interval_join,
     )
-
-    _tune(spark)
 
     def _stream() -> DataFrame:
         return _events_stream(spark, sf_dir)
@@ -5758,7 +5750,6 @@ def q135(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums are the exact-decimal idiom so the micro-batch accumulation
     order can't flip the hash (`streaming/ohlcv.py:streaming_enrich`).
     """
-    _tune(spark)
     from btc_usdt_etl_pipeline_spark.streaming.ohlcv import (
         run_available_now,
         streaming_enrich,
@@ -17404,7 +17395,6 @@ def q293(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_neardup_pairs,
     )
 
-    _tune(spark)
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     with tempfile.TemporaryDirectory() as tmp:
         src = os.path.join(tmp, "src")
@@ -17423,7 +17413,6 @@ def q293(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_hashes=128,
             bands=32,
             jaccard_threshold=0.8,
-            max_bucket=None,
         )
         q = (
             stream.writeStream.trigger(availableNow=True)
@@ -18058,7 +18047,6 @@ def q302(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_asof_result,
     )
 
-    _tune(spark)
     e = _t(spark, sf_dir, "events")
     cuts = ("2024-01-11", "2024-01-21")
     slices = [
@@ -18119,7 +18107,7 @@ def q303(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r12 judge ask #8): half the corpus drains and its contribution
     dirs are merged into one committed ``c{K}`` consolidation
     (streaming/neardup.py:compact_neardup_state — crash-safe
-    _COMMITTED-marked protocol, index keeps its _kb partition layout),
+    _COMMITTED-marked protocol, same rows and layout),
     then the second half drains ON TOP of the compacted state through
     the same checkpoint.  The oracle is the identical whole-corpus
     all-pairs exact Jaccard as q293 — hash-equality proves compaction
@@ -18130,7 +18118,6 @@ def q303(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_neardup_pairs,
     )
 
-    _tune(spark)
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     halves = [
         d.filter(F.pmod(F.col("doc_id"), F.lit(2)) == i)
@@ -18149,7 +18136,6 @@ def q303(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_hashes=128,
             bands=32,
             jaccard_threshold=0.8,
-            max_bucket=None,
         )
         for i, half in enumerate(halves):
             half.write.mode("append").parquet(src)

@@ -351,19 +351,24 @@ def _state_versions(spark, state_dir: str) -> list[int]:
     return sorted(out)
 
 
-def incremental_rollup_upsert(
-    spark,
+# Versions a versioned sink keeps after each commit.  1 would break the
+# retry idempotence: after v{batch_id} commits and its predecessor is
+# deleted, a replayed batch (sink succeeded, checkpoint commit failed)
+# finds no version strictly older than batch_id and silently rebuilds
+# state from the lone micro-batch, dropping all accumulated history.
+# 2 guarantees the newest version's predecessor survives the cleanup.
+_RETAIN = 2
+
+
+def _versioned_upsert(
     state_dir: str,
-    time_col: str = "ts",
-    value_col: str = "value",
-    interval: str = "1 hour",
-    retain: int = 2,
-):
-    """``foreachBatch`` sink folding each micro-batch's raw ticks into
-    persistent MERGEABLE bar state (operators/resample.py:bar_state) —
-    the streaming half of the q164 incremental-maintenance contract:
-    state after draining any batch split equals the full batch
-    recompute, because every field is a semigroup.
+    partial: Callable[[DataFrame], DataFrame],
+    merge: Callable[..., DataFrame],
+) -> Callable[[DataFrame, int], None]:
+    """``foreachBatch`` sink folding each micro-batch's ``partial``
+    state onto the persisted state with the variadic merge law
+    ``merge`` (``merge(existing, new)``, or ``merge(new)`` for the
+    first batch).
 
     State layout: ``state_dir/v{batch_id}`` parquet, newest version
     wins.  Each batch reads the LATEST version STRICTLY OLDER than its
@@ -371,47 +376,23 @@ def incremental_rollup_upsert(
     sink failure recomputes from the same predecessor and lands the
     identical bytes (effective exactly-once on top of the source's
     replayed offsets; the standard idempotent-foreachBatch discipline).
-    Versions beyond ``retain`` are deleted AFTER the new version
-    commits.  Per batch the work is bar-scale: one agg over the
-    micro-batch plus a |buckets|-row merge — settled raw data is never
-    re-read.  Paths go through the Hadoop FileSystem API, so the same
+    Versions beyond ``_RETAIN`` are deleted AFTER the new version
+    commits.  Paths go through the Hadoop FileSystem API, so the same
     sink runs on file://, hdfs:// or s3a://.
     """
-    from btc_usdt_etl_pipeline_spark.operators.resample import (
-        bar_state,
-        merge_bar_states,
-    )
-
-    # retain=1 would break the documented retry idempotence: after
-    # v{batch_id} commits and its predecessor is deleted, a replayed
-    # batch (sink succeeded, checkpoint commit failed) finds no version
-    # strictly older than batch_id and silently rebuilds state from the
-    # lone micro-batch, dropping all accumulated history.  retain >= 2
-    # guarantees the newest version's predecessor survives the cleanup.
-    if retain < 2:
-        raise ValueError(
-            "retain must be >= 2: the newest version's predecessor is "
-            "what a replayed batch recomputes from (exactly-once "
-            f"discipline); got retain={retain}"
-        )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
-        batch_bars = batch_df.transform(
-            bar_state(time_col, value_col, interval)
-        )
         prev = [v for v in _state_versions(sp, state_dir) if v < batch_id]
-        if prev:
-            existing = sp.read.parquet(f"{state_dir}/v{prev[-1]}")
-            merged = merge_bar_states(existing, batch_bars)
-        else:
-            merged = merge_bar_states(batch_bars)
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/v{batch_id}"
+        existing = (
+            [sp.read.parquet(f"{state_dir}/v{prev[-1]}")] if prev else []
         )
+        merge(*existing, partial(batch_df)).write.mode(
+            "overwrite"
+        ).parquet(f"{state_dir}/v{batch_id}")
         fs, _, jvm = _fs_for(sp, state_dir)
         all_v = _state_versions(sp, state_dir)
-        for old in all_v[: max(len(all_v) - retain, 0)]:
+        for old in all_v[: max(len(all_v) - _RETAIN, 0)]:
             fs.delete(
                 jvm.org.apache.hadoop.fs.Path(f"{state_dir}/v{old}"),
                 True,
@@ -420,8 +401,37 @@ def incremental_rollup_upsert(
     return upsert
 
 
+def incremental_rollup_upsert(
+    spark,
+    state_dir: str,
+    time_col: str = "ts",
+    value_col: str = "value",
+    interval: str = "1 hour",
+):
+    """``foreachBatch`` sink folding each micro-batch's raw ticks into
+    persistent MERGEABLE bar state (operators/resample.py:bar_state) —
+    the streaming half of the q164 incremental-maintenance contract:
+    state after draining any batch split equals the full batch
+    recompute, because every field is a semigroup.
+
+    Versioning and retry idempotence: :func:`_versioned_upsert`.  Per
+    batch the work is bar-scale: one agg over the micro-batch plus a
+    |buckets|-row merge — settled raw data is never re-read.
+    """
+    from btc_usdt_etl_pipeline_spark.operators.resample import (
+        bar_state,
+        merge_bar_states,
+    )
+
+    return _versioned_upsert(
+        state_dir, bar_state(time_col, value_col, interval), merge_bar_states
+    )
+
+
 def read_rollup_state(spark, state_dir: str) -> DataFrame:
-    """Latest committed bar state; empty-typed result if none yet."""
+    """Latest committed state of a versioned sink; raises
+    ``FileNotFoundError`` if ``state_dir`` holds no ``v*`` version
+    yet."""
     versions = _state_versions(spark, state_dir)
     if not versions:
         raise FileNotFoundError(f"no rollup state under {state_dir}")
@@ -434,7 +444,6 @@ def incremental_ddsketch_upsert(
     value_col: str = "value",
     group_by: str | None = None,
     gamma: float = 1.02,
-    retain: int = 2,
 ):
     """``foreachBatch`` sink maintaining per-group DDSketch bucket
     counts — streaming quantiles with fixed-width state (r11 judge
@@ -450,45 +459,19 @@ def incremental_ddsketch_upsert(
     ANY micro-batch split is bucket-count-identical to the full
     recompute (counts are a commutative monoid).
 
-    Versioning/idempotence discipline is identical to
-    :func:`incremental_rollup_upsert` (``state_dir/v{batch_id}``,
-    retries recompute from the same strictly-older predecessor,
-    Hadoop FS API paths); read the final buckets back with
-    :func:`read_rollup_state`.
+    Versioning and retry idempotence: :func:`_versioned_upsert`; read
+    the final buckets back with :func:`read_rollup_state`.
     """
     from btc_usdt_etl_pipeline_spark.operators.sketch import (
         dd_sketch_buckets,
         merge_dd_buckets,
     )
 
-    if retain < 2:
-        raise ValueError(
-            "retain must be >= 2: the newest version's predecessor is "
-            "what a replayed batch recomputes from (exactly-once "
-            f"discipline); got retain={retain}"
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        buckets = batch_df.transform(
-            dd_sketch_buckets(value_col, group_by, gamma)
-        )
-        prev = [v for v in _state_versions(sp, state_dir) if v < batch_id]
-        if prev:
-            existing = sp.read.parquet(f"{state_dir}/v{prev[-1]}")
-            merged = merge_dd_buckets(existing, buckets)
-        else:
-            merged = merge_dd_buckets(buckets)
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        fs, _, jvm = _fs_for(sp, state_dir)
-        all_v = _state_versions(sp, state_dir)
-        for old in all_v[: max(len(all_v) - retain, 0)]:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{state_dir}/v{old}"),
-                True,
-            )
-
-    return upsert
+    return _versioned_upsert(
+        state_dir,
+        dd_sketch_buckets(value_col, group_by, gamma),
+        merge_dd_buckets,
+    )
 
 
 def incremental_hll_upsert(
@@ -498,7 +481,6 @@ def incremental_hll_upsert(
     key_col: str = "user_id",
     trunc_unit: str = "hour",
     b: int = 10,
-    retain: int = 2,
 ):
     """``foreachBatch`` sink maintaining per-time-bucket HyperLogLog
     registers — the streaming distinct-users-per-hour rollup.  A
@@ -509,55 +491,21 @@ def incremental_hll_upsert(
     ``|buckets|·2^b``-row cost, settled raw events are never re-read,
     and the persisted state answers the estimate at any moment.
 
-    Versioning/idempotence discipline is identical to
-    :func:`incremental_rollup_upsert` (same ``state_dir/v{batch_id}``
-    layout, retries recompute from the same predecessor, Hadoop FS API
-    paths); read the final registers back with
-    :func:`read_rollup_state` and estimate via
-    ``operators/sketch.py:hll_estimate_from_registers``.
+    Versioning and retry idempotence: :func:`_versioned_upsert`; read
+    the final registers back with :func:`read_rollup_state` and
+    estimate via ``operators/sketch.py:hll_estimate_from_registers``.
     """
-    from pyspark.sql import functions as F
-
     from btc_usdt_etl_pipeline_spark.operators.sketch import (
         hll_registers_by,
         merge_hll_registers,
     )
 
-    # same retry-idempotence invariant as incremental_rollup_upsert:
-    # the newest version's predecessor must survive cleanup or a
-    # replayed batch silently drops all accumulated registers.
-    if retain < 2:
-        raise ValueError(
-            "retain must be >= 2: the newest version's predecessor is "
-            "what a replayed batch recomputes from (exactly-once "
-            f"discipline); got retain={retain}"
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        regs = batch_df.select(
+    def registers(df: DataFrame) -> DataFrame:
+        return df.select(
             F.date_trunc(trunc_unit, F.col(time_col)).alias(
                 "bucket_start"
             ),
             key_col,
         ).transform(hll_registers_by(["bucket_start"], key_col, b))
-        prev = [
-            v for v in _state_versions(sp, state_dir) if v < batch_id
-        ]
-        if prev:
-            existing = sp.read.parquet(f"{state_dir}/v{prev[-1]}")
-            merged = merge_hll_registers(existing, regs)
-        else:
-            merged = merge_hll_registers(regs)
-        merged.write.mode("overwrite").parquet(
-            f"{state_dir}/v{batch_id}"
-        )
-        fs, _, jvm = _fs_for(sp, state_dir)
-        all_v = _state_versions(sp, state_dir)
-        for old in all_v[: max(len(all_v) - retain, 0)]:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{state_dir}/v{old}"),
-                True,
-            )
 
-    return upsert
+    return _versioned_upsert(state_dir, registers, merge_hll_registers)

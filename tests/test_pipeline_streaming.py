@@ -10,6 +10,7 @@ import math
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from btc_usdt_etl_pipeline_spark.operators.resample import resample_by_time
@@ -526,7 +527,8 @@ def test_streaming_incremental_rollup_equals_batch(spark, tmp_path):
     """Draining the stream through the versioned foreachBatch merge
     sink (multiple micro-batches forced via maxFilesPerTrigger) yields
     EXACTLY the batch recompute; replaying the last batch (retry
-    simulation) is idempotent; old versions are GC'd to `retain`."""
+    simulation) is idempotent; old versions are GC'd to the newest
+    two."""
     import datetime as dt
 
     from btc_usdt_etl_pipeline_spark.operators.resample import (
@@ -576,7 +578,7 @@ def test_streaming_incremental_rollup_equals_batch(spark, tmp_path):
     )
     assert got == want
     versions = _state_versions(spark, state)
-    assert len(versions) <= 2  # retain default
+    assert len(versions) <= 2  # ohlcv._RETAIN
 
     # retry semantics: same batch_id + same data (the Structured
     # Streaming replay contract) must land identical state.  Simulate
@@ -598,27 +600,76 @@ def test_streaming_incremental_rollup_equals_batch(spark, tmp_path):
     assert after_retry == want
 
 
-def test_incremental_upsert_rejects_retain_below_two(spark, tmp_path):
-    """retain=1 breaks retry idempotence (a replayed batch whose
-    predecessor was already deleted rebuilds state from the lone
-    micro-batch, silently dropping history) — both versioned sinks
-    must refuse it at construction."""
-    import pytest
+# Each versioned sink: factory name and its arguments after state_dir.
+_VERSIONED_SINKS = {
+    "rollup": ("incremental_rollup_upsert", ("ts", "value", "1 hour")),
+    "ddsketch": ("incremental_ddsketch_upsert", ("value", "g")),
+    "hll": ("incremental_hll_upsert", ("ts", "user_id", "hour")),
+}
 
+
+@pytest.mark.parametrize("sink", sorted(_VERSIONED_SINKS))
+def test_versioned_sink_keeps_two_and_replays_after_cleanup(
+    spark, tmp_path, sink
+):
+    """Every versioned sink keeps exactly the newest two versions, and
+    a batch replayed after the cleanup deleted v0 (sink succeeded,
+    checkpoint commit failed) recomputes from v1: the state equals the
+    whole input folded as one batch."""
+    import datetime as dt
+
+    from btc_usdt_etl_pipeline_spark.streaming import ohlcv
     from btc_usdt_etl_pipeline_spark.streaming.ohlcv import (
-        incremental_hll_upsert,
-        incremental_rollup_upsert,
+        _state_versions,
+        read_rollup_state,
     )
 
-    for retain in (1, 0):
-        with pytest.raises(ValueError, match="retain"):
-            incremental_rollup_upsert(
-                spark, str(tmp_path / "s1"), retain=retain
-            )
-        with pytest.raises(ValueError, match="retain"):
-            incremental_hll_upsert(
-                spark, str(tmp_path / "s2"), retain=retain
-            )
+    base = dt.datetime(2024, 5, 1)
+    rows = [
+        (i, base + dt.timedelta(minutes=(i * 17) % (48 * 60)),
+         "g" + str(i % 3), (i * 7) % 97, float(i % 23) * 1.5)
+        for i in range(600)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, g string, user_id long, "
+        "value double",
+    )
+    factory, args = _VERSIONED_SINKS[sink]
+    make = getattr(ohlcv, factory)
+    batches = [df.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    state = str(tmp_path / "state")
+    up = make(spark, state, *args)
+    for batch_id, batch in enumerate(batches):
+        up(batch, batch_id)
+    assert _state_versions(spark, state) == [1, 2]
+    up(batches[2], 2)  # replay: v0 is gone, v1 is the predecessor
+    assert _state_versions(spark, state) == [1, 2]
+
+    full = str(tmp_path / "full")
+    make(spark, full, *args)(df, 0)
+
+    def state_rows(d):
+        return sorted(map(repr, read_rollup_state(spark, d).collect()))
+
+    assert state_rows(state) == state_rows(full)
+
+
+def test_read_rollup_state_raises_without_a_version(spark, tmp_path):
+    """No ``v*`` version under the state dir — missing dir or a dir
+    with only non-version entries — raises instead of returning an
+    empty frame."""
+    from btc_usdt_etl_pipeline_spark.streaming.ohlcv import (
+        read_rollup_state,
+    )
+
+    with pytest.raises(FileNotFoundError):
+        read_rollup_state(spark, str(tmp_path / "missing"))
+    state = tmp_path / "state"
+    (state / "_tmp").mkdir(parents=True)
+    (state / "vx").mkdir()
+    with pytest.raises(FileNotFoundError):
+        read_rollup_state(spark, str(state))
 
 
 def test_streaming_hll_registers_equal_batch(spark, tmp_path):
@@ -706,11 +757,8 @@ def test_streaming_ddsketch_equals_batch(spark, tmp_path):
     """DDSketch bucket state after draining multiple micro-batches ==
     the batch sketch (counts are a commutative monoid, so any split
     merges to the identical state); quantile readout off the final
-    state matches batch dd_sketch exactly; retried batch idempotent;
-    retain<2 refused."""
+    state matches batch dd_sketch exactly; retried batch idempotent."""
     import datetime as dt
-
-    import pytest
 
     from btc_usdt_etl_pipeline_spark.operators.sketch import (
         dd_sketch,
@@ -780,8 +828,3 @@ def test_streaming_ddsketch_equals_batch(spark, tmp_path):
         )
     )
     assert got2 == want
-
-    with pytest.raises(ValueError, match="retain"):
-        incremental_ddsketch_upsert(
-            spark, str(tmp_path / "x"), retain=1
-        )

@@ -1,7 +1,7 @@
 """Streaming MinHash index upsert (streaming/neardup.py): union of
 per-micro-batch pair emissions == the batch minhash_near_dedup pair set
-over the whole corpus, with the retry-idempotence and retain-GC
-discipline of the other versioned sinks."""
+over the whole corpus, with the retry-idempotence discipline of the
+other ``foreachBatch`` state sinks."""
 
 from __future__ import annotations
 
@@ -47,7 +47,6 @@ PARAMS = dict(
     num_hashes=128,
     bands=32,
     jaccard_threshold=0.8,
-    max_bucket=None,
 )
 
 
@@ -56,9 +55,9 @@ def _batch_pairs(spark, df):
         minhash_near_dedup,
     )
 
-    return sorted(
-        map(tuple, df.transform(minhash_near_dedup(**PARAMS)).collect())
-    )
+    # the streaming sink never caps buckets, so neither does its twin
+    near_dedup = minhash_near_dedup(max_bucket=None, **PARAMS)
+    return sorted(map(tuple, df.transform(near_dedup).collect()))
 
 
 def test_streaming_neardup_equals_batch(spark, tmp_path):
@@ -149,10 +148,8 @@ def test_streaming_neardup_retry_and_cross_batch(spark, tmp_path):
 def test_streaming_neardup_compaction_equivalence(spark, tmp_path):
     """Mid-stream compaction (c{K} protocol): pair state before/after
     compacting is identical, later batches build on the compacted
-    state, the index keeps its _kb partition layout, and a second
-    compaction folds the post-compaction batch in."""
-    import os
-
+    state, and a second compaction folds the post-compaction batch
+    in."""
     from btc_usdt_etl_pipeline_spark.streaming.neardup import (
         _contrib_state,
         compact_neardup_state,
@@ -166,9 +163,7 @@ def test_streaming_neardup_compaction_equivalence(spark, tmp_path):
     parts = [df.filter(F.col("doc_id") % 3 == i) for i in range(3)]
 
     state = str(tmp_path / "state")
-    up = incremental_minhash_upsert(
-        spark, state, index_buckets=16, **PARAMS
-    )
+    up = incremental_minhash_upsert(spark, state, **PARAMS)
     up(parts[0], 0)
     up(parts[1], 1)
     before = sorted(
@@ -196,9 +191,6 @@ def test_streaming_neardup_compaction_equivalence(spark, tmp_path):
     for store in ("index", "corpus", "pairs"):
         k, live = _contrib_state(spark, f"{state}/{store}")
         assert k == 1 and live == []  # b0/b1 swept into c1
-    assert any(
-        n.startswith("_kb=") for n in os.listdir(f"{state}/index/c1")
-    )
     up(parts[2], 2)  # continues on the compacted state
     assert sorted(
         map(tuple, read_neardup_pairs(spark, state).collect())
@@ -214,130 +206,10 @@ def test_streaming_neardup_compaction_equivalence(spark, tmp_path):
         up(parts[0], 2)
 
 
-def test_streaming_neardup_index_prune_plan(spark, tmp_path):
-    """The settled-index read carries the batch's _kb bucket set as a
-    PARTITION filter — the scan prunes files, not just rows."""
-    from btc_usdt_etl_pipeline_spark.streaming.neardup import (
-        _contrib_paths,
-        incremental_minhash_upsert,
-    )
-
-    rows = _corpus(89, n_base=12)
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    state = str(tmp_path / "state")
-    up = incremental_minhash_upsert(
-        spark, state, index_buckets=16, **PARAMS
-    )
-    up(df, 0)
-    idx = spark.read.parquet(
-        *_contrib_paths(spark, f"{state}/index")
-    ).filter(F.col("_kb").isin([0, 1, 2]))
-    plan = idx._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "_kb" in plan.split("PartitionFilters", 1)[1][:200]
-
-
-def test_streaming_neardup_bucket_resize_safe(spark, tmp_path):
-    """r14 (r13 ADVICE medium): resizing ``index_buckets`` mid-stream
-    must not lose pairs.  b0's dir carries ``_KB4``; a batch running
-    under B=16 must NOT apply its bucket filter to that dir (stale
-    modulus — matching band keys would silently drop), and a
-    compaction over the mixed-modulus store must fall back to an
-    unpartitioned, ``_kb``-free consolidation so no NULL/stale ``_kb``
-    row can ever meet a future ``isin`` filter."""
-    import os
-
-    from btc_usdt_etl_pipeline_spark.streaming.neardup import (
-        _contrib_state,
-        _kb_marker_of,
-        compact_neardup_state,
-        incremental_minhash_upsert,
-        read_neardup_pairs,
-    )
-
-    rows = _corpus(607)
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    want = _batch_pairs(spark, df)
-    parts = [df.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    cross01 = [p for p in want if p[0] % 3 != p[1] % 3]
-    assert cross01  # fixture sanity: cross-batch pairs exist
-
-    state = str(tmp_path / "state")
-    up4 = incremental_minhash_upsert(
-        spark, state, index_buckets=4, **PARAMS
-    )
-    up16 = incremental_minhash_upsert(
-        spark, state, index_buckets=16, **PARAMS
-    )
-    up4(parts[0], 0)
-    assert _kb_marker_of(spark, f"{state}/index/b0") == 4
-    up16(parts[1], 1)  # resized mid-stream: b0 read unfiltered
-    got01 = sorted(
-        map(tuple, read_neardup_pairs(spark, state).collect())
-    )
-    assert got01 == _batch_pairs(
-        spark, parts[0].unionByName(parts[1])
-    )
-    # mixed-modulus compaction: unpartitioned, _kb dropped, no marker
-    compact_neardup_state(spark, state)
-    c1 = f"{state}/index/c1"
-    assert _contrib_state(spark, f"{state}/index") == (1, [])
-    assert not any(n.startswith("_kb=") for n in os.listdir(c1))
-    assert "_kb" not in spark.read.parquet(c1).columns
-    assert _kb_marker_of(spark, c1) is None
-    up16(parts[2], 2)  # builds on the compacted, filter-safe state
-    assert sorted(
-        map(tuple, read_neardup_pairs(spark, state).collect())
-    ) == want
-    # uniform-modulus compaction keeps layout AND re-stamps the marker
-    compact_neardup_state(spark, state)
-
-
-def test_streaming_neardup_uniform_compaction_keeps_marker(
-    spark, tmp_path
-):
-    """Uniform-modulus compaction keeps the ``_kb`` layout and
-    re-stamps ``_KB{B}`` on the consolidated dir so later batches can
-    keep partition-filtering it."""
-    import os
-
-    from btc_usdt_etl_pipeline_spark.streaming.neardup import (
-        _kb_marker_of,
-        compact_neardup_state,
-        incremental_minhash_upsert,
-        read_neardup_pairs,
-    )
-
-    rows = _corpus(733, n_base=16)
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    parts = [df.filter(F.col("doc_id") % 2 == i) for i in range(2)]
-    state = str(tmp_path / "state")
-    up = incremental_minhash_upsert(
-        spark, state, index_buckets=8, **PARAMS
-    )
-    up(parts[0], 0)
-    up(parts[1], 1)
-    before = sorted(
-        map(tuple, read_neardup_pairs(spark, state).collect())
-    )
-    compact_neardup_state(spark, state)
-    c1 = f"{state}/index/c1"
-    assert any(n.startswith("_kb=") for n in os.listdir(c1))
-    assert _kb_marker_of(spark, c1) == 8
-    assert before == sorted(
-        map(tuple, read_neardup_pairs(spark, state).collect())
-    )
-
-
 def test_streaming_neardup_validates(spark, tmp_path):
     from btc_usdt_etl_pipeline_spark.streaming.neardup import (
-        incremental_minhash_upsert,
         read_neardup_pairs,
     )
 
-    with pytest.raises(ValueError, match="max_bucket"):
-        incremental_minhash_upsert(
-            spark, str(tmp_path / "b"), max_bucket=1
-        )
     with pytest.raises(FileNotFoundError):
         read_neardup_pairs(spark, str(tmp_path / "nope"))

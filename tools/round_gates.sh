@@ -25,6 +25,10 @@
 #   GATES="4 5" bash tools/round_gates.sh 13    # re-snapshot benches
 set -uo pipefail
 cd "$(dirname "$0")/.."
+# One Spark core per CPU (the session default is local[32]) and Spark
+# scratch files outside the checkout, as in the tier-1 pytest command.
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
+export SPARK_LOCAL_DIRS=/tmp/spark-local
 R="${1:?usage: round_gates.sh <round-number, e.g. 12>}"
 PREV=$(printf '%02d' $((10#$R - 1)))
 GATES="${GATES:-1 2 3 4 5}"
