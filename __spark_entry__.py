@@ -3791,9 +3791,9 @@ def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
     wants, with q74's equi-WIDTH histogram as the fixed-bin
     counterpart.  The unique-key tiebreaker makes ntile's row
     assignment total-ordered, hence reproducible.  r9: routed through
-    group_ranks, so strategy='auto' swaps the one-sorted-partition-
+    group_ranks, so its size gate swaps the one-sorted-partition-
     per-group ntile window for the bucketed-rank plan past the size
-    gate — EXACT deciles with no per-group sort task (the old
+    estimate — EXACT deciles with no per-group sort task (the old
     docstring's "swap for approx_percentile at billions of rows"
     tradeoff is no longer needed).  NULL values are dropped by the
     operator's rank-space contract — the oracle's WHERE value IS NOT
@@ -10571,9 +10571,9 @@ def q210(spark: SparkSession, sf_dir: str) -> DataFrame:
     any forecasting pipeline asks of a series.  Two lag windows on
     one keyed ordered pass; exact-decimal MAE sums, one IEEE ratio,
     zero-denominator → NULL (constant series).  r10: the lag pair is
-    routed through keyed_lags (halo = 24, the seasonal offset), so
-    strategy='auto' swaps the one-sort-task-per-user window for the
-    chunked-halo plan on a zipf-hot user — the last named hot-key
+    routed through keyed_lags (halo = 24, the seasonal offset), so its
+    size and hot-key gates swap the one-sort-task-per-user window for
+    the chunked-halo plan on a zipf-hot user — the last named hot-key
     ordered-window composite (SCALE.md's "hot-key ceiling as q185"),
     bit-identical output."""
     from btc_usdt_etl_pipeline_spark.operators.windows import keyed_lags
@@ -11812,8 +11812,8 @@ def q228(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ordered-rank feature family as an OPERATOR (min/avg rank,
     percent_rank, cume_dist, row_number, decile ntile per nation) —
     q85's surface productized with the r9 bucketed-rank scale path:
-    strategy='auto' swaps the classic keyed window (one task per hot
-    group) for range-bucket offsets + within-bucket ranks (ONE
+    past the size gate it swaps the classic keyed window (one task per
+    hot group) for range-bucket offsets + within-bucket ranks (ONE
     row-scale shuffle, no full-group sort task) with bit-identical
     output, Spark's exact ntile distribution rule included.  The
     oracle is the standard SQL window-function battery — an
@@ -11879,7 +11879,7 @@ def q229(spark: SparkSession, sf_dir: str) -> DataFrame:
     events carry larger values than the rest of the traffic, without a
     normality assumption — the nonparametric A/B surface next to q213's
     calibration and q218's off-policy value.  Tie-averaged combined
-    ranks delegate to group_ranks, so the same strategy='auto'
+    ranks delegate to group_ranks, so the same size-gated
     bucketed-rank scale path applies (no single-partition sort task at
     scale); the tie correction needs no second pass (Σ_rows(cnt²−1) =
     Σ_blocks(t³−t)).  Rank sums through the decimal idiom; z pinned at
@@ -11942,7 +11942,7 @@ def q230(spark: SparkSession, sf_dir: str) -> DataFrame:
     different value distribution — the k-sample one-way ANOVA on ranks
     completing the nonparametric testing surface next to q229's
     two-sample U.  Combined tie-averaged ranks via group_ranks (same
-    strategy='auto' bucketed-rank scale path — no single-partition sort
+    size-gated bucketed-rank scale path — no single-partition sort
     task), per-group rank sums + partition tie mass out of one grouped
     aggregation + one metadata-scale rollup, decimal rank sums, 6 dp
     pin, NULL h on degenerate partitions
@@ -13210,8 +13210,8 @@ def q245(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold-free quality-scorer metric, computed by the rank-sum
     identity AUC = U⁺/(n⁺n⁻) with tie-averaged ranks (ties planted:
     integer scores, positives shifted +50 so the fixture AUC is
-    well above 0.5).  Ranks ride group_ranks' strategy machinery —
-    window plan here, bucketed-counts plan past the size gate,
+    well above 0.5).  Ranks ride group_ranks' size gate — window
+    plan here, bucketed-counts plan past the gate,
     bit-identical — then one agg and one exact division, 6 dp pinned
     (operators/stats.py:roc_auc)."""
     from btc_usdt_etl_pipeline_spark.operators.stats import roc_auc
@@ -14431,8 +14431,8 @@ def q260(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the finite-sample-valid prediction-interval radius: q̂ is the
     ⌈(n+1)·0.9⌉-th smallest nonconformity score, giving ≥ 90%
     coverage distribution-free.  The order statistic rides
-    group_ranks' strategy machinery (bucketed-counts plan past the
-    size gate — no per-group sort task) and is selected by the
+    group_ranks' size gate (bucketed-counts plan past it — no
+    per-group sort task) and is selected by the
     tie-block-spans-k rule, tie-invariant by construction; q̂ is a
     selected input value, bit-exact
     (operators/stats.py:conformal_quantile)."""
@@ -15267,8 +15267,8 @@ def q270(spark: SparkSession, sf_dir: str) -> DataFrame:
     significant Kruskal–Wallis (q230): which event types differ, at a
     controlled false-discovery rate?  Fixture plants per-type +0.5·k
     shifts so near-adjacent pairs land on both sides of the
-    threshold.  Shared combined-sample ranks ride group_ranks'
-    strategy machinery; everything after the per-(dow, type)
+    threshold.  Shared combined-sample ranks ride group_ranks' size
+    gate (bucketed-counts plan past it); everything after the per-(dow, type)
     rank-mean rollup is metadata scale (10 pairs per dow); the
     two-sided normal p uses the Abramowitz–Stegun erfc polynomial
     rendered identically into both engines; the BH leg IS q250's

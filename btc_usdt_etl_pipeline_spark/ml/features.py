@@ -808,7 +808,6 @@ def quantile_normalize(
     group_by: str,
     ref_points: int = 101,
     out: str = "qnorm",
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Cross-source quantile normalization: map each group's values
     onto the POOLED distribution, ``out = Q_pool(F_group(x))`` — the
@@ -830,29 +829,26 @@ def quantile_normalize(
     row_number), so equal inputs map to equal outputs.  Singleton
     groups (n = 1, percent_rank 0) map to the pooled minimum.
 
-    Two BIT-IDENTICAL plans for F_group (``strategy`` = ``auto`` |
-    ``window`` | ``counts``): the ``window`` plan is one keyed
+    Two BIT-IDENTICAL plans for F_group: the window plan is one keyed
     percent_rank window — parallel across groups but a hot group's
     full series sorts on ONE task (the r8-measured 100× ceiling);
-    the ``counts`` plan derives ``percent_rank = (min_rank−1)/(n−1)``
+    the counts plan derives ``percent_rank = (min_rank−1)/(n−1)``
     from ``operators.windows._bucketed_rank`` (range-bucketed offsets
     + within-(group, bucket) rank — one row-scale shuffle, no
     full-group sort task, no join-back).
-    Same integer operands, same double division → identical bits;
-    ``auto`` flips on the Catalyst size estimate, so oracle-scale
-    inputs keep the window plan and hashes never move.
+    Same integer operands, same double division → identical bits.
+    The counts plan runs for a numeric value column past the Catalyst
+    size gate (``windows._scale_gate``), so oracle-scale inputs keep
+    the window plan and hashes never move.
     """
-    if strategy not in ("auto", "window", "counts"):
-        raise ValueError("strategy must be auto | window | counts")
 
     def _t(df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
         from btc_usdt_etl_pipeline_spark.functions import attach_scalar
         from btc_usdt_etl_pipeline_spark.operators.windows import (
-            _CHUNK_THRESHOLD_BYTES,
             _bucketed_rank,
-            _plan_size,
+            _scale_gate,
         )
 
         src = df.where(F.col(value_col).isNotNull())
@@ -863,21 +859,7 @@ def quantile_normalize(
                 lambda x: F.round(x, 6),
             ).alias("_grid")
         )
-        dtype = dict(df.dtypes)[value_col]
-        numeric = dtype in (
-            "tinyint", "smallint", "int", "bigint", "float", "double",
-        ) or dtype.startswith("decimal")
-        use_counts = strategy == "counts" or (
-            strategy == "auto"
-            and numeric
-            and _plan_size(df) > _CHUNK_THRESHOLD_BYTES
-        )
-        if use_counts and not numeric:
-            raise TypeError(
-                "counts-path quantile_normalize needs a numeric "
-                f"value column; {value_col!r} is {dtype}"
-            )
-        if use_counts:
+        if _scale_gate(df, value_col, numeric_only=True):
             # Spark's PercentRank: (rank−1)/(n−1) in double, 0.0 for
             # the n=1 singleton — replicated operand-for-operand
             ranked = (

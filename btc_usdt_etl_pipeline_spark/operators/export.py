@@ -58,18 +58,17 @@ def _auto_buckets(
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's ``sizeInBytes`` estimate for ``df`` — plan metadata
-    derived from file sizes, NO job and NO scan (the same zero-action
-    sizing the resample auto strategy uses, ``operators/resample.py``).
+    """Catalyst's ``sizeInBytes`` estimate for ``df``
+    (``windows._plan_size``: plan metadata, NO job and NO scan).
 
     A plan with no usable stats (e.g. a Python-parallelized local
     relation) reports ``spark.sql.defaultSizeInBytes`` = Long.MaxValue;
     treat anything in that regime as UNKNOWN (0) so the auto policy
     degrades to its lower clamp instead of exploding to the upper one.
     """
-    size = int(
-        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
+    from btc_usdt_etl_pipeline_spark.operators.windows import _plan_size
+
+    size = _plan_size(df)
     return 0 if size >= (1 << 62) else size
 
 

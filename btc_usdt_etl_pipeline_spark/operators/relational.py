@@ -618,14 +618,13 @@ def weighted_median(
     weight_col: str,
     group_by: Sequence[str] | str | None = None,
     out: str = "weighted_median",
-    strategy: str = "auto",
     num_buckets: int = 512,
 ) -> Callable[[DataFrame], DataFrame]:
     """Exact weighted median — :func:`weighted_quantile` at q = 1/2;
     see there for plan and scale notes."""
     return weighted_quantile(
         value_col, weight_col, 1, 2, group_by=group_by, out=out,
-        strategy=strategy, num_buckets=num_buckets,
+        num_buckets=num_buckets,
     )
 
 
@@ -636,7 +635,6 @@ def weighted_quantile(
     q_den: int,
     group_by: Sequence[str] | str | None = None,
     out: str = "weighted_quantile",
-    strategy: str = "auto",
     num_buckets: int = 512,
 ) -> Callable[[DataFrame], DataFrame]:
     """Exact weighted quantile per group: the smallest value whose
@@ -661,25 +659,23 @@ def weighted_quantile(
     threshold is decimal arithmetic too, so the ≥ comparison is exact
     — no float boundary can flip the chosen value cross-engine.
 
-    Scale path (``strategy``): the plain walk's parallelism is the
-    GROUP count — for few-group / high-cardinality data (3 return
-    flags × near-unique prices) the per-group ordered walk is a handful
-    of giant tasks.  ``'bucketed'`` pre-buckets the value domain
+    Scale path: the plain walk's parallelism is the GROUP count — for
+    few-group / high-cardinality data (3 return flags × near-unique
+    prices) the per-group ordered walk is a handful of giant tasks.
+    The bucketed plan pre-buckets the value domain
     (zone-map style): per-(group, bucket) weight sums (metadata-scale),
     a bucket-level cumulative walk to locate each group's half-total
     bucket, then the detailed ordered walk over ONLY that bucket's
     distinct values with the preceding buckets' weight as an exact
     decimal carry-in — identical result (decimal sums are order-free
     and the bucket partition of the walk is exact), ~num_buckets× less
-    data under any single ordered task.  ``'auto'`` picks bucketed for
-    numeric values past the Catalyst size estimate; ``'walk'`` forces
-    the plain plan.  Non-numeric values always walk (no ordered bucket
+    data under any single ordered task.  It runs for numeric values
+    past the Catalyst size gate (``windows._scale_gate``); smaller
+    inputs walk, and so do non-numeric values (no ordered bucket
     function exists).
 
     Returns one row per group: ``group_by…, total_weight, out``.
     """
-    if strategy not in ("auto", "walk", "bucketed"):
-        raise ValueError("strategy must be auto | walk | bucketed")
     if not (isinstance(q_num, int) and isinstance(q_den, int)):
         raise TypeError("q_num/q_den must be ints (exact rational)")
     if not (0 < q_num <= q_den):
@@ -693,8 +689,7 @@ def weighted_quantile(
     def _t(df: DataFrame) -> DataFrame:
         from btc_usdt_etl_pipeline_spark.functions import DEC
         from btc_usdt_etl_pipeline_spark.operators.windows import (
-            _CHUNK_THRESHOLD_BYTES,
-            _plan_size,
+            _scale_gate,
         )
 
         per_v = (
@@ -705,22 +700,7 @@ def weighted_quantile(
             .groupBy(*gcols, F.col(value_col).alias("_v"))
             .agg(F.sum(F.col(weight_col).cast(DEC)).alias("_w"))
         )
-        dtype = dict(df.dtypes)[value_col]
-        numeric = dtype in (
-            "tinyint", "smallint", "int", "bigint", "float", "double",
-        ) or dtype.startswith("decimal")
-        bucketed = strategy == "bucketed" or (
-            strategy == "auto"
-            and numeric
-            and _plan_size(df) > _CHUNK_THRESHOLD_BYTES
-        )
-        if bucketed and not numeric:
-            raise TypeError(
-                f"bucketed weighted_median needs a numeric value "
-                f"column; {value_col!r} is {dtype}"
-            )
-
-        if not bucketed:
+        if not _scale_gate(df, value_col, numeric_only=True):
             wg = (
                 Window.partitionBy(*gcols) if gcols else Window.partitionBy()
             )

@@ -28,6 +28,14 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Unkeyed row-count resample switches from one global-window sort to the
+#: two-pass bucket-offset index past this Catalyst size estimate.
+#: Measured (SCALE.md §4.8): at reference month scale (2.7M rows) one
+#: in-memory sort beats the bucket index ~3.5x; the bucket path wins only
+#: once a single task can't hold/sort the data.  1.5 GB approximates the
+#: 50 M-row crossover at ~30 B/row scan size.
+_SORT_THRESHOLD_BYTES = 1_500_000_000
+
 # Aggregation spec shared by both resamplers: (output_name, agg builder).
 # ``min_by(open, t)`` / ``max_by(close, t)`` replace the reference's
 # non-deterministic first/last (process_data.py:51-55).
@@ -252,8 +260,6 @@ def resample_by_count(
     value_cols: dict[str, str] | None = None,
     sort_output: bool = True,
     partition_by: Sequence[str] = (),
-    strategy: str = "auto",
-    sort_threshold_bytes: int = 1_500_000_000,
     tie_break: Sequence[str] = (),
 ) -> Callable[[DataFrame], DataFrame]:
     """Reference-faithful row-count resample: every ``n`` consecutive rows
@@ -267,19 +273,16 @@ def resample_by_count(
     OHLCV stream per symbol): the dense index is then just a per-key
     ``row_number`` window — parallel across keys.
 
-    Unkeyed ``strategy``: ``'sort'`` = one global-window sort (the
-    reference's plan shape; fastest while a single task can sort the
-    series — measured 3.5× faster at month scale), ``'bucket'`` = the
-    two-pass bucket-offset index (parallel everywhere; the only option
-    beyond single-task scale), ``'auto'`` = pick from Catalyst's plan
-    statistics (``sizeInBytes`` — derived from file sizes, zero extra
-    actions; the previous ``df.count()`` gate cost a full scan before
-    the real job, which at 100 TB is an hour of cluster time spent
-    deciding how to spend the next hour).  ``sort_threshold_bytes``
-    approximates the 50 M-row crossover at ~30 B/row scan size.
+    Unkeyed, the plan is one global-window sort (the reference's plan
+    shape; fastest while a single task can sort the series — measured
+    3.5× faster at month scale) until Catalyst's size estimate passes
+    ``_SORT_THRESHOLD_BYTES``, then the two-pass bucket-offset index
+    (parallel everywhere; the only plan beyond single-task scale).  The
+    gate (``windows._scale_gate``) reads plan statistics derived from
+    file sizes — zero extra actions; the previous ``df.count()`` gate
+    cost a full scan before the real job, which at 100 TB is an hour of
+    cluster time spent deciding how to spend the next hour.
     """
-    if strategy not in ("auto", "sort", "bucket"):
-        raise ValueError("strategy must be auto | sort | bucket")
     vc = value_cols or {
         "open": "open",
         "high": "high",
@@ -289,37 +292,23 @@ def resample_by_count(
     }
 
     def _transform(df: DataFrame) -> DataFrame:
+        from btc_usdt_etl_pipeline_spark.operators.windows import (
+            _scale_gate,
+        )
+
         keys = list(partition_by)
         if keys:
             w = Window.partitionBy(*keys).orderBy(time_col, *tie_break)
             indexed = df.withColumn(
                 "_idx", F.row_number().over(w) - F.lit(1)
             )
+        elif _scale_gate(df, time_col, threshold=_SORT_THRESHOLD_BYTES):
+            indexed = with_global_index(df, time_col, tie_break=tie_break)
         else:
-            use_bucket = strategy == "bucket"
-            if strategy == "auto":
-                # Measured (SCALE.md §4.8): at reference month scale
-                # (2.7M rows) one in-memory sort beats the two-pass
-                # bucket index ~3.5x; the bucket path wins only once a
-                # single task can't hold/sort the data.  Decided from
-                # Catalyst's size estimate — a plan-metadata lookup, no
-                # job, no scan.
-                size = (
-                    df._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-                use_bucket = int(size) > sort_threshold_bytes
-            if use_bucket:
-                indexed = with_global_index(
-                    df, time_col, tie_break=tie_break
-                )
-            else:
-                w = Window.orderBy(time_col, *tie_break)
-                indexed = df.withColumn(
-                    "_idx", F.row_number().over(w) - F.lit(1)
-                )
+            w = Window.orderBy(time_col, *tie_break)
+            indexed = df.withColumn(
+                "_idx", F.row_number().over(w) - F.lit(1)
+            )
         out = (
             indexed.withColumn("group_id", F.floor(F.col("_idx") / F.lit(n)))
             .groupBy(*keys, "group_id")

@@ -486,7 +486,6 @@ def mann_whitney_u(
     group_col: str,
     group_a,
     partition_by: str | None = None,
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Mann–Whitney U (Wilcoxon rank-sum) two-sample test per
     partition — the NONPARAMETRIC A/B detector: does sample A tend to
@@ -501,11 +500,10 @@ def mann_whitney_u(
 
     Ranks are the textbook tie-averaged ranks over the COMBINED sample,
     delegated to :func:`btc_usdt_etl_pipeline_spark.operators.windows.
-    group_ranks` — so the same ``strategy`` contract applies: the
-    ``window`` plan is one ordered window per partition (hot-partition
-    single-task ceiling), ``counts`` is the bucketed-rank plan (one
-    row-scale shuffle, no full-partition sort task), ``auto`` swaps on
-    the Catalyst size estimate with BIT-IDENTICAL output.  The tie term
+    group_ranks` — so the same size gate applies: below it the ranks
+    are one ordered window per partition (hot-partition single-task
+    ceiling), past it the bucketed-rank plan (one row-scale shuffle,
+    no full-partition sort task), with BIT-IDENTICAL output.  The tie term
     needs no second pass: a tie block of size t contributes t rows each
     carrying ``cnt = t``, so Σ_rows(cnt² − 1) = Σ_blocks(t³ − t), and
     ``cnt`` is recovered exactly from the half-integer identity
@@ -526,11 +524,7 @@ def mann_whitney_u(
             F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
         ).select(*gcols, value_col, group_col)
         r = d.transform(
-            group_ranks(
-                value_col,
-                group_by=partition_by,
-                strategy=strategy,
-            )
+            group_ranks(value_col, group_by=partition_by)
         )
         is_a = F.col(group_col) == F.lit(group_a)
         cnt = (
@@ -588,7 +582,6 @@ def kruskal_wallis_h(
     value_col: str,
     group_col: str,
     partition_by: str | None = None,
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Kruskal–Wallis H per partition — the k-SAMPLE generalization of
     :func:`mann_whitney_u` (one-way ANOVA on ranks): do ANY of the
@@ -598,9 +591,9 @@ def kruskal_wallis_h(
         H = 12/(n(n+1)) · Σ_g R_g²/n_g − 3(n+1),
         tie-corrected:  H / C,   C = 1 − Σ(t³−t)/(n³−n)
 
-    Combined tie-averaged ranks delegate to ``group_ranks`` (same
-    ``strategy`` contract — the bucketed-rank plan removes the
-    hot-partition single-sort-task ceiling, BIT-IDENTICAL output), and
+    Combined tie-averaged ranks delegate to ``group_ranks`` (same size
+    gate — the bucketed-rank plan removes the hot-partition
+    single-sort-task ceiling, BIT-IDENTICAL output), and
     both the per-group rank sums and the partition tie mass come out of
     ONE grouped aggregation over the ranked rows plus one
     metadata-scale rollup (groups × partitions rows).  Rank sums are
@@ -618,9 +611,7 @@ def kruskal_wallis_h(
             F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
         ).select(*gcols, value_col, group_col)
         r = d.transform(
-            group_ranks(
-                value_col, group_by=partition_by, strategy=strategy
-            )
+            group_ranks(value_col, group_by=partition_by)
         )
         cnt = (
             F.lit(2.0)
@@ -1705,7 +1696,6 @@ def roc_auc(
     score_col: str,
     label_col: str,
     partition_by: str | None = None,
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """ROC AUC per partition from raw (score, binary label) rows — the
     threshold-free classifier metric an eval pipeline reports for every
@@ -1718,10 +1708,9 @@ def roc_auc(
     textbook 0.5).  Gini = 2·AUC − 1 rides along.
 
     Ranks are delegated to :func:`…operators.windows.group_ranks`, so
-    the ``strategy`` contract applies: ``window`` is one ordered window
-    per partition, ``counts`` the bucketed-rank plan with no
-    full-partition sort task, ``auto`` swaps on the Catalyst size
-    estimate with bit-identical output.  Rank sums are exact
+    its size gate applies: one ordered window per partition below it,
+    the bucketed-rank plan with no full-partition sort task past it,
+    with bit-identical output.  Rank sums are exact
     half-integers through the decimal idiom; AUC is then ONE exact IEEE
     division, pinned at 6 dp.  Degenerate partitions (all-positive or
     all-negative) emit NULL.  NULL score / NULL label rows are dropped.
@@ -1740,9 +1729,7 @@ def roc_auc(
             F.col(label_col).cast("boolean").alias("_pos"),
         )
         r = d.transform(
-            group_ranks(
-                score_col, group_by=partition_by, strategy=strategy
-            )
+            group_ranks(score_col, group_by=partition_by)
         )
         agg = r.groupBy(*gcols).agg(
             F.sum(F.col("_pos").cast("long")).alias("n_pos"),
@@ -2780,7 +2767,6 @@ def conformal_quantile(
     score_col: str,
     alpha: float = 0.1,
     group_by: str | None = None,
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Split-conformal calibration quantile per group — the
     finite-sample-valid prediction-interval radius: given held-out
@@ -2791,8 +2777,8 @@ def conformal_quantile(
 
     The k-th order statistic is computed WITHOUT an ordered-window
     sort task: ranks come from
-    :func:`…operators.windows.group_ranks` (the ``strategy`` contract
-    — bucketed-counts plan past the size gate, bit-identical), and
+    :func:`…operators.windows.group_ranks` (bucketed-counts plan past
+    its size gate, bit-identical), and
     the k-th value is the row whose tie block spans rank k
     (``min_rank ≤ k < min_rank + cnt``) — tie-invariant by
     construction, since every row of the block carries the same
@@ -2812,9 +2798,7 @@ def conformal_quantile(
             *gcols, score_col
         )
         r = d.transform(
-            group_ranks(
-                score_col, group_by=group_by or None, strategy=strategy
-            )
+            group_ranks(score_col, group_by=group_by or None)
         )
         cnt = (
             F.lit(2.0)
@@ -3544,7 +3528,6 @@ def dunn_posthoc(
     value_col: str,
     group_col: str,
     partition_by: str | None = None,
-    strategy: str = "auto",
     alpha: float = 0.05,
 ) -> Callable[[DataFrame], DataFrame]:
     """Dunn's post-hoc test with Benjamini–Hochberg correction per
@@ -3559,8 +3542,8 @@ def dunn_posthoc(
     :func:`fdr_bh` — the composed omnibus→pairwise→FDR pipeline an
     eval team actually runs, in one call.
 
-    Ranks ride :func:`…windows.group_ranks` (the ``strategy``
-    contract: bucketed-counts plan past the size gate, bit-identical);
+    Ranks ride :func:`…windows.group_ranks` (bucketed-counts plan past
+    its size gate, bit-identical);
     everything after the per-(partition, group) rank-mean rollup is
     metadata scale — the pair join is groups², the BH window is one
     ordered pass over the pairs.  Rank sums and the tie mass use the
@@ -3579,9 +3562,7 @@ def dunn_posthoc(
             F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
         ).select(*gcols, value_col, group_col)
         r = d.transform(
-            group_ranks(
-                value_col, group_by=partition_by, strategy=strategy
-            )
+            group_ranks(value_col, group_by=partition_by)
         )
         cnt = (
             F.lit(2.0)
@@ -4604,7 +4585,6 @@ def durbin_watson(
     x_col: str,
     order_by: Sequence[str],
     group_by: Sequence[str] | str | None = None,
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Durbin–Watson autocorrelation test on simple-OLS residuals per
     group — the regression-diagnostics member that asks "are the
@@ -4619,7 +4599,7 @@ def durbin_watson(
     Plan: ONE decimal-moment aggregation (map-side combined) broadcast
     back, per-row residuals (pure double arithmetic on identical
     inputs both engines), then the consecutive-pair sum via
-    ``keyed_lags`` (halo 1 — ``strategy='auto'`` swaps in the
+    ``keyed_lags`` (halo 1 — past the size gate it swaps in the
     chunked-halo plan when one group's series exceeds the hot-key
     threshold, so a 5-group × 100 TB fixture never serializes a group
     onto one sort task).  ``order_by`` is a column TUPLE — pass a
@@ -4676,7 +4656,6 @@ def durbin_watson(
                 [("_e", 1, "_el")],
                 order_by=ob,
                 partition_by=list(gcols) or ["_n"],
-                strategy=strategy,
             )
         )
         dec12 = "decimal(38,12)"

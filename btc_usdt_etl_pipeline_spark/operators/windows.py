@@ -17,8 +17,9 @@ chunks, the last ``halo`` rows of each chunk duplicated into the next
 chunk as read-only context, per-chunk windows (parallel across chunks),
 halo outputs dropped.  Every output row's frame then contains exactly
 the same rows in the same order as the single-window plan, so results
-are BIT-IDENTICAL — which is why ``strategy='auto'`` can swap plans on
-Catalyst's size estimate without changing any oracle hash.
+are BIT-IDENTICAL — which is why the size gate (:func:`_scale_gate`)
+can swap plans on Catalyst's size estimate without changing any oracle
+hash.
 ``fill_forward``'s unbounded carry uses the bucket-level carry-in
 decomposition instead (same technique as the unkeyed as-of join in
 ``operators/asof.py``).  ``cumulative_product`` has NO bit-identical
@@ -56,28 +57,42 @@ def _window(partition_by: Sequence[str] | None, order_col: str) -> WindowSpec:
 
 
 def _plan_size(df: DataFrame) -> int:
+    """Catalyst's ``sizeInBytes`` estimate — plan metadata derived from
+    file sizes, no job and no scan."""
     return int(
         df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     )
 
 
-def _auto_chunked(df: DataFrame, order_col: str, strategy: str) -> bool:
-    """Decide the unkeyed plan: explicit strategy wins; ``auto`` goes
-    chunked past the size threshold — but only when the order column's
-    type supports arithmetic auto-bucketing (timestamp/date/numeric);
-    anything else keeps the single-window plan rather than erroring."""
-    if strategy == "window":
-        return False
-    if strategy == "chunked":
-        return True
-    dtype = dict(df.dtypes)[order_col]
-    bucketable = (
-        dtype.startswith("timestamp")
-        or dtype == "date"
-        or dtype in ("tinyint", "smallint", "int", "bigint", "float", "double")
-        or dtype.startswith("decimal")
-    )
-    return bucketable and _plan_size(df) > _CHUNK_THRESHOLD_BYTES
+_NUMERIC_TYPES = ("tinyint", "smallint", "int", "bigint", "float", "double")
+
+
+def _scale_gate(
+    df: DataFrame,
+    *cols: str,
+    numeric_only: bool = False,
+    threshold: int | None = None,
+) -> bool:
+    """The one size gate every scale plan sits behind: ``True`` when each
+    of ``cols`` has a type ``resample.auto_bucket_expr`` can bucket and
+    Catalyst's size estimate is above ``threshold`` (default
+    ``_CHUNK_THRESHOLD_BYTES``, read per call).  The chunked/indexed
+    plans bucket timestamps, dates and numerics; the rank and quantile
+    plans (``numeric_only``) range-bucket values, so numerics only.
+    Anything else keeps the plain plan rather than erroring."""
+    dtypes = dict(df.dtypes)
+    for c in cols:
+        t = dtypes[c]
+        temporal = t.startswith("timestamp") or t == "date"
+        if not (
+            t in _NUMERIC_TYPES
+            or t.startswith("decimal")
+            or (temporal and not numeric_only)
+        ):
+            return False
+    if threshold is None:
+        threshold = _CHUNK_THRESHOLD_BYTES
+    return _plan_size(df) > threshold
 
 
 def _chunked_trailing(
@@ -130,7 +145,7 @@ def _explode_halo(
     )
 
 
-#: Keyed chunking kicks in (strategy='auto') only when the largest
+#: Keyed chunking kicks in (past the size gate) only when the largest
 #: single key exceeds this many rows — below it, a key's ordered window
 #: is one healthy task and the index/halo machinery is pure overhead.
 #: Measured crossover (local[32], 3M-row events, 762k-row hot key):
@@ -260,10 +275,11 @@ def _bucketed_rank(
     are integers ≤ group size, exact in double, so the textbook
     tie-averaged rank ``min_rank + (cnt − 1)/2`` and
     ``percent_rank = (min_rank − 1)/(n − 1)`` are reproducible
-    BIT-FOR-BIT against the full-group window plan — ``strategy='auto'``
-    swaps plans without moving oracle hashes.  Residual skew: a single
-    massive tie VALUE shares one bucket by construction (rank within it
-    is trivial, but the task holds the block) — the q199 tradeoff.
+    BIT-FOR-BIT against the full-group window plan — the size gate
+    (:func:`_scale_gate`) swaps plans without moving oracle hashes.
+    Residual skew: a single massive tie VALUE shares one bucket by
+    construction (rank within it is trivial, but the task holds the
+    block) — the q199 tradeoff.
     NULL values are not special-cased: callers filter them first (all
     current callers do).
     """
@@ -332,7 +348,7 @@ def _keyed_chunked_trailing(
     chunk as read-only context, per-(key, chunk) windows, halo outputs
     dropped.  Every output row's frame then holds exactly the same rows
     in the same order as the plain ``partitionBy(keys)`` window, so
-    results are BIT-IDENTICAL — ``strategy='auto'`` can swap plans on a
+    results are BIT-IDENTICAL — :func:`_keyed_plan` can swap plans on a
     per-key count estimate without changing any oracle hash.
 
     ``compute(df, w)`` must add columns using specs derived from ``w``
@@ -355,40 +371,27 @@ def _keyed_plan(
     df: DataFrame,
     keys: Sequence[str],
     order_col: str,
-    strategy: str,
     halo: int,
-    hot_rows: int | None = None,
-) -> tuple[bool, int | None]:
-    """Decide the KEYED plan → ``(chunked?, chunk_rows)``.  Explicit
-    strategy wins.  ``auto`` first gates on the same Catalyst size
-    estimate as the unkeyed path (free, no job — small inputs never pay
-    a pre-pass), then runs the per-key count estimate (a metadata-scale
-    partial-aggregated job over the key columns only) and goes chunked
-    iff some single key's series exceeds ``hot_rows`` (default
-    ``_KEYED_HOT_KEY_ROWS``; cheap-per-row ops pass
-    ``_KEYED_HOT_KEY_ROWS_CHEAP`` — see its measured crossover note) —
-    the zipf-hot-key shape where one ordered window task dominates.
+    hot_rows: int,
+) -> int | None:
+    """Decide the KEYED plan → the chunk size of the chunked plan, or
+    ``None`` for the plain window.  First gates on the same Catalyst
+    size estimate as the unkeyed path (:func:`_scale_gate` — free, no
+    job, so small inputs never pay a pre-pass), then runs the per-key
+    count estimate (a metadata-scale partial-aggregated job over the
+    key columns only) and goes chunked iff some single key's series
+    exceeds ``hot_rows`` (``_KEYED_HOT_KEY_ROWS``; cheap-per-row ops
+    pass ``_KEYED_HOT_KEY_ROWS_CHEAP`` — see its measured crossover
+    note) — the zipf-hot-key shape where one ordered window task
+    dominates.
 
-    When the count estimate ran, ``chunk_rows`` is sized so the HOT key
-    splits into ~2× the cluster's core count of chunks (floored at
-    ``4·halo`` so halo duplication stays a small fraction): a fixed 1M
-    chunk leaves a 2.5M-row hot key as 3 serial tasks, which matters
-    precisely when the per-row window cost is high (many frames — the
-    120-lag MACD stack).  ``strategy='chunked'`` with no estimate keeps
-    the caller/default size."""
-    if strategy == "window":
-        return False, None
-    if strategy == "chunked":
-        return True, None
-    dtype = dict(df.dtypes)[order_col]
-    bucketable = (
-        dtype.startswith("timestamp")
-        or dtype == "date"
-        or dtype in ("tinyint", "smallint", "int", "bigint", "float", "double")
-        or dtype.startswith("decimal")
-    )
-    if not bucketable or _plan_size(df) <= _CHUNK_THRESHOLD_BYTES:
-        return False, None
+    The chunk size splits the HOT key into ~2× the cluster's core count
+    of chunks (floored at ``4·halo`` so halo duplication stays a small
+    fraction): a fixed 1M chunk leaves a 2.5M-row hot key as 3 serial
+    tasks, which matters precisely when the per-row window cost is high
+    (many frames — the 120-lag MACD stack)."""
+    if not _scale_gate(df, order_col):
+        return None
     hot = (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -396,11 +399,10 @@ def _keyed_plan(
         .first()
     )
     mx = (hot["_mx"] or 0) if hot is not None else 0
-    if mx <= (hot_rows or _KEYED_HOT_KEY_ROWS):
-        return False, None
+    if mx <= hot_rows:
+        return None
     cores = df.sparkSession.sparkContext.defaultParallelism or 32
-    chunk_rows = max(4 * halo, min(_CHUNK_ROWS, -(-mx // (2 * cores))))
-    return True, chunk_rows
+    return max(4 * halo, min(_CHUNK_ROWS, -(-mx // (2 * cores))))
 
 
 def pct_change(
@@ -408,16 +410,14 @@ def pct_change(
     order_col: str,
     partition_by: Sequence[str] | None = None,
     out: str = "return",
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """1-step fractional return: ``x/lag(x) - 1`` (notebook cell 15 W3).
 
-    Unkeyed ``strategy``: ``'window'`` = single global window,
-    ``'chunked'`` = halo-chunked parallel plan (bit-identical output),
-    ``'auto'`` = switch on Catalyst's size estimate.
+    Past the size gate (:func:`_scale_gate`) an unkeyed series takes the
+    halo-chunked parallel plan and a keyed one with a hot key the
+    per-key chunked plan (:func:`_keyed_plan`); both are bit-identical
+    to the single window.
     """
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
 
     def _ret(prev: Column) -> Column:
         return (F.col(col) - prev) / prev
@@ -426,13 +426,14 @@ def pct_change(
         return u.withColumn(out, _ret(F.lag(col, 1).over(w)))
 
     def _t(df: DataFrame) -> DataFrame:
-        if not partition_by and _auto_chunked(df, order_col, strategy):
+        if not partition_by and _scale_gate(df, order_col):
             return _chunked_trailing(df, order_col, halo=1, compute=_compute)
         if partition_by:
-            chunked, cr = _keyed_plan(
-                df, partition_by, order_col, strategy, halo=1
+            cr = _keyed_plan(
+                df, partition_by, order_col, halo=1,
+                hot_rows=_KEYED_HOT_KEY_ROWS,
             )
-            if chunked:
+            if cr is not None:
                 return _keyed_chunked_trailing(
                     df, partition_by, (order_col,), halo=1,
                     compute=_compute, chunk_rows=cr,
@@ -446,16 +447,16 @@ def keyed_lags(
     lags: Sequence[tuple[str, int, str]],
     order_by: Sequence[str],
     partition_by: Sequence[str],
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Bounded multi-lag feature columns per key series —
     ``lags = [(src_col, offset, out_col), ...]`` adds every
     ``out_col = lag(src_col, offset)`` over ONE shared keyed ordered
     window, with the chunked-halo scale path (halo = max offset)
-    swapped in by ``strategy='auto'`` when a single key's series
-    exceeds the hot-key threshold.  This is the one-call route for the
-    entry composites that stack a few fixed lags on a zipf-hot key
-    (MASE's seasonal-24 + naive-1 pair, lag-k autocorrelation pairs):
+    swapped in by :func:`_keyed_plan` past the size gate when a single
+    key's series exceeds the hot-key threshold.  This is the one-call
+    route for the entry composites that stack a few fixed lags on a
+    zipf-hot key (MASE's seasonal-24 + naive-1 pair, lag-k
+    autocorrelation pairs):
     a plain ``Window.partitionBy(k).orderBy(...)`` serializes the hot
     key's whole series onto one sort task at 100 TB, while the chunked
     plan splits it into ~2×cores chunks with ``halo`` duplicated
@@ -468,8 +469,6 @@ def keyed_lags(
     evaluated on identical doubles, so callers should flatten to direct
     lags and keep halo = the deepest source offset.
     """
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
     if not partition_by:
         raise ValueError("keyed_lags needs partition keys; use a plain "
                          "window (or _chunked_trailing) for global lags")
@@ -484,10 +483,11 @@ def keyed_lags(
         )
 
     def _t(df: DataFrame) -> DataFrame:
-        chunked, cr = _keyed_plan(
-            df, partition_by, order_by[0], strategy, halo=halo
+        cr = _keyed_plan(
+            df, partition_by, order_by[0], halo=halo,
+            hot_rows=_KEYED_HOT_KEY_ROWS,
         )
-        if chunked:
+        if cr is not None:
             return _keyed_chunked_trailing(
                 df, partition_by, order_by, halo=halo,
                 compute=_compute, chunk_rows=cr,
@@ -511,17 +511,14 @@ def rolling_mean_std(
     window_rows: int,
     partition_by: Sequence[str] | None = None,
     prefix: str | None = None,
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Rolling mean + sample std over the trailing ``window_rows`` rows
     (notebook cell 14 W2: MA30 ± 2σ volatility bands).
 
-    Unkeyed ``strategy`` as in :func:`pct_change`: the chunked plan
-    carries ``window_rows - 1`` halo rows per chunk boundary and is
+    Scale paths gated as in :func:`pct_change`: the chunked plans carry
+    ``window_rows - 1`` halo rows per chunk boundary and are
     bit-identical to the single-window plan.
     """
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
     p = prefix or f"{col}_{window_rows}"
 
     def _add(u: DataFrame, w: WindowSpec) -> DataFrame:
@@ -531,16 +528,16 @@ def rolling_mean_std(
         )
 
     def _t(df: DataFrame) -> DataFrame:
-        if not partition_by and _auto_chunked(df, order_col, strategy):
+        if not partition_by and _scale_gate(df, order_col):
             return _chunked_trailing(
                 df, order_col, halo=window_rows - 1, compute=_add
             )
         if partition_by:
-            chunked, cr = _keyed_plan(
-                df, partition_by, order_col, strategy,
-                halo=window_rows - 1,
+            cr = _keyed_plan(
+                df, partition_by, order_col, halo=window_rows - 1,
+                hot_rows=_KEYED_HOT_KEY_ROWS,
             )
-            if chunked:
+            if cr is not None:
                 return _keyed_chunked_trailing(
                     df,
                     partition_by,
@@ -587,25 +584,22 @@ def crossover_signal(
     order_col: str,
     partition_by: Sequence[str] | None = None,
     out: str = "signal",
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """``(fast > slow)::int`` moving-average crossover, applied with a
     1-step shift (trade on yesterday's signal — notebook cell 16 F3+W4).
 
     Scale path (r14): the shift is one lag-1 tap, so past the size /
-    hot-key gates ``strategy='auto'`` routes it through the shared
-    chunked-halo machinery (:func:`_chunked_trailing` unkeyed /
-    :func:`keyed_lags` keyed — halo = 1, BIT-IDENTICAL), closing the
-    last W4-family single-sort-task ceiling.
+    hot-key gates it routes through the shared chunked-halo machinery
+    (:func:`_chunked_trailing` unkeyed / :func:`keyed_lags` keyed —
+    halo = 1, BIT-IDENTICAL), closing the last W4-family
+    single-sort-task ceiling.
     """
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
 
     def _t(df: DataFrame) -> DataFrame:
         sig = F.when(F.col(fast_col) > F.col(slow_col), 1).otherwise(0)
         d = df.withColumn(out, sig)
         shifted = f"{out}_shifted"
-        if not partition_by and _auto_chunked(d, order_col, strategy):
+        if not partition_by and _scale_gate(d, order_col):
             return _chunked_trailing(
                 d,
                 order_col,
@@ -620,7 +614,6 @@ def crossover_signal(
                     [(out, 1, shifted)],
                     order_by=(order_col,),
                     partition_by=list(partition_by),
-                    strategy=strategy,
                 )
             )
         return d.withColumn(
@@ -673,7 +666,6 @@ def fill_forward(
     value_cols: Sequence[str],
     order_cols: Sequence[str],
     partition_by: Sequence[str] | None = None,
-    strategy: str = "auto",
 ) -> "Callable[[DataFrame], DataFrame]":
     """Last-observation-carried-forward gap filling: each null takes the
     most recent non-null value in its key's series.  ``order_cols``
@@ -685,9 +677,8 @@ def fill_forward(
     unbounded-preceding frame is incremental state in the window exec —
     no per-row rescans.
 
-    Unkeyed scale path (``strategy``: ``'window'`` | ``'bucket'`` |
-    ``'auto'`` on Catalyst's size estimate): the unbounded carry
-    decomposes as in the unkeyed as-of join (``operators/asof.py``) —
+    Unkeyed scale path (past the size gate, :func:`_scale_gate`): the
+    unbounded carry decomposes as in the unkeyed as-of join (``operators/asof.py``) —
     bucket by a coarse key monotone in ``order_cols[0]`` (ties on the
     first order column always share a bucket, so cross-bucket order is
     total even when later tie-breakers reorder within it), one
@@ -699,10 +690,8 @@ def fill_forward(
     then partitioned by bucket — parallel across buckets, falling back
     to the carry-in when a bucket has no prior non-null.  Output is
     IDENTICAL to the single-window plan (values are carried, not
-    recomputed — no float reassociation), so ``auto`` is hash-safe.
+    recomputed — no float reassociation), so the gate is hash-safe.
     """
-    if strategy not in ("auto", "window", "bucket"):
-        raise ValueError("strategy must be auto | window | bucket")
 
     def _bucketed(df: DataFrame) -> DataFrame:
         from btc_usdt_etl_pipeline_spark.operators.asof import _bucket_col
@@ -749,13 +738,7 @@ def fill_forward(
         )
 
     def _t(df: DataFrame) -> DataFrame:
-        if not partition_by and (
-            strategy == "bucket"
-            or (
-                strategy == "auto"
-                and _auto_chunked(df, order_cols[0], "auto")
-            )
-        ):
+        if not partition_by and _scale_gate(df, order_cols[0]):
             return _bucketed(df)
         w = (
             Window.partitionBy(*partition_by)
@@ -963,7 +946,6 @@ def macd_signal(
     slow_taps: int = 60,
     signal_alpha: float = 2.0 / 10.0,
     signal_taps: int = 27,
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """MACD(fast, slow, signal) per series in the truncated-EWMA idiom:
     adds ``macd`` / ``signal`` / ``histogram`` columns.  Default taps
@@ -976,14 +958,13 @@ def macd_signal(
     ``(slow_taps−1) + (signal_taps−1)``: a halo row at offset −h inside
     a chunk has ``halo−h`` predecessors, which covers the signal EMA's
     reach of ``signal_taps−1`` rows whose own macd values each need
-    ``slow_taps−1`` more.  ``strategy='auto'`` swaps to the chunked
-    plan on the per-key count estimate when a single key's series
+    ``slow_taps−1`` more.  Past the size gate :func:`_keyed_plan` swaps
+    to the chunked plan on the per-key count estimate when a single
+    key's series
     exceeds the hot-key threshold (the zipf shape where one ordered
     window task dominates) — BIT-IDENTICAL output, since every output
     row's frames hold exactly the same rows in the same order.
     """
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
     halo = (slow_taps - 1) + (signal_taps - 1)
 
     def _compute(u: DataFrame, w: WindowSpec) -> DataFrame:
@@ -999,10 +980,11 @@ def macd_signal(
     def _t(df: DataFrame) -> DataFrame:
         keys = [partition_by] if partition_by else []
         if keys:
-            chunked, cr = _keyed_plan(
-                df, keys, order_by[0], strategy, halo=halo
+            cr = _keyed_plan(
+                df, keys, order_by[0], halo=halo,
+                hot_rows=_KEYED_HOT_KEY_ROWS,
             )
-            if chunked:
+            if cr is not None:
                 return _keyed_chunked_trailing(
                     df, keys, order_by, halo=halo, compute=_compute,
                     chunk_rows=cr,
@@ -1021,7 +1003,6 @@ def acf(
     partition_by: str | None = None,
     order_by: Sequence[str] = ("ts",),
     out: str = "acf",
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Autocorrelation function r_1..r_max_lag per series:
 
@@ -1042,8 +1023,9 @@ def acf(
 
     Returns ``(partition_by…, lag, acf)``, lag ∈ 1..max_lag.
 
-    Scale path (keyed): ``strategy='auto'`` swaps BOTH hot-key shapes
-    when the per-key count estimate finds a series over the hot-key
+    Scale path (keyed): past the size gate :func:`_keyed_plan` swaps
+    BOTH hot-key shapes when the per-key count estimate finds a series
+    over the hot-key
     threshold — the unordered per-key mean window becomes a groupBy +
     equi-join (identical value: the decimal sum is order-free), and the
     ordered lag-product pass runs under the chunked-halo decomposition
@@ -1051,17 +1033,18 @@ def acf(
     key.  The final per-series reduction was already a plain
     aggregation (partial-combined, never single-task).
     """
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
 
     def _t(df: DataFrame) -> DataFrame:
         from btc_usdt_etl_pipeline_spark.functions import DEC
 
         gcols = [partition_by] if partition_by else []
-        chunked, cr = (
-            _keyed_plan(df, gcols, order_by[0], strategy, halo=max_lag)
+        cr = (
+            _keyed_plan(
+                df, gcols, order_by[0], halo=max_lag,
+                hot_rows=_KEYED_HOT_KEY_ROWS,
+            )
             if gcols
-            else (False, None)
+            else None
         )
 
         def _lag_prods(u: DataFrame, w: WindowSpec) -> DataFrame:
@@ -1072,7 +1055,7 @@ def acf(
                 )
             return u
 
-        if chunked:
+        if cr is not None:
             means = df.groupBy(*gcols).agg(
                 (
                     F.sum(F.col(value_col).cast(DEC)).cast("double")
@@ -1151,7 +1134,6 @@ def spearman_corr(
     y_col: str,
     group_by: str | None = None,
     out: str = "spearman",
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Spearman rank correlation per group — Pearson on AVERAGE ranks,
     the monotone-relationship detector that is outlier-robust where
@@ -1160,19 +1142,20 @@ def spearman_corr(
     Tie handling is the textbook average rank: ``min_rank +
     (n_equal − 1)/2``.  Two plans, BIT-IDENTICAL by construction:
 
-    - ``window`` — one ordered rank window plus one value-keyed count
+    - window — one ordered rank window plus one value-keyed count
       window per column, both partitioned by the group.  Parallel
       across groups, but a hot group's full series sorts on ONE task —
       the r8-measured 100× ceiling (42.8 s, one straggler at 100 TB).
-    - ``counts`` — :func:`_bucketed_rank` per column: range-bucketed
+    - counts — :func:`_bucketed_rank` per column: range-bucketed
       offsets + within-(group, bucket) rank, ONE row-scale shuffle per
       column and no join-back.  Every stage splits a hot group across
       its value range.
 
-    ``auto`` gates on the same Catalyst size estimate as the chunked
-    window family — small inputs (every oracle run) keep the window
-    plan; the swap cannot move an oracle hash because both plans emit
-    exact half-integer ranks and identical-op-order double moments.
+    The counts plan runs for numeric x/y past the same size gate as the
+    chunked window family (:func:`_scale_gate`) — small inputs (every
+    oracle run) keep the window plan; the swap cannot move an oracle
+    hash because both plans emit exact half-integer ranks and
+    identical-op-order double moments.
 
     Ranks are exact half-integers, so the Pearson moments run through
     the exact-decimal idiom losslessly and the only transcendental is
@@ -1183,8 +1166,6 @@ def spearman_corr(
     deletion would break the rank space).  Constant columns (zero rank
     variance) emit NULL.  Returns ``group_by…, n, out``.
     """
-    if strategy not in ("auto", "window", "counts"):
-        raise ValueError("strategy must be auto | window | counts")
     gcols = [group_by] if group_by else []
 
     def _t(df: DataFrame) -> DataFrame:
@@ -1193,24 +1174,7 @@ def spearman_corr(
         d = df.where(
             F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
         )
-        dtypes = dict(df.dtypes)
-        numeric = all(
-            dtypes[c]
-            in ("tinyint", "smallint", "int", "bigint", "float", "double")
-            or dtypes[c].startswith("decimal")
-            for c in (x_col, y_col)
-        )
-        use_counts = strategy == "counts" or (
-            strategy == "auto"
-            and numeric
-            and _plan_size(df) > _CHUNK_THRESHOLD_BYTES
-        )
-        if use_counts and not numeric:
-            raise TypeError(
-                "counts-path spearman needs numeric x/y columns"
-            )
-
-        if use_counts:
+        if _scale_gate(df, x_col, y_col, numeric_only=True):
             base = d.select(*gcols, x_col, y_col)
 
             # same double ops as the window plan: rank→double,
@@ -1291,23 +1255,22 @@ def group_ranks(
     group_by: str | None = None,
     tiebreak: str | None = None,
     n_tiles: int | None = None,
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """The full ordered-rank feature family per group — ``min_rank``,
     ``avg_rank``, ``pct_rank``, ``cume_dist`` (+ ``row_num`` and
     ``ntile`` when ``tiebreak``, a unique order-completing column, is
     given) — with a scale path that never sorts a full group on one
     task.  This productizes :func:`_bucketed_rank` for the q85/q96/q118
-    rank-window family the way ``strategy='auto'`` productized the
+    rank-window family the way the size gate productized the
     chunked-halo plans for MACD/ACF.
 
     Two BIT-IDENTICAL plans:
 
-    - ``window`` — the classic single keyed window
+    - window — the classic single keyed window
       (``rank/percent_rank/cume_dist/row_number/ntile .over(w)``): one
       shuffle on the group, but a zipf-hot group's ordered sort is ONE
       task — the 100 TB straggler.
-    - ``counts`` — ONE row-scale shuffle on (group, range-bucket):
+    - counts — ONE row-scale shuffle on (group, range-bucket):
       every statistic is rank arithmetic over ``_bucketed_rank``'s
       outputs, evaluated with the same integer operands and double
       divisions as Spark's window functions —
@@ -1319,14 +1282,13 @@ def group_ranks(
       (first ``n mod b`` tiles take one extra row) as closed-form
       integer arithmetic on ``row_num``.
 
-    ``auto`` gates on the Catalyst size estimate (oracle-scale inputs
-    keep the window plan; hashes never move) and requires a numeric
-    value column for range bucketing.  NULL ``value_col`` rows are
+    The counts plan runs past the Catalyst size gate
+    (:func:`_scale_gate`; oracle-scale inputs keep the window plan, so
+    hashes never move) and needs a numeric value column for range
+    bucketing.  NULL ``value_col`` rows are
     dropped (rank space contract); NULL groups are real groups.
     Output ranks are BIGINT on both plans.
     """
-    if strategy not in ("auto", "window", "counts"):
-        raise ValueError("strategy must be auto | window | counts")
     if n_tiles is not None and (n_tiles < 1 or tiebreak is None):
         raise ValueError(
             "n_tiles needs a tiebreak column (ntile is row-order "
@@ -1336,22 +1298,7 @@ def group_ranks(
 
     def _t(df: DataFrame) -> DataFrame:
         d = df.where(F.col(value_col).isNotNull())
-        dtype = dict(df.dtypes)[value_col]
-        numeric = dtype in (
-            "tinyint", "smallint", "int", "bigint", "float", "double",
-        ) or dtype.startswith("decimal")
-        use_counts = strategy == "counts" or (
-            strategy == "auto"
-            and numeric
-            and _plan_size(df) > _CHUNK_THRESHOLD_BYTES
-        )
-        if use_counts and not numeric:
-            raise TypeError(
-                f"counts-path group_ranks needs a numeric value "
-                f"column; {value_col!r} is {dtype}"
-            )
-
-        if use_counts:
+        if _scale_gate(df, value_col, numeric_only=True):
             r = _bucketed_rank(
                 d, gcols, value_col, rank_col="_mrk", cnt_col="_ct",
                 n_col="_gn", tiebreak=tiebreak, row_col="_rw",
@@ -1453,7 +1400,6 @@ def cross_correlation(
     partition_by: str | None = None,
     order_by: Sequence[str] = ("ts",),
     out: str = "ccf",
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Cross-correlation function between two aligned series per key —
     the lead-lag detector (does x anticipate y?):
@@ -1484,22 +1430,24 @@ def cross_correlation(
 
     Returns ``(partition_by…, lag, out)``, lag ∈ −max_lag..max_lag.
 
-    Scale path (keyed): identical to :func:`acf` — ``strategy='auto'``
-    swaps the per-key mean windows for a groupBy + equi-join and the
-    lag products for the chunked-halo plan (halo = ``max_lag``) when
-    the per-key count estimate finds a hot key.  Bit-identical.
+    Scale path (keyed): identical to :func:`acf` — past the size gate
+    :func:`_keyed_plan` swaps the per-key mean windows for a groupBy +
+    equi-join and the lag products for the chunked-halo plan (halo =
+    ``max_lag``) when the per-key count estimate finds a hot key.
+    Bit-identical.
     """
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
 
     def _t(df: DataFrame) -> DataFrame:
         from btc_usdt_etl_pipeline_spark.functions import DEC
 
         gcols = [partition_by] if partition_by else []
-        chunked, cr = (
-            _keyed_plan(df, gcols, order_by[0], strategy, halo=max_lag)
+        cr = (
+            _keyed_plan(
+                df, gcols, order_by[0], halo=max_lag,
+                hot_rows=_KEYED_HOT_KEY_ROWS,
+            )
             if gcols
-            else (False, None)
+            else None
         )
 
         def _prods(u: DataFrame, w: WindowSpec) -> DataFrame:
@@ -1523,7 +1471,7 @@ def cross_correlation(
             for k in range(1, max_lag + 1)
             for n in (f"_pp{k}", f"_pn{k}")
         ]
-        if chunked:
+        if cr is not None:
             means = df.groupBy(*gcols).agg(
                 (
                     F.sum(F.col(x_col).cast(DEC)).cast("double")
@@ -1815,7 +1763,6 @@ def ljung_box(
     max_lag: int,
     partition_by: str | None = None,
     order_by: Sequence[str] = ("ts",),
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Ljung–Box portmanteau test per series — "is this series white
     noise through lag K?", the one-number companion to the :func:`acf`
@@ -1843,7 +1790,6 @@ def ljung_box(
                 max_lag,
                 partition_by=partition_by,
                 order_by=order_by,
-                strategy=strategy,
             )
         )
         cnt = (
@@ -1935,7 +1881,6 @@ def pacf(
     max_lag: int,
     partition_by: str | None = None,
     order_by: Sequence[str] = ("ts",),
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Partial autocorrelation function φ_{k,k}, k = 1..max_lag, per
     series — the AR-order picker next to :func:`acf` (ACF tails off /
@@ -1963,7 +1908,6 @@ def pacf(
                 max_lag,
                 partition_by=partition_by,
                 order_by=order_by,
-                strategy=strategy,
             )
         )
         wide = long.groupBy(*gcols).agg(
@@ -2000,7 +1944,6 @@ def kpss_level(
     bartlett_lags: int = 5,
     partition_by: str | None = None,
     order_by: Sequence[str] = ("ts",),
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """KPSS level-stationarity test per series (Kwiatkowski et al.
     1992) — the null here is STATIONARY, the mirror image of unit-root
@@ -2028,11 +1971,12 @@ def kpss_level(
     ``partition_by…, n, eta, omega2, kpss`` (6 dp; NULL when ω² ≤ 0
     or n ≤ L).
 
-    Scale path (r14): past the hot-key gate ``strategy='auto'`` swaps
-    in the chunked plan — the group mean moves from the full-frame
-    keyed window (which buffers a hot key's whole series on one task)
-    to a partial-aggregated groupBy + null-safe join-back (the exact
-    same decimal-sum/count quotient), the cumulative S_t runs through
+    Scale path (r14): past the size and hot-key gates
+    (:func:`_keyed_plan`) it swaps in the chunked plan — the group mean
+    moves from the full-frame keyed window (which buffers a hot key's
+    whole series on one task) to a partial-aggregated groupBy +
+    null-safe join-back (the exact same decimal-sum/count quotient),
+    the cumulative S_t runs through
     the SYNTHETIC-OFFSET-ROW prefix-scan idiom (each chunk c > 0 gets
     one flagged extra row carrying the exact decimal sum of every
     earlier chunk, sorted before its real rows, so cross-chunk carries
@@ -2046,8 +1990,6 @@ def kpss_level(
     """
     if bartlett_lags < 0:
         raise ValueError("bartlett_lags must be >= 0")
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
     gcols = [partition_by] if partition_by else []
     L = int(bartlett_lags)
 
@@ -2062,16 +2004,16 @@ def kpss_level(
         if not pkeys:
             d0 = d.withColumn("_kp_pk", F.lit(1))
             pkeys = ["_kp_pk"]
-        chunked, cr = _keyed_plan(
-            d0, pkeys, order_by[0], strategy, halo=max(L, 1)
+        cr = _keyed_plan(
+            d0, pkeys, order_by[0], halo=max(L, 1),
+            hot_rows=_KEYED_HOT_KEY_ROWS,
         )
         dec12 = "decimal(38,12)"
-        if chunked:
+        if cr is not None:
             from btc_usdt_etl_pipeline_spark.functions import (
                 null_safe_join,
             )
 
-            cr = max(cr or _CHUNK_ROWS, 4 * max(L, 1))
             means = d0.groupBy(*pkeys).agg(
                 F.sum(F.col("_x").cast("decimal(38,6)")).alias(
                     "_kp_s"
@@ -2205,7 +2147,6 @@ def arch_lm(
     value_col: str,
     partition_by: str | None = None,
     order_by: Sequence[str] = ("ts",),
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Engle's ARCH LM test (lag 1) per series — "does this series
     show conditional heteroscedasticity?", the volatility-clustering
@@ -2222,8 +2163,8 @@ def arch_lm(
     one keyed lag tap ordered by ``order_by`` (pass a tie-breaking
     tuple, e.g. ``("ts", "event_id")`` — the ca35287 discipline), one
     decimal-moment agg; R² via the same closed form as Breusch–Pagan.
-    The lag tap routes through :func:`keyed_lags` (halo = 1), so
-    ``strategy='auto'`` swaps in the chunked-halo plan when one key's
+    The lag tap routes through :func:`keyed_lags` (halo = 1), so past
+    the size gate it swaps in the chunked-halo plan when one key's
     series exceeds the hot-key threshold — a zipf-hot key no longer
     serializes its whole series onto one sort task (the r13 SCALE.md
     27.2 s/100× floor), and the chunked plan is BIT-IDENTICAL (the
@@ -2235,8 +2176,6 @@ def arch_lm(
     (n' ≤ 2, constant g, constant lagged g) emit NULL lm.
     Returns ``partition_by…, n_pairs, r2_aux, lm``.
     """
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
     gcols = [partition_by] if partition_by else []
     ocols = list(order_by)
 
@@ -2271,7 +2210,6 @@ def arch_lm(
                 [("_g", 1, "_gl")],
                 order_by=ocols,
                 partition_by=list(gcols) or ["_mu"],
-                strategy=strategy,
             )
         )
         pairs = staged.where(F.col("_gl").isNotNull())
@@ -2314,7 +2252,6 @@ def hurst_aggvar(
     block_sizes: Sequence[int] = (2, 4, 8),
     partition_by: str | None = None,
     order_by: Sequence[str] = ("ts",),
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Hurst exponent per series via the aggregated-variance method
     (Beran 1994; the long-range-dependence triage a series gets next
@@ -2328,11 +2265,12 @@ def hurst_aggvar(
         H = 1 + ln(v_m3 / v_m1) / (2 · ln(m3 / m1)).
 
     One dense per-series index (``order_by`` must include a unique
-    tie-breaker) — ``strategy='auto'`` computes it as a plain
-    ``row_number`` window below the hot-key threshold and switches to
-    the two-pass bucket-offset index (:func:`_keyed_index` keyed /
+    tie-breaker) — computed as a plain ``row_number`` window below the
+    size and hot-key gates (:func:`_keyed_plan` keyed,
+    :func:`_scale_gate` unkeyed) and switched to the two-pass
+    bucket-offset index (:func:`_keyed_index` keyed /
     ``with_global_index`` unkeyed — the resample §4.3 idiom, integer
-    positions, BIT-IDENTICAL) past it, so a zipf-hot key's series
+    positions, BIT-IDENTICAL) past them, so a zipf-hot key's series
     never rides one sort task (the r13 SCALE.md 41.2 s/100× floor) —
     then ONE data-scale agg to m1-blocks, then a
     HIERARCHICAL reduction: m2/m3 block sums are exact decimal adds of
@@ -2351,8 +2289,6 @@ def hurst_aggvar(
     Returns ``partition_by…, n, v_m1, v_m2, v_m3, hurst``.
     """
     ms = [int(m) for m in block_sizes]
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
     if len(ms) != 3 or sorted(ms) != ms or ms[0] < 2:
         raise ValueError("block_sizes must be 3 ascending ints >= 2")
     if ms[1] % ms[0] or ms[2] % ms[1]:
@@ -2374,35 +2310,25 @@ def hurst_aggvar(
             *ocols,
             F.col(value_col).cast("double").alias("_x"),
         )
-        if gcols:
-            chunked, _cr = _keyed_plan(
-                d0, gcols, ocols[0], strategy, halo=1,
-                hot_rows=_KEYED_HOT_KEY_ROWS_CHEAP,
-            )
-            indexed = (
-                _keyed_index(d0, gcols, ocols, index_col="_rn")
-                if chunked
-                else None
-            )
-        elif _auto_chunked(d0, ocols[0], strategy):
+        if gcols and _keyed_plan(
+            d0, gcols, ocols[0], halo=1,
+            hot_rows=_KEYED_HOT_KEY_ROWS_CHEAP,
+        ) is not None:
+            d = _keyed_index(d0, gcols, ocols, index_col="_rn")
+        elif not gcols and _scale_gate(d0, ocols[0]):
             from btc_usdt_etl_pipeline_spark.operators.resample import (
                 with_global_index,
             )
 
-            indexed = with_global_index(
+            d = with_global_index(
                 d0, ocols[0], tie_break=ocols[1:], index_col="_rn"
             )
         else:
-            indexed = None
-        d = (
-            indexed
-            if indexed is not None
-            else d0.withColumn(
+            d = d0.withColumn(
                 "_rn",
                 F.row_number().over(_window_multi(gcols, ocols))
                 - F.lit(1),
             )
-        )
         # level 1: the only data-scale agg — exact decimal block sums
         lvl = d.groupBy(
             *gcols, (F.col("_rn") / ms[0]).cast("long").alias("_b")
@@ -2482,7 +2408,6 @@ def variance_ratio(
     q: int = 4,
     partition_by: str | None = None,
     order_by: Sequence[str] = ("ts",),
-    strategy: str = "auto",
 ) -> Callable[[DataFrame], DataFrame]:
     """Lo–MacKinlay variance-ratio test per series — "is this a
     random walk?", the q-period companion to :func:`hurst_aggvar`'s
@@ -2499,7 +2424,7 @@ def variance_ratio(
 
     VR < 1 ⇒ mean reversion, VR > 1 ⇒ momentum.  ONE keyed ordered
     pass carries BOTH lag taps (lag 1 and lag q — the q185 one-pass
-    idiom) via :func:`keyed_lags` (halo = q), so ``strategy='auto'``
+    idiom) via :func:`keyed_lags` (halo = q), so past the size gate it
     swaps in the chunked-halo plan when one key's series exceeds the
     hot-key threshold — BIT-IDENTICAL, clearing the r13 zipf-hot-key
     single-sort-task floor (SCALE.md 39.4 s/100×); ungrouped input
@@ -2513,8 +2438,6 @@ def variance_ratio(
     """
     if q < 2:
         raise ValueError("q must be >= 2")
-    if strategy not in ("auto", "window", "chunked"):
-        raise ValueError("strategy must be auto | window | chunked")
     gcols = [partition_by] if partition_by else []
     ocols = list(order_by)
 
@@ -2534,7 +2457,6 @@ def variance_ratio(
                 [("_x", 1, "_x1"), ("_x", int(q), "_xq")],
                 order_by=ocols,
                 partition_by=list(gcols) or ["_pk"],
-                strategy=strategy,
             )
         ).select(*gcols, "_x", "_x1", "_xq")
         dec12 = "decimal(38,12)"

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import contextlib
+import math
 import os
+import re
 import sys
 import tempfile
 
@@ -27,6 +30,54 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def scale_paths(monkeypatch):
+    """``with scale_paths():`` forces every size-gated scale plan: the
+    size and hot-key gates drop below any input, so each operator built
+    inside the block takes its chunked / bucketed plan.
+    ``with scale_paths(on=False):`` forces the plain plans instead: the
+    gates rise above any input.  Tests need that side too, because a
+    DataFrame built from Python rows carries no size statistics:
+    Catalyst reports it at Long.MaxValue bytes (more after a
+    projection widens it) — past every default gate."""
+    import btc_usdt_etl_pipeline_spark.operators.resample as R
+    import btc_usdt_etl_pipeline_spark.operators.windows as W
+
+    @contextlib.contextmanager
+    def forced(on=True):
+        bytes_, rows = (-1, 0) if on else (math.inf, math.inf)
+        with monkeypatch.context() as m:
+            m.setattr(W, "_CHUNK_THRESHOLD_BYTES", bytes_)
+            m.setattr(W, "_KEYED_HOT_KEY_ROWS", rows)
+            m.setattr(W, "_KEYED_HOT_KEY_ROWS_CHEAP", rows)
+            m.setattr(R, "_SORT_THRESHOLD_BYTES", bytes_)
+            yield
+
+    return forced
+
+
+def plan_mentions(df, column):
+    """Whether ``column`` is an attribute anywhere in ``df``'s
+    optimized plan — scale plans carry helper columns (``_chunk``,
+    ``_rb``, ``_offset``...) that they drop before returning."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.search(rf"(?<!\w){re.escape(column)}#", plan) is not None
+
+
+def plain_and_scaled(scale_paths, build, marker):
+    """``build()`` once with the plain plans forced and once with the
+    scale plans forced; asserts the scale plan's ``marker`` column is in
+    the second plan only — the proof that the gate flipped — and
+    returns both DataFrames."""
+    with scale_paths(on=False):
+        plain = build()
+    with scale_paths():
+        scaled = build()
+    assert not plan_mentions(plain, marker), marker
+    assert plan_mentions(scaled, marker), marker
+    return plain, scaled
 
 
 def jobs_under_group(spark, group, fn):

@@ -29,6 +29,7 @@ from btc_usdt_etl_pipeline_spark.operators.resample import (
 )
 from btc_usdt_etl_pipeline_spark.operators.sampling import hash_sample
 from btc_usdt_etl_pipeline_spark.operators.similarity import lsh_top_k
+from tests.conftest import plain_and_scaled
 
 
 def _empty_docs(spark):
@@ -64,14 +65,16 @@ def test_asof_empty_left_and_both(spark):
     assert asof_join(left, some_right, "t").count() == 0
 
 
-def test_resample_empty(spark):
+def test_resample_empty(spark, scale_paths):
     df = spark.createDataFrame(
         [], "open_time long, open double, high double, low double, "
         "close double, number_of_trades long",
     )
-    assert df.transform(resample_by_count(strategy="bucket")).count() == 0
-    assert df.transform(resample_by_count(strategy="sort")).count() == 0
-    assert df.transform(resample_by_count(strategy="auto")).count() == 0
+    for out in plain_and_scaled(
+        scale_paths, lambda: df.transform(resample_by_count()), "_offset"
+    ):
+        assert out.count() == 0
+    assert df.transform(resample_by_count()).count() == 0
     tdf = spark.createDataFrame([], "event_time timestamp, open double, "
                                     "high double, low double, close double, "
                                     "number_of_trades long")

@@ -12,7 +12,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from btc_usdt_etl_pipeline_spark.operators.resample import resample_by_count
-from tests.conftest import make_klines
+from tests.conftest import make_klines, plain_and_scaled, plan_mentions
 
 MODULES = [
     "btc_usdt_etl_pipeline_spark.schema",
@@ -372,11 +372,13 @@ def test_scd2_collapses_runs_and_closes_intervals(spark):
             assert a[2] == b[1]  # chained half-open intervals
 
 
-def test_unkeyed_window_scale_paths_bit_identical(spark, monkeypatch):
+def test_unkeyed_window_scale_paths_bit_identical(
+    spark, monkeypatch, scale_paths
+):
     """The round-7 unkeyed scale paths — halo-chunked pct_change /
     rolling_mean_std and bucket-carried fill_forward — must equal the
     single-window plans BIT-FOR-BIT (that is the contract that lets
-    strategy='auto' swap plans on the size estimate without moving any
+    the size gate swap plans on the size estimate without moving any
     oracle hash).  Chunks are shrunk to 64 rows and the series spans
     ~60 day-buckets so both decompositions genuinely cross boundaries,
     including a leading all-null stretch (null carry-in) and nulls that
@@ -406,41 +408,28 @@ def test_unkeyed_window_scale_paths_bit_identical(spark, monkeypatch):
             key=lambda r: r[0],
         )
 
-    a = rows_of(df.transform(W.pct_change("x", "t", strategy="window")))
-    b = rows_of(df.transform(W.pct_change("x", "t", strategy="chunked")))
-    assert a == b
-
-    a = rows_of(
-        df.transform(W.rolling_mean_std("x", "t", 7, strategy="window"))
-    )
-    b = rows_of(
-        df.transform(W.rolling_mean_std("x", "t", 7, strategy="chunked"))
-    )
-    assert a == b
-
-    a = rows_of(df.transform(W.fill_forward(["v"], ["t"], strategy="window")))
-    b = rows_of(df.transform(W.fill_forward(["v"], ["t"], strategy="bucket")))
-    assert a == b
-    # the leading stretch has nothing to carry: stays null in both
+    for op, marker in (
+        (lambda: W.pct_change("x", "t"), "_chunk"),
+        (lambda: W.rolling_mean_std("x", "t", 7), "_chunk"),
+        (lambda: W.fill_forward(["v"], ["t"]), "_ff_b"),
+    ):
+        pa, pb = plain_and_scaled(
+            scale_paths, lambda: df.transform(op()), marker
+        )
+        a, b = rows_of(pa), rows_of(pb)
+        assert a == b
+    # fill_forward: the leading stretch has nothing to carry — stays
+    # null in both
     assert a[0][1] is None
 
-    import pytest as _pytest
 
-    for fn, kw in (
-        (W.pct_change, dict(col="x", order_col="t")),
-        (W.rolling_mean_std, dict(col="x", order_col="t", window_rows=3)),
-    ):
-        with _pytest.raises(ValueError, match="strategy"):
-            fn(strategy="bogus", **kw)
-    with _pytest.raises(ValueError, match="strategy"):
-        W.fill_forward(["v"], ["t"], strategy="bogus")
-
-
-def test_keyed_window_scale_paths_bit_identical(spark, monkeypatch):
+def test_keyed_window_scale_paths_bit_identical(
+    spark, monkeypatch, scale_paths
+):
     """The round-8 KEYED scale paths — per-key chunked-halo pct_change /
     rolling_mean_std / macd_signal / acf — must equal the plain
     partitionBy-window plans BIT-FOR-BIT (the contract that lets
-    strategy='auto' swap plans on the per-key count estimate without
+    the hot-key gate swap plans on the per-key count estimate without
     moving any oracle hash).  Chunks shrink to 64 rows; the 'hot' key
     spans ~150 day-buckets and many chunks (MACD's halo of 85 forces
     340-row chunks — still 4+ chunks); the other keys exercise the
@@ -477,50 +466,32 @@ def test_keyed_window_scale_paths_bit_identical(spark, monkeypatch):
         )
 
     for mk in (
-        lambda s: W.pct_change("x", "t", partition_by=["k"], strategy=s),
-        lambda s: W.rolling_mean_std(
-            "x", "t", 7, partition_by=["k"], strategy=s
-        ),
-        lambda s: W.macd_signal(
-            "x", order_by=("t", "i"), partition_by="k", strategy=s
-        ),
-        lambda s: W.acf(
-            "x", max_lag=5, partition_by="k", order_by=("t", "i"),
-            strategy=s,
-        ),
+        lambda: W.pct_change("x", "t", partition_by=["k"]),
+        lambda: W.rolling_mean_std("x", "t", 7, partition_by=["k"]),
+        lambda: W.macd_signal("x", order_by=("t", "i"), partition_by="k"),
+        lambda: W.acf("x", max_lag=5, partition_by="k", order_by=("t", "i")),
         # two lagged columns + join-based means (x vs a shifted copy)
-        lambda s: W.cross_correlation(
+        lambda: W.cross_correlation(
             "x", "i", max_lag=4, partition_by="k", order_by=("t", "i"),
-            strategy=s,
         ),
     ):
-        a = rows_of(df.transform(mk("window")))
-        b = rows_of(df.transform(mk("chunked")))
-        assert a == b
+        pa, pb = plain_and_scaled(
+            scale_paths, lambda: df.transform(mk()), "_chunk"
+        )
+        assert rows_of(pa) == rows_of(pb)
 
     # ACF NULL fence survives the chunked plan for the constant key
-    flat = (
-        df.transform(
-            W.acf("x", max_lag=3, partition_by="k", order_by=("t", "i"),
-                  strategy="chunked")
+    with scale_paths():
+        flat = df.transform(
+            W.acf("x", max_lag=3, partition_by="k", order_by=("t", "i"))
         )
-        .filter(F.col("k") == "flat")
-        .collect()
-    )
+    assert plan_mentions(flat, "_chunk")
+    flat = flat.filter(F.col("k") == "flat").collect()
     assert len(flat) == 3 and all(r["acf"] is None for r in flat)
-
-    import pytest as _pytest
-
-    for bad in (
-        lambda: W.macd_signal("x", strategy="bogus"),
-        lambda: W.acf("x", max_lag=2, strategy="bogus"),
-    ):
-        with _pytest.raises(ValueError, match="strategy"):
-            bad()
 
 
 def test_keyed_auto_trigger_swaps_plan_identically(spark, monkeypatch):
-    """strategy='auto' must actually flip to the chunked plan when the
+    """The gates must actually flip to the chunked plan when the
     hot-key count crosses the (monkeypatched) threshold and the size
     estimate passes — and the swap must not move a single value.  Also
     pins the adaptive chunk-size contract: >= 4*halo always."""
@@ -528,8 +499,6 @@ def test_keyed_auto_trigger_swaps_plan_identically(spark, monkeypatch):
 
     import btc_usdt_etl_pipeline_spark.operators.windows as W
 
-    monkeypatch.setattr(W, "_KEYED_HOT_KEY_ROWS", 100)
-    monkeypatch.setattr(W, "_CHUNK_THRESHOLD_BYTES", 1)
     epoch = dt.datetime(2024, 1, 1)
     rows = [
         ("hot", epoch + dt.timedelta(hours=2 * i), i,
@@ -539,28 +508,25 @@ def test_keyed_auto_trigger_swaps_plan_identically(spark, monkeypatch):
     df = spark.createDataFrame(
         rows, "k string, t timestamp, i long, x double"
     )
-    chunked, cr = W._keyed_plan(df, ["k"], "t", "auto", halo=6)
-    assert chunked and cr >= 4 * 6
-    auto = sorted(
-        tuple(r)
-        for r in df.transform(
-            W.rolling_mean_std("x", "t", 7, partition_by=["k"],
-                               strategy="auto")
-        ).collect()
-    )
-    plain = sorted(
-        tuple(r)
-        for r in df.transform(
-            W.rolling_mean_std("x", "t", 7, partition_by=["k"],
-                               strategy="window")
-        ).collect()
-    )
+    op = W.rolling_mean_std("x", "t", 7, partition_by=["k"])
+    plain_df = df.transform(op)
+    monkeypatch.setattr(W, "_KEYED_HOT_KEY_ROWS", 100)
+    monkeypatch.setattr(W, "_CHUNK_THRESHOLD_BYTES", 1)
+    cr = W._keyed_plan(df, ["k"], "t", halo=6, hot_rows=W._KEYED_HOT_KEY_ROWS)
+    assert cr is not None and cr >= 4 * 6
+    auto_df = df.transform(op)
+    assert plan_mentions(auto_df, "_chunk")
+    assert not plan_mentions(plain_df, "_chunk")
+    auto = sorted(tuple(r) for r in auto_df.collect())
+    plain = sorted(tuple(r) for r in plain_df.collect())
     assert auto == plain
-    # below the threshold auto stays on the plain window (no count job
-    # dependency): same data, threshold restored
+    # below the hot-key threshold the gate stays on the plain window:
+    # same data, threshold restored
     monkeypatch.setattr(W, "_KEYED_HOT_KEY_ROWS", 1 << 19)
-    chunked, _ = W._keyed_plan(df, ["k"], "t", "auto", halo=6)
-    assert not chunked
+    assert (
+        W._keyed_plan(df, ["k"], "t", halo=6, hot_rows=W._KEYED_HOT_KEY_ROWS)
+        is None
+    )
 
 
 def test_keyed_index_dense_per_key(spark):
@@ -736,13 +702,15 @@ def test_cdc_merge_property_vs_python_model(spark):
     run()
 
 
-def test_null_partition_keys_survive_scale_paths(spark, monkeypatch):
+def test_null_partition_keys_survive_scale_paths(
+    spark, monkeypatch, scale_paths
+):
     """Round-9 advisor regression: every keyed scale path must KEEP
     rows whose partition key is NULL.  groupBy / Window.partitionBy
     treat NULL as a real group, but a plain join(on=cols) compiles to
     EqualTo and silently drops NULL-keyed rows — so the chunked /
     bucketed plans lost them while the window / walk plans kept them,
-    breaking the bit-identical strategy-swap contract.  All join-backs
+    breaking the bit-identical plan-swap contract.  All join-backs
     now go through functions.null_safe_join (eqNullSafe, still an
     equi-join for Catalyst)."""
     import datetime as dt
@@ -775,32 +743,30 @@ def test_null_partition_keys_survive_scale_paths(spark, monkeypatch):
         )
 
     for mk in (
-        lambda s: W.pct_change("x", "t", partition_by=["k"], strategy=s),
-        lambda s: W.rolling_mean_std(
-            "x", "t", 7, partition_by=["k"], strategy=s
-        ),
-        lambda s: W.macd_signal(
-            "x", order_by=("t", "i"), partition_by="k", strategy=s
-        ),
-        lambda s: W.acf(
-            "x", max_lag=4, partition_by="k", order_by=("t", "i"),
-            strategy=s,
-        ),
-        lambda s: W.cross_correlation(
+        lambda: W.pct_change("x", "t", partition_by=["k"]),
+        lambda: W.rolling_mean_std("x", "t", 7, partition_by=["k"]),
+        lambda: W.macd_signal("x", order_by=("t", "i"), partition_by="k"),
+        lambda: W.acf("x", max_lag=4, partition_by="k", order_by=("t", "i")),
+        lambda: W.cross_correlation(
             "x", "i", max_lag=3, partition_by="k", order_by=("t", "i"),
-            strategy=s,
         ),
     ):
-        a = rows_of(df.transform(mk("window")))
-        b = rows_of(df.transform(mk("chunked")))
+        pa, pb = plain_and_scaled(
+            scale_paths, lambda: df.transform(mk()), "_chunk"
+        )
+        a, b = rows_of(pa), rows_of(pb)
         assert a == b and len(a) > 0
 
     # weighted_quantile: bucketed plan must emit the NULL group too
     wdf = df.withColumn("w", F.col("i") % 5 + 1)
-    walk = rows_of(wdf.transform(R.weighted_quantile(
-        "x", "w", 1, 2, group_by="k", strategy="walk")))
-    buck = rows_of(wdf.transform(R.weighted_quantile(
-        "x", "w", 1, 2, group_by="k", strategy="bucketed")))
+    pw, pb = plain_and_scaled(
+        scale_paths,
+        lambda: wdf.transform(
+            R.weighted_quantile("x", "w", 1, 2, group_by="k")
+        ),
+        "_bcw",
+    )
+    walk, buck = rows_of(pw), rows_of(pb)
     assert walk == buck and len(walk) == 2
 
     # robust_scale / target_encode_loo: NULL-group rows stay, scaled
@@ -812,13 +778,13 @@ def test_null_partition_keys_survive_scale_paths(spark, monkeypatch):
     assert te.filter(F.col("k").isNull()).count() == 120
 
 
-def test_rank_from_counts_bit_identical(spark):
+def test_rank_from_counts_bit_identical(spark, scale_paths):
     """Round-9 rank-from-counts scale path: spearman_corr and
-    quantile_normalize must produce BIT-identical results under
-    strategy='counts' vs strategy='window' — ties (average ranks /
-    shared percent_rank), NULL groups, singleton groups (percent_rank
-    0 → pooled minimum), and negative values all covered.  That is the
-    contract that lets strategy='auto' swap plans on the Catalyst size
+    quantile_normalize must produce BIT-identical results on the counts
+    plan and the window plan — ties (average ranks / shared
+    percent_rank), NULL groups, singleton groups (percent_rank 0 →
+    pooled minimum), and negative values all covered.  That is the
+    contract that lets the size gate swap plans on the Catalyst size
     estimate without moving any oracle hash."""
     import btc_usdt_etl_pipeline_spark.operators.windows as W
     from btc_usdt_etl_pipeline_spark.ml import features as MF
@@ -840,35 +806,26 @@ def test_rank_from_counts_bit_identical(spark):
             key=lambda r: tuple(str(c) for c in r),
         )
 
-    a = rows_of(df.transform(
-        W.spearman_corr("x", "y", group_by="g", strategy="window")))
-    b = rows_of(df.transform(
-        W.spearman_corr("x", "y", group_by="g", strategy="counts")))
+    def both(op):
+        plain, scaled = plain_and_scaled(
+            scale_paths, lambda: df.transform(op), "_rb"
+        )
+        return rows_of(plain), rows_of(scaled)
+
+    a, b = both(W.spearman_corr("x", "y", group_by="g"))
     assert a == b and len(a) == 5
 
-    qa = rows_of(df.transform(
-        MF.quantile_normalize("x", group_by="g", strategy="window")))
-    qb = rows_of(df.transform(
-        MF.quantile_normalize("x", group_by="g", strategy="counts")))
+    qa, qb = both(MF.quantile_normalize("x", group_by="g"))
     assert qa == qb and len(qa) == len(rows)
 
     # global (ungrouped) spearman also swaps exactly
-    ga = rows_of(df.transform(
-        W.spearman_corr("x", "y", strategy="window")))
-    gb = rows_of(df.transform(
-        W.spearman_corr("x", "y", strategy="counts")))
+    ga, gb = both(W.spearman_corr("x", "y"))
     assert ga == gb and len(ga) == 1
 
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="strategy"):
-        W.spearman_corr("x", "y", strategy="bogus")
-    with _pytest.raises(ValueError, match="strategy"):
-        MF.quantile_normalize("x", group_by="g", strategy="bogus")
 
-
-def test_group_ranks_bit_identical_and_matches_duckdb(spark):
-    """Round-9 group_ranks: the rank-feature family under
-    strategy='counts' must equal the classic window plan BIT-FOR-BIT
+def test_group_ranks_bit_identical_and_matches_duckdb(spark, scale_paths):
+    """Round-9 group_ranks: the rank-feature family on the counts plan
+    must equal the classic window plan BIT-FOR-BIT
     (ties, NULL groups, singleton groups, n < n_tiles), and both must
     equal DuckDB's standard window functions — the independent
     semantics check for the bucketed rank arithmetic (incl. Spark's
@@ -893,11 +850,14 @@ def test_group_ranks_bit_identical_and_matches_duckdb(spark):
             key=lambda r: tuple(str(c) for c in r),
         )
 
-    mk = lambda s: group_ranks(
-        "v", group_by="g", tiebreak="id", n_tiles=7, strategy=s
+    pa, pb = plain_and_scaled(
+        scale_paths,
+        lambda: df.transform(
+            group_ranks("v", group_by="g", tiebreak="id", n_tiles=7)
+        ),
+        "_rb",
     )
-    a = rows_of(df.transform(mk("window")))
-    b = rows_of(df.transform(mk("counts")))
+    a, b = rows_of(pa), rows_of(pb)
     assert a == b and len(a) == len(rows)
 
     con = duckdb.connect()
@@ -922,7 +882,7 @@ def test_group_ranks_bit_identical_and_matches_duckdb(spark):
         key=lambda r: tuple(str(c) for c in r),
     )
     got = rows_of(
-        df.transform(mk("counts")).select(
+        pb.select(
             "g", "v", "id", "min_rank", "avg_rank", "pct_rank",
             "cume_dist", "row_num", "ntile",
         )
@@ -930,18 +890,17 @@ def test_group_ranks_bit_identical_and_matches_duckdb(spark):
     assert got == want
 
     # global (ungrouped) ranks, no tiebreak surface
-    ga = rows_of(df.transform(group_ranks("v", strategy="window")))
-    gb = rows_of(df.transform(group_ranks("v", strategy="counts")))
-    assert ga == gb
+    ga, gb = plain_and_scaled(
+        scale_paths, lambda: df.transform(group_ranks("v")), "_rb"
+    )
+    assert rows_of(ga) == rows_of(gb)
 
     import pytest as _pytest
-    with _pytest.raises(ValueError, match="strategy"):
-        group_ranks("v", strategy="bogus")
     with _pytest.raises(ValueError, match="tiebreak"):
         group_ranks("v", n_tiles=4)
 
 
-def test_bucketed_rank_plan_shape(spark):
+def test_bucketed_rank_plan_shape(spark, scale_paths):
     """The counts-path rank plans must keep their scale promises in the
     PHYSICAL plan: no Exchange SinglePartition anywhere (the ceiling
     they exist to remove), the offsets join a broadcast, and the
@@ -954,10 +913,10 @@ def test_bucketed_rank_plan_shape(spark):
         [("g%d" % (i % 3), float(i % 41), i) for i in range(500)],
         "g string, v double, id long",
     )
-    out = df.transform(
-        group_ranks("v", group_by="g", tiebreak="id", n_tiles=4,
-                    strategy="counts")
-    )
+    with scale_paths():
+        out = df.transform(
+            group_ranks("v", group_by="g", tiebreak="id", n_tiles=4)
+        )
     p = plan_string(out, mode="simple")
     assert "Exchange SinglePartition" not in p
     assert "BroadcastHashJoin" in join_kinds(out)
@@ -967,9 +926,9 @@ def test_bucketed_rank_plan_shape(spark):
         spearman_corr,
     )
 
-    sp = df.transform(
-        spearman_corr("v", "id", group_by="g", strategy="counts")
-    )
+    with scale_paths():
+        sp = df.transform(spearman_corr("v", "id", group_by="g"))
+    assert plan_mentions(sp, "_rb")
     ps = plan_string(sp, mode="simple")
     assert "Exchange SinglePartition" not in ps
     assert "CartesianProduct" not in ps
@@ -993,7 +952,9 @@ def test_bucketed_rank_plan_shape(spark):
     ),
     n_tiles=st.integers(min_value=1, max_value=9),
 )
-def test_group_ranks_property_counts_equals_window(spark, data, n_tiles):
+def test_group_ranks_property_counts_equals_window(
+    spark, scale_paths, data, n_tiles
+):
     """PROPERTY: for ANY group/value/tie structure (NULL groups, heavy
     ties from a tiny value domain, singleton groups, arbitrary
     tiebreaks) and ANY tile count, the bucketed-counts plan equals the
@@ -1006,24 +967,23 @@ def test_group_ranks_property_counts_equals_window(spark, data, n_tiles):
     ]
     df = spark.createDataFrame(rows, "g string, v double, id long")
 
-    def rows_of(s):
+    def rows_of(out):
         return sorted(
-            (
-                tuple(r)
-                for r in df.transform(
-                    group_ranks(
-                        "v", group_by="g", tiebreak="id",
-                        n_tiles=n_tiles, strategy=s,
-                    )
-                ).collect()
-            ),
+            (tuple(r) for r in out.collect()),
             key=lambda r: tuple(str(c) for c in r),
         )
 
-    assert rows_of("window") == rows_of("counts")
+    plain, counts = plain_and_scaled(
+        scale_paths,
+        lambda: df.transform(
+            group_ranks("v", group_by="g", tiebreak="id", n_tiles=n_tiles)
+        ),
+        "_rb",
+    )
+    assert rows_of(plain) == rows_of(counts)
 
 
-def test_auto_bucket_narrow_range_and_nonfinite(spark):
+def test_auto_bucket_narrow_range_and_nonfinite(spark, scale_paths):
     """r10 advisor fixes for auto_bucket_expr's numeric branch:
 
     1. a column whose whole range spans < 2 units (probabilities)
@@ -1065,30 +1025,33 @@ def test_auto_bucket_narrow_range_and_nonfinite(spark):
              ("b", nan, 103), ("b", 2.5, 104), ("b", nan, 105)]
     df = spark.createDataFrame(rows, "g string, v double, id long")
 
-    def rows_of(frame, s):
-        # stringify: Python tuple equality would fail on NaN != NaN
-        return sorted(
-            tuple(str(c) for c in r)
-            for r in frame.transform(
-                group_ranks(
-                    "v", group_by="g", tiebreak="id",
-                    n_tiles=4, strategy=s,
-                )
-            ).collect()
+    def window_and_counts(frame):
+        plain, counts = plain_and_scaled(
+            scale_paths,
+            lambda: frame.transform(
+                group_ranks("v", group_by="g", tiebreak="id", n_tiles=4)
+            ),
+            "_rb",
         )
+        # stringify: Python tuple equality would fail on NaN != NaN
+        return [
+            sorted(tuple(str(c) for c in r) for r in out.collect())
+            for out in (plain, counts)
+        ]
 
-    assert rows_of(df, "counts") == rows_of(df, "window")
+    w, c = window_and_counts(df)
+    assert c == w
 
     # all-non-finite column: no crash, still bit-identical
     df2 = spark.createDataFrame(
         [("a", nan, 1), ("a", inf, 2), ("a", -inf, 3)],
         "g string, v double, id long",
     )
-    a = rows_of(df2, "counts")
-    assert a == rows_of(df2, "window") and len(a) == 3
+    w, c = window_and_counts(df2)
+    assert c == w and len(c) == 3
 
 
-def test_keyed_lags_bit_identical_and_null_keys(spark):
+def test_keyed_lags_bit_identical_and_null_keys(spark, scale_paths):
     """r10 keyed_lags (the q210/q104 reroute): the chunked-halo plan
     must equal the plain keyed window BIT-FOR-BIT for a multi-lag set
     (1, 2, 24), including NULL partition keys (a real group in window
@@ -1102,23 +1065,21 @@ def test_keyed_lags_bit_identical_and_null_keys(spark):
             rows.append((u, i, float((i * 7) % 23)))
     df = spark.createDataFrame(rows, "user_id string, ts long, v double")
 
-    mk = lambda s: keyed_lags(
+    op = keyed_lags(
         [("v", 1, "l1"), ("v", 2, "l2"), ("v", 24, "l24")],
-        order_by=("ts",), partition_by=("user_id",), strategy=s,
+        order_by=("ts",), partition_by=("user_id",),
     )
 
-    def rows_of(s):
-        return sorted(
-            tuple(str(c) for c in r)
-            for r in df.transform(mk(s)).collect()
-        )
+    def rows_of(out):
+        return sorted(tuple(str(c) for c in r) for r in out.collect())
 
-    a, b = rows_of("window"), rows_of("chunked")
+    pa, pb = plain_and_scaled(
+        scale_paths, lambda: df.transform(op), "_chunk"
+    )
+    a, b = rows_of(pa), rows_of(pb)
     assert a == b and len(a) == len(rows)
 
     import pytest as _pytest
-    with _pytest.raises(ValueError, match="strategy"):
-        keyed_lags([("v", 1, "l1")], ("ts",), ("u",), strategy="bogus")
     with _pytest.raises(ValueError, match="partition"):
         keyed_lags([("v", 1, "l1")], ("ts",), ())
     with _pytest.raises(ValueError, match="offsets"):

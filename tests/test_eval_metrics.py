@@ -12,6 +12,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import plan_mentions
+
 
 # ---------------------------------------------------------------- retrieval
 def _ranked_fixture(spark, seed=11, n_q=6, n_docs=25):
@@ -122,8 +124,8 @@ def _auc_py(pairs):
     return num / (len(pos) * len(neg))
 
 
-@pytest.mark.parametrize("strategy", ["window", "counts"])
-def test_roc_auc_matches_pairwise_reference(spark, strategy):
+@pytest.mark.parametrize("plan", ["window", "counts"])
+def test_roc_auc_matches_pairwise_reference(spark, scale_paths, plan):
     from btc_usdt_etl_pipeline_spark.operators.stats import roc_auc
 
     rng = random.Random(3)
@@ -134,12 +136,10 @@ def test_roc_auc_matches_pairwise_reference(spark, strategy):
             s = float(rng.randint(0, 20) + (6 if y else 0))
             rows.append((g, s, y))
     df = spark.createDataFrame(rows, "seg string, score double, pos boolean")
-    got = {
-        r["seg"]: r
-        for r in df.transform(
-            roc_auc("score", "pos", partition_by="seg", strategy=strategy)
-        ).collect()
-    }
+    with scale_paths(on=plan == "counts"):
+        out = df.transform(roc_auc("score", "pos", partition_by="seg"))
+    assert plan_mentions(out, "_rb") == (plan == "counts")
+    got = {r["seg"]: r for r in out.collect()}
     for g in ["a", "b"]:
         want = _auc_py([(s, y) for gg, s, y in rows if gg == g])
         assert got[g]["auc"] == pytest.approx(want, abs=1e-6)

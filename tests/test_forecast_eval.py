@@ -12,6 +12,8 @@ from collections import defaultdict
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import plan_mentions
+
 
 def test_brier_matches_python_and_identity(spark):
     from btc_usdt_etl_pipeline_spark.operators.stats import (
@@ -75,8 +77,8 @@ def test_brier_perfect_forecaster(spark):
     assert r["resolution"] == pytest.approx(r["uncertainty"], abs=1e-9)
 
 
-@pytest.mark.parametrize("strategy", ["window", "counts"])
-def test_conformal_quantile_order_statistic(spark, strategy):
+@pytest.mark.parametrize("plan", ["window", "counts"])
+def test_conformal_quantile_order_statistic(spark, scale_paths, plan):
     from btc_usdt_etl_pipeline_spark.operators.stats import (
         conformal_quantile,
     )
@@ -86,10 +88,10 @@ def test_conformal_quantile_order_statistic(spark, strategy):
     df = spark.createDataFrame(
         [("g", s) for s in scores], "g string, s double"
     )
-    r = df.transform(
-        conformal_quantile("s", alpha=0.1, group_by="g",
-                           strategy=strategy)
-    ).collect()[0]
+    with scale_paths(on=plan == "counts"):
+        out = df.transform(conformal_quantile("s", alpha=0.1, group_by="g"))
+    assert plan_mentions(out, "_rb") == (plan == "counts")
+    r = out.collect()[0]
     k = math.ceil((500 + 1) * 0.9)
     want = sorted(scores)[k - 1]
     assert r["n"] == 500 and r["k"] == k

@@ -19,6 +19,7 @@ from __future__ import annotations
 import pytest
 
 import btc_usdt_etl_pipeline_spark.operators.windows as W
+from tests.conftest import plain_and_scaled
 
 
 def _mk_series(spark, n_hot=97, n_cold=5):
@@ -43,83 +44,79 @@ def tiny_chunks(monkeypatch):
     monkeypatch.setattr(W, "_CHUNK_ROWS", 8)
 
 
-def test_arch_lm_chunked_bit_identical_grouped(spark, tiny_chunks):
-    df = _mk_series(spark)
-    mk = lambda s: W.arch_lm(
-        "v", partition_by="g", order_by=("ts", "eid"), strategy=s
+def _both(scale_paths, df, op, marker="_chunk"):
+    """Rows of ``op`` on ``df`` under the plain plan and the forced
+    scale plan (whose plan must carry ``marker``)."""
+    plain, scaled = plain_and_scaled(
+        scale_paths, lambda: df.transform(op), marker
     )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
+    return _rows(plain), _rows(scaled)
+
+
+def test_arch_lm_chunked_bit_identical_grouped(
+    spark, tiny_chunks, scale_paths
+):
+    df = _mk_series(spark)
+    a, b = _both(scale_paths, df, W.arch_lm(
+        "v", partition_by="g", order_by=("ts", "eid")
+    ))
     assert a == b and len(a) == 2
 
 
-def test_arch_lm_chunked_bit_identical_ungrouped(spark, tiny_chunks):
+def test_arch_lm_chunked_bit_identical_ungrouped(
+    spark, tiny_chunks, scale_paths
+):
     df = _mk_series(spark).where("g = 'hot'")
-    a = _rows(df.transform(W.arch_lm("v", order_by=("ts", "eid"),
-                                     strategy="window")))
-    b = _rows(df.transform(W.arch_lm("v", order_by=("ts", "eid"),
-                                     strategy="chunked")))
+    a, b = _both(scale_paths, df, W.arch_lm("v", order_by=("ts", "eid")))
     assert a == b and len(a) == 1
 
 
-def test_variance_ratio_chunked_bit_identical_grouped(spark, tiny_chunks):
+def test_variance_ratio_chunked_bit_identical_grouped(
+    spark, tiny_chunks, scale_paths
+):
     df = _mk_series(spark)
-    mk = lambda s: W.variance_ratio(
-        "v", q=4, partition_by="g", order_by=("ts", "eid"), strategy=s
+    op = W.variance_ratio(
+        "v", q=4, partition_by="g", order_by=("ts", "eid")
     )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
+    a, b = _both(scale_paths, df, op)
     assert a == b and len(a) == 2
     # short series (n <= q) must still emit its NULL row identically
     short = df.where("g = 'cold' and eid < 3")
-    sa = _rows(short.transform(mk("window")))
-    sb = _rows(short.transform(mk("chunked")))
+    sa, sb = _both(scale_paths, short, op)
     assert sa == sb and len(sa) == 1
 
 
-def test_variance_ratio_chunked_bit_identical_ungrouped(spark, tiny_chunks):
+def test_variance_ratio_chunked_bit_identical_ungrouped(
+    spark, tiny_chunks, scale_paths
+):
     df = _mk_series(spark).where("g = 'hot'")
-    mk = lambda s: W.variance_ratio(
-        "v", q=4, order_by=("ts", "eid"), strategy=s
+    op = W.variance_ratio("v", q=4, order_by=("ts", "eid"))
+    plain, scaled = plain_and_scaled(
+        scale_paths, lambda: df.transform(op), "_chunk"
     )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
+    a, b = _rows(plain), _rows(scaled)
     assert a == b and len(a) == 1
-    assert "_pk" not in df.transform(mk("chunked")).columns
+    assert "_pk" not in scaled.columns
 
 
-def test_hurst_chunked_bit_identical_grouped(spark, tiny_chunks):
+def test_hurst_chunked_bit_identical_grouped(spark, tiny_chunks, scale_paths):
     # cold group gets 21 rows: >= 2 full blocks at every size (2/4/8),
     # so it survives the documented degenerate-group drop in BOTH plans
     df = _mk_series(spark, n_cold=21)
-    mk = lambda s: W.hurst_aggvar(
+    a, b = _both(scale_paths, df, W.hurst_aggvar(
         "v", (2, 4, 8), partition_by="g", order_by=("ts", "eid"),
-        strategy=s,
-    )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
+    ), marker="_kc_bucket")
     assert a == b and len(a) == 2
 
 
-def test_hurst_chunked_bit_identical_ungrouped(spark, tiny_chunks):
+def test_hurst_chunked_bit_identical_ungrouped(
+    spark, tiny_chunks, scale_paths
+):
     df = _mk_series(spark).where("g = 'hot'")
-    mk = lambda s: W.hurst_aggvar(
-        "v", (2, 4, 8), order_by=("ts", "eid"), strategy=s
-    )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
+    a, b = _both(scale_paths, df, W.hurst_aggvar(
+        "v", (2, 4, 8), order_by=("ts", "eid")
+    ), marker="_offset")
     assert a == b and len(a) == 1
-
-
-def test_r14_strategy_validation():
-    with pytest.raises(ValueError, match="strategy"):
-        W.arch_lm("v", strategy="bogus")
-    with pytest.raises(ValueError, match="strategy"):
-        W.variance_ratio("v", strategy="bogus")
-    with pytest.raises(ValueError, match="strategy"):
-        W.hurst_aggvar("v", strategy="bogus")
-    with pytest.raises(ValueError, match="strategy"):
-        W.kpss_level("v", strategy="bogus")
 
 
 def _cusum_ref(rows, target, slack):
@@ -190,24 +187,21 @@ def test_cusum_builds_without_a_spark_job(spark, monkeypatch):
     assert out.count() == 97
 
 
-def test_kpss_chunked_bit_identical_grouped(spark, tiny_chunks):
+def test_kpss_chunked_bit_identical_grouped(spark, tiny_chunks, scale_paths):
     df = _mk_series(spark)
-    mk = lambda s: W.kpss_level(
-        "v", bartlett_lags=3, partition_by="g",
-        order_by=("ts", "eid"), strategy=s,
-    )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
+    a, b = _both(scale_paths, df, W.kpss_level(
+        "v", bartlett_lags=3, partition_by="g", order_by=("ts", "eid"),
+    ))
     assert a == b and len(a) == 2
 
 
-def test_kpss_chunked_bit_identical_ungrouped(spark, tiny_chunks):
+def test_kpss_chunked_bit_identical_ungrouped(
+    spark, tiny_chunks, scale_paths
+):
     df = _mk_series(spark).where("g = 'hot'")
-    mk = lambda s: W.kpss_level(
-        "v", bartlett_lags=3, order_by=("ts", "eid"), strategy=s
-    )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
+    a, b = _both(scale_paths, df, W.kpss_level(
+        "v", bartlett_lags=3, order_by=("ts", "eid")
+    ))
     assert a == b and len(a) == 1
 
 
@@ -265,22 +259,21 @@ def test_interpolate_matches_reference_grouped(spark):
     _check_interp(df, got)
 
 
-def test_crossover_signal_chunked_bit_identical(spark, tiny_chunks):
+def test_crossover_signal_chunked_bit_identical(
+    spark, tiny_chunks, scale_paths
+):
     df = _mk_series(spark).withColumn(
         "fast", W.F.col("v") + (W.F.col("eid") % 5)
     ).withColumn("slow", W.F.col("v") + 2.0)
-    mk = lambda s: W.crossover_signal(
-        "fast", "slow", "eid", partition_by=["g"], strategy=s
-    )
-    a = _rows(df.transform(mk("window")))
-    b = _rows(df.transform(mk("chunked")))
+    a, b = _both(scale_paths, df, W.crossover_signal(
+        "fast", "slow", "eid", partition_by=["g"]
+    ))
     assert a == b and len(a) == 102
     # unkeyed: global chunked plan vs global window
     one = df.where("g = 'hot'")
-    ua = _rows(one.transform(W.crossover_signal(
-        "fast", "slow", "eid", strategy="window")))
-    ub = _rows(one.transform(W.crossover_signal(
-        "fast", "slow", "eid", strategy="chunked")))
+    ua, ub = _both(
+        scale_paths, one, W.crossover_signal("fast", "slow", "eid")
+    )
     assert ua == ub and len(ua) == 97
 
 

@@ -7,6 +7,8 @@ import random
 
 import pytest
 
+from tests.conftest import plain_and_scaled
+
 
 def _ols(pts):
     n = len(pts)
@@ -20,7 +22,7 @@ def _ols(pts):
     return a, b
 
 
-def test_durbin_watson_matches_python_and_discriminates(spark):
+def test_durbin_watson_matches_python_and_discriminates(spark, scale_paths):
     from btc_usdt_etl_pipeline_spark.operators.stats import (
         durbin_watson,
     )
@@ -65,14 +67,15 @@ def test_durbin_watson_matches_python_and_discriminates(spark):
     assert out["ar"]["dw"] < 1.0
     assert 1.5 < out["wn"]["dw"] < 2.5
 
-    # chunked strategy is bit-identical to the window plan
-    w = sorted(map(tuple, df.transform(
-        durbin_watson("y", "x", ("t",), "g", strategy="window")
-    ).collect()))
-    c = sorted(map(tuple, df.transform(
-        durbin_watson("y", "x", ("t",), "g", strategy="chunked")
-    ).collect()))
-    assert w == c
+    # the chunked plan is bit-identical to the window plan
+    w, c = plain_and_scaled(
+        scale_paths,
+        lambda: df.transform(durbin_watson("y", "x", ("t",), "g")),
+        "_chunk",
+    )
+    assert sorted(map(tuple, w.collect())) == sorted(
+        map(tuple, c.collect())
+    )
 
 
 def test_durbin_watson_tie_break_and_degenerate(spark):

@@ -16,7 +16,7 @@ from btc_usdt_etl_pipeline_spark.operators.resample import (
     resample_by_time,
     with_global_index,
 )
-from tests.conftest import make_klines
+from tests.conftest import make_klines, plain_and_scaled
 
 
 def test_gap_free_golden(spark):
@@ -64,17 +64,18 @@ def test_gappy_buckets_are_row_count_not_wall_clock(spark):
     assert [b.n_rows for b in bars] == [4, 4, 4, 3]
 
 
-def test_invariants_random_order_input(spark):
+def test_invariants_random_order_input(spark, scale_paths):
     # Shuffled input partitions must not change the result (determinism
     # fix vs the reference's order-dependent first/last), and the sort
-    # and bucket strategies must agree exactly.
+    # and bucket plans must agree exactly.
     df = make_klines(spark, 101).repartition(7)
-    by_strategy = {}
-    for strategy in ("sort", "bucket"):
-        rows = df.transform(
-            resample_by_count(25, strategy=strategy)
-        ).collect()
-        by_strategy[strategy] = rows
+    plans = plain_and_scaled(
+        scale_paths, lambda: df.transform(resample_by_count(25)), "_offset"
+    )
+    by_plan = {}
+    for plan, out in zip(("sort", "bucket"), plans):
+        rows = out.collect()
+        by_plan[plan] = rows
         assert len(rows) == math.ceil(101 / 25)
         assert [r.open_time for r in rows] == sorted(
             r.open_time for r in rows
@@ -83,7 +84,7 @@ def test_invariants_random_order_input(spark):
         assert sum(r.number_of_trades for r in rows) == total
         glob_hi = df.agg(F.max("high")).first()[0]
         assert max(r.high for r in rows) == glob_hi
-    assert by_strategy["sort"] == by_strategy["bucket"]
+    assert by_plan["sort"] == by_plan["bucket"]
 
 
 def test_count_equals_time_when_gap_free(spark):
@@ -249,11 +250,11 @@ def test_bar_state_merge_equals_full_recompute(spark):
     assert again == full
 
 
-def test_resample_tie_break_deterministic(spark):
+def test_resample_tie_break_deterministic(spark, scale_paths):
     """Duplicate timestamps: with tie_break the open/close picks and
     the row-count grouping are pinned to the (t, id) total order —
     identical across partitionings and equal to a python reference.
-    Exercises both resamplers and all three count strategies."""
+    Exercises both resamplers and both row-count plans."""
     import datetime as dt
 
     from btc_usdt_etl_pipeline_spark.operators.resample import (
@@ -288,22 +289,19 @@ def test_resample_tie_break_deterministic(spark):
         return sorted(out)
 
     want = py_bars(9)
-    for strategy in ("sort", "bucket"):
-        got = sorted(
-            map(
-                tuple,
-                df.repartition(7)
-                .transform(
-                    resample_by_count(
-                        9, time_col="t", value_cols=vc,
-                        strategy=strategy, sort_output=False,
-                        tie_break=("rid",),
-                    )
-                )
-                .collect(),
+    plans = plain_and_scaled(
+        scale_paths,
+        lambda: df.repartition(7).transform(
+            resample_by_count(
+                9, time_col="t", value_cols=vc, sort_output=False,
+                tie_break=("rid",),
             )
-        )
-        assert got == want, strategy
+        ),
+        "_offset",
+    )
+    for plan, out in zip(("sort", "bucket"), plans):
+        got = sorted(map(tuple, out.collect()))
+        assert got == want, plan
 
     # time resampler: per-hour bars, open/close pinned by (t, rid)
     bytime = {}

@@ -9,6 +9,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from tests.conftest import plain_and_scaled, plan_mentions
+
 
 def test_association_rules_hand_computed(spark):
     from btc_usdt_etl_pipeline_spark.operators.rules import (
@@ -156,7 +158,7 @@ def test_weighted_median_half_total_boundary(spark):
     assert r["weighted_median"] == 1.0
 
 
-def test_weighted_quantile_reference_and_paths(spark):
+def test_weighted_quantile_reference_and_paths(spark, scale_paths):
     """weighted_quantile against a Python reference (smallest v with
     cum weight >= q*total) across several rationals, plus q=1 → max,
     and bucketed == walk at q=9/10."""
@@ -193,22 +195,17 @@ def test_weighted_quantile_reference_and_paths(spark):
         assert r["wq"] == ref(q_num, q_den), (q_num, q_den)
     assert ref(1, 1) == max(v for _, _, v, _ in rows)  # q=1 is the max
 
-    a = sorted(
-        tuple(r)
-        for r in df.transform(
+    walk, bucketed = plain_and_scaled(
+        scale_paths,
+        lambda: df.transform(
             weighted_quantile("v", "w", 9, 10, group_by="k",
-                              strategy="walk", out="wq")
-        ).collect()
+                              num_buckets=16, out="wq")
+        ),
+        "_bcw",
     )
-    b = sorted(
-        tuple(r)
-        for r in df.transform(
-            weighted_quantile("v", "w", 9, 10, group_by="k",
-                              strategy="bucketed", num_buckets=16,
-                              out="wq")
-        ).collect()
+    assert sorted(map(tuple, walk.collect())) == sorted(
+        map(tuple, bucketed.collect())
     )
-    assert a == b
 
     import pytest as _pytest
 
@@ -267,7 +264,7 @@ def test_spearman_reference_and_edges(spark):
     assert got["a"][1] == pytest.approx(want, abs=1e-5)
 
 
-def test_weighted_median_bucketed_equals_walk(spark):
+def test_weighted_median_bucketed_equals_walk(spark, scale_paths):
     """The zone-map bucketed scale path must equal the plain ordered
     walk EXACTLY (the bucket partition of the cumulative walk is exact
     decimal arithmetic) — on grouped and global shapes, with ties,
@@ -289,22 +286,18 @@ def test_weighted_median_bucketed_equals_walk(spark):
     rows += [(9000 + j, "flat", 42.0, 1.0) for j in range(5)]
     df = spark.createDataFrame(rows, "i long, k string, v double, w double")
 
+    def walk_and_bucketed(frame, gb=None):
+        plans = plain_and_scaled(
+            scale_paths,
+            lambda: frame.transform(
+                weighted_median("v", "w", group_by=gb, num_buckets=16)
+            ),
+            "_bcw",
+        )
+        return [sorted(map(tuple, p.collect())) for p in plans]
+
     for gb in ("k", None):
-        a = sorted(
-            tuple(r)
-            for r in df.transform(
-                weighted_median("v", "w", group_by=gb, strategy="walk")
-            ).collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in df.transform(
-                weighted_median(
-                    "v", "w", group_by=gb, strategy="bucketed",
-                    num_buckets=16,
-                )
-            ).collect()
-        )
+        a, b = walk_and_bucketed(df, gb)
         assert a == b
 
     # exact bucket-edge boundary: values 0..15 with num_buckets=16 put
@@ -313,19 +306,16 @@ def test_weighted_median_bucketed_equals_walk(spark):
     edge = spark.createDataFrame(
         [(i, float(i), 1.0) for i in range(16)], "i long, v double, w double"
     )
-    (r1,) = edge.transform(weighted_median("v", "w", strategy="walk")).collect()
-    (r2,) = edge.transform(
-        weighted_median("v", "w", strategy="bucketed", num_buckets=16)
-    ).collect()
-    assert tuple(r1) == tuple(r2)
+    (r1,), (r2,) = walk_and_bucketed(edge)
+    assert r1 == r2
 
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="strategy"):
-        weighted_median("v", "w", strategy="bogus")
+    # non-numeric values have no ordered bucket function: they walk
+    # even with every gate forced open
     s = spark.createDataFrame([(1, "x", 1.0)], "i long, v string, w double")
-    with _pytest.raises(TypeError, match="numeric"):
-        s.transform(weighted_median("v", "w", strategy="bucketed"))
+    with scale_paths():
+        out = s.transform(weighted_median("v", "w"))
+    assert not plan_mentions(out, "_bcw")
+    assert out.collect()[0]["weighted_median"] == "x"
 
 
 def test_association_rules_apriori_pruning_exact(spark):

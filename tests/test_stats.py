@@ -10,6 +10,8 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import plain_and_scaled
+
 
 def test_bootstrap_ci_brackets_true_mean(spark):
     from btc_usdt_etl_pipeline_spark.operators.stats import (
@@ -390,7 +392,7 @@ def test_quantile_normalize_aligns_shifted_groups(spark):
     assert min(vals) - 1e-6 <= mn and mx <= max(vals) + 1e-6
 
 
-def test_mann_whitney_u_matches_reference(spark):
+def test_mann_whitney_u_matches_reference(spark, scale_paths):
     """mann_whitney_u vs a pure-Python tie-corrected reference
     (textbook formulas), plus window-vs-counts bit-identity, degenerate
     fences (one-sided partition, all-tied values -> NULL z)."""
@@ -459,29 +461,24 @@ def test_mann_whitney_u_matches_reference(spark):
     # the shifted partition must show a significant positive z
     assert got["y"]["z"] > 3.0 and abs(got["x"]["z"]) < 3.0
 
-    # strategy swap is bit-identical
-    a = sorted(
-        tuple(r)
-        for r in df.transform(
-            mann_whitney_u("v", "g", "A", partition_by="p",
-                           strategy="window")
-        ).collect()
+    # the window / counts plan swap is bit-identical
+    a, b = plain_and_scaled(
+        scale_paths,
+        lambda: df.transform(
+            mann_whitney_u("v", "g", "A", partition_by="p")
+        ),
+        "_rb",
     )
-    b = sorted(
-        tuple(r)
-        for r in df.transform(
-            mann_whitney_u("v", "g", "A", partition_by="p",
-                           strategy="counts")
-        ).collect()
+    assert sorted(map(tuple, a.collect())) == sorted(
+        map(tuple, b.collect())
     )
-    assert a == b
 
 
-def test_kruskal_wallis_matches_reference(spark):
+def test_kruskal_wallis_matches_reference(spark, scale_paths):
     """kruskal_wallis_h vs a pure-Python tie-corrected reference; a
     planted location shift must light up, a null world must not;
-    single-group and all-tied partitions fence to NULL h; strategy
-    swap bit-identical."""
+    single-group and all-tied partitions fence to NULL h; window /
+    counts plan swap bit-identical."""
     import collections
     import random as _r
 
@@ -541,13 +538,14 @@ def test_kruskal_wallis_matches_reference(spark):
     # must clear it decisively, the null world must sit below it
     assert got["shift"]["h"] > 20 and got["null"]["h"] < 9.21
 
-    a = sorted(tuple(r) for r in df.transform(
-        kruskal_wallis_h("v", "g", partition_by="p",
-                         strategy="window")).collect())
-    b = sorted(tuple(r) for r in df.transform(
-        kruskal_wallis_h("v", "g", partition_by="p",
-                         strategy="counts")).collect())
-    assert a == b
+    a, b = plain_and_scaled(
+        scale_paths,
+        lambda: df.transform(kruskal_wallis_h("v", "g", partition_by="p")),
+        "_rb",
+    )
+    assert sorted(map(tuple, a.collect())) == sorted(
+        map(tuple, b.collect())
+    )
 
 
 def test_brown_forsythe_matches_reference(spark):

@@ -28,6 +28,7 @@ from btc_usdt_etl_pipeline_spark.operators.dedup import (  # noqa: E402
 from btc_usdt_etl_pipeline_spark.operators.resample import (  # noqa: E402
     resample_by_count,
 )
+from tests.conftest import plan_mentions  # noqa: E402
 
 
 def _persistent_rdd_count(spark) -> int:
@@ -50,7 +51,7 @@ def _docs(spark, n=60):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_back_to_back_operators_leave_no_cached_state(spark):
+def test_back_to_back_operators_leave_no_cached_state(spark, scale_paths):
     spark.catalog.clearCache()
     base_rdds = _persistent_rdd_count(spark)
 
@@ -71,7 +72,10 @@ def test_back_to_back_operators_leave_no_cached_state(spark):
         (F.col("id") % 3).cast("double").alias("close"),
         F.lit(1).alias("number_of_trades"),
     )
-    resample_by_count(n=1000, strategy="bucket")(klines).collect()
+    with scale_paths():
+        bars = resample_by_count(n=1000)(klines)
+    assert plan_mentions(bars, "_offset")
+    bars.collect()
     # unkeyed as-of join (bucketed carry path)
     trades = spark.range(500).select(
         F.timestamp_seconds(F.col("id") * 60).alias("ts"),

@@ -11,8 +11,10 @@ API (``btc_usdt_etl_pipeline_spark.plans``).
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+from unittest.mock import patch
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -26,6 +28,21 @@ from btc_usdt_etl_pipeline_spark.plans import (  # noqa: E402
 )
 
 SF_DIR = "/root/testdata/sf0.01"
+
+
+@contextlib.contextmanager
+def scale_paths_forced():
+    """Drop every size and hot-key gate below any input, so operators
+    built inside the block take their chunked / bucketed scale plans."""
+    from btc_usdt_etl_pipeline_spark.operators import resample as R
+    from btc_usdt_etl_pipeline_spark.operators import windows as W
+
+    with patch.object(W, "_CHUNK_THRESHOLD_BYTES", -1), patch.object(
+        W, "_KEYED_HOT_KEY_ROWS", 0
+    ), patch.object(W, "_KEYED_HOT_KEY_ROWS_CHEAP", 0), patch.object(
+        R, "_SORT_THRESHOLD_BYTES", -1
+    ):
+        yield
 
 
 def main() -> int:
@@ -228,10 +245,10 @@ def main() -> int:
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
         "ts", "event_id", "value"
     )
-    pchk = (
-        ev.transform(W.pct_change("value", "ts", strategy="chunked"))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    with scale_paths_forced():
+        pchk_df = ev.transform(W.pct_change("value", "ts"))
+        rchk_df = ev.transform(W.rolling_mean_std("value", "ts", 30))
+    pchk = pchk_df._jdf.queryExecution().executedPlan().toString()
     # with_global_index's offset collect is a separate job; the main
     # plan must window by _chunk only
     check(
@@ -239,12 +256,7 @@ def main() -> int:
         "SinglePartition" not in pchk,
         "chunked pct_change: no single-partition exchange",
     )
-    rchk = (
-        ev.transform(
-            W.rolling_mean_std("value", "ts", 30, strategy="chunked")
-        )
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    rchk = rchk_df._jdf.queryExecution().executedPlan().toString()
     check(
         "windows-chunked",
         "SinglePartition" not in rchk,
@@ -540,10 +552,10 @@ def main() -> int:
 
     # r10 (VERDICT r9 ask #3): the nonparametric rank tests must pick
     # the bucketed-counts rank path past the size gate.  Two layers:
-    # (a) forced strategy='counts' keeps the q228 plan promises on the
+    # (a) the forced counts plan keeps the q228 plan promises on the
     #     oracle fixture — no single-partition exchange, the rank
     #     offsets join a broadcast, no cartesian;
-    # (b) strategy='auto' on a past-the-gate input (the local 100×
+    # (b) the size gate on a past-the-gate input (the local 100×
     #     corpus, >32MB Catalyst estimate) actually routes to counts —
     #     witnessed by the BroadcastHashJoin the window plan lacks.
     import os as _os
@@ -561,16 +573,13 @@ def main() -> int:
     ).withColumn("pos", _F.col("event_type") == "purchase")
     for label, op in [
         ("mann_whitney", mann_whitney_u(
-            "value", "event_type", "purchase", partition_by="dow",
-            strategy="counts")),
+            "value", "event_type", "purchase", partition_by="dow")),
         ("kruskal_wallis", kruskal_wallis_h(
-            "value", "event_type", partition_by="dow",
-            strategy="counts")),
-        ("roc_auc", roc_auc(
-            "value", "pos", partition_by="dow",
-            strategy="counts")),
+            "value", "event_type", partition_by="dow")),
+        ("roc_auc", roc_auc("value", "pos", partition_by="dow")),
     ]:
-        out = ev.transform(op)
+        with scale_paths_forced():
+            out = ev.transform(op)
         p = plan_string(out, mode="simple")
         check(label, "Exchange SinglePartition" not in p,
               "counts path: no single-partition exchange")
