@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from btc_usdt_etl_pipeline_spark.operators.dedup import portable_hash60
+from btc_usdt_etl_pipeline_spark.operators.windows import _plan_size
 
 
 def _auto_buckets(
@@ -55,21 +56,6 @@ def _auto_buckets(
     if size_bytes <= 0:
         return lo
     return max(lo, min(hi, math.ceil(size_bytes / target_bytes)))
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's ``sizeInBytes`` estimate for ``df``
-    (``windows._plan_size``: plan metadata, NO job and NO scan).
-
-    A plan with no usable stats (e.g. a Python-parallelized local
-    relation) reports ``spark.sql.defaultSizeInBytes`` = Long.MaxValue;
-    treat anything in that regime as UNKNOWN (0) so the auto policy
-    degrades to its lower clamp instead of exploding to the upper one.
-    """
-    from btc_usdt_etl_pipeline_spark.operators.windows import _plan_size
-
-    size = _plan_size(df)
-    return 0 if size >= (1 << 62) else size
 
 
 def mix_plan(
@@ -194,7 +180,7 @@ def shard_export(
 
     def _t(df: DataFrame) -> DataFrame:
         n = (
-            _auto_buckets(_plan_size_bytes(df), target_shard_bytes, lo=16)
+            _auto_buckets(_plan_size(df), target_shard_bytes, lo=16)
             if n_shards == "auto"
             else n_shards
         )
@@ -260,7 +246,7 @@ def pack_sequences(
     def _t(df: DataFrame) -> DataFrame:
         n_buckets = (
             _auto_buckets(
-                _plan_size_bytes(df), target_bucket_bytes, lo=32
+                _plan_size(df), target_bucket_bytes, lo=32
             )
             if num_buckets == "auto"
             else num_buckets

@@ -58,10 +58,13 @@ def _window(partition_by: Sequence[str] | None, order_col: str) -> WindowSpec:
 
 def _plan_size(df: DataFrame) -> int:
     """Catalyst's ``sizeInBytes`` estimate — plan metadata derived from
-    file sizes, no job and no scan."""
-    return int(
-        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
+    file sizes, no job and no scan — or 0 when the size is unknown.  A
+    relation without statistics (a DataFrame built from Python rows, an
+    RDD) reports ``spark.sql.defaultSizeInBytes`` = Long.MaxValue, and
+    more once a projection widens it; nothing from 2^62 up is a
+    measured size, so it passes no size gate."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 if size >= 1 << 62 else size
 
 
 _NUMERIC_TYPES = ("tinyint", "smallint", "int", "bigint", "float", "double")

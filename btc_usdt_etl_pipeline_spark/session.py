@@ -9,6 +9,19 @@ date/time functions are deterministic and oracle-comparable.
 On a real cluster the same builder is used with ``master`` unset (taken
 from spark-submit) — nothing here is local-mode specific except the
 default master.
+
+The session also registers a small JVM helper for ``file://``
+(``jvm/localfs.jar``, Java source in ``jvm/src``).  Without Hadoop's
+native library — Spark ships none — Hadoop's local
+filesystem forks a ``chmod`` process for every file it creates and
+every directory it makes, and a ``readlink`` process for every
+FileContext rename.  Streaming drains write offset and commit logs,
+state-store deltas and Parquet sinks on every trigger, so those forks
+set the per-trigger floor (about 30 ms per log write).  The helper
+makes the same changes through system calls; checksums, commit
+protocols, file layout and mode bits are Hadoop's own.  A session
+started without it (an external driver's plain session) keeps the
+stock filesystem and gets the same results, only slower.
 """
 
 from __future__ import annotations
@@ -70,6 +83,25 @@ RUNTIME_CONF = {
 }
 
 
+#: JVM launch confs: the no-fork local filesystem's jar on the driver and
+#: executor classpaths, and the two Hadoop entry points (``FileSystem``
+#: and ``FileContext``) that register it for ``file://``.  They only take
+#: effect in a session that starts its JVM.  Executors find the jar at
+#: the driver's path, as their Python workers find the package
+#: (``put_package_on_worker_path``).
+LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar"
+)
+LAUNCH_CONF = {
+    "spark.driver.extraClassPath": LOCAL_FS_JAR,
+    "spark.executor.extraClassPath": LOCAL_FS_JAR,
+    "spark.hadoop.fs.file.impl":
+        "btc_usdt_etl_pipeline_spark.jvm.NoForkLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl":
+        "btc_usdt_etl_pipeline_spark.jvm.NoForkLocalFs",
+}
+
+
 def put_package_on_worker_path(sc: SparkContext) -> None:
     """Let Python workers import this package whatever the process cwd.
 
@@ -117,6 +149,9 @@ def build_session(
       columnar batches instead of pickled rows.
     - UTC session timezone: epoch→timestamp conversions and date_trunc are
       independent of the host timezone (oracle reproducibility).
+    - ``LAUNCH_CONF``: the no-fork ``file://`` filesystem.  A classpath
+      the caller passes in ``extra_conf`` keeps its entries, with the
+      jar appended.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name)
@@ -133,7 +168,12 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     builder = builder.master(master or f"local[{cpus}]")
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    conf = {**LAUNCH_CONF, **extra_conf}
+    for k in ("spark.driver.extraClassPath", "spark.executor.extraClassPath"):
+        if extra_conf.get(k):
+            conf[k] = os.pathsep.join((extra_conf[k], LOCAL_FS_JAR))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     put_package_on_worker_path(spark.sparkContext)

@@ -15,18 +15,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from btc_usdt_etl_pipeline_spark.session import LAUNCH_CONF  # noqa: E402
+
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
+    """The suite's session, on the engine's launch confs (the no-fork
+    ``file://`` filesystem) like every ``build_session`` session."""
+    builder = (
         SparkSession.builder.master("local[4]")
         .appName("engine-tests")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="wh-"))
-        .getOrCreate()
     )
+    for k, v in LAUNCH_CONF.items():
+        builder = builder.config(k, v)
+    s = builder.getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
@@ -38,10 +44,11 @@ def scale_paths(monkeypatch):
     size and hot-key gates drop below any input, so each operator built
     inside the block takes its chunked / bucketed plan.
     ``with scale_paths(on=False):`` forces the plain plans instead: the
-    gates rise above any input.  Tests need that side too, because a
-    DataFrame built from Python rows carries no size statistics:
-    Catalyst reports it at Long.MaxValue bytes (more after a
-    projection widens it) — past every default gate."""
+    gates rise above any input.  A DataFrame built from Python rows
+    carries no size statistics, and ``windows._plan_size`` reads that
+    as 0 bytes, so at the default constants its size gates already keep
+    the plain plans; forcing that side too keeps a test's plain half
+    independent of the constants' values."""
     import btc_usdt_etl_pipeline_spark.operators.resample as R
     import btc_usdt_etl_pipeline_spark.operators.windows as W
 

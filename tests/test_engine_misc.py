@@ -490,11 +490,13 @@ def test_keyed_window_scale_paths_bit_identical(
     assert len(flat) == 3 and all(r["acf"] is None for r in flat)
 
 
-def test_keyed_auto_trigger_swaps_plan_identically(spark, monkeypatch):
+def test_keyed_auto_trigger_swaps_plan_identically(spark, monkeypatch, tmp_path):
     """The gates must actually flip to the chunked plan when the
     hot-key count crosses the (monkeypatched) threshold and the size
     estimate passes — and the swap must not move a single value.  Also
-    pins the adaptive chunk-size contract: >= 4*halo always."""
+    pins the adaptive chunk-size contract: >= 4*halo always.  The input
+    is read back from Parquet, so its size estimate is a measured one
+    (rows built in Python have none, which passes no size gate)."""
     import datetime as dt
 
     import btc_usdt_etl_pipeline_spark.operators.windows as W
@@ -505,9 +507,11 @@ def test_keyed_auto_trigger_swaps_plan_identically(spark, monkeypatch):
          10.0 + ((i * 31) % 23) / 3.0)
         for i in range(400)
     ] + [("cold", epoch + dt.timedelta(hours=i), i, 5.0 + i) for i in range(9)]
-    df = spark.createDataFrame(
+    spark.createDataFrame(
         rows, "k string, t timestamp, i long, x double"
-    )
+    ).write.parquet(str(tmp_path / "rows"))
+    df = spark.read.parquet(str(tmp_path / "rows"))
+    assert 0 < W._plan_size(df) < W._CHUNK_THRESHOLD_BYTES
     op = W.rolling_mean_std("x", "t", 7, partition_by=["k"])
     plain_df = df.transform(op)
     monkeypatch.setattr(W, "_KEYED_HOT_KEY_ROWS", 100)

@@ -22,9 +22,14 @@ gets a usable floor.
 
     python tools/bench_streaming.py [sf_dir] [out_json]
 
+A ``StreamingQueryListener`` maps each micro-batch's progress to the
+drain that started its query and keeps its ``durationMs`` phases
+(``PHASES``); the report gives, per drain, the median of each phase in
+ms over every micro-batch of the timed rounds.
+
 Prints ONE JSON line:
   {"metric": "streaming_total", "value": N, "unit": "sec",
-   "queries": {...}, "sf": 0.1}
+   "queries": {...}, "phases_ms": {...}, "sf": 0.1}
 and writes it (plus per-query spreads) to out_json
 (default bench_streaming_out.json).  Compare round-over-round with:
 
@@ -59,6 +64,44 @@ STREAMING = [
 
 N_RUNS = int(os.environ.get("SPARK_GRAFT_STREAM_RUNS", "5"))
 
+PHASES = ("addBatch", "walCommit", "commitOffsets", "latestOffset",
+          "queryPlanning")
+
+
+def phase_listener():
+    """A listener collecting ``{drain: {phase: [ms, ...]}}``: set its
+    ``drain`` attribute before each timed drain (``None`` to ignore).
+    A query-started event arrives on the thread that starts the query,
+    so it ties the query's run id to the drain running then; progress
+    events arrive later on the listener bus and follow the run id."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class PhaseListener(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.drain: str | None = None
+            self.run_drain: dict[str, str | None] = {}
+            self.phases: dict[str, dict[str, list[int]]] = {}
+
+        def onQueryStarted(self, event) -> None:
+            self.run_drain[str(event.runId)] = self.drain
+
+        def onQueryProgress(self, event) -> None:
+            drain = self.run_drain.get(str(event.progress.runId))
+            if drain is None:
+                return
+            per = self.phases.setdefault(drain, {p: [] for p in PHASES})
+            for p in PHASES:
+                if p in event.progress.durationMs:
+                    per[p].append(event.progress.durationMs[p])
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            pass
+
+    return PhaseListener()
+
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -77,6 +120,8 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    listener = phase_listener()
+    spark.streams.addListener(listener)
     qs = entry.queries()
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm-up
 
@@ -89,6 +134,7 @@ def main() -> None:
     samples: dict[str, list[float]] = {n: [] for n in names}
     for r in range(N_RUNS + 1):  # round 0 is the discarded warm-up
         for name in names:
+            listener.drain = name if r > 0 else None
             t0 = time.time()
             df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
@@ -105,6 +151,13 @@ def main() -> None:
 
     queries = {
         n: round(statistics.median(s), 3) for n, s in samples.items()
+    }
+    # progress events trail the drains on the listener bus
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    phases_ms = {
+        n: {p: statistics.median(v) if v else None
+            for p, v in listener.phases.get(n, {}).items()}
+        for n in names
     }
 
     def trimmed_range(s: list[float]) -> float:
@@ -123,13 +176,15 @@ def main() -> None:
         "unit": "sec",
         "queries": queries,
         "spreads": spreads,
+        "phases_ms": phases_ms,
         "runs": N_RUNS,
         "sf": sf,
     }
     with open(out_path, "w") as f:
         json.dump(result, f, indent=1)
     print(json.dumps({k: result[k] for k in
-                      ("metric", "value", "unit", "queries", "sf")}))
+                      ("metric", "value", "unit", "queries", "phases_ms",
+                       "sf")}))
 
 
 if __name__ == "__main__":
