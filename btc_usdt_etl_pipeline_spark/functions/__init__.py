@@ -35,17 +35,6 @@ def exact_avg(col: Column | str) -> Column:
     return F.sum(c.cast(DEC)).cast("double") / F.count(c)
 
 
-def exact_stddev_samp(col: Column | str) -> Column:
-    """Sample stddev via exact decimal sums of x and x² (one-pass,
-    order-insensitive — unlike the built-in ``stddev`` which accumulates
-    doubles in shuffle order)."""
-    c = F.col(col) if isinstance(col, str) else col
-    n = F.count(c).cast("double")
-    sx = F.sum(c.cast(DEC)).cast("double")
-    sxx = F.sum((c * c).cast(DEC)).cast("double")
-    return F.sqrt((sxx - sx * sx / n) / (n - F.lit(1.0)))
-
-
 def attach_scalar(df, one_row, left_probe, right_probe):
     """Attach a 1-row aggregate to every row of ``df`` as a
     BroadcastHashJoin — the in-plan scalar pattern (no driver action).
@@ -114,14 +103,6 @@ def oracle_avg_sql(expr: str) -> str:
         f"CAST(SUM(CAST(({expr}) AS DECIMAL(38,6))) AS DOUBLE)"
         f" / COUNT({expr})"
     )
-
-
-def oracle_stddev_sql(expr: str) -> str:
-    """DuckDB-side mirror of :func:`exact_stddev_samp`."""
-    sx = f"CAST(SUM(CAST(({expr}) AS DECIMAL(38,6))) AS DOUBLE)"
-    sxx = f"CAST(SUM(CAST((({expr}) * ({expr})) AS DECIMAL(38,6))) AS DOUBLE)"
-    n = f"CAST(COUNT({expr}) AS DOUBLE)"
-    return f"SQRT(({sxx} - {sx} * {sx} / {n}) / ({n} - 1.0))"
 
 
 # ---------------------------------------------------------------------------

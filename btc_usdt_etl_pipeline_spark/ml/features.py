@@ -787,7 +787,7 @@ def woe_iv(
                 F.sum(F.lit(1) - y).alias("n_neg"),
             )
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         e = F.lit(float(eps))
         en = F.lit(float(eps) * n_bins)
         p_pos = (F.col("n_pos") + e) / (F.sum("n_pos").over(wg) + en)
@@ -960,11 +960,7 @@ def isotonic_calibration(
                 F.sum(F.col(label_col).cast("long")).alias("_s"),
             )
         )
-        wo = (
-            Window.partitionBy(*gcols)
-            if gcols
-            else Window.partitionBy()
-        ).orderBy("bin").rowsBetween(
+        wo = Window.partitionBy(*gcols).orderBy("bin").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
         pref = per_bin.select(
@@ -993,11 +989,7 @@ def isotonic_calibration(
         mean = (F.col("_csk") - F.col("_csj")).cast("double") / (
             F.col("_cwk") - F.col("_cwj")
         ).cast("double")
-        wj = (
-            Window.partitionBy(*gcols, "_j")
-            if gcols
-            else Window.partitionBy("_j")
-        ).orderBy("_k").rowsBetween(
+        wj = Window.partitionBy(*gcols, "_j").orderBy("_k").rowsBetween(
             Window.currentRow, Window.unboundedFollowing
         )
         suff = pairs.select(

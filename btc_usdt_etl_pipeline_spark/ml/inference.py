@@ -54,51 +54,3 @@ def linear_model_inference(
 
     return _t
 
-
-def linear_model_inference_arrow(
-    weights: Sequence[float],
-    bias: float,
-    feature_col: str = "features",
-    id_cols: Sequence[str] = ("event_id",),
-    out: str = "yhat",
-) -> Callable[[DataFrame], DataFrame]:
-    """Same scoring as :func:`linear_model_inference`, one layer lower:
-    ``mapInArrow`` hands the kernel raw ``pyarrow.RecordBatch``es —
-    no Arrow→pandas materialization, no index bookkeeping, no dtype
-    coercion on the way in or out.  The right choice when the kernel
-    already speaks Arrow (numpy via ``to_numpy``, or a model runtime
-    with Arrow ingestion); benchmark-identical semantics to the pandas
-    path (test-asserted), just less copying per batch.
-    """
-    import pyarrow as pa
-
-    w = [float(x) for x in weights]
-    b = float(bias)
-
-    def kernel(batches):
-        for rb in batches:
-            feats = rb.column(feature_col)
-            # FixedSizeList/List -> flat values + reshape is the
-            # zero-copy route; sequential per-term accumulation keeps
-            # float op order identical to the pandas kernel and the
-            # SQL oracle.
-            lists = feats.to_pylist()
-            acc = [b] * rb.num_rows
-            for r, vec in enumerate(lists):
-                s = 0.0
-                for i, wi in enumerate(w):
-                    s = s + vec[i] * wi
-                acc[r] = s + b
-            arrays = [rb.column(c) for c in id_cols]
-            yield pa.RecordBatch.from_arrays(
-                arrays + [pa.array(acc, type=pa.float64())],
-                names=list(id_cols) + [out],
-            )
-
-    def _t(df: DataFrame) -> DataFrame:
-        schema = ", ".join(
-            f"{c} {dict(df.dtypes)[c]}" for c in id_cols
-        ) + f", {out} double"
-        return df.select(*id_cols, feature_col).mapInArrow(kernel, schema)
-
-    return _t

@@ -96,30 +96,6 @@ def shingles(tok: Column, n: int = 3) -> Column:
     return F.filter(out, lambda x: x.isNotNull())
 
 
-def minhash_signature(sh: Column, num_hashes: int = 128) -> Column:
-    """Array of ``num_hashes`` min-hash values; empty shingle sets map to
-    nulls and never collide.
-
-    Each shingle string is hashed ONCE (``xxhash64``); the ``num_hashes``
-    independent hash functions are derived by re-mixing that 64-bit value
-    with the function index — standard one-permutation-style cost saving
-    that avoids ``num_hashes`` full string hashes per shingle.
-
-    NOTE: higher-order functions are interpreted (not whole-stage
-    codegen), so for bulk signature computation prefer the explode +
-    groupBy aggregate path in :func:`minhash_near_dedup`, which keeps
-    every hash inside codegen.  This column form exists for ad-hoc /
-    single-row use.
-    """
-    hashed = F.transform(sh, lambda s: F.xxhash64(s))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda seed: F.array_min(
-            F.transform(hashed, lambda h: F.xxhash64(h, seed))
-        ),
-    )
-
-
 def minhash_shingle_rows(
     df: DataFrame,
     text_col: str,
@@ -453,7 +429,6 @@ def ngram_jaccard_pairs(
     n: int = 5,
     threshold: float = 0.6,
     unit: str = "char",
-    prefix_filter: bool = False,
     max_df: int | None = None,
     metric: str = "jaccard",
 ) -> Callable[[DataFrame], DataFrame]:
@@ -472,17 +447,6 @@ def ngram_jaccard_pairs(
     Returns ``(id_a, id_b, jaccard)``; jaccard = |∩| / (|A|+|B|-|∩|) is
     an exact int/int division — bit-reproducible against a SQL oracle.
 
-    ``prefix_filter=True`` (PPJoin-style) generates candidates from each
-    document's PREFIX only — its rarest ``|g| - floor(t·|g|) + 1`` grams
-    under a global (df, hash) order — then computes the exact
-    intersection for candidates alone.  Identical output (the prefix
-    theorem guarantees no false negatives at threshold t; ``floor``
-    rather than ``ceil`` sidesteps float-product edge cases by
-    lengthening the prefix, never shortening it).  Join mass drops from
-    Σ df(gram)² over ALL grams to Σ df(prefix-gram)² — the win on
-    Zipfian text where hot boilerplate grams dominate the tail; see
-    SCALE.md §4 for the measured crossover.
-
     ``max_df`` (document-frequency cap) drops grams occurring in more
     than ``max_df`` documents from CANDIDATE GENERATION only — the
     standard defense against boilerplate-heavy corpora, where one gram
@@ -493,11 +457,7 @@ def ngram_jaccard_pairs(
     emitted pair carries the true Jaccard.  Semantics: a pair is emitted
     iff it shares at least one gram with df ≤ max_df AND its exact
     (full-set) Jaccard ≥ threshold — pairs similar ONLY through
-    boilerplate grams are deliberately not reported.  Mutually exclusive
-    with ``prefix_filter``: the prefix theorem's no-false-negative
-    guarantee is stated over the full gram set, and re-deriving it over
-    a capped set while verifying on the full set would silently change
-    which pairs the cap semantics admit.
+    boilerplate grams are deliberately not reported.
 
     ``metric='containment'`` (r10) scores the ASYMMETRIC overlap
     instead — ``containment_a = |A∩B|/|A|`` and the mirror — emitting
@@ -512,14 +472,8 @@ def ngram_jaccard_pairs(
     """
     if unit not in ("char", "token"):
         raise ValueError("unit must be 'char' or 'token'")
-    if prefix_filter and max_df is not None:
-        raise ValueError("prefix_filter and max_df are mutually exclusive")
     if metric not in ("jaccard", "containment"):
         raise ValueError("metric must be 'jaccard' or 'containment'")
-    if metric == "containment" and prefix_filter:
-        # the prefix theorem is stated for symmetric Jaccard; its
-        # no-false-negative guarantee does not transfer to max-containment
-        raise ValueError("prefix_filter requires metric='jaccard'")
 
     def _t(df: DataFrame) -> DataFrame:
         c = F.col(text_col)
@@ -552,33 +506,17 @@ def ngram_jaccard_pairs(
         # longs), self-join on gram, count matches per pair = |A∩B|.
         # Cost is sum over grams of df(gram)^2 — cheap codegen rows, no
         # array materialization per pair.  A PPJoin-style prefix filter
-        # was measured here and LOST: with a small effective vocabulary
-        # (synthetic corpora, heavy boilerplate) even "rare" grams pair
-        # most of the corpus, so candidates stay near all-pairs while
-        # each one pays an interpreted array_intersect.  On natural
-        # Zipfian text at scale, add a prefix filter in front of this
-        # same count-join; AQE skew-join splits the hot-gram partitions
-        # either way.
+        # was measured here and LOST (SCALE.md §4 lesson 5): with a
+        # small effective vocabulary (synthetic corpora, heavy
+        # boilerplate) even "rare" grams pair most of the corpus, so
+        # candidates stay near all-pairs and the prefix pass is pure
+        # overhead.  AQE skew-join splits the hot-gram partitions.
         sizes = base.select("_id", F.size("_g").alias("_n"))
         ex = base.select(
             "_id", F.explode("_g").alias("_gram")
         ).select("_id", F.xxhash64("_gram").alias("_h"))
         a = ex.select(F.col("_h"), F.col("_id").alias("id_a"))
         b = ex.select(F.col("_h").alias("_hb"), F.col("_id").alias("id_b"))
-
-        def _exact_inter(cand: DataFrame) -> DataFrame:
-            # Exact |A∩B| for CANDIDATES only: fan the pair list out to
-            # each side's FULL gram sets (equi-joins keyed by id), count
-            # matching gram hashes per pair.
-            ca = cand.join(a, "id_a")
-            return (
-                ca.join(
-                    b,
-                    (ca["id_b"] == b["id_b"]) & (ca["_h"] == b["_hb"]),
-                )
-                .groupBy(ca["id_a"], ca["id_b"])
-                .agg(F.count(F.lit(1)).alias("_inter"))
-            )
 
         if max_df is not None:
             # Decomposed exact verify — NO candidate-distinct shuffle and
@@ -685,37 +623,6 @@ def ngram_jaccard_pairs(
                 )
                 .select("id_a", "id_b", "_inter")
             )
-        elif prefix_filter:
-            # Rarest-first global order: document frequency, hash as the
-            # tiebreak.  One cheap agg over the exploded grams; the join
-            # with it is keyed by gram hash (vocabulary-sized side).
-            exp = ex
-            dfreq = exp.groupBy("_h").agg(F.count(F.lit(1)).alias("_df"))
-            wp = Window.partitionBy("_id").orderBy("_df", "_h")
-            plen = F.col("_n") - F.floor(
-                F.lit(threshold) * F.col("_n")
-            ) + F.lit(1)
-            pre = (
-                exp.join(dfreq, "_h")
-                .join(sizes, "_id")
-                .withColumn("_rn", F.row_number().over(wp))
-                .filter(F.col("_rn") <= plen)
-                .select("_id", "_h")
-            )
-            pa = pre.select(F.col("_h"), F.col("_id").alias("id_a"))
-            pb = pre.select(
-                F.col("_h").alias("_hb"), F.col("_id").alias("id_b")
-            )
-            cand = (
-                pa.join(
-                    pb,
-                    (pa["_h"] == pb["_hb"])
-                    & (F.col("id_a") < F.col("id_b")),
-                )
-                .select("id_a", "id_b")
-                .distinct()
-            )
-            inter = _exact_inter(cand)
         else:
             inter = (
                 a.join(

@@ -117,7 +117,7 @@ def psi(
             F.coalesce("_n_ref", F.lit(0)).alias("_n_ref"),
             F.coalesce("_n_cur", F.lit(0)).alias("_n_cur"),
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         e = F.lit(float(eps))
         en = F.lit(float(eps) * n_bins)
         p_ref = (F.col("_n_ref") + e) / (F.sum("_n_ref").over(wg) + en)
@@ -164,7 +164,7 @@ def ks_statistic(
                 F.sum(cur).alias("_b"),
             )
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("_v").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -234,7 +234,7 @@ def js_divergence(
                 F.sum(cur).alias("_n_cur"),
             )
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         tot_ref = F.sum("_n_ref").over(wg)
         tot_cur = F.sum("_n_cur").over(wg)
         # try_divide: an empty side (total 0) yields NULL proportions →
@@ -317,7 +317,7 @@ def wasserstein_1d(
                 F.sum(cur).alias("_n_cur"),
             )
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("_v").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -396,7 +396,7 @@ def cvm_statistic(
                 F.sum(cur).alias("_b"),
             )
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("_v").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -483,7 +483,7 @@ def anderson_darling(
                 F.sum(cur).alias("_b"),
             )
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("_v").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -570,7 +570,7 @@ def energy_distance(
                 F.sum(cur).alias("_b"),
             )
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("_v").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -684,7 +684,7 @@ def page_hinkley(
             F.col(value_col).cast("double").alias("_x"),
         )
         obt = ["_t"] + [f"_t{i}" for i in range(len(tcols) - 1)]
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy(*obt).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -773,7 +773,7 @@ def drift_report(
                 F.sum(cur).alias("_b"),
             )
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("_v").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )

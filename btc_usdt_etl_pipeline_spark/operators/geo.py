@@ -34,15 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def grid_cell(lat_col: str, lon_col: str, cell_size_deg: float):
-    """Cell coordinates ``(_cy, _cx)`` for a point — floor snapping,
-    monotone in each coordinate."""
-    return (
-        F.floor(F.col(lat_col) / F.lit(float(cell_size_deg))).alias("_cy"),
-        F.floor(F.col(lon_col) / F.lit(float(cell_size_deg))).alias("_cx"),
-    )
-
-
 def radius_join(
     left: DataFrame,
     right: DataFrame,

@@ -701,9 +701,7 @@ def weighted_quantile(
             .agg(F.sum(F.col(weight_col).cast(DEC)).alias("_w"))
         )
         if not _scale_gate(df, value_col, numeric_only=True):
-            wg = (
-                Window.partitionBy(*gcols) if gcols else Window.partitionBy()
-            )
+            wg = Window.partitionBy(*gcols)
             wo = wg.orderBy("_v").rowsBetween(
                 Window.unboundedPreceding, Window.currentRow
             )
@@ -766,9 +764,7 @@ def weighted_quantile(
         ).cast("long")
         pb = src.withColumn("_b", bexpr)
         bsum = pb.groupBy(*gcols, "_b").agg(F.sum("_wr").alias("_bw"))
-        wgb = (
-            Window.partitionBy(*gcols) if gcols else Window.partitionBy()
-        )
+        wgb = Window.partitionBy(*gcols)
         bcum = bsum.withColumn(
             "_bcw",
             F.sum("_bw").over(

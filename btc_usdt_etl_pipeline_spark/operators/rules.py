@@ -37,7 +37,6 @@ def association_rules(
     min_pair_support: int = 2,
     top_k: int = 50,
     max_basket: int = 1000,
-    prune_items: bool = False,
 ) -> DataFrame:
     """Top-``top_k`` rules a→b ranked by lift (desc, then antecedent /
     consequent asc — total order).  Returns ``(rank, antecedent,
@@ -45,18 +44,6 @@ def association_rules(
     n_pair/N baskets, confidence = n_pair/n(a), lift =
     confidence/(n(b)/N).  Both directions of every pair are scored
     (confidence is asymmetric).
-
-    ``prune_items=True`` applies the Apriori downward-closure step
-    BEFORE pair generation: a pair reaching ``min_pair_support``
-    requires BOTH items' basket-marginals to reach it, so items below
-    the threshold are dropped from every basket array via a broadcast
-    semi-filter — EXACT (surviving pair counts, marginals, and the
-    basket total are untouched; a pruned item could never appear in an
-    emitted rule), and it shrinks the Σ|basket|² explode+shuffle mass
-    quadratically on long-tail catalogs.  Default off: on dense
-    catalogs (every item frequent — the TPC-H fixture) it prunes
-    nothing and the extra marginal pass is pure cost.  Measured 100×
-    curve and the pruning-mass tradeoff: SCALE.md §8.
     """
     # ONE pass builds the basket table: collect_set dedups (basket,
     # item) AND collapses to one row per basket (r9 — replaces the
@@ -97,23 +84,6 @@ def association_rules(
     items = sized.groupBy(F.col("_it")).agg(
         F.count(F.lit(1)).alias("_ni")
     )
-    pair_src = arr
-    if prune_items:
-        # Apriori downward closure: items whose marginal can't reach
-        # min_pair_support can't appear in any emitted pair — drop them
-        # from the arrays BEFORE the quadratic explode.  Marginals and
-        # the basket total stay computed on the UNPRUNED universe (a
-        # pruned item never reaches the rule assembly, and surviving
-        # items' statistics are untouched), so the output is EXACT.
-        freq = items.where(
-            F.col("_ni") >= min_pair_support
-        ).select("_it")
-        pair_src = (
-            sized.join(F.broadcast(freq), "_it", "semi")
-            .groupBy("_bk")
-            .agg(F.sort_array(F.collect_set("_it")).alias("_items"))
-            .withColumn("_sz", F.size("_items"))
-        )
     # pair generation is a pure map-side HOF over the sorted array —
     # work is Σ|basket|² exactly as before, but zero join, zero
     # re-evaluation, and the only shuffle is the pair-count groupBy.
@@ -131,7 +101,7 @@ def association_rules(
         )
     )
     pairs = (
-        pair_src.select(F.explode(pair_arr).alias("_p"))
+        arr.select(F.explode(pair_arr).alias("_p"))
         .select("_p._a", "_p._b")
         .groupBy("_a", "_b")
         .agg(F.count(F.lit(1)).alias("_np"))

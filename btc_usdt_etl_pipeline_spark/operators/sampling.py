@@ -99,11 +99,9 @@ def weighted_sample(
         # the open interval, so ln(u) is finite on both engines
         u = (h.cast("double") + F.lit(0.5)) / F.lit(float(1 << 60))
         ekey = -F.log(u) / F.col(weight_col)
-        w = (
-            Window.partitionBy(*partition_by)
-            if partition_by
-            else Window.partitionBy()
-        ).orderBy(ekey.asc(), F.col(key_col))
+        w = Window.partitionBy(*partition_by).orderBy(
+            ekey.asc(), F.col(key_col)
+        )
         return (
             df.withColumn("_rnk", F.row_number().over(w))
             .filter(F.col("_rnk") <= k)

@@ -668,17 +668,6 @@ def _srp_bucket(
     )
 
 
-def _srp_dot(
-    vec: F.Column, table: int, p: int, portable: bool
-) -> F.Column:
-    """The raw hyperplane-``p`` dot product behind :func:`_srp_bucket`'s
-    sign bit — exposed so multi-probe can rank planes by boundary
-    distance (``|dot|`` small ⇒ the sign is least certain ⇒ the first
-    bucket to probe).  Bit-identical to the fold inside
-    ``_srp_bucket`` by construction: both are :func:`_srp_fold`."""
-    return _srp_fold(vec, table, p, portable)
-
-
 def _srp_table_keys(
     base: F.Column,
     adots: list[F.Column],

@@ -771,7 +771,7 @@ def dd_sketch_readout(
     gcols = [group_by] if group_by else []
 
     def _t(counts: DataFrame) -> DataFrame:
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("_b").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )

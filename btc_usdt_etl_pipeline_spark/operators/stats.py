@@ -334,7 +334,7 @@ def benford_deviation(
             .agg(F.count(F.lit(1)).alias("n_obs"))
             .where(F.col("digit") >= 1)
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         n = F.sum("n_obs").over(wg).cast("double")
         p_obs = F.col("n_obs").cast("double") / n
         p_ben = F.lit(0.0)
@@ -407,7 +407,7 @@ def kaplan_meier(
                 F.sum(F.lit(1) - event_col.cast("int")).alias("_c"),
             )
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("t").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -1810,17 +1810,9 @@ def chi_square_independence(
             col_b,
             F.coalesce("_o", F.lit(0)).alias("_o"),
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
-        wa = (
-            Window.partitionBy(*gcols, col_a)
-            if gcols
-            else Window.partitionBy(col_a)
-        )
-        wb = (
-            Window.partitionBy(*gcols, col_b)
-            if gcols
-            else Window.partitionBy(col_b)
-        )
+        wg = Window.partitionBy(*gcols)
+        wa = Window.partitionBy(*gcols, col_a)
+        wb = Window.partitionBy(*gcols, col_b)
         n = F.sum("_o").over(wg)
         ra = F.sum("_o").over(wa)
         cb = F.sum("_o").over(wb)
@@ -1904,11 +1896,7 @@ def krippendorff_alpha(
         nic = d.groupBy(*gcols, item_col, label_col).agg(
             F.count(F.lit(1)).alias("_nic")
         )
-        wi = (
-            Window.partitionBy(*gcols, item_col)
-            if gcols
-            else Window.partitionBy(item_col)
-        )
+        wi = Window.partitionBy(*gcols, item_col)
         ni = F.sum("_nic").over(wi)
         pairable = nic.withColumn("_ni", ni).where(F.col("_ni") >= 2)
         # per-(item,label) observed-disagreement term
@@ -1929,7 +1917,7 @@ def krippendorff_alpha(
         marg = terms.groupBy(*gcols, "_lbl").agg(
             F.sum("_nic").alias("_nc")
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         de = marg.select(
             *gcols,
             (F.col("_nc") * (F.sum("_nc").over(wg) - F.col("_nc")))
@@ -2005,17 +1993,9 @@ def mutual_information(
         cells = d.groupBy(*gcols, col_a, col_b).agg(
             F.count(F.lit(1)).alias("_o")
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
-        wa = (
-            Window.partitionBy(*gcols, col_a)
-            if gcols
-            else Window.partitionBy(col_a)
-        )
-        wb = (
-            Window.partitionBy(*gcols, col_b)
-            if gcols
-            else Window.partitionBy(col_b)
-        )
+        wg = Window.partitionBy(*gcols)
+        wa = Window.partitionBy(*gcols, col_a)
+        wb = Window.partitionBy(*gcols, col_b)
         n = F.sum("_o").over(wg).cast("double")
         p_ab = F.col("_o").cast("double") / n
         p_a = F.sum("_o").over(wa).cast("double") / n
@@ -2097,7 +2077,7 @@ def fdr_bh(
 
     def _t(df: DataFrame) -> DataFrame:
         d = df.where(F.col(p_col).isNotNull())
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy(p_col, *tcols)
         wrev = wg.orderBy(p_col, *tcols).rowsBetween(
             Window.currentRow, Window.unboundedFollowing
@@ -2250,7 +2230,7 @@ def nelson_aalen(
                 F.sum(F.lit(1) - event_col.cast("int")).alias("_c"),
             )
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("t").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -2354,16 +2334,8 @@ def kendall_tau_b(
             col_y,
             F.coalesce("_o", F.lit(0)).alias("_o"),
         )
-        wy = (
-            Window.partitionBy(*gcols, col_y)
-            if gcols
-            else Window.partitionBy(col_y)
-        )
-        wx = (
-            Window.partitionBy(*gcols, col_x)
-            if gcols
-            else Window.partitionBy(col_x)
-        )
+        wy = Window.partitionBy(*gcols, col_y)
+        wx = Window.partitionBy(*gcols, col_x)
         below = F.coalesce(
             F.sum("_o").over(
                 wy.orderBy(col_x).rowsBetween(
@@ -2397,7 +2369,7 @@ def kendall_tau_b(
             (F.col("_o") * sw).alias("_c"),
             (F.col("_o") * ew).alias("_d"),
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         rx = F.sum("_o").over(wx)
         cy = F.sum("_o").over(wy)
         # marginal tie masses, each level counted once via a
@@ -2714,7 +2686,7 @@ def brier_decomposition(
                 F.sum(((f - o) * (f - o)).cast(DEC)).alias("_sq"),
             )
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         n = F.sum("_n").over(wg)
         obar = F.sum("_so").over(wg).cast("double") / n.cast("double")
         fbar_k = F.col("_sf").cast("double") / F.col("_n").cast(
@@ -2805,9 +2777,7 @@ def conformal_quantile(
             * (F.col("avg_rank") - F.col("min_rank").cast("double"))
             + F.lit(1.0)
         ).cast("long")
-        n = F.count(F.lit(1)).over(
-            Window.partitionBy(*gcols) if gcols else Window.partitionBy()
-        )
+        n = F.count(F.lit(1)).over(Window.partitionBy(*gcols))
         k = F.ceil(
             (n.cast("double") + F.lit(1.0)) * F.lit(1.0 - float(alpha))
         )
@@ -3467,7 +3437,7 @@ def binary_changepoint(
             F.col(time_col).alias("_t"),
             F.col(value_col).cast("double").alias("_x"),
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("_t").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -3721,7 +3691,7 @@ def log_rank_test(
                 "_c2"
             ),
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("_t").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -4055,7 +4025,7 @@ def cliffs_delta(
             F.sum(is_a).alias("_ca"),
             F.sum(F.lit(1) - is_a).alias("_cb"),
         )
-        wg = Window.partitionBy(*gcols) if gcols else Window.partitionBy()
+        wg = Window.partitionBy(*gcols)
         wo = wg.orderBy("_v").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -4247,11 +4217,7 @@ def hill_tail_index(
         d = df.where(F.col(value_col).isNotNull() & (x > 0))
         if prefilter_threshold is not None:
             d = d.where(x >= F.lit(float(prefilter_threshold)))
-        w = (
-            Window.partitionBy(*gcols)
-            if gcols
-            else Window.partitionBy()
-        ).orderBy(F.col("_x").desc())
+        w = Window.partitionBy(*gcols).orderBy(F.col("_x").desc())
         r = d.select(*gcols, x.alias("_x")).withColumn(
             "_rn", F.row_number().over(w)
         )
@@ -4332,11 +4298,7 @@ def msprt_two_proportion(
             F.sum(F.lit(1) - is_a).alias("_nb_i"),
             F.sum((F.lit(1) - is_a) * ok).alias("_cb_i"),
         )
-        wo = (
-            Window.partitionBy(*gcols)
-            if gcols
-            else Window.partitionBy()
-        ).orderBy(time_col).rowsBetween(
+        wo = Window.partitionBy(*gcols).orderBy(time_col).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
         cum = step.select(
@@ -4378,11 +4340,7 @@ def msprt_two_proportion(
                 lnlam,
             ).alias("_lnl"),
         )
-        wm = (
-            Window.partitionBy(*gcols)
-            if gcols
-            else Window.partitionBy()
-        ).orderBy(time_col).rowsBetween(
+        wm = Window.partitionBy(*gcols).orderBy(time_col).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
         runmax = F.max("_lnl").over(wm)
@@ -4954,9 +4912,7 @@ def granger_f(
             F.col(y_col).cast("double").alias("_y"),
             F.col(x_col).cast("double").alias("_x"),
         )
-        w = (
-            Window.partitionBy(*gcols) if gcols else Window.partitionBy()
-        ).orderBy(*[F.col(c) for c in tcols])
+        w = Window.partitionBy(*gcols).orderBy(*[F.col(c) for c in tcols])
         lagged = d.select(
             *gcols,
             "_y",
@@ -5082,9 +5038,7 @@ def engle_granger(
 
             joined = attach_scalar(d, line, F.col("_x"), F.col("_n"))
         e = F.col("_y") - F.col("_a") - F.col("_b") * F.col("_x")
-        w = (
-            Window.partitionBy(*gcols) if gcols else Window.partitionBy()
-        ).orderBy(*[F.col(c) for c in tcols])
+        w = Window.partitionBy(*gcols).orderBy(*[F.col(c) for c in tcols])
         staged = joined.select(
             *gcols, *tcols, "_n", "_b", e.alias("_e")
         ).withColumn("_el", F.lag("_e").over(w))
@@ -5163,9 +5117,7 @@ def amihud_illiquidity(
             .cast("double")
             .alias("_v"),
         )
-        w = (
-            Window.partitionBy(*gcols) if gcols else Window.partitionBy()
-        ).orderBy("_d")
+        w = Window.partitionBy(*gcols).orderBy("_d")
         lagged = daily.withColumn("_cl", F.lag("_c").over(w)).where(
             F.col("_cl").isNotNull()
             & (F.col("_cl") != 0)

@@ -1037,11 +1037,7 @@ def zipf_fit(
     def _t(df: DataFrame) -> DataFrame:
         from btc_usdt_etl_pipeline_spark.functions import DEC
 
-        wg = (
-            Window.partitionBy(*gcols)
-            if gcols
-            else Window.partitionBy()
-        ).orderBy(F.col(count_col).desc())
+        wg = Window.partitionBy(*gcols).orderBy(F.col(count_col).desc())
         ranked = (
             df.where(F.col(count_col) > 0)
             .withColumn("_rank", F.row_number().over(wg))

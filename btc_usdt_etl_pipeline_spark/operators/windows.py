@@ -829,9 +829,7 @@ def interpolate_linear(
                 )
             )
 
-        wbase = (
-            Window.partitionBy(*keys) if keys else Window.partitionBy()
-        )
+        wbase = Window.partitionBy(*keys)
         wfwd = wbase.orderBy(*[F.col(c) for c in ocols]).rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -992,9 +990,7 @@ def macd_signal(
                     df, keys, order_by, halo=halo, compute=_compute,
                     chunk_rows=cr,
                 )
-        w = (
-            Window.partitionBy(*keys) if keys else Window.partitionBy()
-        ).orderBy(*[F.col(c) for c in order_by])
+        w = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in order_by])
         return _compute(df, w)
 
     return _t
@@ -1204,16 +1200,8 @@ def spearman_corr(
         else:
 
             def avg_rank(c: str) -> Column:
-                wo = (
-                    Window.partitionBy(*gcols)
-                    if gcols
-                    else Window.partitionBy()
-                ).orderBy(F.col(c))
-                wv = (
-                    Window.partitionBy(*gcols, c)
-                    if gcols
-                    else Window.partitionBy(c)
-                )
+                wo = Window.partitionBy(*gcols).orderBy(F.col(c))
+                wv = Window.partitionBy(*gcols, c)
                 return (
                     F.rank().over(wo).cast("double")
                     + (F.count(F.lit(1)).over(wv) - F.lit(1)).cast(
@@ -1360,9 +1348,7 @@ def group_ranks(
                 extra.append("ntile")
             return out.select(*d.columns, *extra)
 
-        wg = (
-            Window.partitionBy(*gcols) if gcols else Window.partitionBy()
-        )
+        wg = Window.partitionBy(*gcols)
         w = wg.orderBy(value_col)
         out = (
             d.withColumn("min_rank", F.rank().over(w).cast("bigint"))
@@ -1372,8 +1358,6 @@ def group_ranks(
                 + (
                     F.count(F.lit(1)).over(
                         Window.partitionBy(*gcols, value_col)
-                        if gcols
-                        else Window.partitionBy(value_col)
                     )
                     - F.lit(1)
                 ).cast("double")
@@ -2080,11 +2064,7 @@ def kpss_level(
                 ],
             ).where(~F.col("_halo")).drop("_halo")
         else:
-            wg = (
-                Window.partitionBy(*gcols)
-                if gcols
-                else Window.partitionBy()
-            )
+            wg = Window.partitionBy(*gcols)
             mean = (
                 F.sum(F.col("_x").cast("decimal(38,6)")).over(wg).cast(
                     "double"

@@ -75,78 +75,3 @@ def stateful_running_extrema(
         GroupStateTimeout.NoTimeout,
     )
 
-
-def transform_with_state_extrema(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Per-key running (min, max, count) via ``transformWithStateInPandas``
-    — the Spark 4 arbitrary-state API (typed state handles, timers,
-    multiple state variables) that supersedes ``applyInPandasWithState``.
-
-    Semantics mirror :func:`stateful_running_extrema` exactly (update
-    emissions; latest per key == batch groupBy after an ``availableNow``
-    drain), so the two APIs are differential tests of each other — the
-    equivalence suite pins both against the same batch aggregate.
-
-    Requires ``protobuf`` (the TWS state-server protocol dependency —
-    pyspark's own ``transform_with_state_driver_worker`` imports it);
-    import-gated because this sandbox does not ship it.  Use
-    :func:`stateful_running_extrema` (same semantics, zero extra
-    dependencies) where protobuf is unavailable.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401,PLC0415
-    except ImportError as e:  # pragma: no cover - env-dependent
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the 'protobuf' package on "
-            "driver and executors (pyspark's TWS state protocol); "
-            "install protobuf or use stateful_running_extrema instead"
-        ) from e
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class _Extrema(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._agg = handle.getValueState(
-                "agg", "mn double, mx double, cnt bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._agg.exists():
-                mn, mx, cnt = self._agg.get()
-            else:
-                mn, mx, cnt = None, None, 0
-            for pdf in rows:
-                v = pdf[value_col]
-                if len(v):
-                    bmn, bmx = float(v.min()), float(v.max())
-                    mn = bmn if mn is None else min(mn, bmn)
-                    mx = bmx if mx is None else max(mx, bmx)
-                    cnt += int(len(v))
-            self._agg.update((mn, mx, cnt))
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "running_min": [mn],
-                    "running_max": [mx],
-                    "running_count": [cnt],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    # The key field keeps the stream's own type — a hardcoded `long`
-    # would break (or silently miscast) string/other grouping keys.
-    key_type = stream.schema[key_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} {key_type}, running_min double, running_max double, "
-        "running_count long"
-    )
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_Extrema(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )

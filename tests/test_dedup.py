@@ -93,13 +93,6 @@ def test_ngram_max_df_cap_semantics(spark):
     assert {(p.id_a, p.id_b): p.jaccard for p in capped} == {(1, 2): 5 / 7}
 
 
-def test_ngram_max_df_excludes_prefix_filter():
-    import pytest
-
-    with pytest.raises(ValueError):
-        ngram_jaccard_pairs(prefix_filter=True, max_df=5)
-
-
 def test_exact_dedup_min_id_winner(spark):
     df = spark.createDataFrame(
         [(5, "a", 1.0), (2, "a", 1.0), (9, "b", 2.0)],
@@ -148,14 +141,21 @@ def test_portable_hash60_matches_python(spark):
     assert val == int(hashlib.md5(b"hello world").hexdigest()[:15], 16)
 
 
-def test_ngram_prefix_filter_identical_output(spark):
-    # PPJoin prefix filtering must be a pure optimization: identical
-    # (id_a, id_b, jaccard) rows as the full count-join, on corpora with
-    # shared boilerplate, near-dups, and disjoint texts.
+def test_ngram_jaccard_matches_set_reference(spark):
+    # The count-join must emit exactly the pairs a pure-Python set
+    # Jaccard finds, with the same int/int score, on corpora with shared
+    # boilerplate, near-dups, and disjoint texts.
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
     words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
+
+    def grams(text, n, unit):
+        if unit == "token":
+            toks = text.split()
+            k = len(toks) - n + 1
+            return {" ".join(toks[i : i + n]) for i in range(k)}
+        return {text[i : i + n] for i in range(len(text) - n + 1)}
 
     @settings(
         max_examples=5,
@@ -172,23 +172,25 @@ def test_ngram_prefix_filter_identical_output(spark):
         unit=st.sampled_from(["char", "token"]),
     )
     def run(docs, threshold, unit):
+        texts = [" ".join(ws) for ws in docs]
         df = spark.createDataFrame(
-            [(i, " ".join(ws)) for i, ws in enumerate(docs)],
-            "doc_id long, text string",
+            list(enumerate(texts)), "doc_id long, text string"
         )
         n = 3 if unit == "char" else 2
-        plain = df.transform(
+        got = df.transform(
             ngram_jaccard_pairs(n=n, threshold=threshold, unit=unit)
         ).collect()
-        pref = df.transform(
-            ngram_jaccard_pairs(
-                n=n, threshold=threshold, unit=unit, prefix_filter=True
-            )
-        ).collect()
-        key = lambda r: (r.id_a, r.id_b)  # noqa: E731
-        assert sorted(map(tuple, plain), key=lambda t: t[:2]) == sorted(
-            map(tuple, pref), key=lambda t: t[:2]
-        )
+        gs = [grams(t, n, unit) for t in texts]
+        want = []
+        for i, ga in enumerate(gs):
+            for j in range(i + 1, len(gs)):
+                inter = len(ga & gs[j])
+                if inter == 0:
+                    continue
+                jac = inter / (len(ga) + len(gs[j]) - inter)
+                if jac >= threshold:
+                    want.append((i, j, jac))
+        assert sorted(map(tuple, got)) == want
 
     run()
 
@@ -407,5 +409,3 @@ def test_containment_catches_subset_duplicates(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="metric"):
         mk(metric="dice")
-    with _pytest.raises(ValueError, match="prefix_filter"):
-        mk(metric="containment", prefix_filter=True)

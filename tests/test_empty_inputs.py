@@ -48,12 +48,6 @@ def test_dedup_family_empty(spark):
     assert (
         d.transform(ngram_jaccard_pairs(n=3, unit="token")).count() == 0
     )
-    assert (
-        d.transform(
-            ngram_jaccard_pairs(n=3, unit="token", prefix_filter=True)
-        ).count()
-        == 0
-    )
     assert d.transform(simhash()).count() == 0
 
 

@@ -1,13 +1,14 @@
 """The no-fork ``file://`` filesystem (``btc_usdt_etl_pipeline_spark/jvm``).
 
 Each run starts its own JVM in a subprocess from a foreign cwd: once as
-a ``build_session`` session (the engine's filesystem) and once as a
-plain session on the same runtime confs (Hadoop's stock filesystem).
-Both write the same Parquet input and drain the same two streams — a
-q49-shaped sliding-window aggregate into the memory sink and a
-q46-shaped dedup into the Parquet sink — into trees the test then
-compares: same files, same mode bits, same drained values, and the same
-``getFileLinkStatus`` answers.
+a ``build_session`` session (the engine's filesystem), once as a plain
+session on the same runtime confs (the stock filesystem that wins the
+service-loader order), and once as a plain session pinned to Hadoop's
+``LocalFileSystem``.  All write the same Parquet input and drain the
+same two streams — a q49-shaped sliding-window aggregate into the memory
+sink and a q46-shaped dedup into the Parquet sink — into trees the test
+then compares: same files, same mode bits, same drained values, and the
+same ``getFileLinkStatus`` answers.
 """
 
 from __future__ import annotations
@@ -25,6 +26,7 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 JAR = os.path.join(ROOT, "btc_usdt_etl_pipeline_spark", "jvm", "localfs.jar")
 PKG = "btc_usdt_etl_pipeline_spark.jvm."
+HADOOP_LOCAL_FS = "org.apache.hadoop.fs.LocalFileSystem"
 # 0o421, 0o142 and 0o214 set each of the nine bits once, alone in its
 # class; then none, all, and all with the sticky bit
 SET_MODES = (0o421, 0o142, 0o214, 0o000, 0o777, 0o1777)
@@ -37,7 +39,7 @@ from btc_usdt_etl_pipeline_spark.session import RUNTIME_CONF, build_session
 from btc_usdt_etl_pipeline_spark.streaming.ohlcv import run_available_now
 
 conf = {{"spark.ui.enabled": "false", "spark.ui.showConsoleProgress": "false",
-         "spark.driver.memory": "1g"}}
+         "spark.driver.memory": "1g", **{extra_conf!r}}}
 if {engine!r}:
     spark = build_session("local-fs", master="local[2]", extra_conf={{
         **conf, "spark.driver.extraClassPath": {caller_cp!r}}})
@@ -117,15 +119,16 @@ _UUID = re.compile(
     r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
 
 
-def _run(tmp_path, engine, links):
-    side = "engine" if engine else "stock"
+def _run(tmp_path, side, links, extra_conf=None):
+    engine = side == "engine"
     work, cwd = tmp_path / side / "work", tmp_path / side / "cwd"
     work.mkdir(parents=True)
     cwd.mkdir()
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
         [sys.executable, "-c", _RUN.format(
-            root=ROOT, engine=engine, caller_cp="/caller/extra.jar",
+            root=ROOT, engine=engine, extra_conf=extra_conf or {},
+            caller_cp="/caller/extra.jar",
             links=str(links), work=str(work), set_modes=SET_MODES)],
         cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
     )
@@ -154,11 +157,16 @@ def runs(tmp_path_factory):
     (links / "file").write_text("twelve bytes")
     os.symlink(links / "file", links / "link")
     os.symlink(links / "gone", links / "dangling")
-    return _run(tmp, True, links), _run(tmp, False, links)
+    return (
+        _run(tmp, "engine", links),
+        _run(tmp, "stock", links),
+        _run(tmp, "hadoop", links,
+             {"spark.hadoop.fs.file.impl": HADOOP_LOCAL_FS}),
+    )
 
 
 def test_file_scheme_resolves_to_the_no_fork_classes(runs):
-    (engine, _), (stock, _) = runs
+    (engine, _), (stock, _), _ = runs
     assert engine["fs"] == [PKG + "NoForkLocalFileSystem",
                             PKG + "NoForkRawLocalFileSystem"]
     assert engine["fc"] == PKG + "NoForkLocalFs"
@@ -173,7 +181,7 @@ def test_file_scheme_resolves_to_the_no_fork_classes(runs):
 
 
 def test_written_trees_have_stock_mode_bits(runs):
-    (_, engine_work), (_, stock_work) = runs
+    (_, engine_work), (_, stock_work), _ = runs
     engine, stock = _modes(engine_work), _modes(stock_work)
     assert engine == stock
     # the comparison covers the Parquet write, both checkpoints' logs,
@@ -185,20 +193,30 @@ def test_written_trees_have_stock_mode_bits(runs):
 
 
 def test_set_permission_applies_stock_mode_bits(runs):
-    (engine, _), (stock, _) = runs
+    (engine, _), (stock, _), _ = runs
     assert engine["set_permission"] == stock["set_permission"] == {
         oct(m): oct(m) for m in SET_MODES}
 
 
 def test_link_status_matches_stock_hadoop(runs):
-    (engine, _), (stock, _) = runs
+    (engine, _), (stock, _), _ = runs
     assert engine["link_status"] == stock["link_status"]
     assert engine["link_status"]["fs file bare"][0] is True
 
 
 def test_drained_values_match_stock_filesystem(runs):
-    (engine, _), (stock, _) = runs
+    (engine, _), (stock, _), _ = runs
     assert engine["hashes"] == stock["hashes"]
+
+
+def test_results_do_not_depend_on_the_stock_class(runs):
+    # which stock class serves file:// in a plain session depends on jar
+    # order; pinning Hadoop's own changes neither the modes of the
+    # written tree nor the drained values
+    _, (stock, stock_work), (hadoop, hadoop_work) = runs
+    assert hadoop["fs"][0] == HADOOP_LOCAL_FS
+    assert _modes(hadoop_work) == _modes(stock_work)
+    assert hadoop["hashes"] == stock["hashes"]
 
 
 @pytest.mark.skipif(not (shutil.which("javac") and shutil.which("jar")),

@@ -401,35 +401,6 @@ def test_streaming_checkpoint_resume_processes_only_new_files(spark):
         assert (r2.n, r2.total) == (3, 13.0)
 
 
-def test_transform_with_state_gated_on_protobuf(spark):
-    """The Spark 4 TWS API needs protobuf (its state-server protocol);
-    this sandbox lacks it, so the operator must raise the documented
-    actionable error — not crash a streaming worker mid-query."""
-    import pytest
-
-    from btc_usdt_etl_pipeline_spark.streaming.stateful import (
-        transform_with_state_extrema,
-    )
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .selectExpr("CAST(value % 3 AS LONG) AS user_id",
-                    "CAST(value AS DOUBLE) AS value")
-    )
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    if has_protobuf:
-        out = transform_with_state_extrema(stream)
-        assert out.isStreaming
-    else:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            transform_with_state_extrema(stream)
-
-
 def test_interval_join_rejects_narrow_bucket(spark):
     import pytest
 

@@ -316,39 +316,3 @@ def test_weighted_median_bucketed_equals_walk(spark, scale_paths):
         out = s.transform(weighted_median("v", "w"))
     assert not plan_mentions(out, "_bcw")
     assert out.collect()[0]["weighted_median"] == "x"
-
-
-def test_association_rules_apriori_pruning_exact(spark):
-    """Round-9 prune_items: dropping items whose marginal is below
-    min_pair_support BEFORE the quadratic pair explode is EXACT (the
-    downward-closure property) — rules, counts, support, confidence,
-    and lift are identical on a long-tail fixture where most items
-    appear once."""
-    import random as _r
-
-    from btc_usdt_etl_pipeline_spark.operators.rules import (
-        association_rules,
-    )
-
-    rng = _r.Random(31)
-    rows = []
-    head = list(range(10))  # frequent head items
-    for bk in range(300):
-        # every basket: 2-3 head items + 2 singleton-tail items
-        for it in rng.sample(head, rng.randint(2, 3)):
-            rows.append((bk, it))
-        rows.append((bk, 1000 + 2 * bk))
-        rows.append((bk, 1001 + 2 * bk))
-    df = spark.createDataFrame(rows, "bk long, it long")
-
-    def run(prune):
-        return sorted(
-            tuple(r)
-            for r in association_rules(
-                df, "bk", "it", min_pair_support=3, top_k=40,
-                prune_items=prune,
-            ).collect()
-        )
-
-    a, b = run(False), run(True)
-    assert a == b and len(a) == 40

@@ -641,7 +641,6 @@ def test_lsh_staged_dots_match_inlined_folds(spark):
 
     from btc_usdt_etl_pipeline_spark.operators.similarity import (
         _srp_bucket,
-        _srp_dot,
         _srp_fold,
         _srp_pack,
         _srp_table_keys,
@@ -664,7 +663,7 @@ def test_lsh_staged_dots_match_inlined_folds(spark):
             for r in range(p + 1, planes)
         ]
         dots = {
-            p: F.abs(_srp_dot(vec, table, p, portable))
+            p: F.abs(_srp_fold(vec, table, p, portable))
             for p in range(planes)
         }
 

@@ -127,25 +127,24 @@ def test_regression_metrics_vs_python(spark):
     assert row.n == 4
 
 
-def test_map_in_arrow_inference_matches_pandas_path(spark):
+def test_linear_model_inference_exact_values(spark):
     from btc_usdt_etl_pipeline_spark.ml.inference import (
         linear_model_inference,
-        linear_model_inference_arrow,
     )
 
     rows = [(i, [float(i), float(i * 2), 1.5]) for i in range(50)]
     df = spark.createDataFrame(rows, "event_id long, features array<double>")
     w, b = [0.25, -0.5, 2.0], 0.125
-    pandas_out = {
+    out = {
         r.event_id: r.yhat
         for r in df.transform(linear_model_inference(w, b)).collect()
     }
-    arrow_out = {
-        r.event_id: r.yhat
-        for r in df.transform(linear_model_inference_arrow(w, b)).collect()
+    # bit-identical to the sequential x0*w0 + x1*w1 + ... fold, not
+    # just close
+    assert out == {
+        i: x[0] * w[0] + x[1] * w[1] + x[2] * w[2] + b for i, x in rows
     }
-    assert pandas_out == arrow_out  # bit-identical, not just close
-    assert pandas_out[2] == 2 * 0.25 + 4 * -0.5 + 1.5 * 2.0 + 0.125
+    assert out[2] == 2 * 0.25 + 4 * -0.5 + 1.5 * 2.0 + 0.125
 
 
 def test_quantize_embeddings_exact_values(spark):

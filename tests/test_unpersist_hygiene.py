@@ -60,9 +60,8 @@ def test_back_to_back_operators_leave_no_cached_state(spark, scale_paths):
     minhash_near_dedup(num_hashes=16, bands=4, jaccard_threshold=0.5)(
         docs
     ).collect()
-    # q38-shaped: n-gram Jaccard (both modes exercise both persist sites)
+    # q38-shaped: n-gram Jaccard
     ngram_jaccard_pairs(threshold=0.5)(docs).collect()
-    ngram_jaccard_pairs(threshold=0.5, prefix_filter=True)(docs).collect()
     # q22-shaped: bucket-offset global index resample
     klines = spark.range(8000).select(
         F.col("id").alias("open_time"),
