@@ -64,6 +64,23 @@ def attach_scalar(df, one_row, left_probe, right_probe):
     return left.join(F.broadcast(right), "_one").drop("_one")
 
 
+def join_groups(left, right, gcols, how: str = "inner", probes=None):
+    """Join the per-group frame ``right`` onto ``left`` on the group
+    columns ``gcols``.
+
+    With no group columns both sides are global and ``right`` is one
+    row: a cross join, or — when ``probes`` gives a ``(left_probe,
+    right_probe)`` pair — :func:`attach_scalar`'s hash join, in which
+    case the keyed join broadcasts ``right`` too.  ``how`` applies to
+    the keyed join only.
+    """
+    if gcols:
+        return left.join(F.broadcast(right) if probes else right, gcols, how)
+    if probes:
+        return attach_scalar(left, right, *probes)
+    return left.crossJoin(right)
+
+
 def null_safe_join(left, right, on, how: str = "inner"):
     """Equi-join on ``on`` columns where NULL matches NULL — the
     groupBy-then-join-back idiom's missing half.  ``groupBy`` keeps a

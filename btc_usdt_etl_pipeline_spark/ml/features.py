@@ -24,7 +24,11 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from btc_usdt_etl_pipeline_spark.functions import exact_avg, oracle_avg_sql  # noqa: F401
+from btc_usdt_etl_pipeline_spark.functions import (  # noqa: F401
+    exact_avg,
+    join_groups,
+    oracle_avg_sql,
+)
 
 
 def min_max_scale(
@@ -983,9 +987,9 @@ def isotonic_calibration(
             F.col("_cw").alias("_cwk"),
             F.col("_cs").alias("_csk"),
         )
-        pairs = (
-            left.join(right, gcols) if gcols else left.crossJoin(right)
-        ).where(F.col("_j") <= F.col("_k"))
+        pairs = join_groups(left, right, gcols).where(
+            F.col("_j") <= F.col("_k")
+        )
         mean = (F.col("_csk") - F.col("_csj")).cast("double") / (
             F.col("_cwk") - F.col("_cwj")
         ).cast("double")

@@ -2,38 +2,52 @@
 
 The monitoring layer a training-data pipeline needs once it refreshes
 continuously: did this feature's distribution move between the data the
-model was trained on and the data arriving now?  Two standard,
-complementary statistics, both as pure column expressions over ONE
-data-scale shuffle each:
+model was trained on and the data arriving now?  Every operator takes
+the value column, an ``is_current`` flag splitting each group into the
+reference (false) and current (true) sample, and optional group
+columns, and returns one row per group:
 
 * :func:`psi` — Population Stability Index over fixed-width bins, the
   industry drift score (PSI < 0.1 stable, 0.1–0.25 moderate, > 0.25
   action).  Binned, so it works on any scalar and is insensitive to
-  heavy tails, but needs explicit bin bounds.
-* :func:`ks_statistic` — two-sample Kolmogorov–Smirnov ``D`` =
-  ``max |ECDF_ref − ECDF_cur|``.  Bin-free and exactly reproducible
-  (pure integer counts and one IEEE division — no transcendentals),
-  at the cost of an ordered scan of the distinct values.
+  heavy tails, but needs explicit bin bounds.  Its bin densification
+  is a broadcast of ``groups × n_bins`` synthetic rows — metadata
+  scale.
+* :func:`js_divergence` — Jensen–Shannon divergence over a
+  categorical column.
+* the ECDF statistics — :func:`ks_statistic` (max gap),
+  :func:`wasserstein_1d` (value-weighted gap), :func:`cvm_statistic`
+  (squared gap), :func:`anderson_darling` (tail-weighted squared gap),
+  :func:`energy_distance` (ECDF integrals of E|X−Y|) and the
+  :func:`drift_report` panel — all run the ONE shared ECDF pass below.
+* :func:`page_hinkley` — the online member: a sequential change
+  detector over one series, not a two-sample comparison.
 
-Scale shape: both aggregate the raw rows down to per-(group, bin) or
-per-(group, distinct-value) counts in their single data-scale exchange;
-everything after runs on the reduced table (windows keyed by ``group``
-parallelize across groups).  PSI's bin densification is a broadcast of
-``groups × n_bins`` synthetic rows — metadata-scale.  A skewed single
-group degrades KS to one task over its distinct VALUES (already
-deduplicated), not its rows.
+The shared ECDF pass (``_ecdf_statistic``): the raw rows collapse to
+per-(group, distinct value) reference/current counts in the pass's one
+data-scale shuffle (map-side combined); ordered windows over each
+group's distinct values then give the side totals, the inclusive
+cumulative counts and the ECDFs ``F = cumulative / total`` (one
+``try_divide`` each), the pooled multiplicity at each value and the
+``lead`` gap to the next distinct value.  Each statistic stages its
+per-value terms from those columns, sums them per group (or takes the
+max, for KS) and applies its final scale; a group with an empty side
+has no ECDF on that side and reports NULL.  Everything after the count
+shuffle runs on the reduced table; the windows keyed by group
+parallelize across groups, and a skewed single group degrades to one
+task over its distinct VALUES (already deduplicated), not its rows.
 
-Determinism: KS is bit-exact across engines (integer cumsums, one
-exact-rounded division, abs/max).  PSI's term carries ``ln`` — libm
-implementations differ in the last ULP — so each bin's term is rounded
-to 6 dp via the exact-decimal cast before the order-free sum, the same
-contract the rest of the engine uses for transcendental outputs
-(functions/__init__ module doc).
+Determinism: counts and cumulative counts are exact integers and each
+ECDF is one exact-rounded IEEE division, so KS is bit-exact across
+engines.  Terms that carry products or ``ln`` are rounded via the
+exact-decimal cast (DECIMAL(38,6), or (38,12) where noted) before the
+order-free sum, the same contract the rest of the engine uses for
+transcendental outputs (functions/__init__ module doc).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -132,26 +146,52 @@ def psi(
     return _t
 
 
-def ks_statistic(
+class _Ecdf:
+    """Column expressions over the shared count table, whose rows are a
+    group's distinct values ``_v`` with their reference and current
+    multiplicities ``_a`` and ``_b``."""
+
+    def __init__(self, gcols: list[str]):
+        wg = Window.partitionBy(*gcols)
+        wo = wg.orderBy("_v").rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        self.tot_a = F.sum("_a").over(wg)
+        self.tot_b = F.sum("_b").over(wg)
+        self.cum_a = F.sum("_a").over(wo)
+        self.cum_b = F.sum("_b").over(wo)
+        # try_divide: an empty side (total 0) has no ECDF — NULL here,
+        # not an ANSI divide-by-zero fault; the tail's fence reports NULL
+        self.f_a = F.try_divide(
+            self.cum_a.cast("double"), self.tot_a.cast("double")
+        )
+        self.f_b = F.try_divide(
+            self.cum_b.cast("double"), self.tot_b.cast("double")
+        )
+        self.mult = (F.col("_a") + F.col("_b")).cast("double")
+        self.dv = F.lead("_v").over(wg.orderBy("_v")).cast(
+            "double"
+        ) - F.col("_v").cast("double")
+
+
+def _dsum(name: str) -> Column:
+    return F.sum(name).cast("double")
+
+
+def _ecdf_statistic(
     value_col: str,
     is_current: Column,
-    group_by: Sequence[str] | str | None = None,
-    out: str = "ks",
+    group_by: Sequence[str] | str | None,
+    terms: Callable[[_Ecdf], Mapping[str, tuple[Column, Callable]]],
+    outputs: Mapping[str, Column],
 ) -> Callable[[DataFrame], DataFrame]:
-    """Two-sample Kolmogorov–Smirnov statistic per group:
-
-        D = max_x |ECDF_ref(x) − ECDF_cur(x)|
-
-    Computed tie-correctly by first collapsing to per-(group, value)
-    pair counts (the one data-scale shuffle), then a per-group ordered
-    cumulative count of each sample — evaluating the ECDF gap only AT
-    observed values, where the max of a step-function difference is
-    attained.  All-integer cumsums and a single exact-rounded IEEE
-    division per row make ``D`` bit-identical in any engine and any
-    execution order (no transcendentals — see module doc).
-
-    Returns one row per group: ``group_by…, n_ref, n_cur, ks``.
-    """
+    """The shared ECDF pass (module doc).  ``terms`` maps each staged
+    per-value column to its expression over :class:`_Ecdf` and the
+    aggregate that folds it per group (``_dsum`` or ``F.max``);
+    ``outputs`` are expressions over ``n_ref``, ``n_cur`` and those
+    folded columns, each NULL unless both sides are non-empty.  NULL
+    values are dropped.  Returns ``group_by…, n_ref, n_cur,
+    outputs…``."""
     gcols = _group_cols(group_by)
 
     def _t(df: DataFrame) -> DataFrame:
@@ -164,37 +204,60 @@ def ks_statistic(
                 F.sum(cur).alias("_b"),
             )
         )
-        wg = Window.partitionBy(*gcols)
-        wo = wg.orderBy("_v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
+        e = _Ecdf(gcols)
+        staged_terms = terms(e)
+        staged = counts.select(
+            *gcols,
+            *[c.alias(name) for name, (c, _) in staged_terms.items()],
+            e.tot_a.alias("_ta"),
+            e.tot_b.alias("_tb"),
         )
-        # ANSI divide-by-zero fence (module convention, cf. acf /
-        # sax_symbolize): a group whose rows are all in ONE sample
-        # (e.g. a segment that only exists in the current batch) has a
-        # zero denominator on the other side — its ECDF is undefined,
-        # so the group reports ks = NULL instead of aborting the job.
-        tot_a = F.sum("_a").over(wg)
-        tot_b = F.sum("_b").over(wg)
-        ecdf_a = F.when(
-            tot_a > 0,
-            F.sum("_a").over(wo).cast("double") / tot_a.cast("double"),
+        agg = staged.groupBy(*gcols).agg(
+            F.first("_ta").alias("n_ref"),
+            F.first("_tb").alias("n_cur"),
+            *[
+                fold(name).alias(name)
+                for name, (_, fold) in staged_terms.items()
+            ],
         )
-        ecdf_b = F.when(
-            tot_b > 0,
-            F.sum("_b").over(wo).cast("double") / tot_b.cast("double"),
-        )
-        gap = F.abs(ecdf_a - ecdf_b)
-        return (
-            counts.withColumn("_gap", gap)
-            .groupBy(*gcols)
-            .agg(
-                F.sum("_a").alias("n_ref"),
-                F.sum("_b").alias("n_cur"),
-                F.max("_gap").alias(out),
-            )
+        ok = (F.col("n_ref") > 0) & (F.col("n_cur") > 0)
+        return agg.select(
+            *gcols,
+            "n_ref",
+            "n_cur",
+            *[F.when(ok, c).alias(name) for name, c in outputs.items()],
         )
 
     return _t
+
+
+def ks_statistic(
+    value_col: str,
+    is_current: Column,
+    group_by: Sequence[str] | str | None = None,
+    out: str = "ks",
+) -> Callable[[DataFrame], DataFrame]:
+    """Two-sample Kolmogorov–Smirnov statistic per group:
+
+        D = max_x |ECDF_ref(x) − ECDF_cur(x)|
+
+    Tie-correct: the shared ECDF pass (module doc) evaluates the gap
+    only AT observed distinct values, where the max of a step-function
+    difference is attained.  All-integer cumsums and a single
+    exact-rounded IEEE division per row make ``D`` bit-identical in any
+    engine and any execution order (no transcendentals).  A group whose
+    rows are all in ONE sample (e.g. a segment that only exists in the
+    current batch) reports ks = NULL instead of aborting the job.
+
+    Returns one row per group: ``group_by…, n_ref, n_cur, ks``.
+    """
+    return _ecdf_statistic(
+        value_col,
+        is_current,
+        group_by,
+        lambda e: {"_gap": (F.abs(e.f_a - e.f_b), F.max)},
+        {out: F.col("_gap")},
+    )
 
 
 def js_divergence(
@@ -286,78 +349,32 @@ def wasserstein_1d(
     out: str = "w1",
 ) -> Callable[[DataFrame], DataFrame]:
     """1-D Wasserstein-1 (earth-mover's) distance per group between
-    the reference (``is_current`` false) and current samples — the
-    fourth drift statistic here: unlike KS's max-gap it weighs the
-    WHOLE displacement (a small shift of all mass scores
-    proportionally to the shift, where KS saturates), and unlike PSI
-    it needs no bins.  For 1-D empirical distributions it is exact:
+    the reference (``is_current`` false) and current samples — unlike
+    KS's max-gap it weighs the WHOLE displacement (a small shift of all
+    mass scores proportionally to the shift, where KS saturates), and
+    unlike PSI it needs no bins.  For 1-D empirical distributions it is
+    exact:
 
         W₁ = Σ_i |F_ref(v_i) − F_cur(v_i)| · (v_{i+1} − v_i)
 
     over the sorted distinct values of the combined sample.
 
-    Same scale shape as :func:`ks_statistic`: one (group, value)
-    count aggregation (data scale, map-side combined), then ordered
-    windows over each group's DISTINCT values (already deduplicated).
-    ECDFs are integer cumsums with one try_divide each; the per-gap
-    term carries the products, so it is rounded to 6 dp via the
-    exact-decimal cast before the order-free sum.  Groups with an
-    empty side emit NULL.  NULL values are dropped.  Returns one row
-    per group: ``group_by…, n_ref, n_cur, w1``.
+    Runs the shared ECDF pass (module doc); the per-gap term carries
+    the products, so it is rounded to 6 dp via the exact-decimal cast
+    before the order-free sum.  Groups with an empty side emit NULL.
+    Returns one row per group: ``group_by…, n_ref, n_cur, w1``.
     """
-    gcols = _group_cols(group_by)
 
-    def _t(df: DataFrame) -> DataFrame:
-        cur = is_current.cast("int")
-        counts = (
-            df.where(F.col(value_col).isNotNull())
-            .groupBy(*gcols, F.col(value_col).alias("_v"))
-            .agg(
-                F.sum(F.lit(1) - cur).alias("_n_ref"),
-                F.sum(cur).alias("_n_cur"),
-            )
-        )
-        wg = Window.partitionBy(*gcols)
-        wo = wg.orderBy("_v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        tr = F.sum("_n_ref").over(wg)
-        tc = F.sum("_n_cur").over(wg)
-        f_ref = F.try_divide(
-            F.sum("_n_ref").over(wo).cast("double"), tr.cast("double")
-        )
-        f_cur = F.try_divide(
-            F.sum("_n_cur").over(wo).cast("double"), tc.cast("double")
-        )
-        gap = F.lead("_v").over(wg.orderBy("_v")).cast("double") - F.col(
-            "_v"
-        ).cast("double")
+    def terms(e: _Ecdf) -> dict:
         term = F.coalesce(
-            (F.abs(f_ref - f_cur) * gap).cast(DEC),
+            (F.abs(e.f_a - e.f_b) * e.dv).cast(DEC),
             F.lit(0.0).cast(DEC),
         )
-        staged = counts.select(
-            *gcols,
-            term.alias("_term"),
-            tr.alias("_tr"),
-            tc.alias("_tc"),
-        )
-        agg = staged.groupBy(*gcols).agg(
-            F.first("_tr").alias("n_ref"),
-            F.first("_tc").alias("n_cur"),
-            F.sum("_term").cast("double").alias("_w1"),
-        )
-        return agg.select(
-            *gcols,
-            "n_ref",
-            "n_cur",
-            F.when(
-                (F.col("n_ref") > 0) & (F.col("n_cur") > 0),
-                F.col("_w1"),
-            ).alias(out),
-        )
+        return {"_w1": (term, _dsum)}
 
-    return _t
+    return _ecdf_statistic(
+        value_col, is_current, group_by, terms, {out: F.col("_w1")}
+    )
 
 
 def cvm_statistic(
@@ -376,65 +393,26 @@ def cvm_statistic(
     (w_z = combined multiplicity at z) — sensitive to distributed
     small deviations a single max misses, scale-free unlike W₁.
 
-    Identical plan to :func:`ks_statistic`: one (group, value) count
-    aggregation, ordered windows over each group's distinct values.
-    ECDFs are integer cumsums with try_divide fences; the per-value
-    w·gap² terms are rounded to 6 dp via the exact-decimal cast
-    before the order-free sum, then ONE scale multiplication.  Groups
-    with an empty side emit NULL.  Returns ``group_by…, n_ref,
-    n_cur, cvm``.
+    Runs the shared ECDF pass (module doc); the per-value w·gap² terms
+    are rounded to 6 dp via the exact-decimal cast before the
+    order-free sum, then ONE scale multiplication.  Groups with an
+    empty side emit NULL.  Returns ``group_by…, n_ref, n_cur, cvm``.
     """
-    gcols = _group_cols(group_by)
 
-    def _t(df: DataFrame) -> DataFrame:
-        cur = is_current.cast("int")
-        counts = (
-            df.where(F.col(value_col).isNotNull())
-            .groupBy(*gcols, F.col(value_col).alias("_v"))
-            .agg(
-                F.sum(F.lit(1) - cur).alias("_a"),
-                F.sum(cur).alias("_b"),
-            )
-        )
-        wg = Window.partitionBy(*gcols)
-        wo = wg.orderBy("_v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        tot_a = F.sum("_a").over(wg)
-        tot_b = F.sum("_b").over(wg)
-        f_a = F.try_divide(
-            F.sum("_a").over(wo).cast("double"), tot_a.cast("double")
-        )
-        f_b = F.try_divide(
-            F.sum("_b").over(wo).cast("double"), tot_b.cast("double")
-        )
-        w = (F.col("_a") + F.col("_b")).cast("double")
-        term = (w * (f_a - f_b) * (f_a - f_b)).cast(DEC)
-        staged = counts.select(
-            *gcols,
-            term.alias("_term"),
-            tot_a.alias("_ta"),
-            tot_b.alias("_tb"),
-        )
-        agg = staged.groupBy(*gcols).agg(
-            F.first("_ta").alias("n_ref"),
-            F.first("_tb").alias("n_cur"),
-            F.sum("_term").cast("double").alias("_s"),
-        )
-        na = F.col("n_ref").cast("double")
-        nb = F.col("n_cur").cast("double")
-        scale = na * nb / ((na + nb) * (na + nb))
-        return agg.select(
-            *gcols,
-            "n_ref",
-            "n_cur",
-            F.when(
-                (F.col("n_ref") > 0) & (F.col("n_cur") > 0),
-                F.round(scale * F.col("_s"), 6),
-            ).alias(out),
-        )
+    def terms(e: _Ecdf) -> dict:
+        gap = e.f_a - e.f_b
+        return {"_s": ((e.mult * gap * gap).cast(DEC), _dsum)}
 
-    return _t
+    na = F.col("n_ref").cast("double")
+    nb = F.col("n_cur").cast("double")
+    scale = na * nb / ((na + nb) * (na + nb))
+    return _ecdf_statistic(
+        value_col,
+        is_current,
+        group_by,
+        terms,
+        {out: F.round(scale * F.col("_s"), 6)},
+    )
 
 
 def anderson_darling(
@@ -461,75 +439,34 @@ def anderson_darling(
     continuous formula).  The last block (B = N) is excluded — its
     weight denominator is 0 and its gap is identically 0.
 
-    Identical plan to :func:`ks_statistic`/:func:`cvm_statistic`:
-    ONE (group, value) count aggregation + ordered windows over each
-    group's distinct values.  Counts are exact integers; the per-block
-    term is evaluated in double (M·N at petabyte group sizes
-    overflows a long, and both engines run the identical IEEE tree on
-    identical integers) and rounded to 6 dp via the exact-decimal
-    cast before the order-free sum; the final 1/(m·n) scale is one
-    multiplication, pinned at 6 dp.  Groups with an empty side emit
-    NULL.  Returns ``group_by…, n_ref, n_cur, ad``.
+    Runs the shared ECDF pass (module doc) on its cumulative counts.
+    The per-block term is evaluated in double (M·N at petabyte group
+    sizes overflows a long, and both engines run the identical IEEE
+    tree on identical integers) and rounded to 6 dp via the
+    exact-decimal cast before the order-free sum; the final 1/(m·n)
+    scale is one multiplication, pinned at 6 dp.  Groups with an empty
+    side emit NULL.  Returns ``group_by…, n_ref, n_cur, ad``.
     """
-    gcols = _group_cols(group_by)
 
-    def _t(df: DataFrame) -> DataFrame:
-        cur = is_current.cast("int")
-        counts = (
-            df.where(F.col(value_col).isNotNull())
-            .groupBy(*gcols, F.col(value_col).alias("_v"))
-            .agg(
-                F.sum(F.lit(1) - cur).alias("_a"),
-                F.sum(cur).alias("_b"),
-            )
-        )
-        wg = Window.partitionBy(*gcols)
-        wo = wg.orderBy("_v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        tot_a = F.sum("_a").over(wg)
-        tot_b = F.sum("_b").over(wg)
-        big_n = (tot_a + tot_b).cast("double")
-        m_d = tot_a.cast("double")
-        cum_m = F.sum("_a").over(wo).cast("double")
-        cum_b = (F.sum("_a").over(wo) + F.sum("_b").over(wo)).cast(
-            "double"
-        )
-        l_d = (F.col("_a") + F.col("_b")).cast("double")
-        gap = cum_m * big_n - cum_b * m_d
+    def terms(e: _Ecdf) -> dict:
+        big_n = (e.tot_a + e.tot_b).cast("double")
+        cum_m = e.cum_a.cast("double")
+        cum_n = (e.cum_a + e.cum_b).cast("double")
+        gap = cum_m * big_n - cum_n * e.tot_a.cast("double")
         term = F.when(
-            cum_b < big_n,
-            (l_d * gap * gap / (cum_b * (big_n - cum_b))).cast(DEC),
+            cum_n < big_n,
+            (e.mult * gap * gap / (cum_n * (big_n - cum_n))).cast(DEC),
         )
-        staged = counts.select(
-            *gcols,
-            term.alias("_term"),
-            tot_a.alias("_ta"),
-            tot_b.alias("_tb"),
-        )
-        agg = staged.groupBy(*gcols).agg(
-            F.first("_ta").alias("n_ref"),
-            F.first("_tb").alias("n_cur"),
-            F.sum("_term").cast("double").alias("_s"),
-        )
-        return agg.select(
-            *gcols,
-            "n_ref",
-            "n_cur",
-            F.when(
-                (F.col("n_ref") > 0) & (F.col("n_cur") > 0),
-                F.round(
-                    F.col("_s")
-                    / (
-                        F.col("n_ref").cast("double")
-                        * F.col("n_cur").cast("double")
-                    ),
-                    6,
-                ),
-            ).alias(out),
-        )
+        return {"_s": (term, _dsum)}
 
-    return _t
+    scale = F.col("n_ref").cast("double") * F.col("n_cur").cast("double")
+    return _ecdf_statistic(
+        value_col,
+        is_current,
+        group_by,
+        terms,
+        {out: F.round(F.col("_s") / scale, 6)},
+    )
 
 
 def energy_distance(
@@ -549,43 +486,15 @@ def energy_distance(
     In one dimension every expectation is an ECDF integral — no pair
     join: E|X−Y| = ∫ [F_x(1−F_y) + F_y(1−F_x)] dt with piecewise-
     constant ECDFs, so each is a Σ over consecutive distinct pooled
-    values of Δv·(cdf products).  Identical plan to
-    :func:`wasserstein_1d`: ONE (group, value) count aggregation,
-    ordered windows for the inclusive cumulative fractions, one
-    ``lead`` for Δv; the three integrand terms are evaluated from the
-    SAME window pass (shared-pass rule), 6 dp-decimal-rounded before
-    their order-free sums.  Groups with an empty side emit NULL.
-    Returns ``group_by…, n_ref, n_cur, e2, energy`` (E² can dip
-    microscopically negative from rounding; energy clamps at 0).
+    values of Δv·(cdf products).  Runs the shared ECDF pass (module
+    doc); the three integrand terms come from the SAME window pass
+    (shared-pass rule), decimal-rounded before their order-free sums.
+    Groups with an empty side emit NULL.  Returns ``group_by…, n_ref,
+    n_cur, e2, energy`` (E² can dip microscopically negative from
+    rounding; energy clamps at 0).
     """
-    gcols = _group_cols(group_by)
 
-    def _t(df: DataFrame) -> DataFrame:
-        cur = is_current.cast("int")
-        counts = (
-            df.where(F.col(value_col).isNotNull())
-            .groupBy(*gcols, F.col(value_col).alias("_v"))
-            .agg(
-                F.sum(F.lit(1) - cur).alias("_a"),
-                F.sum(cur).alias("_b"),
-            )
-        )
-        wg = Window.partitionBy(*gcols)
-        wo = wg.orderBy("_v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        wl = wg.orderBy("_v")
-        tot_a = F.sum("_a").over(wg)
-        tot_b = F.sum("_b").over(wg)
-        f_a = F.try_divide(
-            F.sum("_a").over(wo).cast("double"), tot_a.cast("double")
-        )
-        f_b = F.try_divide(
-            F.sum("_b").over(wo).cast("double"), tot_b.cast("double")
-        )
-        dv = F.lead("_v").over(wl).cast("double") - F.col("_v").cast(
-            "double"
-        )
+    def terms(e: _Ecdf) -> dict:
         one = F.lit(1.0)
         # DECIMAL(38,12) term casts, not the usual (38,6): dv carries
         # raw value differences (not pure rationals like KS/CvM gaps),
@@ -594,44 +503,26 @@ def energy_distance(
         # ~1e-13 exposure absorbed by the 6dp output round (the q79
         # rolling-beta precedent)
         dec12 = "decimal(38,12)"
-        t_xy = (
-            dv * (f_a * (one - f_b) + f_b * (one - f_a))
-        ).cast(dec12)
-        t_xx = (dv * (F.lit(2.0) * f_a * (one - f_a))).cast(dec12)
-        t_yy = (dv * (F.lit(2.0) * f_b * (one - f_b))).cast(dec12)
-        staged = counts.select(
-            *gcols,
-            t_xy.alias("_xy"),
-            t_xx.alias("_xx"),
-            t_yy.alias("_yy"),
-            tot_a.alias("_ta"),
-            tot_b.alias("_tb"),
-        )
-        agg = staged.groupBy(*gcols).agg(
-            F.first("_ta").alias("n_ref"),
-            F.first("_tb").alias("n_cur"),
-            F.sum("_xy").cast("double").alias("_exy"),
-            F.sum("_xx").cast("double").alias("_exx"),
-            F.sum("_yy").cast("double").alias("_eyy"),
-        )
-        e2 = (
-            F.lit(2.0) * F.col("_exy")
-            - F.col("_exx")
-            - F.col("_eyy")
-        )
-        ok = (F.col("n_ref") > 0) & (F.col("n_cur") > 0)
-        return agg.select(
-            *gcols,
-            "n_ref",
-            "n_cur",
-            F.when(ok, F.round(e2, 6)).alias("e2"),
-            F.when(
-                ok,
-                F.round(F.sqrt(F.greatest(e2, F.lit(0.0))), 6),
-            ).alias(out),
-        )
+        t_xy = e.dv * (e.f_a * (one - e.f_b) + e.f_b * (one - e.f_a))
+        t_xx = e.dv * (F.lit(2.0) * e.f_a * (one - e.f_a))
+        t_yy = e.dv * (F.lit(2.0) * e.f_b * (one - e.f_b))
+        return {
+            "_xy": (t_xy.cast(dec12), _dsum),
+            "_xx": (t_xx.cast(dec12), _dsum),
+            "_yy": (t_yy.cast(dec12), _dsum),
+        }
 
-    return _t
+    e2 = F.lit(2.0) * F.col("_xy") - F.col("_xx") - F.col("_yy")
+    return _ecdf_statistic(
+        value_col,
+        is_current,
+        group_by,
+        terms,
+        {
+            "e2": F.round(e2, 6),
+            out: F.round(F.sqrt(F.greatest(e2, F.lit(0.0))), 6),
+        },
+    )
 
 
 def page_hinkley(
@@ -735,18 +626,43 @@ def drift_report(
     question every feature-drift review actually asks: "all four,
     side by side".
 
-    Plan: PSI keeps its bin aggregation; the three ECDF statistics
-    are computed from ONE shared (group, value) count shuffle and ONE
-    ordered window pass — KS is the running max of the |gap|, W₁ the
-    Δv-weighted gap sum, CvM the multiplicity-weighted squared-gap
-    sum, all over the same cumulative columns — so the whole panel
-    costs one bin agg + one value-level count shuffle, NOT four
+    Plan: PSI keeps its bin aggregation; KS, W₁ and CvM are staged
+    from ONE shared ECDF pass (module doc) — the running max of the
+    |gap|, the Δv-weighted gap sum and the multiplicity-weighted
+    squared-gap sum over the same cumulative columns — so the whole
+    panel costs one bin agg + one value-level count shuffle, NOT four
     independent aggregations (Catalyst does not deduplicate the
     exchanges across union branches; sharing must be structural).
     Per-statistic determinism contracts and empty-side NULL fences
     match the standalone operators (q184/q255/q273 semantics).
     """
     gcols = _group_cols(group_by)
+
+    def terms(e: _Ecdf) -> dict:
+        gap = e.f_a - e.f_b
+        w1_term = F.coalesce(
+            (F.abs(gap) * e.dv).cast(DEC), F.lit(0.0).cast(DEC)
+        )
+        return {
+            "_ksgap": (F.abs(gap), F.max),
+            "_w1": (w1_term, _dsum),
+            "_cvm": ((e.mult * gap * gap).cast(DEC), _dsum),
+        }
+
+    na = F.col("n_ref").cast("double")
+    nb = F.col("n_cur").cast("double")
+    scale = na * nb / ((na + nb) * (na + nb))
+    ecdf = _ecdf_statistic(
+        value_col,
+        is_current,
+        group_by,
+        terms,
+        {
+            "ks": F.col("_ksgap"),
+            "w1": F.col("_w1"),
+            "cvm": F.round(scale * F.col("_cvm"), 6),
+        },
+    )
 
     def _t(df: DataFrame) -> DataFrame:
         p = df.transform(
@@ -764,82 +680,20 @@ def drift_report(
             F.lit("psi").alias("metric"),
             F.col("psi").cast("double").alias("statistic"),
         )
-        cur = is_current.cast("int")
-        counts = (
-            df.where(F.col(value_col).isNotNull())
-            .groupBy(*gcols, F.col(value_col).alias("_v"))
-            .agg(
-                F.sum(F.lit(1) - cur).alias("_a"),
-                F.sum(cur).alias("_b"),
-            )
-        )
-        wg = Window.partitionBy(*gcols)
-        wo = wg.orderBy("_v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        tot_a = F.sum("_a").over(wg)
-        tot_b = F.sum("_b").over(wg)
-        f_a = F.try_divide(
-            F.sum("_a").over(wo).cast("double"), tot_a.cast("double")
-        )
-        f_b = F.try_divide(
-            F.sum("_b").over(wo).cast("double"), tot_b.cast("double")
-        )
-        gap = f_a - f_b
-        dv = F.lead("_v").over(wg.orderBy("_v")).cast("double") - F.col(
-            "_v"
-        ).cast("double")
-        w1_term = F.coalesce(
-            (F.abs(gap) * dv).cast(DEC), F.lit(0.0).cast(DEC)
-        )
-        wmult = (F.col("_a") + F.col("_b")).cast("double")
-        cvm_term = (wmult * gap * gap).cast(DEC)
-        staged = counts.select(
-            *gcols,
-            F.abs(gap).alias("_ksgap"),
-            w1_term.alias("_w1"),
-            cvm_term.alias("_cvm"),
-            tot_a.alias("_ta"),
-            tot_b.alias("_tb"),
-        )
-        agg = staged.groupBy(*gcols).agg(
-            F.first("_ta").alias("_na"),
-            F.first("_tb").alias("_nb"),
-            F.max("_ksgap").alias("_ks"),
-            F.sum("_w1").cast("double").alias("_sw1"),
-            F.sum("_cvm").cast("double").alias("_scvm"),
-        )
-        na = F.col("_na").cast("double")
-        nb = F.col("_nb").cast("double")
-        ok = (F.col("_na") > 0) & (F.col("_nb") > 0)
-        scale = na * nb / ((na + nb) * (na + nb))
         # melt via ONE explode, not three union branches — union
         # branches would re-evaluate the counts+window subtree per
         # metric (the association_rules re-evaluation trap)
-        melted = agg.select(
+        melted = df.transform(ecdf).select(
             *gcols,
             F.explode(
                 F.array(
-                    F.struct(
-                        F.lit("ks").alias("metric"),
-                        F.when(ok, F.col("_ks"))
-                        .cast("double")
-                        .alias("statistic"),
-                    ),
-                    F.struct(
-                        F.lit("w1").alias("metric"),
-                        F.when(ok, F.col("_sw1"))
-                        .cast("double")
-                        .alias("statistic"),
-                    ),
-                    F.struct(
-                        F.lit("cvm").alias("metric"),
-                        F.when(
-                            ok, F.round(scale * F.col("_scvm"), 6)
+                    *[
+                        F.struct(
+                            F.lit(m).alias("metric"),
+                            F.col(m).cast("double").alias("statistic"),
                         )
-                        .cast("double")
-                        .alias("statistic"),
-                    ),
+                        for m in ("ks", "w1", "cvm")
+                    ]
                 )
             ).alias("_m"),
         ).select(

@@ -21,7 +21,11 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from btc_usdt_etl_pipeline_spark.functions import DEC
+from btc_usdt_etl_pipeline_spark.functions import (
+    DEC,
+    join_groups,
+    null_safe_join,
+)
 
 #: Inverse-CDF thresholds for Poisson(1): P(X<=k) for k = 0..4.
 #: A 24-bit uniform from the portable hash is compared against these
@@ -251,8 +255,6 @@ def trimmed_mean(
     gcols = [group_by] if group_by else []
 
     def _t(df: DataFrame) -> DataFrame:
-        from btc_usdt_etl_pipeline_spark.functions import attach_scalar
-
         src = df.where(F.col(value_col).isNotNull())
         bounds = src.groupBy(*gcols).agg(
             F.round(F.percentile(value_col, F.lit(float(lo_q))), 6).alias(
@@ -262,12 +264,9 @@ def trimmed_mean(
                 "_hi"
             ),
         )
-        if gcols:
-            joined = src.join(F.broadcast(bounds), gcols)
-        else:
-            joined = attach_scalar(
-                src, bounds, F.col(value_col), F.col("_lo")
-            )
+        joined = join_groups(
+            src, bounds, gcols, probes=(F.col(value_col), F.col("_lo"))
+        )
         kept = joined.where(
             (F.col(value_col) >= F.col("_lo"))
             & (F.col(value_col) <= F.col("_hi"))
@@ -481,6 +480,33 @@ def kaplan_meier(
     return _t
 
 
+def _ranked(
+    df: DataFrame, value_col: str, group_col: str, partition_by: str | None
+) -> tuple[DataFrame, Column]:
+    """The ranked-sample preamble of :func:`mann_whitney_u`,
+    :func:`kruskal_wallis_h` and :func:`dunn_posthoc`: the rows with a
+    value and a group, with tie-averaged ranks over each partition's
+    combined sample (:func:`…windows.group_ranks`), and the tie-mass
+    aggregate over them.  A tie block of size t contributes t rows each
+    carrying ``cnt = t``, so Σ_rows(cnt² − 1) = Σ_blocks(t³ − t), and
+    ``cnt`` is recovered exactly from the half-integer identity
+    ``cnt = 2·(avg_rank − min_rank) + 1``; the terms are integers
+    < 2^53, summed through the decimal idiom."""
+    from btc_usdt_etl_pipeline_spark.operators.windows import group_ranks
+
+    gcols = [partition_by] if partition_by else []
+    d = df.where(
+        F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
+    ).select(*gcols, value_col, group_col)
+    r = d.transform(group_ranks(value_col, group_by=partition_by))
+    cnt = (
+        F.lit(2.0)
+        * (F.col("avg_rank") - F.col("min_rank").cast("double"))
+        + F.lit(1.0)
+    )
+    return r, F.sum((cnt * cnt - F.lit(1.0)).cast(DEC)).cast("double")
+
+
 def mann_whitney_u(
     value_col: str,
     group_col: str,
@@ -504,10 +530,8 @@ def mann_whitney_u(
     are one ordered window per partition (hot-partition single-task
     ceiling), past it the bucketed-rank plan (one row-scale shuffle,
     no full-partition sort task), with BIT-IDENTICAL output.  The tie term
-    needs no second pass: a tie block of size t contributes t rows each
-    carrying ``cnt = t``, so Σ_rows(cnt² − 1) = Σ_blocks(t³ − t), and
-    ``cnt`` is recovered exactly from the half-integer identity
-    ``cnt = 2·(avg_rank − min_rank) + 1``.
+    needs no second pass (``_ranked`` recovers each row's tie-block size
+    from its ranks).
 
     Rank sums are exact half-integers through the decimal idiom; the
     only transcendental is the final IEEE sqrt, z pinned at 6 dp.
@@ -515,23 +539,11 @@ def mann_whitney_u(
     σ = 0) emit NULL z.  Rows with a NULL value or NULL group are
     dropped.  Returns ``partition…, n_a, n_b, u_a, u_b, z``.
     """
-    from btc_usdt_etl_pipeline_spark.operators.windows import group_ranks
-
     gcols = [partition_by] if partition_by else []
 
     def _t(df: DataFrame) -> DataFrame:
-        d = df.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        ).select(*gcols, value_col, group_col)
-        r = d.transform(
-            group_ranks(value_col, group_by=partition_by)
-        )
+        r, ties = _ranked(df, value_col, group_col, partition_by)
         is_a = F.col(group_col) == F.lit(group_a)
-        cnt = (
-            F.lit(2.0)
-            * (F.col("avg_rank") - F.col("min_rank").cast("double"))
-            + F.lit(1.0)
-        )
         agg = r.groupBy(*gcols).agg(
             F.count(F.lit(1)).alias("_n"),
             F.sum(is_a.cast("long")).alias("n_a"),
@@ -541,10 +553,7 @@ def mann_whitney_u(
             )
             .cast("double")
             .alias("_ra"),
-            # Σ_rows(cnt²−1) = Σ_tie-blocks(t³−t); integers < 2^53
-            F.sum((cnt * cnt - F.lit(1.0)).cast(DEC))
-            .cast("double")
-            .alias("_ties"),
+            ties.alias("_ties"),
         )
         n = F.col("_n").cast("double")
         na = F.col("n_a").cast("double")
@@ -602,30 +611,16 @@ def kruskal_wallis_h(
     tied → C = 0) emit NULL ``h``.  Rows with a NULL value or NULL
     group are dropped.  Returns ``partition…, n, k, h``.
     """
-    from btc_usdt_etl_pipeline_spark.operators.windows import group_ranks
-
     gcols = [partition_by] if partition_by else []
 
     def _t(df: DataFrame) -> DataFrame:
-        d = df.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        ).select(*gcols, value_col, group_col)
-        r = d.transform(
-            group_ranks(value_col, group_by=partition_by)
-        )
-        cnt = (
-            F.lit(2.0)
-            * (F.col("avg_rank") - F.col("min_rank").cast("double"))
-            + F.lit(1.0)
-        )
+        r, ties = _ranked(df, value_col, group_col, partition_by)
         per_g = r.groupBy(*gcols, group_col).agg(
             F.count(F.lit(1)).alias("_ng"),
             F.sum(F.col("avg_rank").cast(DEC))
             .cast("double")
             .alias("_rg"),
-            F.sum((cnt * cnt - F.lit(1.0)).cast(DEC))
-            .cast("double")
-            .alias("_tg"),
+            ties.alias("_tg"),
         )
         agg = per_g.groupBy(*gcols).agg(
             F.sum("_ng").alias("n"),
@@ -653,6 +648,63 @@ def kruskal_wallis_h(
         return agg.select(*gcols, "n", "k", out.alias("h"))
 
     return _t
+
+
+def _deviation_anova(
+    d: DataFrame,
+    centers: DataFrame,
+    center: str,
+    keys: list[str],
+    x: Column,
+    *,
+    count: bool,
+) -> tuple[DataFrame, list[Column], Column]:
+    """The centred-deviation ANOVA of :func:`brown_forsythe_f` and
+    :func:`compare_groups` (median centre) and :func:`bartlett_levene`
+    (mean centre): one-way ANOVA on ``z = |x − c_g|``, with each group's
+    centre column ``center`` of ``centers`` broadcast back null-safely
+    on ``keys`` (partition columns plus the group column).  Returns
+
+    * the per-group Σz ``_sz`` and Σz² ``_szz`` of ``d``, led by the
+      group size ``_ng`` when ``count``;
+    * the per-partition rollup aggregates ``_tz`` = Σz, ``_sb`` =
+      Σ(Σz_g)²/n_g and ``_tzz`` = Σz², over per-group rows carrying
+      ``_ng``, ``_sz`` and ``_szz``;
+    * the F column over ``n``, ``k`` and that rollup, with
+      SSB = _sb − _tz²/N and SSW = _tzz − _sb: NULL unless k ≥ 2,
+      N > k and SSW > 0, pinned at 6 dp.
+
+    Every sum runs through the decimal idiom, so both engines replay
+    the identical tree on identical doubles."""
+    z = F.abs(x - F.col(center))
+    per_g = (
+        null_safe_join(d, F.broadcast(centers.select(*keys, center)), keys)
+        .groupBy(*keys)
+        .agg(
+            *([F.count(F.lit(1)).alias("_ng")] if count else []),
+            F.sum(z.cast(DEC)).cast("double").alias("_sz"),
+            F.sum((z * z).cast(DEC)).cast("double").alias("_szz"),
+        )
+    )
+    rollup = [
+        F.sum(F.col("_sz").cast(DEC)).cast("double").alias("_tz"),
+        F.sum(
+            (F.col("_sz") * F.col("_sz") / F.col("_ng").cast("double"))
+            .cast(DEC)
+        )
+        .cast("double")
+        .alias("_sb"),
+        F.sum(F.col("_szz").cast(DEC)).cast("double").alias("_tzz"),
+    ]
+    n = F.col("n").cast("double")
+    k = F.col("k").cast("double")
+    ssb = F.col("_sb") - F.col("_tz") * F.col("_tz") / n
+    ssw = F.col("_tzz") - F.col("_sb")
+    fstat = F.when(
+        (F.col("k") > 1) & (F.col("n") > F.col("k")) & (ssw > 0),
+        F.round((ssb / (k - F.lit(1.0))) / (ssw / (n - k)), 6),
+    )
+    return per_g, rollup, fstat
 
 
 def brown_forsythe_f(
@@ -683,47 +735,17 @@ def brown_forsythe_f(
     gcols = [partition_by] if partition_by else []
 
     def _t(df: DataFrame) -> DataFrame:
-        from btc_usdt_etl_pipeline_spark.functions import null_safe_join
-
         d = df.where(
             F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
         ).select(*gcols, group_col, value_col)
         med = d.groupBy(*gcols, group_col).agg(
             F.round(F.percentile(value_col, F.lit(0.5)), 6).alias("_med")
         )
-        z = F.abs(F.col(value_col) - F.col("_med"))
-        per_g = (
-            null_safe_join(d, F.broadcast(med), [*gcols, group_col])
-            .groupBy(*gcols, group_col)
-            .agg(
-                F.count(F.lit(1)).alias("_ng"),
-                F.sum(z.cast(DEC)).cast("double").alias("_sz"),
-                F.sum((z * z).cast(DEC)).cast("double").alias("_szz"),
-            )
+        per_g, rollup, fstat = _deviation_anova(
+            d, med, "_med", [*gcols, group_col], F.col(value_col), count=True
         )
         agg = per_g.groupBy(*gcols).agg(
-            F.sum("_ng").alias("n"),
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.col("_sz").cast(DEC)).cast("double").alias("_tz"),
-            F.sum(
-                (
-                    F.col("_sz") * F.col("_sz")
-                    / F.col("_ng").cast("double")
-                ).cast(DEC)
-            )
-            .cast("double")
-            .alias("_sb"),
-            F.sum(F.col("_szz").cast(DEC)).cast("double").alias("_tzz"),
-        )
-        n = F.col("n").cast("double")
-        k = F.col("k").cast("double")
-        ssb = F.col("_sb") - F.col("_tz") * F.col("_tz") / n
-        ssw = F.col("_tzz") - F.col("_sb")
-        fstat = F.when(
-            (F.col("k") > 1) & (F.col("n") > F.col("k")) & (ssw > 0),
-            F.round(
-                (ssb / (k - F.lit(1.0))) / (ssw / (n - k)), 6
-            ),
+            F.sum("_ng").alias("n"), F.count(F.lit(1)).alias("k"), *rollup
         )
         return agg.select(
             *gcols,
@@ -863,8 +885,6 @@ def compare_groups(
     DEC12 = "decimal(38,12)"
 
     def _t(df: DataFrame) -> DataFrame:
-        from btc_usdt_etl_pipeline_spark.functions import null_safe_join
-
         d = df.where(
             F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
         ).select(*gcols, group_col, F.col(value_col).alias("_v"))
@@ -877,18 +897,8 @@ def compare_groups(
             F.round(F.percentile("_v", F.lit(0.5)), 6).alias("_med"),
         )
         # pass 2: median-centered deviation moments (BF's z pass)
-        z = F.abs(x - F.col("_med"))
-        pz = (
-            null_safe_join(
-                d,
-                F.broadcast(pg.select(*gcols, group_col, "_med")),
-                [*gcols, group_col],
-            )
-            .groupBy(*gcols, group_col)
-            .agg(
-                F.sum(z.cast(DEC)).cast("double").alias("_sz"),
-                F.sum((z * z).cast(DEC)).cast("double").alias("_szz"),
-            )
+        pz, bf_rollup, bf_f = _deviation_anova(
+            d, pg, "_med", [*gcols, group_col], x, count=False
         )
         per_g = null_safe_join(pg, pz, [*gcols, group_col])
         ng = F.col("_ng").cast("double")
@@ -927,17 +937,8 @@ def compare_groups(
             F.sum("_t0").cast("double").alias("_T0"),
             F.sum("_t1").cast("double").alias("_T1"),
             F.sum("_t2").cast("double").alias("_T2"),
-            # BF rollup — identical tree to brown_forsythe_f
-            F.sum(F.col("_sz").cast(DEC)).cast("double").alias("_tz"),
-            F.sum(
-                (F.col("_sz") * F.col("_sz") / F.col("_ng").cast("double"))
-                .cast(DEC)
-            )
-            .cast("double")
-            .alias("_sb"),
-            F.sum(F.col("_szz").cast(DEC)).cast("double").alias("_tzz"),
+            *bf_rollup,
         )
-        n = F.col("n").cast("double")
         k = F.col("k").cast("double")
         a_num = (
             F.col("_Swmm") - F.col("_Swm") * F.col("_Swm") / F.col("_W")
@@ -965,12 +966,6 @@ def compare_groups(
         welch_dof2 = F.when(
             ok_w,
             F.round((k * k - F.lit(1.0)) / (F.lit(3.0) * bsum), 6),
-        )
-        ssb = F.col("_sb") - F.col("_tz") * F.col("_tz") / n
-        ssw = F.col("_tzz") - F.col("_sb")
-        bf_f = F.when(
-            (F.col("k") > 1) & (F.col("n") > F.col("k")) & (ssw > 0),
-            F.round((ssb / (k - F.lit(1.0))) / (ssw / (n - k)), 6),
         )
         return agg.select(
             *gcols,
@@ -1329,11 +1324,7 @@ def cohens_kappa(
                 ).alias("_pe_num")
             )
         )
-        joined = (
-            base.join(pe_tab, gcols)
-            if gcols
-            else base.crossJoin(pe_tab)
-        )
+        joined = join_groups(base, pe_tab, gcols)
         n = F.col("n").cast("double")
         po = F.col("_agree").cast("double") / n
         pe = F.coalesce(F.col("_pe_num"), F.lit(0)).cast("double") / (
@@ -1660,10 +1651,7 @@ def fleiss_kappa(
         pe_tab = marg.groupBy(*gcols).agg(
             F.sum(F.col("_cj") * F.col("_cj")).alias("_pe_num")
         )
-        joined = (
-            roll.join(pe_tab, gcols) if gcols
-            else roll.crossJoin(pe_tab)
-        )
+        joined = join_groups(roll, pe_tab, gcols)
         const_n = (F.col("_nmin") == F.col("_nmax")) & (
             F.col("_nmin") > 1
         )
@@ -1795,14 +1783,10 @@ def chi_square_independence(
         cells = d.groupBy(*gcols, col_a, col_b).agg(
             F.count(F.lit(1)).alias("_o")
         )
-        grid = (
-            cells.select(*gcols, col_a)
-            .distinct()
-            .join(cells.select(*gcols, col_b).distinct(), gcols or None)
-            if gcols
-            else cells.select(col_a)
-            .distinct()
-            .crossJoin(cells.select(col_b).distinct())
+        grid = join_groups(
+            cells.select(*gcols, col_a).distinct(),
+            cells.select(*gcols, col_b).distinct(),
+            gcols,
         )
         dense = grid.join(cells, [*gcols, col_a, col_b], "left").select(
             *gcols,
@@ -1936,10 +1920,8 @@ def krippendorff_alpha(
         )
         # Left joins: a partition with NO pairable item still emits its
         # row (NULL alpha) instead of vanishing.
-        joined = (
-            n_items.join(do, gcols, "left").join(de, gcols, "left")
-            if gcols
-            else n_items.crossJoin(do).crossJoin(de)
+        joined = join_groups(
+            join_groups(n_items, do, gcols, "left"), de, gcols, "left"
         )
         nn = F.col("_n").cast("double")
         d_o = F.col("_do_num") / nn
@@ -2319,14 +2301,10 @@ def kendall_tau_b(
         cells = d.groupBy(*gcols, col_x, col_y).agg(
             F.count(F.lit(1)).alias("_o")
         )
-        grid = (
-            cells.select(*gcols, col_x)
-            .distinct()
-            .join(cells.select(*gcols, col_y).distinct(), gcols or None)
-            if gcols
-            else cells.select(col_x)
-            .distinct()
-            .crossJoin(cells.select(col_y).distinct())
+        grid = join_groups(
+            cells.select(*gcols, col_x).distinct(),
+            cells.select(*gcols, col_y).distinct(),
+            gcols,
         )
         dense = grid.join(cells, [*gcols, col_x, col_y], "left").select(
             *gcols,
@@ -2369,7 +2347,6 @@ def kendall_tau_b(
             (F.col("_o") * sw).alias("_c"),
             (F.col("_o") * ew).alias("_d"),
         )
-        wg = Window.partitionBy(*gcols)
         rx = F.sum("_o").over(wx)
         cy = F.sum("_o").over(wy)
         # marginal tie masses, each level counted once via a
@@ -2918,6 +2895,25 @@ def mcnemar_test(
     return _t
 
 
+def _complete_blocks(
+    d: DataFrame, gcols: list[str], item_col: str, k: int, *item_aggs
+) -> tuple[DataFrame, DataFrame]:
+    """The complete-block preamble of :func:`cochran_q` and
+    :func:`friedman_test`: the per-(partition, item) rollup of ``d`` —
+    its row count ``_cnt`` plus ``item_aggs`` — kept for the items
+    rated by all ``k`` declared treatments, and the per-partition
+    count of the other items, ``n_dropped``."""
+    per_item = d.groupBy(*gcols, item_col).agg(
+        F.count(F.lit(1)).alias("_cnt"), *item_aggs
+    )
+    dropped = (
+        per_item.where(F.col("_cnt") != k)
+        .groupBy(*gcols)
+        .agg(F.count(F.lit(1)).alias("n_dropped"))
+    )
+    return per_item.where(F.col("_cnt") == k), dropped
+
+
 def cochran_q(
     item_col: str,
     treatment_col: str,
@@ -2965,18 +2961,13 @@ def cochran_q(
             treatment_col,
             s.cast("long").alias("_s"),
         )
-        per_item = d.groupBy(*gcols, item_col).agg(
-            F.count(F.lit(1)).alias("_cnt"),
-            F.sum("_s").alias("_li"),
+        complete, dropped = _complete_blocks(
+            d, gcols, item_col, k, F.sum("_s").alias("_li")
         )
-        complete = per_item.where(F.col("_cnt") == k)
         item_side = complete.groupBy(*gcols).agg(
             F.count(F.lit(1)).alias("n_items"),
             F.sum("_li").alias("t"),
             F.sum(F.col("_li") * F.col("_li")).alias("_sli2"),
-        )
-        dropped = per_item.where(F.col("_cnt") != k).groupBy(*gcols).agg(
-            F.count(F.lit(1)).alias("n_dropped")
         )
         g = (
             d.join(
@@ -2990,15 +2981,10 @@ def cochran_q(
         treat_side = g.groupBy(*gcols).agg(
             F.sum(F.col("_gj") * F.col("_gj")).alias("_sgj2")
         )
-        joined = item_side.join(treat_side, gcols) if gcols else (
-            item_side.crossJoin(treat_side)
-        )
         # the global (no-partition) dropped agg always yields one row
         # (count 0 on empty input), so a plain crossJoin is safe
-        joined = (
-            joined.join(dropped, gcols, "left")
-            if gcols
-            else joined.crossJoin(dropped)
+        joined = join_groups(
+            join_groups(item_side, treat_side, gcols), dropped, gcols, "left"
         )
         kk = F.lit(k).cast("long")
         num = (kk - 1) * (kk * F.col("_sgj2") - F.col("t") * F.col("t"))
@@ -3091,10 +3077,10 @@ def permutation_test_diff(
         r = F.explode(
             F.sequence(F.lit(0), F.lit(replicates - 1))
         ).alias("_r")
-        ex = d.select(*gcols, "_id", "_x", r).join(
-            F.broadcast(obs.select(*gcols, "_pa")), gcols or None
-        ) if gcols else d.select("_id", "_x", r).crossJoin(
-            F.broadcast(obs.select("_pa"))
+        ex = join_groups(
+            d.select(*gcols, "_id", "_x", r),
+            F.broadcast(obs.select(*gcols, "_pa")),
+            gcols,
         )
         if portable:
             h = portable_hash60(
@@ -3132,12 +3118,8 @@ def permutation_test_diff(
                 - F.col("_rb") / F.col("_cb").cast("double"),
             )
         )
-        joined = (
-            rep.join(F.broadcast(obs.select(*gcols, "_dobs")), gcols)
-            if gcols
-            else rep.crossJoin(
-                F.broadcast(obs.select("_dobs"))
-            )
+        joined = join_groups(
+            rep, F.broadcast(obs.select(*gcols, "_dobs")), gcols
         )
         repagg = joined.groupBy(*gcols).agg(
             F.count(F.lit(1)).alias("n_replicates"),
@@ -3148,11 +3130,7 @@ def permutation_test_diff(
         )
         # left join from obs: a degenerate partition (one side empty →
         # zero valid replicates) still emits its row with NULL stats
-        out = (
-            obs.join(repagg, gcols, "left")
-            if gcols
-            else obs.crossJoin(repagg)
-        )
+        out = join_groups(obs, repagg, gcols, "left")
         ok = F.col("_dobs").isNotNull() & (
             F.coalesce("n_replicates", F.lit(0)) > 0
         )
@@ -3231,18 +3209,12 @@ def friedman_test(
             treatment_col,
             F.col(value_col).cast("double").alias("_v"),
         )
-        per_item_cnt = d.groupBy(*gcols, item_col).agg(
-            F.count(F.lit(1)).alias("_cnt")
+        complete, dropped = _complete_blocks(d, gcols, item_col, k)
+        dd = d.join(
+            complete.select(*gcols, item_col),
+            [*gcols, item_col],
+            "left_semi",
         )
-        complete = per_item_cnt.where(F.col("_cnt") == k).select(
-            *gcols, item_col
-        )
-        dropped = (
-            per_item_cnt.where(F.col("_cnt") != k)
-            .groupBy(*gcols)
-            .agg(F.count(F.lit(1)).alias("n_dropped"))
-        )
-        dd = d.join(complete, [*gcols, item_col], "left_semi")
         wi = Window.partitionBy(*gcols, item_col).orderBy("_v")
         wt = Window.partitionBy(*gcols, item_col, "_v")
         mr = F.rank().over(wi)
@@ -3268,15 +3240,8 @@ def friedman_test(
             .cast("double")
             .alias("_a"),
         )
-        joined = (
-            item_side.join(treat_side, gcols)
-            if gcols
-            else item_side.crossJoin(treat_side)
-        )
-        joined = (
-            joined.join(dropped, gcols, "left")
-            if gcols
-            else joined.crossJoin(dropped)
+        joined = join_groups(
+            join_groups(item_side, treat_side, gcols), dropped, gcols, "left"
         )
         n = F.col("n_items").cast("double")
         kk = F.lit(float(k))
@@ -3341,7 +3306,7 @@ def mann_kendall(
             *gcols, F.col("_t").alias("_tb"), F.col("_x").alias("_xb")
         )
         pairs = (
-            (a.join(b, gcols) if gcols else a.crossJoin(b))
+            join_groups(a, b, gcols)
             .where(F.col("_ta") < F.col("_tb"))
             .select(
                 *gcols,
@@ -3372,11 +3337,7 @@ def mann_kendall(
                 ).alias("_tsum"),
             )
         )
-        joined = (
-            ties.join(psums, gcols)
-            if gcols
-            else ties.crossJoin(psums)
-        )
+        joined = join_groups(ties, psums, gcols)
         n = F.col("n_points").cast("double")
         var = (
             n * (n - 1) * (2 * n + 5)
@@ -3523,22 +3484,10 @@ def dunn_posthoc(
     ``partition…, group_i, group_j, n_i, n_j, z, p, bh_rank,
     m_tests, q_value, rejected``.
     """
-    from btc_usdt_etl_pipeline_spark.operators.windows import group_ranks
-
     gcols = [partition_by] if partition_by else []
 
     def _t(df: DataFrame) -> DataFrame:
-        d = df.where(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        ).select(*gcols, value_col, group_col)
-        r = d.transform(
-            group_ranks(value_col, group_by=partition_by)
-        )
-        cnt = (
-            F.lit(2.0)
-            * (F.col("avg_rank") - F.col("min_rank").cast("double"))
-            + F.lit(1.0)
-        )
+        r, ties = _ranked(df, value_col, group_col, partition_by)
         per_group = r.groupBy(*gcols, group_col).agg(
             F.count(F.lit(1)).alias("_ni"),
             F.sum(F.col("avg_rank").cast(DEC))
@@ -3547,9 +3496,7 @@ def dunn_posthoc(
         )
         part = r.groupBy(*gcols).agg(
             F.count(F.lit(1)).alias("_n"),
-            F.sum((cnt * cnt - F.lit(1.0)).cast(DEC))
-            .cast("double")
-            .alias("_ties"),
+            ties.alias("_ties"),
         )
         gi = per_group.select(
             *gcols,
@@ -3563,15 +3510,10 @@ def dunn_posthoc(
             F.col("_ni").alias("n_j"),
             F.col("_ri").alias("_rj"),
         )
-        pairs = (
-            (gi.join(gj, gcols) if gcols else gi.crossJoin(gj))
-            .where(F.col("group_i") < F.col("group_j"))
+        pairs = join_groups(gi, gj, gcols).where(
+            F.col("group_i") < F.col("group_j")
         )
-        pairs = (
-            pairs.join(part, gcols)
-            if gcols
-            else pairs.crossJoin(part)
-        )
+        pairs = join_groups(pairs, part, gcols)
         n = F.col("_n").cast("double")
         sig2 = n * (n + 1) / F.lit(12.0) - F.col("_ties") / (
             F.lit(12.0) * (n - 1)
@@ -3860,8 +3802,6 @@ def bartlett_levene(
     gcols = [partition_by] if partition_by else []
 
     def _t(df: DataFrame) -> DataFrame:
-        from btc_usdt_etl_pipeline_spark.functions import null_safe_join
-
         d = df.where(
             F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
         ).select(*gcols, group_col, value_col)
@@ -3919,39 +3859,10 @@ def bartlett_levene(
             .alias("_srec"),
         )
         # Levene second pass: |x - mean_g| ANOVA
-        z = F.abs(x - F.col("_mean"))
-        lev_g = (
-            null_safe_join(
-                d,
-                F.broadcast(
-                    gstats.select(*gcols, group_col, "_mean")
-                ),
-                [*gcols, group_col],
-            )
-            .groupBy(*gcols, group_col)
-            .agg(
-                F.count(F.lit(1)).alias("_lng"),
-                F.sum(z.cast(DEC)).cast("double").alias("_sz"),
-                F.sum((z * z).cast(DEC)).cast("double").alias("_szz"),
-            )
+        lev_g, rollup, lev_f = _deviation_anova(
+            d, gstats, "_mean", [*gcols, group_col], x, count=True
         )
-        lev = lev_g.groupBy(*gcols).agg(
-            F.sum(F.col("_sz").cast(DEC)).cast("double").alias("_tz"),
-            F.sum(
-                (
-                    F.col("_sz") * F.col("_sz")
-                    / F.col("_lng").cast("double")
-                ).cast(DEC)
-            )
-            .cast("double")
-            .alias("_sb"),
-            F.sum(F.col("_szz").cast(DEC)).cast("double").alias("_tzz"),
-        )
-        joined = (
-            bart.join(lev, gcols)
-            if gcols
-            else bart.crossJoin(lev)
-        )
+        joined = join_groups(bart, lev_g.groupBy(*gcols).agg(*rollup), gcols)
         n = F.col("n").cast("double")
         k = F.col("k").cast("double")
         base_ok = (F.col("k") > 1) & (F.col("n") > F.col("k"))
@@ -3965,12 +3876,6 @@ def bartlett_levene(
             & (F.col("_minng") >= 2)
             & F.col("_minvi").isNotNull()
             & (F.col("_minvi") > 0)
-        )
-        ssb = F.col("_sb") - F.col("_tz") * F.col("_tz") / n
-        ssw = F.col("_tzz") - F.col("_sb")
-        lev_f = F.when(
-            base_ok & (ssw > 0),
-            F.round((ssb / (k - F.lit(1.0))) / (ssw / (n - k)), 6),
         )
         return joined.select(
             *gcols,
@@ -4133,18 +4038,11 @@ def wilson_proportions(
             F.sum(F.when(is_ctrl, F.col("n"))).alias("_nc"),
             F.sum(F.when(is_ctrl, F.col("conversions"))).alias("_cc"),
         )
-        if gcols:
-            joined = base.join(F.broadcast(ctrl), gcols, "left")
-        else:
-            # 1-row scalar attach as a BroadcastHashJoin (a bare
-            # crossJoin degrades to a nested loop)
-            from btc_usdt_etl_pipeline_spark.functions import (
-                attach_scalar,
-            )
-
-            joined = attach_scalar(
-                base, ctrl, F.col("n"), F.col("_nc")
-            )
+        # without partitions: a 1-row scalar attach as a
+        # BroadcastHashJoin (a bare crossJoin degrades to a nested loop)
+        joined = join_groups(
+            base, ctrl, gcols, "left", probes=(F.col("n"), F.col("_nc"))
+        )
         nv = F.col("n").cast("double")
         cv = F.col("conversions").cast("double")
         nc = F.col("_nc").cast("double")
@@ -4509,33 +4407,51 @@ def yuen_t(
     return _t
 
 
-def _simple_ols_moments():
-    """Shared decimal-moment aggregate list for the simple-OLS
-    diagnostics (:func:`durbin_watson`, :func:`cooks_distance`) over
-    staged ``(_x, _y)`` columns: n, Σx, Σy, Σx², Σxy, Σy² — each term
-    DECIMAL(38,6)-cast before the order-free sum, final doubles
-    identical across engines."""
+def _simple_ols_fit(
+    d: DataFrame,
+    gcols: list[str],
+    extra: Callable[[Column, Column, Column], list[Column]] | None = None,
+    keep: Column | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The simple-OLS fit of :func:`durbin_watson`,
+    :func:`cooks_distance` and :func:`breusch_pagan` over ``d``'s staged
+    ``(_x, _y)`` columns: one decimal-moment aggregation per group (n,
+    Σx, Σy, Σx², Σxy, Σy² — each term DECIMAL(38,6)-cast before the
+    order-free sum, final doubles identical across engines), then the
+    Cramer slope ``_b`` (NULL for a constant x) and intercept ``_a`` —
+    the SAME operation tree the SQL oracles render.  ``extra(n, slope,
+    intercept)`` adds per-group columns over the moments; ``keep``
+    filters the groups.  Returns ``(line, joined)``: the per-group
+    ``group_by…, _n, _b, _a, extra…`` and ``d`` with it broadcast back
+    (``attach_scalar`` without group columns)."""
+
     def m(e, name):
-        return F.sum(e.cast("decimal(38,6)")).cast("double").alias(name)
+        return F.sum(e.cast(DEC)).cast("double").alias(name)
 
     x, y = F.col("_x"), F.col("_y")
-    return [
+    mom = d.groupBy(*gcols).agg(
         F.count(F.lit(1)).alias("_n"),
         m(x, "_sx"),
         m(y, "_sy"),
         m(x * x, "_sxx"),
         m(x * y, "_sxy"),
         m(y * y, "_syy"),
-    ]
-
-
-def _ols_line(n, sx, sy, sxx, sxy):
-    """Cramer slope/intercept expression pair on moment doubles —
-    the SAME operation tree the SQL oracles render."""
-    det = n * sxx - sx * sx
-    slope = F.when(det != 0, (n * sxy - sx * sy) / det)
+    )
+    n = F.col("_n").cast("double")
+    sx, sy = F.col("_sx"), F.col("_sy")
+    det = n * F.col("_sxx") - sx * sx
+    slope = F.when(det != 0, (n * F.col("_sxy") - sx * sy) / det)
     intercept = (sy - slope * sx) / n
-    return slope, intercept, det
+    line = mom.select(
+        *gcols,
+        "_n",
+        slope.alias("_b"),
+        intercept.alias("_a"),
+        *(extra(n, slope, intercept) if extra else []),
+    )
+    if keep is not None:
+        line = line.where(keep)
+    return line, join_groups(d, line, gcols, probes=(x, F.col("_n")))
 
 
 def durbin_watson(
@@ -4586,25 +4502,7 @@ def durbin_watson(
             F.col(x_col).cast("double").alias("_x"),
             F.col(y_col).cast("double").alias("_y"),
         )
-        mom = d.groupBy(*gcols).agg(*_simple_ols_moments())
-        n = F.col("_n").cast("double")
-        slope, intercept, det = _ols_line(
-            n, F.col("_sx"), F.col("_sy"), F.col("_sxx"), F.col("_sxy")
-        )
-        mom = mom.select(
-            *gcols,
-            "_n",
-            slope.alias("_b"),
-            intercept.alias("_a"),
-        )
-        if gcols:
-            joined = d.join(F.broadcast(mom), gcols)
-        else:
-            from btc_usdt_etl_pipeline_spark.functions import (
-                attach_scalar,
-            )
-
-            joined = attach_scalar(d, mom, F.col("_x"), F.col("_n"))
+        line, joined = _simple_ols_fit(d, gcols)
         e = F.col("_y") - F.col("_a") - F.col("_b") * F.col("_x")
         staged = joined.select(
             *gcols, *ob, "_n", e.alias("_e")
@@ -4630,18 +4528,12 @@ def durbin_watson(
             .cast("double").alias("_den"),
         )
         ok = (F.col("n") >= 3) & (F.col("_den") > 0)
-        if gcols:
-            out = agg.join(
-                F.broadcast(mom.select(*gcols, "_b", "_a")), gcols
-            )
-        else:
-            from btc_usdt_etl_pipeline_spark.functions import (
-                attach_scalar,
-            )
-
-            out = attach_scalar(
-                agg, mom.select("_b", "_a"), F.col("n"), F.col("_b")
-            )
+        out = join_groups(
+            agg,
+            line.select(*gcols, "_b", "_a"),
+            gcols,
+            probes=(F.col("n"), F.col("_b")),
+        )
         return out.select(
             *gcols,
             "n",
@@ -4692,41 +4584,31 @@ def cooks_distance(
             F.col(x_col).cast("double").alias("_x"),
             F.col(y_col).cast("double").alias("_y"),
         )
-        mom = d.groupBy(*gcols).agg(*_simple_ols_moments())
-        n = F.col("_n").cast("double")
-        slope, intercept, det = _ols_line(
-            n, F.col("_sx"), F.col("_sy"), F.col("_sxx"), F.col("_sxy")
-        )
-        sse = (
-            F.col("_syy")
-            - intercept * F.col("_sy")
-            - slope * F.col("_sxy")
-        )
-        mom = mom.select(
-            *gcols,
-            "_n",
-            slope.alias("_b"),
-            intercept.alias("_a"),
-            (F.col("_sx") / n).alias("_xbar"),
-            (F.col("_sxx") - F.col("_sx") * F.col("_sx") / n).alias(
-                "_sxxc"
-            ),
-            F.when(
-                F.col("_n") > 2, sse / (n - F.lit(2.0))
-            ).alias("_s2"),
-        ).where(
-            F.col("_b").isNotNull()
-            & (F.col("_s2") > 0)
-            & (F.col("_sxxc") > 0)
-        )
-        if gcols:
-            joined = d.join(F.broadcast(mom), gcols)
-        else:
-            from btc_usdt_etl_pipeline_spark.functions import (
-                attach_scalar,
-            )
 
-            joined = attach_scalar(d, mom, F.col("_x"), F.col("_n"))
+        def extra(n, slope, intercept):
+            sse = (
+                F.col("_syy")
+                - intercept * F.col("_sy")
+                - slope * F.col("_sxy")
+            )
+            return [
+                (F.col("_sx") / n).alias("_xbar"),
+                (F.col("_sxx") - F.col("_sx") * F.col("_sx") / n).alias(
+                    "_sxxc"
+                ),
+                F.when(
+                    F.col("_n") > 2, sse / (n - F.lit(2.0))
+                ).alias("_s2"),
+            ]
+
+        _, joined = _simple_ols_fit(
+            d,
+            gcols,
+            extra,
+            keep=F.col("_b").isNotNull()
+            & (F.col("_s2") > 0)
+            & (F.col("_sxxc") > 0),
+        )
         e = F.col("_y") - F.col("_a") - F.col("_b") * F.col("_x")
         nn = F.col("_n").cast("double")
         h = (
@@ -4812,22 +4694,9 @@ def breusch_pagan(
             F.col(x_col).cast("double").alias("_x"),
             F.col(y_col).cast("double").alias("_y"),
         )
-        mom = d.groupBy(*gcols).agg(*_simple_ols_moments())
-        n = F.col("_n").cast("double")
-        slope, intercept, det = _ols_line(
-            n, F.col("_sx"), F.col("_sy"), F.col("_sxx"), F.col("_sxy")
+        _, joined = _simple_ols_fit(
+            d, gcols, keep=F.col("_b").isNotNull()
         )
-        mom = mom.select(
-            *gcols, "_n", slope.alias("_b"), intercept.alias("_a")
-        ).where(F.col("_b").isNotNull())
-        if gcols:
-            joined = d.join(F.broadcast(mom), gcols)
-        else:
-            from btc_usdt_etl_pipeline_spark.functions import (
-                attach_scalar,
-            )
-
-            joined = attach_scalar(d, mom, F.col("_x"), F.col("_n"))
         e = F.col("_y") - F.col("_a") - F.col("_b") * F.col("_x")
         g = (e * e).alias("_g")
         staged = joined.select(*gcols, "_x", g)
@@ -5029,14 +4898,9 @@ def engle_granger(
         line = mom.where((F.col("_n") > 3) & (det > 0)).select(
             *gcols, "_n", b.alias("_b"), a.alias("_a")
         )
-        if gcols:
-            joined = d.join(F.broadcast(line), gcols)
-        else:
-            from btc_usdt_etl_pipeline_spark.functions import (
-                attach_scalar,
-            )
-
-            joined = attach_scalar(d, line, F.col("_x"), F.col("_n"))
+        joined = join_groups(
+            d, line, gcols, probes=(F.col("_x"), F.col("_n"))
+        )
         e = F.col("_y") - F.col("_a") - F.col("_b") * F.col("_x")
         w = Window.partitionBy(*gcols).orderBy(*[F.col(c) for c in tcols])
         staged = joined.select(

@@ -14,6 +14,7 @@ from typing import Callable, Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from btc_usdt_etl_pipeline_spark.functions import join_groups
 from btc_usdt_etl_pipeline_spark.operators.dedup import shingles, tokens
 
 #: Tiny per-language stopword lists for the n-gram/stopword-hit heuristic.
@@ -1152,22 +1153,17 @@ def ngram_diversity(
                 F.count(F.lit(1)).alias(f"_types_{n}"),
                 F.sum("_c").alias(f"_occ_{n}"),
             )
-            if out is None:
-                out = roll
-            elif gcols:
-                out = out.join(roll, gcols, "outer")
-            else:
-                out = out.crossJoin(roll)
+            out = (
+                roll
+                if out is None
+                else join_groups(out, roll, gcols, "outer")
+            )
         token_count = (
             base.select(*gcols, F.size("_tok").alias("_nt"))
             .groupBy(*gcols)
             .agg(F.sum("_nt").alias("tokens"))
         )
-        joined = (
-            token_count.join(out, gcols, "left")
-            if gcols
-            else token_count.crossJoin(out)
-        )
+        joined = join_groups(token_count, out, gcols, "left")
         cols = [*gcols, "tokens"]
         for n in ns:
             cols.append(

@@ -38,6 +38,8 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from btc_usdt_etl_pipeline_spark.functions import join_groups
+
 #: Unkeyed series larger than this (Catalyst plan-stats estimate, no
 #: scan) switch to the chunked/bucketed parallel plan.  NOT resample's
 #: 1.5 GB sort threshold: a window op's single-task cost is the sort
@@ -1726,10 +1728,7 @@ def theil_sen(
         b = base.select(
             *gcols, F.col("_t").alias("_t2"), F.col("_v").alias("_v2")
         )
-        key = gcols if gcols else []
-        pairs = (
-            a.join(b, key) if key else a.crossJoin(b)
-        ).where(F.col("_t2") > F.col("_t1"))
+        pairs = join_groups(a, b, gcols).where(F.col("_t2") > F.col("_t1"))
         slope = (F.col("_v2") - F.col("_v1")) / (
             (F.col("_t2") - F.col("_t1")) / F.lit(float(time_scale))
         )
@@ -1784,14 +1783,9 @@ def ljung_box(
             .groupBy(*gcols)
             .agg(F.count(value_col).alias("_lbn"))
         )
-        if gcols:
-            joined = r.join(F.broadcast(cnt), gcols)
-        else:
-            from btc_usdt_etl_pipeline_spark.functions import (
-                attach_scalar,
-            )
-
-            joined = attach_scalar(r, cnt, F.col("lag"), F.col("_lbn"))
+        joined = join_groups(
+            r, cnt, gcols, probes=(F.col("lag"), F.col("_lbn"))
+        )
         nn = F.col("_lbn").cast("double")
         term = (
             F.col("acf") * F.col("acf")
@@ -2177,14 +2171,9 @@ def arch_lm(
                 / F.count(F.lit(1)).cast("double")
             ).alias("_mu")
         )
-        if gcols:
-            joined = d.join(F.broadcast(mean), gcols)
-        else:
-            from btc_usdt_etl_pipeline_spark.functions import (
-                attach_scalar,
-            )
-
-            joined = attach_scalar(d, mean, F.col("_x"), F.col("_mu"))
+        joined = join_groups(
+            d, mean, gcols, probes=(F.col("_x"), F.col("_mu"))
+        )
         e = F.col("_x") - F.col("_mu")
         staged = joined.select(
             *gcols, *ocols, "_mu", (e * e).alias("_g")
@@ -2348,11 +2337,7 @@ def hurst_aggvar(
         n_rows = d.groupBy(*gcols).agg(F.count(F.lit(1)).alias("n"))
         out = n_rows
         for st in stats:
-            out = (
-                out.join(F.broadcast(st), gcols)
-                if gcols
-                else out.crossJoin(F.broadcast(st))
-            )
+            out = join_groups(out, F.broadcast(st), gcols)
         vs = []
         for i in range(3):
             kk = F.col(f"_k{i}").cast("double")

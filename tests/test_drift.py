@@ -13,6 +13,12 @@ import random
 
 from pyspark.sql import functions as F
 
+from btc_usdt_etl_pipeline_spark.ml import features as M
+from btc_usdt_etl_pipeline_spark.operators import drift as D
+from btc_usdt_etl_pipeline_spark.operators import stats as S
+from btc_usdt_etl_pipeline_spark.operators import text as T
+from btc_usdt_etl_pipeline_spark.operators import windows as W
+
 
 def _events(spark, seed=7, n_users=3, n=120):
     rng = random.Random(seed)
@@ -414,25 +420,115 @@ def test_drift_report_components_match_standalone_ops(spark):
     assert panel["cvm"] == pytest.approx(want_cvm, abs=1e-9)
 
 
-def test_drift_report_single_shared_ecdf_shuffle(spark):
-    """The three ECDF metrics must share ONE (group, value) count
-    aggregation — the panel's plan may contain exactly two data-scale
-    hash aggregations over the raw input (PSI's bins + the shared
-    value counts), not four."""
-    from btc_usdt_etl_pipeline_spark.operators.drift import drift_report
+def _scan_fixture(spark):
+    """300 Python rows with a partition column ``p``: items of three
+    rows (one per treatment) never straddle a partition, and the
+    reference/current split is independent of it."""
+    rng = random.Random(13)
+    words = ["a", "b", "c", "d", "e", "f"]
+    rows = [
+        (
+            "p%d" % ((i // 3) % 2),
+            "g%d" % (i % 3),
+            round(rng.gauss(10 + i % 3, 1 + i % 3), 2),
+            rng.random() < 0.5,
+            i,
+            round(rng.uniform(0, 10), 2),
+            round(rng.uniform(0, 10), 2),
+            "it%d" % (i // 3),
+            "t%d" % (i % 3),
+            "r%d" % rng.randint(0, 2),
+            " ".join(rng.choice(words) for _ in range(6)),
+            rng.random(),
+        )
+        for i in range(300)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "p string, g string, v double, cur boolean, ts long, x double, "
+        "y double, item string, trt string, r string, text string, "
+        "score double",
+    )
 
-    df = spark.createDataFrame(
-        [("g", float(i % 40), i % 2 == 0) for i in range(200)],
-        "g string, v double, cur boolean",
-    )
-    out = df.transform(
-        drift_report("v", F.col("cur"), lo=0.0, hi=40.0, group_by="g")
-    )
+
+def _cur():
+    return F.col("cur")
+
+
+_TRTS = ["t0", "t1", "t2"]
+_ORDER = ("ts",)
+
+#: operator factory over ``_scan_fixture`` and its LogicalRDD leaves
+#: when each repeated statistic pass became one helper
+_SCAN_BOUNDS = {
+    "ks_statistic": (lambda: D.ks_statistic("v", _cur(), "p"), 1),
+    "wasserstein_1d": (lambda: D.wasserstein_1d("v", _cur(), "p"), 1),
+    "cvm_statistic": (lambda: D.cvm_statistic("v", _cur(), "p"), 1),
+    "anderson_darling": (lambda: D.anderson_darling("v", _cur(), "p"), 1),
+    "energy_distance": (lambda: D.energy_distance("v", _cur(), "p"), 1),
+    # PSI contributes two leaves (its grid branch re-derives from the
+    # counts subtree); the ECDF trio must share ONE, not three
+    "drift_report": (
+        lambda: D.drift_report("v", _cur(), 0.0, 20.0, 8, "p"), 3
+    ),
+    "brown_forsythe_f": (lambda: S.brown_forsythe_f("v", "g", "p"), 2),
+    "compare_groups": (lambda: S.compare_groups("v", "g", "p"), 3),
+    "bartlett_levene": (lambda: S.bartlett_levene("v", "g", "p"), 3),
+    "durbin_watson": (lambda: S.durbin_watson("y", "x", _ORDER, "p"), 3),
+    "cooks_distance": (lambda: S.cooks_distance("y", "x", "ts", "p"), 2),
+    "breusch_pagan": (lambda: S.breusch_pagan("y", "x", "p"), 2),
+    "mann_whitney_u": (lambda: S.mann_whitney_u("v", "g", "g0", "p"), 2),
+    "kruskal_wallis_h": (lambda: S.kruskal_wallis_h("v", "g", "p"), 2),
+    "dunn_posthoc": (lambda: S.dunn_posthoc("v", "g", "p"), 6),
+    "cochran_q": (
+        lambda: S.cochran_q("item", "trt", _cur(), _TRTS, "p"), 4
+    ),
+    "friedman_test": (
+        lambda: S.friedman_test("item", "trt", "v", _TRTS, "p"), 5
+    ),
+    "trimmed_mean": (lambda: S.trimmed_mean("v", "p"), 2),
+    "cohens_kappa": (lambda: S.cohens_kappa("g", "r", "p"), 3),
+    "fleiss_kappa": (lambda: S.fleiss_kappa("item", "r", "p"), 2),
+    "chi_square_independence": (
+        lambda: S.chi_square_independence("g", "r", "p"), 3
+    ),
+    "krippendorff_alpha": (
+        lambda: S.krippendorff_alpha("item", "r", "p"), 3
+    ),
+    "kendall_tau_b": (lambda: S.kendall_tau_b("g", "r", "p"), 3),
+    "permutation_test_diff": (
+        lambda: S.permutation_test_diff("v", "ts", _cur(), "p", 8), 4
+    ),
+    "mann_kendall": (lambda: S.mann_kendall("ts", "v", "p"), 3),
+    "wilson_proportions": (
+        lambda: S.wilson_proportions(_cur(), "g", "g0", "p"), 2
+    ),
+    "engle_granger": (lambda: S.engle_granger("y", "x", "ts", "p"), 2),
+    "theil_sen": (lambda: W.theil_sen("v", "ts", "ts", "p"), 2),
+    "ljung_box": (lambda: W.ljung_box("v", 3, "p", _ORDER), 2),
+    "arch_lm": (lambda: W.arch_lm("v", "p", _ORDER), 2),
+    "hurst_aggvar": (
+        lambda: W.hurst_aggvar("v", (2, 4, 8), "p", _ORDER), 4
+    ),
+    "ngram_diversity": (lambda: T.ngram_diversity("text", "p"), 3),
+    "isotonic_calibration": (
+        lambda: M.isotonic_calibration("score", "cur", 0.0, 1.0, 8, "p"),
+        3,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(_SCAN_BOUNDS))
+def test_scan_count_guard(spark, name):
+    """Scan-count guard over the operators built on the shared
+    statistic passes and the group-join helper: the optimized plan
+    reads its input no more times (``LogicalRDD`` leaves) than it did
+    when each hand-rolled pass became one helper — a refactor of the
+    scaffolding must never re-plan a shared subtree twice."""
+    make, bound = _SCAN_BOUNDS[name]
+    out = _scan_fixture(spark).transform(make())
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    # raw-scan leaves: PSI contributes two (its grid branch re-derives
-    # from the counts subtree — the operator's longstanding shape) and
-    # the ECDF trio must contribute exactly ONE shared leaf, not three
-    assert plan.count("LogicalRDD") <= 3
+    assert plan.count("LogicalRDD") <= bound
 
 
 def _ad_py(ref, cur):
@@ -499,15 +595,16 @@ def test_anderson_darling_ties_and_identical(spark):
 
 
 def test_anderson_darling_empty_side_null(spark):
-    from btc_usdt_etl_pipeline_spark.operators.drift import (
-        anderson_darling,
-    )
-
     df = spark.createDataFrame(
         [(1.0, False), (2.0, False)], "v double, is_cur boolean"
     )
-    out = df.transform(anderson_darling("v", F.col("is_cur"))).collect()
-    assert len(out) == 1 and out[0]["ad"] is None
+    for op, cols in (
+        (D.anderson_darling, ["ad"]),
+        (D.energy_distance, ["e2", "energy"]),
+    ):
+        out = df.transform(op("v", F.col("is_cur"))).collect()
+        assert len(out) == 1 and out[0]["n_cur"] == 0
+        assert all(out[0][c] is None for c in cols)
 
 
 def test_energy_distance_matches_pairwise_python(spark):

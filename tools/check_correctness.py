@@ -7,8 +7,9 @@ before every commit that touches the query surface:
 
     python tools/check_correctness.py [--plain] [sf_dir] [query ...]
 
-``--plain`` builds a bare ``local[32]`` SparkSession (no build_session
-tuning) to simulate the external driver's environment — queries must
+``--plain`` builds a bare ``local[N]`` SparkSession, N =
+``$SPARK_GRAFT_CPUS`` or 32 as in ``build_session`` (but none of its
+tuning), to simulate the external driver's environment — queries must
 self-apply any conf they depend on (see ``__spark_entry__._tune``).
 """
 
@@ -130,7 +131,9 @@ def main() -> int:
         from pyspark.sql import SparkSession
 
         spark = (
-            SparkSession.builder.master("local[32]")
+            SparkSession.builder.master(
+                f"local[{os.environ.get('SPARK_GRAFT_CPUS') or 32}]"
+            )
             .appName("correctness-check-plain")
             .getOrCreate()
         )

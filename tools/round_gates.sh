@@ -42,8 +42,9 @@ python tools/check_correctness.py --plain /root/testdata/sf0.01 || RC=1
 fi
 
 if want 2; then
-echo "== gate 2/5: pytest"
-python -m pytest tests/ -x -q || RC=1
+echo "== gate 2/5: pytest (the tier-1 command)"
+python -m pytest tests/ -q --continue-on-collection-errors \
+    -p no:cacheprovider || RC=1
 fi
 
 if want 3; then
