@@ -2,7 +2,8 @@
 time-series analytics added alongside it (ACF, seasonal decomposition):
 Python/numpy reference implementations on small random data, plus the
 shape contracts (identical samples → zero drift, r_0 normalization,
-component identity x = trend + seasonal + resid)."""
+component identity x = trend + seasonal + resid), and a scan-count
+guard over the statistics operators built on shared helpers."""
 
 from __future__ import annotations
 
