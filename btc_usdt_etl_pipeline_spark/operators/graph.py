@@ -240,6 +240,12 @@ def _star_components(
     )
 
 
+#: PageRank's node-count switch: up to this many nodes the rank vector
+#: is broadcast (2 M nodes ≈ a 60 MB broadcast), above it each round
+#: shuffles.  Tests patch it to 0 to force the shuffle loop.
+_BROADCAST_NODES_MAX = 2_000_000
+
+
 @_described("pagerank")
 def pagerank(
     edges: DataFrame,
@@ -251,7 +257,6 @@ def pagerank(
     rank_col: str = "rank",
     assume_distinct: bool = False,
     weight: str | None = None,
-    broadcast_nodes_max: int = 2_000_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank by power iteration — link-centrality
     scoring (the Common Crawl seed-quality / supplier-importance shape).
@@ -265,7 +270,7 @@ def pagerank(
     Scale shape — TWO physical strategies, switched on the measured
     node count (known for free from the teleport term's ``count()``):
 
-    * ``n <= broadcast_nodes_max`` (the common case: the rank vector
+    * ``n <= _BROADCAST_NODES_MAX`` (the common case: the rank vector
       is node-sized, orders of magnitude smaller than the edge list):
       the rank vector is BROADCAST into the contribution stage, so the
       checkpointed edge list never moves — each iteration is one fused
@@ -372,7 +377,7 @@ def pagerank(
             F.col("_n").alias(node_col),
             F.lit(0.0).alias(rank_col),
         )
-    broadcast = n <= broadcast_nodes_max
+    broadcast = n <= _BROADCAST_NODES_MAX
     # Broadcast path: deg is node-sized too, so attaching it is a
     # broadcast hash join — the edge list is checkpointed already
     # partitioned however it arrived and never shuffles again.

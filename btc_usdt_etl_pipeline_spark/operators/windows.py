@@ -62,11 +62,19 @@ def _plan_size(df: DataFrame) -> int:
     """Catalyst's ``sizeInBytes`` estimate — plan metadata derived from
     file sizes, no job and no scan — or 0 when the size is unknown.  A
     relation without statistics (a DataFrame built from Python rows, an
-    RDD) reports ``spark.sql.defaultSizeInBytes`` = Long.MaxValue, and
-    more once a projection widens it; nothing from 2^62 up is a
-    measured size, so it passes no size gate."""
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return 0 if size >= 1 << 62 else size
+    RDD) reports ``spark.sql.defaultSizeInBytes`` = Long.MaxValue.  A
+    projection above it rescales that figure, wider or narrower, so the
+    root estimate cannot tell it apart from a measured size: the size
+    is unknown when any leaf of the optimized plan reports 2^62 or more
+    (or the root does), and then it passes no size gate."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    sizes = [
+        int(leaves.apply(i).stats().sizeInBytes())
+        for i in range(leaves.size())
+    ]
+    size = int(plan.stats().sizeInBytes())
+    return 0 if max(sizes + [size]) >= 1 << 62 else size
 
 
 _NUMERIC_TYPES = ("tinyint", "smallint", "int", "bigint", "float", "double")
@@ -397,10 +405,15 @@ def _keyed_plan(
     (many frames — the 120-lag MACD stack)."""
     if not _scale_gate(df, order_col):
         return None
+    # The count is named apart from every key: an ungrouped caller's
+    # stand-in key is itself "_n".
+    n = "_n"
+    while n in keys:
+        n = "_" + n
     hot = (
         df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(F.max("_n").alias("_mx"))
+        .agg(F.count(F.lit(1)).alias(n))
+        .agg(F.max(n).alias("_mx"))
         .first()
     )
     mx = (hot["_mx"] or 0) if hot is not None else 0

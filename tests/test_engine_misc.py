@@ -490,6 +490,21 @@ def test_keyed_window_scale_paths_bit_identical(
     assert len(flat) == 3 and all(r["acf"] is None for r in flat)
 
 
+def test_plan_size_unknown_under_a_narrowing_projection(spark):
+    """Rows built from Python have no size statistics: the leaf reports
+    Long.MaxValue, and a narrowing select scales the root estimate below
+    2^62.  The size is still unknown, so it reads as 0."""
+    import btc_usdt_etl_pipeline_spark.operators.windows as W
+
+    rows = [(i, i % 7, float(i), float(2 * i)) for i in range(300)]
+    df = spark.createDataFrame(rows, "ts long, id long, x double, y double")
+    narrow = df.select("x")
+    root = narrow._jdf.queryExecution().optimizedPlan().stats()
+    assert int(root.sizeInBytes()) < 1 << 62
+    assert W._plan_size(narrow) == 0
+    assert W._plan_size(df) == 0
+
+
 def test_keyed_auto_trigger_swaps_plan_identically(spark, monkeypatch, tmp_path):
     """The gates must actually flip to the chunked plan when the
     hot-key count crosses the (monkeypatched) threshold and the size

@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import re
 from collections import Counter
+from unittest import mock
 
 import pytest
 
+import btc_usdt_etl_pipeline_spark.operators.graph as G
 from btc_usdt_etl_pipeline_spark.operators.graph import (
     bfs_distances,
     connected_components,
@@ -29,6 +31,11 @@ def _df(spark, rows, src="src", dst="dst"):
     return spark.createDataFrame(rows, f"{src} long, {dst} long")
 
 
+def _pagerank_shuffled(spark):
+    with mock.patch.object(G, "_BROADCAST_NODES_MAX", 0):
+        return pagerank(_df(spark, SYM), iterations=10)
+
+
 # case -> (operator name, rounds R, builder)
 CASES = {
     "cc_label": ("connected_components", 64, lambda s: connected_components(
@@ -43,8 +50,7 @@ CASES = {
         _df(s, EDGES), s.createDataFrame([(1,), (5,)], "node long"))),
     "pagerank_broadcast": ("pagerank", 10, lambda s: pagerank(
         _df(s, SYM), iterations=10)),
-    "pagerank_shuffle": ("pagerank", 10, lambda s: pagerank(
-        _df(s, SYM), iterations=10, broadcast_nodes_max=0)),
+    "pagerank_shuffle": ("pagerank", 10, _pagerank_shuffled),
 }
 
 

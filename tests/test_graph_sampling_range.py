@@ -468,14 +468,20 @@ def test_triangle_count_known_graphs(spark):
     assert (r.n_nodes, r.n_edges, r.n_triangles) == (5, 5, 1)
 
 
-def test_pagerank_broadcast_and_shuffle_paths_identical(spark):
+def test_pagerank_broadcast_and_shuffle_paths_identical(spark, monkeypatch):
     """The node-count auto-switch picks between a broadcast-rank loop
     and a shuffle loop; both must produce BIT-identical ranks — the
     decimal contribution sums are order-free and the broadcast path's
     implicit teleport default is an IEEE identity.  Graph includes a
     source-only node (5 -> in-degree-0) to exercise the implicit
     densify-at-the-end branch."""
+    import btc_usdt_etl_pipeline_spark.operators.graph as G
     from btc_usdt_etl_pipeline_spark.operators.graph import pagerank
+
+    def shuffled(df, **kw):
+        with monkeypatch.context() as m:
+            m.setattr(G, "_BROADCAST_NODES_MAX", 0)
+            return sorted(pagerank(df, iterations=7, **kw).collect())
 
     rows = [
         (1, 2), (2, 3), (3, 1),       # cycle
@@ -484,9 +490,7 @@ def test_pagerank_broadcast_and_shuffle_paths_identical(spark):
     ]
     df = spark.createDataFrame(rows, "src long, dst long")
     bcast = sorted(pagerank(df, iterations=7).collect())
-    shuf = sorted(
-        pagerank(df, iterations=7, broadcast_nodes_max=0).collect()
-    )
+    shuf = shuffled(df)
     assert bcast == shuf
     # in-degree-0 node 5 sits exactly at the teleport floor
     got = {r["node"]: r["rank"] for r in bcast}
@@ -495,11 +499,7 @@ def test_pagerank_broadcast_and_shuffle_paths_identical(spark):
     wrows = [(a, b, float(a + b)) for a, b in rows]
     wdf = spark.createDataFrame(wrows, "src long, dst long, w double")
     wb = sorted(pagerank(wdf, iterations=7, weight="w").collect())
-    ws = sorted(
-        pagerank(
-            wdf, iterations=7, weight="w", broadcast_nodes_max=0
-        ).collect()
-    )
+    ws = shuffled(wdf, weight="w")
     assert wb == ws
 
 

@@ -78,6 +78,28 @@ def test_durbin_watson_matches_python_and_discriminates(spark, scale_paths):
     )
 
 
+def test_durbin_watson_ungrouped_scale_plan_equals_plain(spark, scale_paths):
+    """Ungrouped, durbin_watson hands keyed_lags the stand-in key "_n";
+    with the gates open the hot-key probe counts rows per key, and its
+    count must not take that name too."""
+    from btc_usdt_etl_pipeline_spark.operators.stats import (
+        durbin_watson,
+    )
+
+    rng = random.Random(17)
+    rows = [
+        (float(i), float(i % 24), 5.0 + 0.2 * (i % 24) + rng.gauss(0, 1.0))
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(rows, "t double, x double, y double")
+    with scale_paths(on=False):
+        plain = df.transform(durbin_watson("y", "x", ("t",))).collect()
+    with scale_paths():
+        scaled = df.transform(durbin_watson("y", "x", ("t",))).collect()
+    assert plain[0]["n"] == 200
+    assert scaled == plain
+
+
 def test_durbin_watson_tie_break_and_degenerate(spark):
     from btc_usdt_etl_pipeline_spark.operators.stats import (
         durbin_watson,

@@ -20,29 +20,14 @@ scale-plan evidence).
 
 from __future__ import annotations
 
-import contextlib
 import os
 import sys
-from unittest.mock import patch
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.check_plans import scale_paths_forced  # noqa: E402
+
 ROUND_DIR = "r14"
-
-
-@contextlib.contextmanager
-def scale_paths_forced():
-    """Drop every size and hot-key gate below any input, so operators
-    built inside the block take their chunked / bucketed scale plans."""
-    from btc_usdt_etl_pipeline_spark.operators import resample as R
-    from btc_usdt_etl_pipeline_spark.operators import windows as W
-
-    with patch.object(W, "_CHUNK_THRESHOLD_BYTES", -1), patch.object(
-        W, "_KEYED_HOT_KEY_ROWS", 0
-    ), patch.object(W, "_KEYED_HOT_KEY_ROWS_CHEAP", 0), patch.object(
-        R, "_SORT_THRESHOLD_BYTES", -1
-    ):
-        yield
 
 
 def main() -> int:
