@@ -17,10 +17,13 @@ codegen, no UDFs.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEC = "decimal(38,6)"
+DEC12 = "decimal(38,12)"
 
 
 def exact_sum(col: Column | str) -> Column:
@@ -62,6 +65,14 @@ def attach_scalar(df, one_row, left_probe, right_probe):
     left = df.withColumn("_one", _key(left_probe))
     right = one_row.withColumn("_one", _key(right_probe))
     return left.join(F.broadcast(right), "_one").drop("_one")
+
+
+def group_columns(group_by: Sequence[str] | str | None) -> list[str]:
+    """An operator's ``group_by`` argument — one column name, a sequence
+    of names, or ``None`` — as a list of column names."""
+    if isinstance(group_by, str):
+        return [group_by]
+    return list(group_by or [])
 
 
 def join_groups(left, right, gcols, how: str = "inner", probes=None):

@@ -52,15 +52,7 @@ from typing import Callable, Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from btc_usdt_etl_pipeline_spark.functions import DEC
-
-
-def _group_cols(group_by: Sequence[str] | str | None) -> list[str]:
-    if group_by is None:
-        return []
-    if isinstance(group_by, str):
-        return [group_by]
-    return list(group_by)
+from btc_usdt_etl_pipeline_spark.functions import DEC, group_columns
 
 
 def psi(
@@ -91,7 +83,7 @@ def psi(
     cross-join and the per-group windows run on ``groups × n_bins``
     rows.  Returns one row per group: ``group_by… , psi``.
     """
-    gcols = _group_cols(group_by)
+    gcols = group_columns(group_by)
     width = (hi - lo) / n_bins
 
     def _t(df: DataFrame) -> DataFrame:
@@ -192,7 +184,7 @@ def _ecdf_statistic(
     folded columns, each NULL unless both sides are non-empty.  NULL
     values are dropped.  Returns ``group_by…, n_ref, n_cur,
     outputs…``."""
-    gcols = _group_cols(group_by)
+    gcols = group_columns(group_by)
 
     def _t(df: DataFrame) -> DataFrame:
         cur = is_current.cast("int")
@@ -285,7 +277,7 @@ def js_divergence(
     via the exact-decimal cast before the order-free sum.  Returns
     one row per group: ``group_by…, n_ref, n_cur, jsd``.
     """
-    gcols = _group_cols(group_by)
+    gcols = group_columns(group_by)
 
     def _t(df: DataFrame) -> DataFrame:
         cur = is_current.cast("int")
@@ -562,7 +554,7 @@ def page_hinkley(
     pre-aggregates to unique days).
     Returns ``group_by…, time, x, m_t, ph, alarm``.
     """
-    gcols = _group_cols(group_by)
+    gcols = group_columns(group_by)
     tcols = [time_col] if isinstance(time_col, str) else list(time_col)
 
     def _t(df: DataFrame) -> DataFrame:
@@ -636,7 +628,7 @@ def drift_report(
     Per-statistic determinism contracts and empty-side NULL fences
     match the standalone operators (q184/q255/q273 semantics).
     """
-    gcols = _group_cols(group_by)
+    gcols = group_columns(group_by)
 
     def terms(e: _Ecdf) -> dict:
         gap = e.f_a - e.f_b

@@ -159,7 +159,9 @@ def nearest_join(
     equirectangular metric).  Output adds ``nn_rank`` and ``ring``
     (0-based ring index that matched).
     """
-    from pyspark.sql import Window
+    from btc_usdt_etl_pipeline_spark.operators.relational import (
+        top_k_per_group,
+    )
 
     if max_rings < 1:
         raise ValueError("max_rings must be >= 1")
@@ -173,10 +175,8 @@ def nearest_join(
         order = [F.col(dist_col)]
         if tiebreak:
             order.append(F.col(tiebreak))
-        w = Window.partitionBy(left_id).orderBy(*order)
         return (
-            cand.withColumn("_rnk", F.row_number().over(w))
-            .filter(F.col("_rnk") <= k)
+            cand.transform(top_k_per_group([left_id], order, k, "_rnk"))
             .withColumnRenamed("_rnk", "nn_rank")
             .withColumn("ring", F.lit(idx))
         )

@@ -14,6 +14,8 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from btc_usdt_etl_pipeline_spark.functions import group_columns
+
 
 def broadcast_join(
     dim: DataFrame, on: str | Sequence[str] | Column, how: str = "inner"
@@ -680,11 +682,7 @@ def weighted_quantile(
         raise TypeError("q_num/q_den must be ints (exact rational)")
     if not (0 < q_num <= q_den):
         raise ValueError("need 0 < q_num <= q_den")
-    gcols = (
-        [group_by]
-        if isinstance(group_by, str)
-        else list(group_by or [])
-    )
+    gcols = group_columns(group_by)
 
     def _t(df: DataFrame) -> DataFrame:
         from btc_usdt_etl_pipeline_spark.functions import DEC

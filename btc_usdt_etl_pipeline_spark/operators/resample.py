@@ -28,6 +28,8 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from btc_usdt_etl_pipeline_spark.functions import group_columns
+
 #: Unkeyed row-count resample switches from one global-window sort to the
 #: two-pass bucket-offset index past this Catalyst size estimate.
 #: Measured (SCALE.md §4.8): at reference month scale (2.7M rows) one
@@ -673,11 +675,7 @@ def bar_volatility(
     Returns ``group_by…, bar, n_rows, open, high, low, close, pk,
     gk, rs``.
     """
-    gcols = (
-        [group_by]
-        if isinstance(group_by, str)
-        else list(group_by or [])
-    )
+    gcols = group_columns(group_by)
 
     def _t(df: DataFrame) -> DataFrame:
         d = df.where(

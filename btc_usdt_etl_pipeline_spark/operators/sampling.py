@@ -23,10 +23,11 @@ from __future__ import annotations
 
 from typing import Callable, Mapping, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from btc_usdt_etl_pipeline_spark.operators.dedup import portable_hash60
+from btc_usdt_etl_pipeline_spark.operators.relational import top_k_per_group
 
 
 def hash_sample(
@@ -99,13 +100,14 @@ def weighted_sample(
         # the open interval, so ln(u) is finite on both engines
         u = (h.cast("double") + F.lit(0.5)) / F.lit(float(1 << 60))
         ekey = -F.log(u) / F.col(weight_col)
-        w = Window.partitionBy(*partition_by).orderBy(
-            ekey.asc(), F.col(key_col)
-        )
-        return (
-            df.withColumn("_rnk", F.row_number().over(w))
-            .filter(F.col("_rnk") <= k)
-            .drop("_rnk")
+        return df.transform(
+            top_k_per_group(
+                partition_by,
+                [ekey.asc(), F.col(key_col)],
+                k,
+                "_rnk",
+                keep_rank=False,
+            )
         )
 
     return _t

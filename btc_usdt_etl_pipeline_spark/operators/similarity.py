@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from btc_usdt_etl_pipeline_spark.functions import cosine_similarity
+from btc_usdt_etl_pipeline_spark.operators.relational import top_k_per_group
 
 
 def brute_force_top_k(
@@ -47,14 +48,11 @@ def brute_force_top_k(
         F.col(id_col),
         cosine_similarity(F.col(vec_col), F.col("_qvec")).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(query_id_col, id_col, "cosine", "rnk")
-    )
+    return scored.transform(
+        top_k_per_group(
+            [query_id_col], [F.col("cosine").desc(), F.col(id_col)], k
+        )
+    ).select(query_id_col, id_col, "cosine", "rnk")
 
 
 def cosine_pairs_within(
@@ -131,12 +129,12 @@ def cosine_pairs_within(
                 round_dp,
             ).alias("cosine_r"),
         )
-        w = Window.partitionBy(group_col).orderBy(
-            F.col("cosine_r").desc(), F.col("id_a"), F.col("id_b")
-        )
-        return (
-            pairs.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+        return pairs.transform(
+            top_k_per_group(
+                [group_col],
+                [F.col("cosine_r").desc(), F.col("id_a"), F.col("id_b")],
+                k,
+            )
         )
 
     return _t
@@ -229,6 +227,39 @@ def _cosine_pairs_within_blas(
     return _t
 
 
+def _assign_cells(
+    df: DataFrame,
+    centroids: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroid_id_col: str,
+    round_dp: int,
+    n_cells: int,
+) -> DataFrame:
+    """IVF cell assignment: each row of ``df`` keeps its ``n_cells``
+    nearest centroids by cosine rounded at ``round_dp``, ties broken on
+    the smaller centroid id so a SQL oracle replays the exact cells.
+    The centroids are broadcast, so the pass is one map-side cross join
+    plus one per-id window.  Returns ``(id, vec, _cid)``, one row per
+    assigned cell."""
+    cent = centroids.select(
+        F.col(centroid_id_col).alias("_cid"), F.col(vec_col).alias("_cvec")
+    )
+    scored = df.select(id_col, vec_col).crossJoin(F.broadcast(cent)).select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.col("_cid"),
+        F.round(
+            cosine_similarity(F.col(vec_col), F.col("_cvec")), round_dp
+        ).alias("_csim"),
+    )
+    return scored.transform(
+        top_k_per_group(
+            [id_col], [F.col("_csim").desc(), F.col("_cid")], n_cells, "_crnk"
+        )
+    ).select(id_col, vec_col, "_cid")
+
+
 def ivf_top_k(
     corpus: DataFrame,
     queries: DataFrame,
@@ -255,28 +286,18 @@ def ivf_top_k(
     tunable with ``nprobe``; assignment determinism comes from rounding +
     centroid-id tie-break so a SQL oracle can replay the exact cells.
     """
-    cent = centroids.select(
-        F.col(centroid_id_col).alias("_cid"), F.col(vec_col).alias("_cvec")
+    c = _assign_cells(
+        corpus, centroids, id_col, vec_col, centroid_id_col, round_dp, 1
     )
-
-    def assign(df: DataFrame, idc: str, n_cells: int) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cent)).select(
-            F.col(idc),
-            F.col(vec_col),
-            F.col("_cid"),
-            F.round(
-                cosine_similarity(F.col(vec_col), F.col("_cvec")), round_dp
-            ).alias("_csim"),
-        )
-        w = Window.partitionBy(idc).orderBy(F.col("_csim").desc(), F.col("_cid"))
-        return (
-            scored.withColumn("_crnk", F.row_number().over(w))
-            .filter(F.col("_crnk") <= n_cells)
-            .select(idc, vec_col, "_cid")
-        )
-
-    c = assign(corpus, id_col, 1)
-    q = assign(queries, query_id_col, nprobe).select(
+    q = _assign_cells(
+        queries,
+        centroids,
+        query_id_col,
+        vec_col,
+        centroid_id_col,
+        round_dp,
+        nprobe,
+    ).select(
         F.col(query_id_col).alias("_qid"),
         F.col(vec_col).alias("_qvec"),
         F.col("_cid").alias("_qcid"),
@@ -290,14 +311,11 @@ def ivf_top_k(
     )
     if exclude_self:
         cand = cand.filter(F.col(id_col) != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_r").desc(), F.col(id_col)
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(query_id_col, id_col, "cosine_r", "rnk")
-    )
+    return cand.transform(
+        top_k_per_group(
+            [query_id_col], [F.col("cosine_r").desc(), F.col(id_col)], k
+        )
+    ).select(query_id_col, id_col, "cosine_r", "rnk")
 
 
 def _cell_fence(
@@ -434,26 +452,8 @@ def semdedup(
         raise ValueError(f"unknown method {method!r}")
     if max_cell_rows is not None and max_cell_rows < 2:
         raise ValueError("max_cell_rows must be >= 2 (or None)")
-    cent = centroids.select(
-        F.col(centroid_id_col).alias("_cid"), F.col(vec_col).alias("_cvec")
-    )
-    scored = corpus.select(id_col, vec_col).crossJoin(
-        F.broadcast(cent)
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("_cid"),
-        F.round(
-            cosine_similarity(F.col(vec_col), F.col("_cvec")), round_dp
-        ).alias("_csim"),
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("_csim").desc(), F.col("_cid")
-    )
-    assigned = (
-        scored.withColumn("_crnk", F.row_number().over(w))
-        .filter(F.col("_crnk") == 1)
-        .select(id_col, vec_col, "_cid")
+    assigned = _assign_cells(
+        corpus, centroids, id_col, vec_col, centroid_id_col, round_dp, 1
     )
     assigned, split_stats = _cell_fence(
         assigned, id_col, max_cell_rows, portable_split, report_splits
@@ -860,14 +860,11 @@ def lsh_top_k(
     if round_dp is not None:
         cos = F.round(cos, round_dp)
     scored = cand.select(query_id_col, id_col, cos.alias("cosine"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(query_id_col, id_col, "cosine", "rnk")
-    )
+    return scored.transform(
+        top_k_per_group(
+            [query_id_col], [F.col("cosine").desc(), F.col(id_col)], k
+        )
+    ).select(query_id_col, id_col, "cosine", "rnk")
 
 
 def rrf_fuse(
@@ -1000,27 +997,8 @@ def knn_outlier_scores(
         raise ValueError("round_dp must be <= 6 (decimal(38,6) mean)")
     if max_cell_rows is not None and max_cell_rows < 2:
         raise ValueError("max_cell_rows must be >= 2 (or None)")
-    cent = centroids.select(
-        F.col(centroid_id_col).alias("_cid"),
-        F.col(vec_col).alias("_cvec"),
-    )
-    scored = corpus.select(id_col, vec_col).crossJoin(
-        F.broadcast(cent)
-    ).select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col("_cid"),
-        F.round(
-            cosine_similarity(F.col(vec_col), F.col("_cvec")), round_dp
-        ).alias("_csim"),
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("_csim").desc(), F.col("_cid")
-    )
-    assigned = (
-        scored.withColumn("_crnk", F.row_number().over(w))
-        .filter(F.col("_crnk") == 1)
-        .select(id_col, vec_col, "_cid")
+    assigned = _assign_cells(
+        corpus, centroids, id_col, vec_col, centroid_id_col, round_dp, 1
     )
     assigned, split_stats = _cell_fence(
         assigned, id_col, max_cell_rows, portable_split, report_splits
@@ -1133,12 +1111,12 @@ def knn_outlier_scores(
             cosine_similarity(F.col("_va"), F.col("_vb")), round_dp
         ).alias("_s"),
     )
-    wk = Window.partitionBy("_ia").orderBy(
-        F.col("_s").desc(), F.col("_ib")
-    )
     top = (
-        pairs.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
+        pairs.transform(
+            top_k_per_group(
+                ["_ia"], [F.col("_s").desc(), F.col("_ib")], k, "_rk"
+            )
+        )
         .groupBy("_ia", "_cid")
         .agg(
             F.count(F.lit(1)).alias("n_neighbors"),

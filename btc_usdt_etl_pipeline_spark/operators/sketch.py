@@ -138,6 +138,66 @@ def cms_heavy_hitters(
     return _t
 
 
+def _hll_layout(b: int) -> tuple[int, int]:
+    """``(m, rem)`` of the portable HLL register layout shared by every
+    entry point: ``m = 2^b`` registers indexed by ``h mod m`` of the
+    60-bit md5 hash, ranks over the ``rem = 60 - b`` bits above."""
+    if not 4 <= b <= 18:
+        raise ValueError("b must be in [4, 18]")
+    return 1 << b, 60 - b
+
+
+def _hll_spresent(b: int) -> Column:
+    """Aggregate over a register set's ``_mr`` rows: the exact long
+    ``Σ 2^(rem+1-rho)`` of the present registers (the harmonic-mean
+    denominator scaled by ``2^(rem+1)``)."""
+    _, rem = _hll_layout(b)
+    return F.sum(F.expr(f"shiftleft(1L, cast({rem + 1} - _mr as int))"))
+
+
+def _hll_register_stats(
+    registers: DataFrame, gcols: "list[str]", b: int
+) -> DataFrame:
+    """Per group of ``registers``: ``n_present`` registers and their
+    ``_spresent`` (:func:`_hll_spresent`)."""
+    return registers.groupBy(*gcols).agg(
+        F.count(F.lit(1)).alias("n_present"),
+        _hll_spresent(b).alias("_spresent"),
+    )
+
+
+def _hll_stotal(n_present: Column, spresent: Column, b: int) -> Column:
+    """The exact-long denominator over all ``m`` registers: the present
+    registers' :func:`_hll_spresent` plus ``2^(rem+1)`` per empty one."""
+    m, rem = _hll_layout(b)
+    return spresent + (F.lit(m) - n_present) * F.lit(1 << (rem + 1))
+
+
+def _hll_estimates(
+    stotal: Column, v_zero: Column, b: int
+) -> tuple[Column, Column]:
+    """``(raw, corrected)`` estimates of a register set with denominator
+    ``stotal`` (:func:`_hll_stotal`) and ``v_zero`` empty registers: the
+    ``2^(rem+1)`` scale of ``stotal`` cancels exactly in the IEEE
+    divide, and ``corrected`` switches to linear counting
+    ``m·ln(m / v_zero)`` at ``raw ≤ 2.5·m`` while a register is empty.
+    Both are UNROUNDED; callers pin their own outputs."""
+    m, rem = _hll_layout(b)
+    alpha = 0.7213 / (1.0 + 1.079 / m)
+    raw = (
+        F.lit(alpha)
+        * F.lit(float(m))
+        * F.lit(float(m))
+        * F.lit(float(1 << (rem + 1)))
+        / stotal.cast("double")
+    )
+    corrected = F.when(
+        (raw <= F.lit(2.5 * m)) & (v_zero > 0),
+        F.lit(float(m)) * F.log(F.lit(float(m)) / v_zero.cast("double")),
+    ).otherwise(raw)
+    return raw, corrected
+
+
 def hll_distinct(
     key_col: str,
     b: int = 10,
@@ -160,43 +220,15 @@ def hll_distinct(
     seen, zero registers, exact distinct (for error inspection), raw
     and corrected estimates.
     """
-    if not 4 <= b <= 18:
-        raise ValueError("b must be in [4, 18]")
-    m = 1 << b
-    rem = 60 - b  # hash bits above the bucket index
-    alpha = 0.7213 / (1.0 + 1.079 / m)
+    registers = hll_registers_by([], key_col, b)
+    m, _ = _hll_layout(b)
 
     def _t(df: DataFrame) -> DataFrame:
-        h = portable_hash60(F.col(key_col).cast("string"))
-        # rank over the rem bits above the bucket: rho = 1 + trailing
-        # zeros of w (w = h DIV m — integer division; a float divide
-        # would round the 60-bit hash to 53 bits and corrupt w),
-        # rem+1 when w = 0 — all integer ops
-        keyed = df.select(h.alias("_h")).select(
-            (F.col("_h") % m).alias("_bucket"),
-            F.expr(f"_h DIV {m}").alias("_w"),
-        )
-        rho = F.when(F.col("_w") == 0, F.lit(rem + 1)).otherwise(
-            F.bit_count(
-                F.expr("(_w & -_w) - 1")
-            )
-            + F.lit(1)
-        )
-        regs = (
-            keyed.withColumn("_rho", rho)
-            .groupBy("_bucket")
-            .agg(F.max("_rho").alias("_mr"))
-        )
+        stats = _hll_register_stats(registers(df), [], b)
         # exact distinct rides along for error inspection (one extra
         # agg on the same pass's input)
         n_exact = df.select(
             F.countDistinct(F.col(key_col)).alias("_nd")
-        )
-        stats = regs.agg(
-            F.count(F.lit(1)).alias("n_present"),
-            F.sum(
-                F.expr(f"shiftleft(1L, cast({rem + 1} - _mr as int))")
-            ).alias("_spresent"),
         )
         from btc_usdt_etl_pipeline_spark.functions import attach_scalar
 
@@ -207,30 +239,13 @@ def hll_distinct(
             "n_present",
             (F.lit(m) - F.col("n_present")).alias("v_zero"),
             F.col("_nd").alias("n_exact"),
-            # denominator: present registers' Σ2^(rem+1-rho) + empty
-            # registers at rho=0 contributing 2^(rem+1) each — exact
-            # longs (the extra factor of 2 cancels in the IEEE divide:
-            # power-of-two scaling of numerator and denominator is
-            # exact, so b=10 estimates are bit-identical to the old
-            # 2^50-scaled layout)
-            (
-                F.col("_spresent")
-                + (F.lit(m) - F.col("n_present"))
-                * F.lit(1 << (rem + 1))
-            ).alias("_stotal"),
+            _hll_stotal(F.col("n_present"), F.col("_spresent"), b).alias(
+                "_stotal"
+            ),
         )
-        raw = (
-            F.lit(alpha)
-            * F.lit(float(m))
-            * F.lit(float(m))
-            * F.lit(float(1 << (rem + 1)))
-            / F.col("_stotal").cast("double")
+        raw, corrected = _hll_estimates(
+            F.col("_stotal"), F.col("v_zero"), b
         )
-        corrected = F.when(
-            (raw <= F.lit(2.5 * m)) & (F.col("v_zero") > 0),
-            F.lit(float(m))
-            * F.log(F.lit(float(m)) / F.col("v_zero").cast("double")),
-        ).otherwise(raw)
         return out.select(
             "m",
             "n_present",
@@ -264,59 +279,22 @@ def hll_distinct_by(
     per group: ``(group…, m, n_present, v_zero, n_exact, est_raw,
     est)``.
     """
-    if not 4 <= b <= 18:
-        raise ValueError("b must be in [4, 18]")
+    registers = hll_registers_by(group_cols, key_col, b)
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
     gcols = list(group_cols)
-    m = 1 << b
-    rem = 60 - b
-    alpha = 0.7213 / (1.0 + 1.079 / m)
+    m, _ = _hll_layout(b)
 
     def _t(df: DataFrame) -> DataFrame:
-        h = portable_hash60(F.col(key_col).cast("string"))
-        keyed = df.select(
-            *gcols, h.alias("_h")
-        ).select(
-            *gcols,
-            (F.col("_h") % m).alias("_bucket"),
-            F.expr(f"_h DIV {m}").alias("_w"),
-        )
-        rho = F.when(F.col("_w") == 0, F.lit(rem + 1)).otherwise(
-            F.bit_count(F.expr("(_w & -_w) - 1")) + F.lit(1)
-        )
-        regs = (
-            keyed.withColumn("_rho", rho)
-            .groupBy(*gcols, "_bucket")
-            .agg(F.max("_rho").alias("_mr"))
-        )
-        stats = regs.groupBy(*gcols).agg(
-            F.count(F.lit(1)).alias("n_present"),
-            F.sum(
-                F.expr(f"shiftleft(1L, cast({rem + 1} - _mr as int))")
-            ).alias("_spresent"),
-        )
+        stats = _hll_register_stats(registers(df), gcols, b)
         n_exact = df.groupBy(*gcols).agg(
             F.countDistinct(F.col(key_col)).alias("n_exact")
         )
-        joined = stats.join(F.broadcast(n_exact), gcols)
-        stotal = F.col("_spresent") + (
-            F.lit(m) - F.col("n_present")
-        ) * F.lit(1 << (rem + 1))
-        raw = (
-            F.lit(alpha)
-            * F.lit(float(m))
-            * F.lit(float(m))
-            * F.lit(float(1 << (rem + 1)))
-            / stotal.cast("double")
-        )
         v_zero = F.lit(m) - F.col("n_present")
-        corrected = F.when(
-            (raw <= F.lit(2.5 * m)) & (v_zero > 0),
-            F.lit(float(m))
-            * F.log(F.lit(float(m)) / v_zero.cast("double")),
-        ).otherwise(raw)
-        return joined.select(
+        raw, corrected = _hll_estimates(
+            _hll_stotal(F.col("n_present"), F.col("_spresent"), b), v_zero, b
+        )
+        return stats.join(F.broadcast(n_exact), gcols).select(
             *gcols,
             F.lit(m).alias("m"),
             "n_present",
@@ -470,29 +448,8 @@ def hll_intersection(
     sized), one exact-intersection agg riding along, and a broadcast
     combine — one data-scale pass.
     """
-    if not 4 <= b <= 18:
-        raise ValueError("b must be in [4, 18]")
-    m = 1 << b
-    rem = 60 - b
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-
-    def _est(n_present: Column, spresent: Column) -> Column:
-        stotal = spresent + (F.lit(m) - n_present) * F.lit(
-            1 << (rem + 1)
-        )
-        raw = (
-            F.lit(alpha)
-            * F.lit(float(m))
-            * F.lit(float(m))
-            * F.lit(float(1 << (rem + 1)))
-            / stotal.cast("double")
-        )
-        v_zero = F.lit(m) - n_present
-        return F.when(
-            (raw <= F.lit(2.5 * m)) & (v_zero > 0),
-            F.lit(float(m))
-            * F.log(F.lit(float(m)) / v_zero.cast("double")),
-        ).otherwise(raw)
+    registers = hll_registers_by(["_s"], "_k", b)
+    m, _ = _hll_layout(b)
 
     def _t(df: DataFrame) -> DataFrame:
         filt = df.where(
@@ -503,37 +460,25 @@ def hll_intersection(
             .alias("_s"),
             F.col(key_col).cast("string").alias("_k"),
         )
-        h = portable_hash60(F.col("_k"))
-        keyed = filt.select("_s", h.alias("_h")).select(
-            "_s",
-            (F.col("_h") % m).alias("_bucket"),
-            F.expr(f"_h DIV {m}").alias("_w"),
-        )
-        rho = F.when(F.col("_w") == 0, F.lit(rem + 1)).otherwise(
-            F.bit_count(F.expr("(_w & -_w) - 1")) + F.lit(1)
-        )
-        regs = (
-            keyed.withColumn("_rho", rho)
-            .groupBy("_s", "_bucket")
-            .agg(F.max("_rho").alias("_mr"))
-        )
+        regs = registers(filt)
         regs_u = (
             regs.groupBy("_bucket")
             .agg(F.max("_mr").alias("_mr"))
             .select(F.lit("u").alias("_s"), "_bucket", "_mr")
+        )
+        _, est = _hll_estimates(
+            _hll_stotal(F.col("_np"), F.col("_sp"), b),
+            F.lit(m) - F.col("_np"),
+            b,
         )
         stats = (
             regs.unionByName(regs_u)
             .groupBy("_s")
             .agg(
                 F.count(F.lit(1)).alias("_np"),
-                F.sum(
-                    F.expr(
-                        f"shiftleft(1L, cast({rem + 1} - _mr as int))"
-                    )
-                ).alias("_sp"),
+                _hll_spresent(b).alias("_sp"),
             )
-            .withColumn("_est", _est(F.col("_np"), F.col("_sp")))
+            .withColumn("_est", est)
         )
         one = stats.agg(
             F.max(F.when(F.col("_s") == "a", F.col("_est"))).alias(
@@ -588,14 +533,15 @@ def hll_registers_by(
     needs raw data again.  Same md5 bucketing / rank layout as every
     other HLL entry point, so estimates from merged registers replay in
     a SQL oracle."""
-    if not 4 <= b <= 18:
-        raise ValueError("b must be in [4, 18]")
     gcols = list(group_cols)
-    m = 1 << b
-    rem = 60 - b
+    m, rem = _hll_layout(b)
 
     def _t(df: DataFrame) -> DataFrame:
         h = portable_hash60(F.col(key_col).cast("string"))
+        # rank over the rem bits above the bucket: rho = 1 + trailing
+        # zeros of w (w = h DIV m — integer division; a float divide
+        # would round the 60-bit hash to 53 bits and corrupt w),
+        # rem+1 when w = 0 — all integer ops
         keyed = df.select(*gcols, h.alias("_h")).select(
             *gcols,
             (F.col("_h") % m).alias("_bucket"),
@@ -638,31 +584,12 @@ def hll_estimate_from_registers(
     (integer-exact denominator, linear-counting correction); returns
     ``(group…, m, n_present, v_zero, est_raw, est)``."""
     gcols = list(group_cols)
-    m = 1 << b
-    rem = 60 - b
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    stats = registers.groupBy(*gcols).agg(
-        F.count(F.lit(1)).alias("n_present"),
-        F.sum(
-            F.expr(f"shiftleft(1L, cast({rem + 1} - _mr as int))")
-        ).alias("_spresent"),
-    )
-    stotal = F.col("_spresent") + (
-        F.lit(m) - F.col("n_present")
-    ) * F.lit(1 << (rem + 1))
-    raw = (
-        F.lit(alpha)
-        * F.lit(float(m))
-        * F.lit(float(m))
-        * F.lit(float(1 << (rem + 1)))
-        / stotal.cast("double")
-    )
+    m, _ = _hll_layout(b)
+    stats = _hll_register_stats(registers, gcols, b)
     v_zero = F.lit(m) - F.col("n_present")
-    corrected = F.when(
-        (raw <= F.lit(2.5 * m)) & (v_zero > 0),
-        F.lit(float(m))
-        * F.log(F.lit(float(m)) / v_zero.cast("double")),
-    ).otherwise(raw)
+    raw, corrected = _hll_estimates(
+        _hll_stotal(F.col("n_present"), F.col("_spresent"), b), v_zero, b
+    )
     return stats.select(
         *gcols,
         F.lit(m).alias("m"),

@@ -18,11 +18,13 @@ from __future__ import annotations
 
 from typing import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from btc_usdt_etl_pipeline_spark.functions import (
     DEC,
+    DEC12,
+    group_columns,
     join_groups,
     null_safe_join,
 )
@@ -315,11 +317,7 @@ def benford_deviation(
     Returns one row per (group, digit): ``group_by…, digit, n_obs,
     p_obs, p_benford, chi2`` (chi2 repeats per group).
     """
-    gcols = (
-        [group_by]
-        if isinstance(group_by, str)
-        else list(group_by or [])
-    )
+    gcols = group_columns(group_by)
 
     def _t(df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
@@ -354,6 +352,46 @@ def benford_deviation(
         )
 
     return _t
+
+
+def _running(gcols: list[str], t: str) -> WindowSpec:
+    """The per-partition window over rows up to the current ``t``."""
+    return (
+        Window.partitionBy(*gcols)
+        .orderBy(t)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+def _at_risk(departed: Column, gcols: list[str], t: str) -> Column:
+    """Subjects still at risk at each event time ``t`` of an event-time
+    table whose rows carry the subjects ``departed`` (events plus
+    censorings) at ``t``: the partition's total minus the departures
+    up to ``t``, plus those at ``t`` itself."""
+    return (
+        F.sum(departed).over(Window.partitionBy(*gcols))
+        - F.sum(departed).over(_running(gcols, t))
+        + departed
+    )
+
+
+def _event_times(
+    df: DataFrame, gcols: list[str], duration_col: str, event_col: Column
+) -> DataFrame:
+    """The event-time table of :func:`kaplan_meier` and
+    :func:`nelson_aalen`: one row per (partition, duration ``t``) with
+    its events ``_d``, censorings ``_c`` and risk set ``_n``."""
+    per_t = (
+        df.where(F.col(duration_col).isNotNull())
+        .groupBy(*gcols, F.col(duration_col).alias("t"))
+        .agg(
+            F.sum(event_col.cast("int")).alias("_d"),
+            F.sum(F.lit(1) - event_col.cast("int")).alias("_c"),
+        )
+    )
+    return per_t.withColumn(
+        "_n", _at_risk(F.col("_d") + F.col("_c"), gcols, "t")
+    )
 
 
 def kaplan_meier(
@@ -396,24 +434,8 @@ def kaplan_meier(
     gcols = [group_by] if group_by else []
 
     def _t(df: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
-        per_t = (
-            df.where(F.col(duration_col).isNotNull())
-            .groupBy(*gcols, F.col(duration_col).alias("t"))
-            .agg(
-                F.sum(event_col.cast("int")).alias("_d"),
-                F.sum(F.lit(1) - event_col.cast("int")).alias("_c"),
-            )
-        )
-        wg = Window.partitionBy(*gcols)
-        wo = wg.orderBy("t").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        total = F.sum(F.col("_d") + F.col("_c")).over(wg)
-        departed_incl = F.sum(F.col("_d") + F.col("_c")).over(wo)
-        n_risk = total - departed_incl + (F.col("_d") + F.col("_c"))
-        staged = per_t.withColumn("_n", n_risk).withColumn(
+        wo = _running(gcols, "t")
+        staged = _event_times(df, gcols, duration_col, event_col).withColumn(
             "_frac",
             F.lit(1.0)
             - F.col("_d").cast("double") / F.col("_n").cast("double"),
@@ -445,7 +467,7 @@ def kaplan_meier(
                         F.col("_n").cast("double")
                         * (F.col("_n") - F.col("_d")).cast("double")
                     )
-                ).cast("decimal(38,12)"),
+                ).cast(DEC12),
             )
             gsum = F.sum(gterm).over(wo).cast("double")
             se_raw = s_raw * F.sqrt(gsum)
@@ -656,8 +678,7 @@ def _deviation_anova(
     center: str,
     keys: list[str],
     x: Column,
-    *,
-    count: bool,
+    *group_aggs: Column,
 ) -> tuple[DataFrame, list[Column], Column]:
     """The centred-deviation ANOVA of :func:`brown_forsythe_f` and
     :func:`compare_groups` (median centre) and :func:`bartlett_levene`
@@ -665,8 +686,9 @@ def _deviation_anova(
     centre column ``center`` of ``centers`` broadcast back null-safely
     on ``keys`` (partition columns plus the group column).  Returns
 
-    * the per-group Σz ``_sz`` and Σz² ``_szz`` of ``d``, led by the
-      group size ``_ng`` when ``count``;
+    * the per-group size ``_ng``, ``group_aggs`` (further aggregates
+      of the same per-group pass) and Σz ``_sz`` and Σz² ``_szz`` of
+      ``d``;
     * the per-partition rollup aggregates ``_tz`` = Σz, ``_sb`` =
       Σ(Σz_g)²/n_g and ``_tzz`` = Σz², over per-group rows carrying
       ``_ng``, ``_sz`` and ``_szz``;
@@ -681,7 +703,8 @@ def _deviation_anova(
         null_safe_join(d, F.broadcast(centers.select(*keys, center)), keys)
         .groupBy(*keys)
         .agg(
-            *([F.count(F.lit(1)).alias("_ng")] if count else []),
+            F.count(F.lit(1)).alias("_ng"),
+            *group_aggs,
             F.sum(z.cast(DEC)).cast("double").alias("_sz"),
             F.sum((z * z).cast(DEC)).cast("double").alias("_szz"),
         )
@@ -742,7 +765,7 @@ def brown_forsythe_f(
             F.round(F.percentile(value_col, F.lit(0.5)), 6).alias("_med")
         )
         per_g, rollup, fstat = _deviation_anova(
-            d, med, "_med", [*gcols, group_col], F.col(value_col), count=True
+            d, med, "_med", [*gcols, group_col], F.col(value_col)
         )
         agg = per_g.groupBy(*gcols).agg(
             F.sum("_ng").alias("n"), F.count(F.lit(1)).alias("k"), *rollup
@@ -882,25 +905,27 @@ def compare_groups(
     welch_dof1, welch_dof2, bf_f, bf_dof1, bf_dof2`` (F/dof2 at 6 dp).
     """
     gcols = [partition_by] if partition_by else []
-    DEC12 = "decimal(38,12)"
 
     def _t(df: DataFrame) -> DataFrame:
         d = df.where(
             F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
         ).select(*gcols, group_col, F.col(value_col).alias("_v"))
         x = F.col("_v").cast("double")
-        # pass 1: location moments + exact median, one grouped agg
+        # pass 1: exact median per group
         pg = d.groupBy(*gcols, group_col).agg(
-            F.count(F.lit(1)).alias("_ng"),
-            F.sum(x.cast(DEC)).cast("double").alias("_sx"),
-            F.sum((x * x).cast(DEC)).cast("double").alias("_sxx"),
             F.round(F.percentile("_v", F.lit(0.5)), 6).alias("_med"),
         )
-        # pass 2: median-centered deviation moments (BF's z pass)
-        pz, bf_rollup, bf_f = _deviation_anova(
-            d, pg, "_med", [*gcols, group_col], x, count=False
+        # pass 2: location moments beside the median-centered deviation
+        # moments (BF's z pass)
+        per_g, bf_rollup, bf_f = _deviation_anova(
+            d,
+            pg,
+            "_med",
+            [*gcols, group_col],
+            x,
+            F.sum(x.cast(DEC)).cast("double").alias("_sx"),
+            F.sum((x * x).cast(DEC)).cast("double").alias("_sxx"),
         )
-        per_g = null_safe_join(pg, pz, [*gcols, group_col])
         ng = F.col("_ng").cast("double")
         mean = F.col("_sx") / ng
         var = (
@@ -982,6 +1007,32 @@ def compare_groups(
     return _t
 
 
+def _arm_moments(
+    d: DataFrame, gcols: list[str], x_col: str, y_col: str, treat_col: str
+) -> DataFrame:
+    """Per partition of ``d``, the raw moments of each experiment arm —
+    suffix ``t`` where ``treat_col`` is 1, ``c`` elsewhere: the count
+    ``_n`` of ``y`` and the sums ``_sx, _sy, _sxy, _sxx, _syy`` of the
+    double-cast columns, each term summed as an exact DECIMAL(38,12) so
+    the across-unit sums are order-free."""
+    x = F.col(x_col).cast("double")
+    y = F.col(y_col).cast("double")
+    is_t = F.col(treat_col).cast("int") == 1
+
+    def side(cond, s):
+        xa, ya = F.when(cond, x), F.when(cond, y)
+        return [
+            F.count(ya).alias(f"_n{s}"),
+            F.sum(xa.cast(DEC12)).cast("double").alias(f"_sx{s}"),
+            F.sum(ya.cast(DEC12)).cast("double").alias(f"_sy{s}"),
+            F.sum((xa * ya).cast(DEC12)).cast("double").alias(f"_sxy{s}"),
+            F.sum((xa * xa).cast(DEC12)).cast("double").alias(f"_sxx{s}"),
+            F.sum((ya * ya).cast(DEC12)).cast("double").alias(f"_syy{s}"),
+        ]
+
+    return d.groupBy(*gcols).agg(*side(is_t, "t"), *side(~is_t, "c"))
+
+
 def cuped_adjusted_diff(
     y_col: str,
     x_col: str,
@@ -1013,7 +1064,6 @@ def cuped_adjusted_diff(
     var_reduction, t_cuped`` (6 dp pins on the derived statistics).
     """
     gcols = [partition_by] if partition_by else []
-    DEC12 = "decimal(38,12)"
 
     def _t(df: DataFrame) -> DataFrame:
         d = df.where(
@@ -1021,29 +1071,7 @@ def cuped_adjusted_diff(
             & F.col(x_col).isNotNull()
             & F.col(treat_col).isNotNull()
         )
-        x = F.col(x_col).cast("double")
-        y = F.col(y_col).cast("double")
-        is_t = F.col(treat_col).cast("int") == 1
-
-        def side(cond, s):
-            xa = F.when(cond, x)
-            ya = F.when(cond, y)
-            return [
-                F.count(ya).alias(f"_n{s}"),
-                F.sum(xa.cast(DEC12)).cast("double").alias(f"_sx{s}"),
-                F.sum(ya.cast(DEC12)).cast("double").alias(f"_sy{s}"),
-                F.sum((xa * ya).cast(DEC12))
-                .cast("double")
-                .alias(f"_sxy{s}"),
-                F.sum((xa * xa).cast(DEC12))
-                .cast("double")
-                .alias(f"_sxx{s}"),
-                F.sum((ya * ya).cast(DEC12))
-                .cast("double")
-                .alias(f"_syy{s}"),
-            ]
-
-        agg = d.groupBy(*gcols).agg(*side(is_t, "t"), *side(~is_t, "c"))
+        agg = _arm_moments(d, gcols, x_col, y_col, treat_col)
         nt, nc = F.col("_nt").cast("double"), F.col("_nc").cast("double")
         n = nt + nc
         sx = F.col("_sxt") + F.col("_sxc")
@@ -1185,7 +1213,6 @@ def ratio_metric_diff(
     ratio_c, diff, t`` (6 dp pins).
     """
     gcols = [partition_by] if partition_by else []
-    DEC12 = "decimal(38,12)"
 
     def _t(df: DataFrame) -> DataFrame:
         d = df.where(
@@ -1193,28 +1220,7 @@ def ratio_metric_diff(
             & F.col(den_col).isNotNull()
             & F.col(treat_col).isNotNull()
         )
-        y = F.col(num_col).cast("double")
-        x = F.col(den_col).cast("double")
-        is_t = F.col(treat_col).cast("int") == 1
-
-        def side(cond, s):
-            xa, ya = F.when(cond, x), F.when(cond, y)
-            return [
-                F.count(ya).alias(f"_n{s}"),
-                F.sum(xa.cast(DEC12)).cast("double").alias(f"_sx{s}"),
-                F.sum(ya.cast(DEC12)).cast("double").alias(f"_sy{s}"),
-                F.sum((xa * ya).cast(DEC12))
-                .cast("double")
-                .alias(f"_sxy{s}"),
-                F.sum((xa * xa).cast(DEC12))
-                .cast("double")
-                .alias(f"_sxx{s}"),
-                F.sum((ya * ya).cast(DEC12))
-                .cast("double")
-                .alias(f"_syy{s}"),
-            ]
-
-        agg = d.groupBy(*gcols).agg(*side(is_t, "t"), *side(~is_t, "c"))
+        agg = _arm_moments(d, gcols, den_col, num_col, treat_col)
 
         def ratio(s):
             sxf = F.when(F.col(f"_sx{s}") > 0, F.col(f"_sx{s}"))
@@ -1748,6 +1754,38 @@ def roc_auc(
     return _t
 
 
+def _cells(
+    df: DataFrame, gcols: list[str], col_a: str, col_b: str
+) -> DataFrame:
+    """Observed ``(col_a, col_b)`` contingency cells per partition: one
+    row per observed pair with its count ``_o``; NULL categories are
+    dropped."""
+    return (
+        df.where(F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
+        .groupBy(*gcols, col_a, col_b)
+        .agg(F.count(F.lit(1)).alias("_o"))
+    )
+
+
+def _dense_cells(
+    df: DataFrame, gcols: list[str], col_a: str, col_b: str
+) -> DataFrame:
+    """:func:`_cells` densified against each partition's distinct-a ×
+    distinct-b grid (metadata scale), unobserved cells at ``_o = 0``."""
+    cells = _cells(df, gcols, col_a, col_b)
+    grid = join_groups(
+        cells.select(*gcols, col_a).distinct(),
+        cells.select(*gcols, col_b).distinct(),
+        gcols,
+    )
+    return grid.join(cells, [*gcols, col_a, col_b], "left").select(
+        *gcols,
+        col_a,
+        col_b,
+        F.coalesce("_o", F.lit(0)).alias("_o"),
+    )
+
+
 def chi_square_independence(
     col_a: str,
     col_b: str,
@@ -1777,23 +1815,7 @@ def chi_square_independence(
     gcols = [partition_by] if partition_by else []
 
     def _t(df: DataFrame) -> DataFrame:
-        d = df.where(
-            F.col(col_a).isNotNull() & F.col(col_b).isNotNull()
-        )
-        cells = d.groupBy(*gcols, col_a, col_b).agg(
-            F.count(F.lit(1)).alias("_o")
-        )
-        grid = join_groups(
-            cells.select(*gcols, col_a).distinct(),
-            cells.select(*gcols, col_b).distinct(),
-            gcols,
-        )
-        dense = grid.join(cells, [*gcols, col_a, col_b], "left").select(
-            *gcols,
-            col_a,
-            col_b,
-            F.coalesce("_o", F.lit(0)).alias("_o"),
-        )
+        dense = _dense_cells(df, gcols, col_a, col_b)
         wg = Window.partitionBy(*gcols)
         wa = Window.partitionBy(*gcols, col_a)
         wb = Window.partitionBy(*gcols, col_b)
@@ -1969,12 +1991,7 @@ def mutual_information(
     gcols = [partition_by] if partition_by else []
 
     def _t(df: DataFrame) -> DataFrame:
-        d = df.where(
-            F.col(col_a).isNotNull() & F.col(col_b).isNotNull()
-        )
-        cells = d.groupBy(*gcols, col_a, col_b).agg(
-            F.count(F.lit(1)).alias("_o")
-        )
+        cells = _cells(df, gcols, col_a, col_b)
         wg = Window.partitionBy(*gcols)
         wa = Window.partitionBy(*gcols, col_a)
         wb = Window.partitionBy(*gcols, col_b)
@@ -2204,22 +2221,8 @@ def nelson_aalen(
     gcols = [group_by] if group_by else []
 
     def _t(df: DataFrame) -> DataFrame:
-        per_t = (
-            df.where(F.col(duration_col).isNotNull())
-            .groupBy(*gcols, F.col(duration_col).alias("t"))
-            .agg(
-                F.sum(event_col.cast("int")).alias("_d"),
-                F.sum(F.lit(1) - event_col.cast("int")).alias("_c"),
-            )
-        )
-        wg = Window.partitionBy(*gcols)
-        wo = wg.orderBy("t").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        total = F.sum(F.col("_d") + F.col("_c")).over(wg)
-        departed_incl = F.sum(F.col("_d") + F.col("_c")).over(wo)
-        n_risk = total - departed_incl + (F.col("_d") + F.col("_c"))
-        staged = per_t.withColumn("_n", n_risk).withColumn(
+        wo = _running(gcols, "t")
+        staged = _event_times(df, gcols, duration_col, event_col).withColumn(
             "_h",
             (
                 F.col("_d").cast("double")
@@ -2295,23 +2298,7 @@ def kendall_tau_b(
     gcols = [partition_by] if partition_by else []
 
     def _t(df: DataFrame) -> DataFrame:
-        d = df.where(
-            F.col(col_x).isNotNull() & F.col(col_y).isNotNull()
-        )
-        cells = d.groupBy(*gcols, col_x, col_y).agg(
-            F.count(F.lit(1)).alias("_o")
-        )
-        grid = join_groups(
-            cells.select(*gcols, col_x).distinct(),
-            cells.select(*gcols, col_y).distinct(),
-            gcols,
-        )
-        dense = grid.join(cells, [*gcols, col_x, col_y], "left").select(
-            *gcols,
-            col_x,
-            col_y,
-            F.coalesce("_o", F.lit(0)).alias("_o"),
-        )
+        dense = _dense_cells(df, gcols, col_x, col_y)
         wy = Window.partitionBy(*gcols, col_y)
         wx = Window.partitionBy(*gcols, col_x)
         below = F.coalesce(
@@ -2895,6 +2882,18 @@ def mcnemar_test(
     return _t
 
 
+def _declared_treatments(op: str, treatments: Sequence[str]) -> list[str]:
+    """The treatments of a complete-block test (:func:`cochran_q`,
+    :func:`friedman_test`) as a list, checked when the operator is
+    built: 2..64 of them, all distinct."""
+    treatments = list(treatments)
+    if not 2 <= len(treatments) <= 64:
+        raise ValueError(f"{op} needs 2..64 declared treatments")
+    if len(set(treatments)) != len(treatments):
+        raise ValueError("treatments must be unique")
+    return treatments
+
+
 def _complete_blocks(
     d: DataFrame, gcols: list[str], item_col: str, k: int, *item_aggs
 ) -> tuple[DataFrame, DataFrame]:
@@ -2941,11 +2940,7 @@ def cochran_q(
     all-1 board (zero denominator) emits NULL.  Returns
     ``partition…, n_items, n_dropped, k, t, q_stat``.
     """
-    treatments = list(treatments)
-    if not 2 <= len(treatments) <= 64:
-        raise ValueError("cochran_q needs 2..64 declared treatments")
-    if len(set(treatments)) != len(treatments):
-        raise ValueError("treatments must be unique")
+    treatments = _declared_treatments("cochran_q", treatments)
     k = len(treatments)
     gcols = [partition_by] if partition_by else []
 
@@ -3190,11 +3185,7 @@ def friedman_test(
     pinned at 6 dp.  An all-tied board (zero denominator) emits NULL.
     Returns ``partition…, n_items, n_dropped, k, t_stat``.
     """
-    treatments = list(treatments)
-    if not 2 <= len(treatments) <= 64:
-        raise ValueError("friedman_test needs 2..64 declared treatments")
-    if len(set(treatments)) != len(treatments):
-        raise ValueError("treatments must be unique")
+    treatments = _declared_treatments("friedman_test", treatments)
     k = len(treatments)
     gcols = [partition_by] if partition_by else []
 
@@ -3229,7 +3220,7 @@ def friedman_test(
         )
         treat_side = per_treat.groupBy(*gcols).agg(
             F.sum(
-                (F.col("_rj") * F.col("_rj")).cast("decimal(38,12)")
+                (F.col("_rj") * F.col("_rj")).cast(DEC12)
             )
             .cast("double")
             .alias("_srj2")
@@ -3399,9 +3390,7 @@ def binary_changepoint(
             F.col(value_col).cast("double").alias("_x"),
         )
         wg = Window.partitionBy(*gcols)
-        wo = wg.orderBy("_t").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
+        wo = _running(gcols, "_t")
         staged = d.select(
             *gcols,
             "_t",
@@ -3633,14 +3622,10 @@ def log_rank_test(
                 "_c2"
             ),
         )
-        wg = Window.partitionBy(*gcols)
-        wo = wg.orderBy("_t").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
         dep1 = F.col("_d1") + F.col("_c1")
         dep2 = F.col("_d2") + F.col("_c2")
-        n1 = F.sum(dep1).over(wg) - F.sum(dep1).over(wo) + dep1
-        n2 = F.sum(dep2).over(wg) - F.sum(dep2).over(wo) + dep2
+        n1 = _at_risk(dep1, gcols, "_t")
+        n2 = _at_risk(dep2, gcols, "_t")
         dt = (F.col("_d1") + F.col("_d2")).cast("double")
         n1d = n1.cast("double")
         ntd = (n1 + n2).cast("double")
@@ -3806,8 +3791,21 @@ def bartlett_levene(
             F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
         ).select(*gcols, group_col, value_col)
         x = F.col(value_col).cast("double")
-        per_g = d.groupBy(*gcols, group_col).agg(
-            F.count(F.lit(1)).alias("_ng"),
+        # pass 1: group means pinned at 6 dp, Levene's centres
+        means = d.groupBy(*gcols, group_col).agg(
+            F.round(
+                F.sum(x.cast(DEC)).cast("double")
+                / F.count(F.lit(1)).cast("double"),
+                6,
+            ).alias("_mean")
+        )
+        # pass 2: Bartlett's moments beside Levene's |x - mean_g| moments
+        per_g, rollup, lev_f = _deviation_anova(
+            d,
+            means,
+            "_mean",
+            [*gcols, group_col],
+            x,
             F.sum(x.cast(DEC)).cast("double").alias("_sx"),
             F.sum((x * x).cast(DEC)).cast("double").alias("_qx"),
         )
@@ -3820,14 +3818,7 @@ def bartlett_levene(
             (F.col("_qx") - F.col("_sx") * F.col("_sx") / ng)
             / (ng - F.lit(1.0)),
         )
-        gstats = per_g.select(
-            *gcols,
-            group_col,
-            "_ng",
-            vi.alias("_vi"),
-            F.round(F.col("_sx") / ng, 6).alias("_mean"),
-        )
-        bart = gstats.groupBy(*gcols).agg(
+        agg = per_g.withColumn("_vi", vi).groupBy(*gcols).agg(
             F.sum("_ng").alias("n"),
             F.count(F.lit(1)).alias("k"),
             F.min(F.col("_ng")).alias("_minng"),
@@ -3857,12 +3848,8 @@ def bartlett_levene(
             )
             .cast("double")
             .alias("_srec"),
+            *rollup,
         )
-        # Levene second pass: |x - mean_g| ANOVA
-        lev_g, rollup, lev_f = _deviation_anova(
-            d, gstats, "_mean", [*gcols, group_col], x, count=True
-        )
-        joined = join_groups(bart, lev_g.groupBy(*gcols).agg(*rollup), gcols)
         n = F.col("n").cast("double")
         k = F.col("k").cast("double")
         base_ok = (F.col("k") > 1) & (F.col("n") > F.col("k"))
@@ -3877,7 +3864,7 @@ def bartlett_levene(
             & F.col("_minvi").isNotNull()
             & (F.col("_minvi") > 0)
         )
-        return joined.select(
+        return agg.select(
             *gcols,
             "n",
             "k",
@@ -3931,9 +3918,7 @@ def cliffs_delta(
             F.sum(F.lit(1) - is_a).alias("_cb"),
         )
         wg = Window.partitionBy(*gcols)
-        wo = wg.orderBy("_v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
+        wo = _running(gcols, "_v")
         tot_a = F.sum("_ca").over(wg)
         tot_b = F.sum("_cb").over(wg)
         cb_le = F.sum("_cb").over(wo)
@@ -4196,9 +4181,7 @@ def msprt_two_proportion(
             F.sum(F.lit(1) - is_a).alias("_nb_i"),
             F.sum((F.lit(1) - is_a) * ok).alias("_cb_i"),
         )
-        wo = Window.partitionBy(*gcols).orderBy(time_col).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
+        wo = _running(gcols, time_col)
         cum = step.select(
             *gcols,
             time_col,
@@ -4238,10 +4221,7 @@ def msprt_two_proportion(
                 lnlam,
             ).alias("_lnl"),
         )
-        wm = Window.partitionBy(*gcols).orderBy(time_col).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        runmax = F.max("_lnl").over(wm)
+        runmax = F.max("_lnl").over(wo)
         return staged.select(
             *gcols,
             time_col,
@@ -4486,11 +4466,7 @@ def durbin_watson(
     """
     from btc_usdt_etl_pipeline_spark.operators.windows import keyed_lags
 
-    gcols = (
-        [group_by]
-        if isinstance(group_by, str)
-        else list(group_by or [])
-    )
+    gcols = group_columns(group_by)
     ob = list(order_by)
 
     def _t(df: DataFrame) -> DataFrame:
@@ -4514,17 +4490,16 @@ def durbin_watson(
                 partition_by=list(gcols) or ["_n"],
             )
         )
-        dec12 = "decimal(38,12)"
         agg = lagged.groupBy(*gcols).agg(
             F.max("_n").alias("n"),
             F.sum(
                 F.when(
                     F.col("_el").isNotNull(),
                     ((F.col("_e") - F.col("_el"))
-                     * (F.col("_e") - F.col("_el"))).cast(dec12),
+                     * (F.col("_e") - F.col("_el"))).cast(DEC12),
                 )
             ).cast("double").alias("_num"),
-            F.sum((F.col("_e") * F.col("_e")).cast(dec12))
+            F.sum((F.col("_e") * F.col("_e")).cast(DEC12))
             .cast("double").alias("_den"),
         )
         ok = (F.col("n") >= 3) & (F.col("_den") > 0)
@@ -4569,11 +4544,7 @@ def cooks_distance(
     nothing (no line to be influential against).  Returns flagged
     rows: ``group_by…, id, x, y, resid, leverage, cooks_d``.
     """
-    gcols = (
-        [group_by]
-        if isinstance(group_by, str)
-        else list(group_by or [])
-    )
+    gcols = group_columns(group_by)
 
     def _t(df: DataFrame) -> DataFrame:
         d = df.where(
@@ -4680,11 +4651,7 @@ def breusch_pagan(
     outputs 6 dp.  Degenerate groups (n ≤ 2, constant x, constant g)
     emit NULL lm.  Returns ``group_by…, n, r2_aux, lm``.
     """
-    gcols = (
-        [group_by]
-        if isinstance(group_by, str)
-        else list(group_by or [])
-    )
+    gcols = group_columns(group_by)
 
     def _t(df: DataFrame) -> DataFrame:
         d = df.where(
@@ -4763,11 +4730,7 @@ def granger_f(
     groups (n ≤ 3, singular design, zero unrestricted SSE) emit NULL
     f_stat.  Returns ``group_by…, n, sse_r, sse_u, f_stat``.
     """
-    gcols = (
-        [group_by]
-        if isinstance(group_by, str)
-        else list(group_by or [])
-    )
+    gcols = group_columns(group_by)
     tcols = [time_col] if isinstance(time_col, str) else list(time_col)
 
     def _t(df: DataFrame) -> DataFrame:
@@ -4791,7 +4754,7 @@ def granger_f(
 
         def m(expr, name):
             return (
-                F.sum(expr.cast("decimal(38,12)"))
+                F.sum(expr.cast(DEC12))
                 .cast("double")
                 .alias(name)
             )
@@ -4859,11 +4822,7 @@ def engle_granger(
     with NULL adf_t.
     Returns ``group_by…, n, beta, phi, adf_t``.
     """
-    gcols = (
-        [group_by]
-        if isinstance(group_by, str)
-        else list(group_by or [])
-    )
+    gcols = group_columns(group_by)
     tcols = [time_col] if isinstance(time_col, str) else list(time_col)
 
     def _t(df: DataFrame) -> DataFrame:
@@ -4880,7 +4839,7 @@ def engle_granger(
 
         def m(expr, name):
             return (
-                F.sum(expr.cast("decimal(38,12)"))
+                F.sum(expr.cast(DEC12))
                 .cast("double")
                 .alias(name)
             )
@@ -4956,11 +4915,7 @@ def amihud_illiquidity(
     out; groups with no usable days drop entirely (no NULL row).
     Returns ``group_by…, n_days, amihud``.
     """
-    gcols = (
-        [group_by]
-        if isinstance(group_by, str)
-        else list(group_by or [])
-    )
+    gcols = group_columns(group_by)
 
     def _t(df: DataFrame) -> DataFrame:
         d = df.where(
@@ -4992,7 +4947,7 @@ def amihud_illiquidity(
         ) / F.col("_v")
         agg = lagged.groupBy(*gcols).agg(
             F.count(F.lit(1)).alias("n_days"),
-            F.sum(term.cast("decimal(38,12)"))
+            F.sum(term.cast(DEC12))
             .cast("double")
             .alias("_s"),
         )

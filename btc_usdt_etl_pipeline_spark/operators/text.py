@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from btc_usdt_etl_pipeline_spark.functions import join_groups
 from btc_usdt_etl_pipeline_spark.operators.dedup import shingles, tokens
+from btc_usdt_etl_pipeline_spark.operators.relational import top_k_per_group
 
 #: Tiny per-language stopword lists for the n-gram/stopword-hit heuristic.
 #: (Real deployments swap in a fastText-style model — not in this container.)
@@ -979,15 +980,14 @@ def keyness_g2(
         ranked = (
             x.where(F.col("_tt") >= min_count)
             .withColumn("_g2", g2)
-            .withColumn(
-                "_rank",
-                F.row_number().over(
-                    Window.partitionBy("_g").orderBy(
-                        F.col("_g2").desc(), F.col("_tok").asc()
-                    )
-                ),
+            .transform(
+                top_k_per_group(
+                    ["_g"],
+                    [F.col("_g2").desc(), F.col("_tok").asc()],
+                    top_k,
+                    "_rank",
+                )
             )
-            .where(F.col("_rank") <= top_k)
         )
         return ranked.select(
             F.col("_g").alias(group_col),
@@ -1038,11 +1038,8 @@ def zipf_fit(
     def _t(df: DataFrame) -> DataFrame:
         from btc_usdt_etl_pipeline_spark.functions import DEC
 
-        wg = Window.partitionBy(*gcols).orderBy(F.col(count_col).desc())
-        ranked = (
-            df.where(F.col(count_col) > 0)
-            .withColumn("_rank", F.row_number().over(wg))
-            .where(F.col("_rank") <= top_r)
+        ranked = df.where(F.col(count_col) > 0).transform(
+            top_k_per_group(gcols, [F.col(count_col).desc()], top_r, "_rank")
         )
         x = F.log(F.col("_rank").cast("double"))
         y = F.log(F.col(count_col).cast("double"))
@@ -1189,27 +1186,21 @@ def _ngram_diversity_hll(
 ) -> Callable[[DataFrame], DataFrame]:
     """HLL-backed :func:`ngram_diversity` (``approximate=True``).
 
-    Per requested n: explode grams → portable 60-bit hash → bucket /
-    max-rank registers per group (ONE data-scale agg each, map-side
-    partial, ≤ |groups|·2^b survivors) → the shared
+    Per requested n: explode grams → the shared ``hll_registers_by``
+    register pass (portable 60-bit hash, bucket / max-rank registers
+    per group: ONE data-scale agg each, map-side partial, ≤
+    |groups|·2^b survivors) → the shared
     ``hll_estimate_from_registers`` estimator (integer-exact
     denominator + linear-counting correction, est pinned at 4 dp so a
     SQL oracle replays it).  Token/occurrence totals come from one
     row-arithmetic agg — no gram-type-scale state anywhere.
     """
-    from btc_usdt_etl_pipeline_spark.operators.dedup import (
-        portable_hash60,
-        shingles,
-        tokens,
-    )
     from btc_usdt_etl_pipeline_spark.operators.sketch import (
         hll_estimate_from_registers,
+        hll_registers_by,
     )
 
-    if not 4 <= b <= 18:
-        raise ValueError("b must be in [4, 18]")
-    m = 1 << b
-    rem = 60 - b
+    registers = hll_registers_by(gcols, "_g", b)
 
     def _t(df: DataFrame) -> DataFrame:
         tok = tokens(text_col)
@@ -1233,22 +1224,9 @@ def _ngram_diversity_hll(
                     else F.col("_tok")
                 ).alias("_g"),
             )
-            keyed = grams.select(
-                *gcols, portable_hash60(F.col("_g")).alias("_h")
+            est = hll_estimate_from_registers(
+                registers(grams), gcols, b
             ).select(
-                *gcols,
-                (F.col("_h") % m).alias("_bucket"),
-                F.expr(f"_h DIV {m}").alias("_w"),
-            )
-            rho = F.when(F.col("_w") == 0, F.lit(rem + 1)).otherwise(
-                F.bit_count(F.expr("(_w & -_w) - 1")) + F.lit(1)
-            )
-            regs = (
-                keyed.withColumn("_rho", rho)
-                .groupBy(*gcols, "_bucket")
-                .agg(F.max("_rho").alias("_mr"))
-            )
-            est = hll_estimate_from_registers(regs, gcols, b).select(
                 *gcols, F.col("est").alias(f"types_est_{n}")
             )
             if gcols:

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from btc_usdt_etl_pipeline_spark.ml import features as M
 from btc_usdt_etl_pipeline_spark.operators import drift as D
+from btc_usdt_etl_pipeline_spark.operators import similarity as Sim
+from btc_usdt_etl_pipeline_spark.operators import sketch as K
 from btc_usdt_etl_pipeline_spark.operators import stats as S
 from btc_usdt_etl_pipeline_spark.operators import text as T
 from btc_usdt_etl_pipeline_spark.operators import windows as W
@@ -456,11 +458,25 @@ def _cur():
     return F.col("cur")
 
 
+def _vectors(df):
+    """The fixture as an embedding corpus: id ``ts``, vector (x, y, v)."""
+    return df.select(
+        F.col("ts").alias("vec_id"), F.array("x", "y", "v").alias("embedding")
+    )
+
+
+def _centroids(df):
+    return _vectors(df).where(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
+    )
+
+
 _TRTS = ["t0", "t1", "t2"]
 _ORDER = ("ts",)
 
 #: operator factory over ``_scan_fixture`` and its LogicalRDD leaves
-#: when each repeated statistic pass became one helper
+#: when each repeated statistic, sketch, similarity or survival pass
+#: became one helper
 _SCAN_BOUNDS = {
     "ks_statistic": (lambda: D.ks_statistic("v", _cur(), "p"), 1),
     "wasserstein_1d": (lambda: D.wasserstein_1d("v", _cur(), "p"), 1),
@@ -473,8 +489,8 @@ _SCAN_BOUNDS = {
         lambda: D.drift_report("v", _cur(), 0.0, 20.0, 8, "p"), 3
     ),
     "brown_forsythe_f": (lambda: S.brown_forsythe_f("v", "g", "p"), 2),
-    "compare_groups": (lambda: S.compare_groups("v", "g", "p"), 3),
-    "bartlett_levene": (lambda: S.bartlett_levene("v", "g", "p"), 3),
+    "compare_groups": (lambda: S.compare_groups("v", "g", "p"), 2),
+    "bartlett_levene": (lambda: S.bartlett_levene("v", "g", "p"), 2),
     "durbin_watson": (lambda: S.durbin_watson("y", "x", _ORDER, "p"), 3),
     "cooks_distance": (lambda: S.cooks_distance("y", "x", "ts", "p"), 2),
     "breusch_pagan": (lambda: S.breusch_pagan("y", "x", "p"), 2),
@@ -512,10 +528,39 @@ _SCAN_BOUNDS = {
         lambda: W.hurst_aggvar("v", (2, 4, 8), "p", _ORDER), 4
     ),
     "ngram_diversity": (lambda: T.ngram_diversity("text", "p"), 3),
+    "ngram_diversity_hll": (
+        lambda: T.ngram_diversity("text", "p", approximate=True), 3
+    ),
     "isotonic_calibration": (
         lambda: M.isotonic_calibration("score", "cur", 0.0, 1.0, 8, "p"),
         3,
     ),
+    "hll_distinct": (lambda: K.hll_distinct("item"), 2),
+    "hll_distinct_by": (lambda: K.hll_distinct_by(["p"], "item"), 2),
+    "hll_intersection": (
+        lambda: K.hll_intersection("p", "item", "p0", "p1"), 3
+    ),
+    "semdedup": (
+        lambda: lambda df: Sim.semdedup(_vectors(df), _centroids(df), 0.99),
+        6,
+    ),
+    "knn_outlier_scores": (
+        lambda: lambda df: Sim.knn_outlier_scores(
+            _vectors(df), _centroids(df), 3
+        ),
+        6,
+    ),
+    "kaplan_meier": (
+        lambda: S.kaplan_meier("ts", _cur(), "p", greenwood=True), 1
+    ),
+    "nelson_aalen": (lambda: S.nelson_aalen("ts", _cur(), "p"), 1),
+    "log_rank_test": (
+        lambda: S.log_rank_test("ts", _cur(), F.col("g") == "g0", "p"), 1
+    ),
+    "cuped_adjusted_diff": (
+        lambda: S.cuped_adjusted_diff("y", "x", "cur", "p"), 1
+    ),
+    "mutual_information": (lambda: S.mutual_information("g", "r", "p"), 1),
 }
 
 

@@ -1,8 +1,9 @@
 """Spark vs DuckDB oracle parity for queries whose oracle text is built
-from the shared fragments in ``__spark_entry__.py``: one query per
-fragment family, on the sf0.001 gate data, canonicalized exactly as
-``tools/check_correctness.py`` does (columns by name, rows sorted,
-floats by repr)."""
+from the shared fragments in ``__spark_entry__.py`` (one query per
+fragment family) and for queries whose operators share one helper pass
+(one query per helper not covered yet), on the sf0.001 gate data,
+canonicalized exactly as ``tools/check_correctness.py`` does (columns
+by name, rows sorted, floats by repr)."""
 
 from __future__ import annotations
 
@@ -36,6 +37,15 @@ QUERIES = [
     "q292_knn_outlier_fenced",  # IVF cells, fenced cells, kNN top-5
     "q239_image_dedup_clusters",  # dHash bits and words
     "q248_krippendorff_alpha",  # three raters
+    "q151_hll_distinct",  # HLL registers and estimator, ungrouped
+    "q173_hll_intersection",  # HLL registers per side and union
+    "q276_ngram_diversity_hll",  # HLL registers per n-gram order
+    "q252_nelson_aalen",  # event-time table and risk set
+    "q271_log_rank",  # per-arm risk sets
+    "q247_chi_square",  # dense contingency cells
+    "q253_kendall_tau",
+    "q132_semdedup",  # IVF cell assignment
+    "q40_simsearch_ivf",  # IVF cell assignment and per-query top-k
 ]
 
 

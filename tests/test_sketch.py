@@ -5,6 +5,7 @@ from __future__ import annotations
 import hashlib
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -301,3 +302,59 @@ def test_hll_intersection_disjoint_and_identical(spark):
     assert out["est_a"] == out["est_b"] == out["est_union"]
     assert out["est_intersection"] == out["est_a"]
     assert out["n_exact_intersection"] == 500
+
+
+@pytest.mark.parametrize("b", [4, 10, 18])
+def test_hll_entry_points_agree(spark, b):
+    """Every HLL entry point reads the same registers through the same
+    estimator: the grouped sketch equals the estimate of its stored
+    registers, and the ungrouped sketch equals that of one constant
+    group.  b = 4 exercises the raw estimate, b = 18 linear counting."""
+    from btc_usdt_etl_pipeline_spark.operators.sketch import (
+        hll_distinct,
+        hll_distinct_by,
+        hll_estimate_from_registers,
+        hll_registers_by,
+    )
+
+    df = spark.createDataFrame(
+        [(f"d{i % 3}", i % 700) for i in range(1500)], "g string, k long"
+    )
+    cols = ["m", "n_present", "v_zero", "est_raw", "est"]
+
+    def rows(out, gcols):
+        return sorted(
+            tuple(r[c] for c in [*gcols, *cols]) for r in out.collect()
+        )
+
+    stored = hll_estimate_from_registers(
+        df.transform(hll_registers_by(["g"], "k", b)), ["g"], b
+    )
+    grouped = df.transform(hll_distinct_by(["g"], "k", b))
+    assert rows(grouped, ["g"]) == rows(stored, ["g"])
+    one = df.withColumn("c", F.lit(1))
+    stored_one = hll_estimate_from_registers(
+        one.transform(hll_registers_by(["c"], "k", b)), ["c"], b
+    )
+    assert rows(df.transform(hll_distinct("k", b)), []) == rows(stored_one, [])
+
+
+@pytest.mark.parametrize("b", [3, 19])
+def test_hll_register_width_checked_at_every_entry_point(spark, b):
+    from btc_usdt_etl_pipeline_spark.operators import sketch
+    from btc_usdt_etl_pipeline_spark.operators.text import ngram_diversity
+
+    registers = spark.createDataFrame(
+        [("a", 0, 1)], "g string, _bucket long, _mr int"
+    )
+    builders = [
+        lambda: sketch.hll_distinct("k", b),
+        lambda: sketch.hll_distinct_by(["g"], "k", b),
+        lambda: sketch.hll_intersection("g", "k", "a", "b", b),
+        lambda: sketch.hll_registers_by(["g"], "k", b),
+        lambda: sketch.hll_estimate_from_registers(registers, ["g"], b),
+        lambda: ngram_diversity("text", approximate=True, b=b),
+    ]
+    for build in builders:
+        with pytest.raises(ValueError, match=r"b must be in \[4, 18\]"):
+            build()

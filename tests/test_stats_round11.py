@@ -109,6 +109,28 @@ def test_bartlett_singleton_group_nulls_bartlett_only(spark):
     assert out["levene_f"] is not None
 
 
+def test_bartlett_levene_keeps_a_null_partition(spark):
+    """A NULL ``partition_by`` value is a partition like any other, as in
+    :func:`brown_forsythe_f`: it emits the row the same data emits under
+    a named partition."""
+    from btc_usdt_etl_pipeline_spark.operators.stats import (
+        bartlett_levene,
+    )
+
+    rng = random.Random(281)
+    data = [
+        (g, rng.gauss(0, 1 + i)) for i, g in enumerate("abc") for _ in range(30)
+    ]
+    rows = [(p, g, v) for p in (None, "p") for g, v in data]
+    df = spark.createDataFrame(rows, "p string, g string, v double")
+    out = {
+        r["p"]: r.asDict()
+        for r in df.transform(bartlett_levene("v", "g", "p")).collect()
+    }
+    assert set(out) == {None, "p"}
+    assert {**out[None], "p": "p"} == out["p"]
+
+
 def test_cliffs_delta_matches_bruteforce(spark):
     from btc_usdt_etl_pipeline_spark.operators.stats import cliffs_delta
 
